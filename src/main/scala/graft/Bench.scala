@@ -580,20 +580,15 @@ object Bench {
       // (observed: 17 queries flagged vs a baseline built by a same-code
       // session that had run a different number of analyses).
       .replaceAll("\\blambda ([A-Za-z_][A-Za-z0-9_]*?)_\\d+#n", "lambda $1_n#n")
-      // The IVF-flat list table's name embeds a DATA-SIGNATURE suffix
-      // (Ann.ivfListTable: md5 of file names+sizes+MTIMES — the a13z
-      // regeneration guard): a cache key, not plan semantics. The driver
-      // resets every /root/testdata mtime at round start, so without this
-      // scrub the a2/a3/a10 fingerprints drift once per round against a
-      // baseline refreshed mid-round on identical code (caught r13, the
-      // first cross-round bench after the sig landed in the table name).
-      // (r16: `\d*` — the r15 ADVICE stale-cache fix put the sig on the
-      // letter-only-prefix PQ tables too: pqcodes/pqkcodes/pqkcb/ivfpq.)
-      // (r18: prefix class widened from [a-z]+\d* to [a-z0-9]+ — the
-      // staleness-key sweep put the sig on EVERY artifact table, including
-      // names like truth3s/bm25c/knn101 the old pattern missed. The
-      // 16-hex path hash that follows is underscore-delimited, so the
-      // widened class cannot over-consume into it.)
+      // Every artifact name ends in an 8-hex DATA-SIGNATURE suffix
+      // (graft.sources.Artifact.signature: md5 of the source part files'
+      // names+sizes+MTIMES): a cache key, not plan semantics. Test data
+      // regenerated between runs gets new mtimes, so without this scrub
+      // every artifact-reading fingerprint would drift against a baseline
+      // refreshed on identical code (caught r13). The name is
+      // graft_<kind><params>_<16-hex path hash>_<sig>; kind+params are
+      // [a-z0-9]+ and the underscore-delimited path hash stops the class
+      // from over-consuming.
       .replaceAll("\\b(graft_[a-z0-9]+_[0-9a-f]{16})_[0-9a-f]{8}\\b", "$1_sig")
       .replaceAll("\\[id=#?\\d+\\]", "[id=n]")
       .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=n]")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.{Artifact, Warehouse}
 
 /** Headline analytics queries (SURVEY.md §2.G) — the bench workload.
   *
@@ -300,14 +301,10 @@ object Queries {
 
   def q23IncrementalAgg(spark: SparkSession, dir: String): DataFrame = {
     val isDelta = col("l_orderkey") % 10 === 0
-    val t = s"graft_q1mv_${graft.sources.Warehouse.tableSuffix(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writeTable(
-          q1Partials(Tables.lineitem(spark, dir).filter(!isDelta)), t)
+    val mv = Artifact.table(spark, "q1mv", dir, Seq("lineitem.parquet")) { t =>
+      Warehouse.writeTable(q1Partials(Tables.lineitem(spark, dir).filter(!isDelta)), t)
     }
-    q1MergeFinalize(spark.table(t)
-      .unionByName(q1Partials(Tables.lineitem(spark, dir).filter(isDelta))))
+    q1MergeFinalize(mv.unionByName(q1Partials(Tables.lineitem(spark, dir).filter(isDelta))))
   }
 
   /** q18: large-volume orders (TPC-H Q18 shape) — aggregate-HAVING as a

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Vec
 import graft.rag.Search
+import graft.sources.{Artifact, Warehouse}
 
 /** IVF approximate-nearest-neighbor search (SURVEY.md §2.D2) — the scale
   * path beyond brute force (D1 in [[graft.rag.Search]]).
@@ -45,6 +46,9 @@ import graft.rag.Search
   * stats on a derived probe set are unavailable at planning time.
   */
 object Ann {
+
+  /** The source every ANN artifact derives from. */
+  private[ann] val Emb = Seq("embeddings.parquet")
 
   def a2KnnIvf(spark: SparkSession, dir: String): DataFrame =
     ivfTopK(spark, dir, sameLabel = false)
@@ -117,14 +121,12 @@ object Ann {
   }
 
   /** The IVF-flat index table: raw vectors + list assignment, written
-    * PARTITIONED BY list_id once per (session, corpus, data signature,
-    * dial) — the FAISS `IVFx,Flat` layout as physical parquet, and the
-    * a13 ivfPqTable contract applied to the raw-vector path: a2/a10
-    * probes are partition-pruned reads of nprobe/nlists of the data, not
-    * a per-run re-derivation of the assignment (which also re-evaluated
-    * the argmax 3x per row through constraint-inferred join filters).
-    * The data-signature key (a13z precedent) means a corpus regenerated
-    * under the same path rebuilds instead of serving stale lists. */
+    * PARTITIONED BY list_id, one artifact per dial — the FAISS
+    * `IVFx,Flat` layout as physical parquet, and the a13 ivfPqTable
+    * contract applied to the raw-vector path: a2/a10 probes are
+    * partition-pruned reads of nprobe/nlists of the data, not a per-run
+    * re-derivation of the assignment (which also re-evaluated the argmax
+    * 3x per row through constraint-inferred join filters). */
   /** The raw-vector list table, exposed for the a22 pruned-rerank read
     * ([[Pq.a22IvfPqRerank]]): the refine stage retrieves its raw vectors
     * from the probed partitions of THIS table instead of re-scanning the
@@ -141,22 +143,18 @@ object Ann {
     * also counts the probe rows — the collect stays ≤ nlists rows and a
     * caller violating fixed-Q gets the family's documented throw, never
     * an unbounded driver collect. */
-  /** [[probedListIds]] memoized per (corpus path, data signature, dials) —
-    * r18, the indexStatCache / a13z probedListsCache rule: the probed-list
-    * set is deterministic per (corpus, nlists, nprobe, qmod), lands in the
-    * plan as literal `IN` values, and was the last per-serve driver-side
-    * JOB the a22/a2-pruned chains still paid (a rollup + collect over the
-    * probe subtree, every run). The srcSignature key keeps the staleness
-    * contract: an in-place corpus regeneration recomputes. Fingerprint-
-    * neutral by construction — the memo feeds the SAME sorted literals
-    * into the SAME plan. */
-  private val probedIdsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
+  /** [[probedListIds]] as a driver-side artifact value (r18): the
+    * probed-list set is deterministic per (corpus, nlists, nprobe, qmod),
+    * lands in the plan as literal `IN` values, and was the last per-serve
+    * driver-side JOB the a22/a2-pruned chains still paid (a rollup +
+    * collect over the probe subtree, every run). Fingerprint-neutral by
+    * construction — the memo feeds the SAME sorted literals into the
+    * SAME plan. */
   private[ann] def probedListIdsCached(spark: SparkSession, dir: String,
       nprobe: Int, nlists: Int, qmod: Int): Seq[Long] =
-    probedIdsCache.getOrElseUpdate(
-      s"${graft.sources.Warehouse.tableSuffix(dir)}@${Pq.srcSignature(dir)}:$nlists:$nprobe:$qmod",
-      probedListIds(Search.corpus(spark, dir), nprobe, nlists, qmod))
+    Artifact.value(spark, "probed", dir, Emb, s"${nlists}x${nprobe}q$qmod") {
+      probedListIds(Search.corpus(spark, dir), nprobe, nlists, qmod)
+    }
 
   private[ann] def probedListIds(e: DataFrame, nprobe: Int, nlists: Int,
                                  qmod: Int): Seq[Long] = {
@@ -190,19 +188,11 @@ object Ann {
   }
 
   private[ann] def ivfListTable(spark: SparkSession, dir: String,
-                                nlists: Int): DataFrame = {
-    val e = Search.corpus(spark, dir)
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(Pq.srcSignature(dir).getBytes("UTF-8"))
-      .take(4).map(b => f"$b%02x").mkString
-    val t = s"graft_ivf${nlists}_${graft.sources.Warehouse.tableSuffix(dir)}_$sig"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writePartitionedTable(
-          listAssignment(e, nlists = nlists), t, "list_id")
+                                nlists: Int): DataFrame =
+    Artifact.table(spark, "ivf", dir, Emb, s"$nlists") { t =>
+      Warehouse.writePartitionedTable(
+        listAssignment(Search.corpus(spark, dir), nlists = nlists), t, "list_id")
     }
-    spark.table(t)
-  }
 
   /** The probe set: each query's top-NPROBE centroids by rounded cosine.
     * Returns (query_id, list_id, qlabel, qv, qnrm).
@@ -353,20 +343,6 @@ object Ann {
     math.max(8, math.min(65536L, math.ceil(math.sqrt(corpusCount.toDouble)).toLong)).toInt
   }
 
-  /** Index-statistic memo (r17 optimization round, guide §1.2 step 1 —
-    * remove repeated passes): occupancy and splinter are properties of the
-    * BUILD artifact (FAISS stores per-list sizes with the inverted lists;
-    * the centroid set is versioned with the index), yet every router/auto
-    * serve re-ran their aggregate jobs — a21_route alone fired 26 Spark
-    * jobs per warm run (graft.Profile), almost all of them these stat
-    * passes. Memoized per (corpus path, data signature, dial) exactly like
-    * the index tables themselves: the first use in a session pays the
-    * distributed pass (Bench reports it under `cold`), steady-state serves
-    * read index metadata. The srcSignature key means an in-place corpus
-    * regeneration recomputes (the RouterDimSpec staleness rule). */
-  private val indexStatCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   /** Occupancy statistic for the rerank law: the MAX inverted-list size of
     * the built IVF index at `nlists` — one partial-agg pass over the
     * build-once list table (the partitioned parquet artifact is the
@@ -375,14 +351,16 @@ object Ann {
     * crowd, and deterministic (vec_id < nlists) centroids shatter a true
     * cluster across ~nlists/clusters lists, so max-list-size UNDER-states
     * true cluster occupancy — [[annOperatingPoint]] folds in a 2x safety
-    * factor for exactly that bias. Memoized with the artifact it
-    * describes ([[indexStatCache]]). */
+    * factor for exactly that bias. An artifact value (r17): occupancy
+    * and splinter are properties of the BUILD artifact (FAISS stores
+    * per-list sizes with the inverted lists), and recomputing them fired
+    * most of a21_route's 26 Spark jobs per warm run. */
   def occupancyEstimate(spark: SparkSession, dir: String, nlists: Int): Long =
-    indexStatCache.getOrElseUpdate(
-      s"occ:${graft.sources.Warehouse.tableSuffix(dir)}:${Pq.srcSignature(dir)}:$nlists",
+    Artifact.value(spark, "occ", dir, Emb, s"$nlists") {
       ivfListTable(spark, dir, nlists)
         .groupBy("list_id").agg(count(lit(1)).as("sz"))
-        .agg(max(col("sz"))).collect()(0).getLong(0))
+        .agg(max(col("sz"))).collect()(0).getLong(0)
+    }
 
   /** Splinter statistic for the nprobe law (r12, the third-decade lesson):
     * deterministic centroids (vec_id < nlists) are corpus ROWS, so once
@@ -406,11 +384,9 @@ object Ann {
     * leaving nprobe at the measured small constant. */
   def splinterEstimate(spark: SparkSession, dir: String, nlists: Int,
                        tau: Double = 0.5): Int =
-    // memoized per (corpus, signature, dial) — centroid-set metadata, same
-    // staleness key as the index tables ([[indexStatCache]] scaladoc)
-    indexStatCache.getOrElseUpdate(
-      s"spl:${graft.sources.Warehouse.tableSuffix(dir)}:${Pq.srcSignature(dir)}:$nlists:$tau",
-      splinterOf(Search.corpus(spark, dir), nlists, tau).toLong).toInt
+    Artifact.value(spark, "spl", dir, Emb, s"${nlists}t$tau") {
+      splinterOf(Search.corpus(spark, dir), nlists, tau)
+    }
 
   /** [[splinterEstimate]] over an explicit centroid-source frame — the
     * streamed-append composition derives centroids from the VERSIONED

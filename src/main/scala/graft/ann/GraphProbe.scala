@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
+import graft.sources.Artifact
 
 /** D19: GRAPH-ordered probe selection over the IVF centroids (SURVEY.md
   * §2.D) — the navigable-graph idea (HNSW/NSG layer-0) applied at the
@@ -68,26 +69,20 @@ object GraphProbe {
     * surfaces centroids with higher query cosine that displace lists
     * actually holding true neighbors, a reminder that the
     * centroid-cosine proxy is not monotone in recall. */
-  /** The centroid-graph edge list as a DRIVER-MEMOIZED index artifact
-    * (r17 optimization round, guide §1.2 step 1): HNSW/NSG deployments
+  /** The centroid-graph edge list as a driver-side index artifact (r17
+    * optimization round, guide §1.2 step 1): HNSW/NSG deployments
     * STORE the neighbor graph with the index — it is build output, not
     * per-query work — yet every a19 serve re-ran [[centroidEdges]]'s
-    * window over the centroid cross pairs. Memo key = (corpus path, data
-    * signature), the same staleness contract as every other index memo
-    * (in-place regeneration recomputes; RouterDimSpec rule). nlists ×
-    * Degree longs — driver-trivial at any scale that can hold centroids. */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[String, Map[Long, Seq[Long]]]
-
+    * window over the centroid cross pairs. nlists × Degree longs —
+    * driver-trivial at any scale that can hold centroids. */
   private def edgeMapOf(spark: SparkSession, dir: String): Map[Long, Seq[Long]] =
-    edgeCache.getOrElseUpdate(
-      s"${graft.sources.Warehouse.tableSuffix(dir)}:${Pq.srcSignature(dir)}", {
-        val cent = Search.corpus(spark, dir).filter(col("vec_id") < NLists)
-          .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-        centroidEdges(cent).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-          .groupBy(_._1).map { case (s, ds) => (s, ds.map(_._2).sorted) }
-      })
+    Artifact.value(spark, "edges", dir, Ann.Emb) {
+      val cent = Search.corpus(spark, dir).filter(col("vec_id") < NLists)
+        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
+      centroidEdges(cent).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        .groupBy(_._1).map { case (s, ds) => (s, ds.map(_._2).sorted) }
+    }
 
   /** Greedy graph probe set — beam-width-Beam, two-hop expansion,
     * computed ROW-LOCALLY (r17 optimization round, guide §2.4 — the

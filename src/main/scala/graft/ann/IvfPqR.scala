@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
+import graft.sources.{Artifact, Warehouse}
 
 /** RESIDUAL-encoded IVFPQ (SURVEY.md §2.D) — the full Jégou et al. 2011
   * construction as shipped by FAISS `IVFx,PQy`: vectors are PQ-encoded as
@@ -62,51 +63,47 @@ object IvfPqR {
       .select(col("s.m").as("m"), col("k"), col("s.c").as("c"))
       .withColumn("cn2", Vec.dotNative(col("c"), col("c")))
 
-  /** The residual IVFPQ index: encode + exact rn2, written PARTITIONED BY
-    * list_id once per (session, sf-dir). Row-local argmin over the
+  /** The residual IVFPQ index artifact: encode + exact rn2, written
+    * PARTITIONED BY list_id. Row-local argmin over the
     * broadcast pivoted codebook (no explode, no exchange), as Pq.encode;
     * candidates additionally carry dot(c_list_m, cc) so rn2 assembles in
     * the same pass. */
-  private def indexTable(spark: SparkSession, t: String, res: => DataFrame,
-                         rcb: DataFrame): DataFrame = {
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val cbAggs = (for (m <- 0 until M; k <- 0 until K) yield
-          max(when(col("m") === m && col("k") === k,
-            struct(col("k"), col("c"), col("cn2")))).as(s"cb_${m}_$k")).toSeq
-        val cbRow = rcb.groupBy().agg(cbAggs.head, cbAggs.tail: _*)
-        val chosen = (0 until M).map { m =>
-          val sv = subvec(col("rv"), m)
-          val cands = (0 until K).map { k =>
-            val cc = col(s"cb_${m}_$k")
-            when(cc.isNotNull, struct(
-              round(lit(-2.0) * Vec.dotNative(sv, cc.getField("c")) +
-                cc.getField("cn2"), 6).as("dist"),
-              cc.getField("k").as("k"),
-              cc.getField("cn2").as("cn2"),
-              Vec.dotNative(subvec(col("cvd"), m), cc.getField("c")).as("cross")))
-          }
-          least(cands: _*)
+  private def indexTable(spark: SparkSession, kind: String, dir: String,
+                         res: DataFrame, rcb: DataFrame): DataFrame =
+    Artifact.table(spark, kind, dir, Ann.Emb) { t =>
+      val cbAggs = (for (m <- 0 until M; k <- 0 until K) yield
+        max(when(col("m") === m && col("k") === k,
+          struct(col("k"), col("c"), col("cn2")))).as(s"cb_${m}_$k")).toSeq
+      val cbRow = rcb.groupBy().agg(cbAggs.head, cbAggs.tail: _*)
+      val chosen = (0 until M).map { m =>
+        val sv = subvec(col("rv"), m)
+        val cands = (0 until K).map { k =>
+          val cc = col(s"cb_${m}_$k")
+          when(cc.isNotNull, struct(
+            round(lit(-2.0) * Vec.dotNative(sv, cc.getField("c")) +
+              cc.getField("cn2"), 6).as("dist"),
+            cc.getField("k").as("k"),
+            cc.getField("cn2").as("cn2"),
+            Vec.dotNative(subvec(col("cvd"), m), cc.getField("c")).as("cross")))
         }
-        val outCols = (0 until M).flatMap { m =>
-          Seq(chosen(m).getField("k").as(s"code$m"),
-            chosen(m).getField("cn2").as(s"cn$m"),
-            chosen(m).getField("cross").as(s"cx$m"))
-        }
-        val enc = res.crossJoin(broadcast(cbRow))
-          .select(Seq(col("vec_id"), col("list_id"),
-            Vec.dotNative(col("cvd"), col("cvd")).as("cn2c")) ++ outCols: _*)
-        val rn2 = col("cn2c") +
-          lit(2.0) * (0 until M).map(m => col(s"cx$m")).reduce(_ + _) +
-          (0 until M).map(m => col(s"cn$m")).reduce(_ + _)
-        graft.sources.Warehouse.writePartitionedTable(
-          enc.select(Seq(col("vec_id"), rn2.as("rn2")) ++
-            (0 until M).map(m => col(s"code$m")) :+ col("list_id"): _*),
-          t, "list_id")
+        least(cands: _*)
       }
+      val outCols = (0 until M).flatMap { m =>
+        Seq(chosen(m).getField("k").as(s"code$m"),
+          chosen(m).getField("cn2").as(s"cn$m"),
+          chosen(m).getField("cross").as(s"cx$m"))
+      }
+      val enc = res.crossJoin(broadcast(cbRow))
+        .select(Seq(col("vec_id"), col("list_id"),
+          Vec.dotNative(col("cvd"), col("cvd")).as("cn2c")) ++ outCols: _*)
+      val rn2 = col("cn2c") +
+        lit(2.0) * (0 until M).map(m => col(s"cx$m")).reduce(_ + _) +
+        (0 until M).map(m => col(s"cn$m")).reduce(_ + _)
+      Warehouse.writePartitionedTable(
+        enc.select(Seq(col("vec_id"), rn2.as("rn2")) ++
+          (0 until M).map(m => col(s"code$m")) :+ col("list_id"): _*),
+        t, "list_id")
     }
-    spark.table(t)
-  }
 
   /** ADC scoring shared by a16/a18: probes carry (query_id, list_id, qvd
     * double[64], qnrm, qc = dot(q, c_list)); codes is the encoded index.
@@ -160,8 +157,7 @@ object IvfPqR {
     val e = Search.corpus(spark, dir)
     val res = residuals(e)
     val rcb = residualCodebook(res)
-    val codes = indexTable(spark,
-      s"graft_ivfpqr_${graft.sources.Warehouse.tableSuffix(dir)}", res, rcb)
+    val codes = indexTable(spark, "ivfpqr", dir, res, rcb)
     val cent = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cent_id"), vd(col("v")).as("cvd"))
     // per-(query, probed list): the dot(q, c_list) offset
@@ -191,8 +187,7 @@ object IvfPqR {
     val res = residualFrame(asg.select("vec_id", "list_id", "v"),
       cent.select("cent_id", "cvd"))
     val rcb = residualCodebook(res)
-    val codes = indexTable(spark,
-      s"graft_ivfpqrk_${graft.sources.Warehouse.tableSuffix(dir)}", res, rcb)
+    val codes = indexTable(spark, "ivfpqrk", dir, res, rcb)
     // probe selection: nearest trained centroids by squared L2 (a4's rule)
     val queries = asg.filter(col("vec_id") % 101 === 0)
       .select(col("vec_id").as("query_id"), vd(col("v")).as("qvd"), col("nrm").as("qnrm"))

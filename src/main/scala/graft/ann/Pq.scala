@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
+import graft.sources.{Artifact, Warehouse}
 
 /** Product quantization ANN (SURVEY.md §2.D5) — the memory-compression
   * scale path: a 100 TB float embedding store collapses to 8 bytes per
@@ -35,7 +36,7 @@ object Pq {
   val K = 16  // centroids per subvector
 
   /** Dims per subvector for THIS corpus: dim/M, read LIVE from one corpus
-    * row and memoized per (session, dir) — r15, verdict r14 #3 ("no
+    * row as an artifact value — r15, verdict r14 #3 ("no
     * end-to-end dim ≠ 64 run"): [[D]] = 8 silently assumed dim = 64, so a
     * dim-128 corpus would have been ENCODED ON ITS FIRST 64 DIMS ONLY —
     * codes, LUTs and ADC scores all blind to half the vector, with no
@@ -44,18 +45,13 @@ object Pq {
     * it equals [[D]] and every registered plan is byte-identical. A dim
     * not divisible by [[M]] refuses loudly (a real deployment re-picks M
     * with the codebook; mis-slicing is never an answer). */
-  private val subDimCache = scala.collection.concurrent.TrieMap.empty[String, Int]
   private[graft] def subDimOf(spark: SparkSession, dir: String): Int =
-    // keyed by DATA SIGNATURE, not just the path (the a13z zBuilt /
-    // probedListsCache rule; review r15 #3): a corpus regenerated in
-    // place at a different dim must re-derive, never serve a stale width
-    subDimCache.getOrElseUpdate(
-      s"${graft.sources.Warehouse.tableSuffix(dir)}@${srcSignature(dir)}", {
+    Artifact.value(spark, "subdim", dir, Ann.Emb) {
       val dim = Search.corpus(spark, dir).select(col("v")).head().getSeq[Any](0).length
       require(dim >= M && dim % M == 0,
         s"PQ subspace split needs dim divisible by M=$M, corpus at $dir has dim=$dim")
       dim / M
-    })
+    }
 
   private def subvec(v: Column, m: Int, d: Int = D): Column =
     slice(v, m * d + 1, d)
@@ -105,21 +101,17 @@ object Pq {
     e.crossJoin(broadcast(cbRow)).select(col("vec_id") +: outCols: _*)
   }
 
-  /** A PQ code index, materialized ONCE per (session, sf-dir, codebook
-    * flavor) as a bucketed parquet table — the production shape: a PQ
+  /** A PQ code index per codebook flavor, an artifact written as a
+    * bucketed parquet table — the production shape: a PQ
     * index IS a written 8-byte-per-vector code table, built in one pass
     * and probed by every query after; a5/a6/a7/a8 between them would
     * otherwise re-encode the corpus four+ times per run. `prefix` keys the
     * codebook flavor ("pqcodes" deterministic, "pqkcodes" k-means). */
   private def codesTable(spark: SparkSession, dir: String, e: DataFrame,
-                         cb: DataFrame, prefix: String, d: Int = D): DataFrame = {
-    val t = s"graft_${prefix}_${graft.sources.Warehouse.tableSuffix(dir)}_${sigSuffix(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writeBucketed(encode(e, cb, d), t, "vec_id")
+                         cb: DataFrame, prefix: String, d: Int = D): DataFrame =
+    Artifact.table(spark, prefix, dir, Ann.Emb) { t =>
+      Warehouse.writeBucketed(encode(e, cb, d), t, "vec_id")
     }
-    spark.table(t)
-  }
 
   /** D5: PQ top-10 for the query set (vec_id % 101 == 0, as the IVF path).
     * Similarity = approx_dot / (qnrm * recon_nrm), rounded; rank with id
@@ -469,21 +461,16 @@ object Pq {
     rows.toDF("m", "k", "c").withColumn("cn2", Vec.dotNative(col("c"), col("c")))
   }
 
-  /** The k-means codebook, materialized ONCE per (session, sf-dir):
-    * codebook training is index-BUILD cost (in production the codebook is
-    * a written artifact versioned with the corpus), so repeated a9 queries
+  /** The k-means codebook artifact: codebook training is index-BUILD
+    * cost (in production the codebook is a written artifact versioned
+    * with the corpus), so repeated a9 queries
     * must not re-fit 8 k-means models any more than repeated a5 queries
     * re-encode the corpus. */
   private def trainedCodebookTable(spark: SparkSession, dir: String,
-                                   e: DataFrame): DataFrame = {
-    val t = s"graft_pqkcb_${graft.sources.Warehouse.tableSuffix(dir)}_${sigSuffix(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writeTable(
-          trainedCodebook(spark, e, subDimOf(spark, dir)), t)
+                                   e: DataFrame): DataFrame =
+    Artifact.table(spark, "pqkcb", dir, Ann.Emb) { t =>
+      Warehouse.writeTable(trainedCodebook(spark, e, subDimOf(spark, dir)), t)
     }
-    spark.table(t)
-  }
 
   /** D9: PQ with k-means-trained codebooks (rows-only + spec): better
     * quantization than data-drawn centroids, same 8-byte index and ADC
@@ -581,8 +568,8 @@ object Pq {
       adcTopK(er, cb, 10, codesTable(spark, dir, er, cb, "pqpcodes")))
   }
 
-  /** The learned rotation, memoized per (session, data-dir) like every
-    * other build artifact here (training is one distributed covariance
+  /** The learned rotation, an artifact value like every other build
+    * artifact here (training is one distributed covariance
     * pass + a driver-side 64x64 eigendecomposition — index-build cost,
     * which must not be re-paid inside each timed query run).
     *
@@ -590,14 +577,8 @@ object Pq {
     * hold the eigencomponents greedily assigned to bucket m (descending
     * eigenvalue, always into the non-full bucket with the smallest
     * log-variance product, lowest bucket id on ties — deterministic). */
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Double]]]
-
   private[graft] def pcaRotation(spark: SparkSession, dir: String): Seq[Seq[Double]] =
-    // keyed by DATA SIGNATURE too (r18, the staleness-key sweep): an
-    // in-place corpus regeneration must re-train the rotation
-    pcaCache.getOrElseUpdate(
-      s"${graft.sources.Warehouse.tableSuffix(dir)}_${sigSuffix(dir)}", {
+    Artifact.value(spark, "pca", dir, Ann.Emb) {
       val e = Search.corpus(spark, dir)
       val (pc, varExp) = new org.apache.spark.mllib.linalg.distributed.RowMatrix(
         e.select(col("v")).rdd.map { r =>
@@ -615,42 +596,21 @@ object Pq {
       }
       val order = bucketOf.toSeq.flatten // output dim -> component index
       Seq.tabulate(64)(o => Seq.tabulate(64)(i => pc(i, order(o))))
-    })
+    }
 
   /** The IVFPQ index table: PQ codes + coarse IVF list assignment,
-    * written PARTITIONED BY list_id once per (session, sf-dir) — the
+    * an artifact written PARTITIONED BY list_id — the
     * FAISS `IVFx,PQy` layout as physical parquet: the inverted lists ARE
     * partitions, the in-list payload is 8 bytes of codes per vector, and
     * a probe reads nprobe/nlists of the data via partition pruning. */
-  /** 8-hex data-signature suffix for dial-parameterized warehouse table
-    * names (the Ann.ivfListTable recipe): regeneration of the source data
-    * under the same path rebuilds instead of serving stale lists. As of
-    * r16 EVERY PQ artifact name carries it (codes, trained codebook,
-    * both ivfPqTable dials): a corpus regenerated in place at a new dim
-    * within one session must never join fresh-width LUTs against codes
-    * encoded at the old width (subDimOf is data-keyed, the tables were
-    * path-keyed — silently wrong ADC scores, ADVICE r15). Bench
-    * .scrubPlan normalizes the suffix out of plan fingerprints. */
-  private[ann] def sigSuffix(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(srcSignature(dir).getBytes("UTF-8"))
-      .take(4).map(b => f"$b%02x").mkString
-
   private def ivfPqTable(spark: SparkSession, dir: String, e: DataFrame,
-                         cb: DataFrame, nlists: Int = 8, d: Int = D): DataFrame = {
-    val t =
-      if (nlists == 8) s"graft_ivfpq_${graft.sources.Warehouse.tableSuffix(dir)}_${sigSuffix(dir)}"
-      else s"graft_ivfpq${nlists}_${graft.sources.Warehouse.tableSuffix(dir)}_${sigSuffix(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writePartitionedTable(
-          encode(e, cb, d).join(
-            Ann.listAssignment(e, nlists = nlists).select("vec_id", "list_id"),
-            "vec_id"),
-          t, "list_id")
+                         cb: DataFrame, nlists: Int = 8, d: Int = D): DataFrame =
+    Artifact.table(spark, "ivfpq", dir, Ann.Emb, if (nlists == 8) "" else s"$nlists") { t =>
+      Warehouse.writePartitionedTable(
+        encode(e, cb, d).join(
+          Ann.listAssignment(e, nlists = nlists).select("vec_id", "list_id"), "vec_id"),
+        t, "list_id")
     }
-    spark.table(t)
-  }
 
   /** IVFPQ rows for a NEW vector batch against the ORIGINAL corpus's
     * codebook and centroids (r13, H14 — the a20/H12 "assign against the
@@ -696,7 +656,7 @@ object Pq {
     val e = Search.corpus(spark, dir)
     val d = subDimOf(spark, dir)
     val cb = codebook(e, d)
-    graft.sources.Warehouse.writeZOrderedN(
+    Warehouse.writeZOrderedN(
       encode(e, cb, d).join(
         Ann.listAssignment(e).select("vec_id", "list_id", "label"), "vec_id"),
       path, Seq("list_id", "label"), files = files)
@@ -748,63 +708,32 @@ object Pq {
       .orderBy("query_id", "rnk")
   }
 
-  /** The z-ordered flat code table, materialized once per (SESSION,
-    * sf-dir, DATA SIGNATURE) under the warehouse dir —
-    * [[writeZOrderedCodes]]' layout as the probe-time artifact. Guarded
-    * by a per-session set, NOT by the on-disk `_SUCCESS`: a surviving
-    * directory from a previous JVM may describe REGENERATED source data
-    * (the driver rewrites /root/testdata between rounds under the same
-    * path). The cache key carries [[srcSignature]] (file names + sizes +
-    * mtimes of embeddings.parquet), so a regeneration WITHIN a live JVM
-    * also invalidates: both the z-table and the memoized probed-list
-    * IN-set rebuild instead of serving a stale pruning set. */
-  private val zBuilt = scala.collection.mutable.HashSet.empty[String]
-
-  /** a13z's probed list ids per (session, sf-dir, data signature) — see
-    * the use site. */
-  private val probedListsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-
-  /** Cheap change-detector for the a13z source data: hash of (name,
-    * length, mtime) over the files of `$dir/embeddings.parquet`. Driver-
-    * side metadata only — no data read, O(#files) stat calls. */
-  private[graft] def srcSignature(dir: String): String = {
-    val root = new java.io.File(s"$dir/embeddings.parquet")
-    val files =
-      if (root.isDirectory) root.listFiles().sortBy(_.getName) else Array(root)
-    val d = java.security.MessageDigest.getInstance("MD5")
-    files.foreach { f =>
-      d.update(s"${f.getName}:${f.length}:${f.lastModified};".getBytes("UTF-8"))
-    }
-    d.digest().take(8).map(b => f"$b%02x").mkString
-  }
-
+  /** The z-ordered flat code table — [[writeZOrderedCodes]]' layout as
+    * the probe-time artifact, read by path: its directory is the
+    * artifact table's location, registered as an external table so the
+    * registry can key, reuse and retire it like every other artifact. */
   private def zCodesDir(spark: SparkSession, dir: String): String = {
-    val base = spark.conf.get("spark.sql.warehouse.dir").replaceFirst("^file:", "")
-    val path = s"$base/graft_ivfpqz_${graft.sources.Warehouse.tableSuffix(dir)}"
-    val key = s"$path@${srcSignature(dir)}"
-    synchronized {
-      if (!zBuilt.contains(key)) {
-        // File count is a SCALE DIAL, not a constant (r10): a fixed
-        // files=8 caps the probe scan at 8 tasks — measured at sf10 as
-        // a13z 64 s vs a13's 15 s purely because the dir-per-list table
-        // reads one file per writer task while the z layout read 8. Size
-        // the z file count with the corpus (≈1 file per MB of source
-        // vectors, floor 8) so the scan stays cores-wide AND the per-file
-        // z-boxes stay small enough for footer stats to prune. The
-        // sf0.1/sf0.01 driver corpora stay at exactly 8 files — the
-        // committed layout the oracle and ZLayoutSpec pin — and the file
-        // count never appears in the logical plan, so fingerprints are
-        // unaffected at every scale.
-        val root = new java.io.File(s"$dir/embeddings.parquet")
-        val srcBytes =
-          if (root.isDirectory) root.listFiles().map(_.length).sum else root.length
-        writeZOrderedCodes(spark, dir, path,
-          files = math.max(8, (srcBytes >> 20).toInt))
-        zBuilt += key
-      }
+    val Seq(t) = Artifact.build(spark, Seq("ivfpqz"), dir, Ann.Emb) { case Seq(name) =>
+      val loc = Warehouse.tableLocation(spark, name)
+      // File count is a SCALE DIAL, not a constant (r10): a fixed
+      // files=8 caps the probe scan at 8 tasks — measured at sf10 as
+      // a13z 64 s vs a13's 15 s purely because the dir-per-list table
+      // reads one file per writer task while the z layout read 8. Size
+      // the z file count with the corpus (≈1 file per MB of source
+      // vectors, floor 8) so the scan stays cores-wide AND the per-file
+      // z-boxes stay small enough for footer stats to prune. The
+      // sf0.1/sf0.01 driver corpora stay at exactly 8 files — the
+      // committed layout the oracle and ZLayoutSpec pin — and the file
+      // count never appears in the logical plan, so fingerprints are
+      // unaffected at every scale.
+      val src = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
+      val srcBytes = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(src).getLength
+      writeZOrderedCodes(spark, dir, loc.toString,
+        files = math.max(8, (srcBytes >> 20).toInt))
+      spark.catalog.createTable(name, loc.toString, "parquet"): Unit
     }
-    path
+    Warehouse.tableLocation(spark, t).toString
   }
 
   /** a13z: the SAME IVFPQ probe semantics as [[a13IvfPqTopK]] but reading
@@ -829,14 +758,14 @@ object Pq {
     val probe = Ann.listProbes(e, qmod = qmod).select(col("query_id"), col("list_id"))
       .join(broadcast(queryLut(e, cb, qmod, d)), "query_id")
     // The probed-list id set is deterministic per corpus, so the driver-
-    // side selection job (a probe-side scan) runs once per (session, dir)
-    // and is memoized — the per-query cost is the pruned scan + join
+    // side selection job (a probe-side scan) is an artifact value — the
+    // per-query cost is the pruned scan + join
     // only, same accounting as every other build-once artifact. Sorted:
     // collect() returns shuffle order, and an unordered literal IN-list
     // would make the plan text (and its fingerprint) flutter.
-    val probed = probedListsCache.getOrElseUpdate(
-      s"${graft.sources.Warehouse.tableSuffix(dir)}@${srcSignature(dir)}@q$qmod",
-      probe.select("list_id").distinct().collect().map(_.getLong(0)).sorted.toSeq)
+    val probed = Artifact.value(spark, "zprobed", dir, Ann.Emb, s"q$qmod") {
+      probe.select("list_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
+    }
     val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
     codes.filter(col("list_id").isin(probed.toIndexedSeq: _*))
       // fixed-Q contract (Ann scaladoc): probe is O(queries × nprobe).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.rag.Search
+import graft.sources.Artifact
 
 /** ANN FAMILY ROUTER (r13) — the sequel to the r12 operating-point
   * chooser, closing its own "honest economics note" (PLANS
@@ -214,28 +215,21 @@ object Router {
     * the build-once IVF artifact at the sqrt-law nlists, and the centroid
     * splinter — the same three numbers the auto entry points already
     * gather (all O(corpus) narrow passes or broadcast-sized scans). */
-  /** (n, dim) memo per (corpus path, data signature): corpus metadata a
-    * production index stores with the build (r17 — same contract and
-    * staleness key as [[Ann]]'s index-statistic memo; occupancy/splinter
-    * are memoized there). First use per session pays the narrow pass. */
-  private val corpusMetaCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Int)]
-
   private def stats(spark: SparkSession, dir: String): (Long, Long, Int, Int) = {
-    val (n, dim) = corpusMetaCache.getOrElseUpdate(
-      s"${graft.sources.Warehouse.tableSuffix(dir)}:${Pq.srcSignature(dir)}", {
-        // one narrow pass yields both the count and the embedding DIMENSION
-        // (max(size) == any row's size — fixed-width corpus; max keeps the
-        // aggregate deterministic and matches the oracle's max(len(v)))
-        val head = Search.corpus(spark, dir)
-          .agg(count(lit(1)), max(size(col("v")))).head()
-        val n0 = head.getLong(0)
-        // empty corpus: max(size) is NULL — fail with the family's
-        // diagnostic instead of an NPE (the pre-r14 count()-only path got
-        // this free from nlistsFor's require)
-        require(n0 > 0, s"router stats: empty corpus at $dir")
-        (n0, head.getInt(1))
-      })
+    // (n, dim): corpus metadata a production index stores with the build
+    val (n, dim) = Artifact.value(spark, "corpusmeta", dir, Ann.Emb) {
+      // one narrow pass yields both the count and the embedding DIMENSION
+      // (max(size) == any row's size — fixed-width corpus; max keeps the
+      // aggregate deterministic and matches the oracle's max(len(v)))
+      val head = Search.corpus(spark, dir)
+        .agg(count(lit(1)), max(size(col("v")))).head()
+      val n0 = head.getLong(0)
+      // empty corpus: max(size) is NULL — fail with the family's
+      // diagnostic instead of an NPE (the pre-r14 count()-only path got
+      // this free from nlistsFor's require)
+      require(n0 > 0, s"router stats: empty corpus at $dir")
+      (n0, head.getInt(1))
+    }
     val nlists = Ann.nlistsFor(n)
     (n, Ann.occupancyEstimate(spark, dir, nlists),
       Ann.splinterEstimate(spark, dir, nlists), dim)

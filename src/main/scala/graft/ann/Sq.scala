@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
-import graft.sources.Warehouse
+import graft.sources.{Artifact, Warehouse}
 
 /** Scalar quantization (SQ8) ANN (SURVEY.md §2.D) — the middle point of
   * the compression/accuracy trade: each of the 64 dims is affinely mapped
@@ -30,51 +30,41 @@ object Sq {
 
   /** Per-dim quantization bounds as ONE row of pos-ordered arrays:
     * mn double[64], sc double[64] with sc = (mx-mn)/255. */
-  private def statsTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_sqstats_${Warehouse.tableSuffix(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val perDim = Search.corpus(spark, dir)
-          .select(posexplode(Vec.toDouble(col("v"))).as(Seq("pos", "x")))
-          .groupBy("pos").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-        val row = perDim
-          .agg(sort_array(collect_list(struct(col("pos"), col("mn"), col("mx")))).as("s"))
-          .select(
-            transform(col("s"), s => s.getField("mn")).as("mn"),
-            transform(col("s"), s => (s.getField("mx") - s.getField("mn")) / lit(255.0)).as("sc"))
-        Warehouse.writeTable(row, t)
-      }
+  private def statsTable(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "sqstats", dir, Ann.Emb) { t =>
+      val perDim = Search.corpus(spark, dir)
+        .select(posexplode(Vec.toDouble(col("v"))).as(Seq("pos", "x")))
+        .groupBy("pos").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+      val row = perDim
+        .agg(sort_array(collect_list(struct(col("pos"), col("mn"), col("mx")))).as("s"))
+        .select(
+          transform(col("s"), s => s.getField("mn")).as("mn"),
+          transform(col("s"), s => (s.getField("mx") - s.getField("mn")) / lit(255.0)).as("sc"))
+      Warehouse.writeTable(row, t)
     }
-    spark.table(t)
-  }
 
   /** recon_d = mn_d + code_d * sc_d, in index order. */
   private def reconOf(codes: Column, mn: Column, sc: Column): Column =
     zip_with(zip_with(codes, sc, (c, s) => c * s), mn, (x, m) => x + m)
 
-  /** The SQ8 code table (vec_id, codes long[64], rn2), materialized ONCE
-    * per (session, sf-dir), bucketed by vec_id. rn2 = |recon|^2 is stored
+  /** The SQ8 code table (vec_id, codes long[64], rn2), an artifact
+    * bucketed by vec_id. rn2 = |recon|^2 is stored
     * at build time so query-side scoring never re-folds the norm. */
-  private def codesTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_sqcodes_${Warehouse.tableSuffix(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val st = statsTable(spark, dir)
-        val codes = zip_with(
-          zip_with(Vec.toDouble(col("v")), col("mn"), (x, m) => x - m),
-          col("sc"),
-          (x, s) => when(s === 0.0, lit(0L)).otherwise(round(x / s).cast("long")))
-        val enc = Search.corpus(spark, dir)
-          .crossJoin(broadcast(st))
-          .withColumn("codes", codes)
-          .withColumn("rn2", Vec.dotNative(reconOf(col("codes"), col("mn"), col("sc")),
-            reconOf(col("codes"), col("mn"), col("sc"))))
-          .select("vec_id", "codes", "rn2")
-        Warehouse.writeBucketed(enc, t, "vec_id")
-      }
+  private def codesTable(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "sqcodes", dir, Ann.Emb) { t =>
+      val st = statsTable(spark, dir)
+      val codes = zip_with(
+        zip_with(Vec.toDouble(col("v")), col("mn"), (x, m) => x - m),
+        col("sc"),
+        (x, s) => when(s === 0.0, lit(0L)).otherwise(round(x / s).cast("long")))
+      val enc = Search.corpus(spark, dir)
+        .crossJoin(broadcast(st))
+        .withColumn("codes", codes)
+        .withColumn("rn2", Vec.dotNative(reconOf(col("codes"), col("mn"), col("sc")),
+          reconOf(col("codes"), col("mn"), col("sc"))))
+        .select("vec_id", "codes", "rn2")
+      Warehouse.writeBucketed(enc, t, "vec_id")
     }
-    spark.table(t)
-  }
 
   /** SQ8 top-k: cosine of the query against reconstructed vectors.
     * `qmod` picks the deterministic query set (vec_id % qmod == 0); 1313

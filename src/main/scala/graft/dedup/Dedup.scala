@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{DetHash, Exact, Vec}
-import graft.sources.Warehouse
+import graft.sources.{Artifact, Warehouse}
 
 /** Deduplication suite (SURVEY.md §2.C) — the LLM-training-data pipeline
   * operators, each expressed as blocked (never all-pairs) Spark plans.
@@ -21,14 +21,8 @@ import graft.sources.Warehouse
   */
 object Dedup {
 
-  /** documents.parquet data-signature suffix for every dedup artifact
-    * table (r18, verdict r17 #1): a corpus regenerated IN PLACE within a
-    * live session re-keys and REBUILDS the shingle/signature/cluster/
-    * truth artifacts instead of serving stale dedup keys or stale eval
-    * truth — the Pq.srcSignature staleness contract, applied to the
-    * documents-derived side (DedupSigSpec pins it end-to-end). */
-  private def docSig(dir: String): String =
-    Warehouse.srcSigSuffix(dir, "documents.parquet")
+  /** The source every dedup artifact derives from. */
+  private val Docs = Seq("documents.parquet")
 
   /** Exploded DISTINCT 60-bit-HASHED word n-gram shingles: one row per
     * (doc_id, hs), plus carried metadata columns.
@@ -70,7 +64,7 @@ object Dedup {
       .distinct()
   }
 
-  /** The 3-gram shingle index, materialized ONCE per (session, sf-dir) as a
+  /** The 3-gram shingle index, an artifact written as a
     * parquet table bucketed+sorted by doc_id, then read by every consumer —
     * d2/d6/d7/d8 between them walk the index ~7 times per run (signature
     * build + both sides of the verification join + the df cap), and at
@@ -81,15 +75,11 @@ object Dedup {
     * measured SLOWER than recompute locally (materialization cost + blocked
     * codegen fusion, see §6 notes); a written bucketed table is the shape a
     * real cluster uses, and the write amortizes across every consumer. */
-  private def shingleIndex3(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_sh3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(
-          shingleHashRows(Tables.documents(spark, dir), 3, Nil), t, "doc_id")
+  private def shingleIndex3(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "sh3", dir, Docs) { t =>
+      Warehouse.writeBucketed(
+        shingleHashRows(Tables.documents(spark, dir), 3, Nil), t, "doc_id")
     }
-    spark.table(t)
-  }
 
   /** C1: exact dedup — md5 hash groups with canonical (min) doc id. */
   def d1ExactDup(spark: SparkSession, dir: String): DataFrame =
@@ -132,20 +122,16 @@ object Dedup {
     hashed.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The signature table, materialized ONCE per (session, sf-dir): like
+  /** The signature table artifact: like
     * the shingle index it derives deterministically from the corpus
     * version and feeds d2, d7, and d9 (signatures, band rows, and the
     * per-doc shingle counts all read it) — in production it is the stored
     * output of the signature-build pass, bucketed by doc_id so the
     * count-attach joins stay exchange-free. */
-  private def minhashSig(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_mhsig_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(minhashSigFrom(shingleIndex3(spark, dir)), t, "doc_id")
+  private def minhashSig(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "mhsig", dir, Docs) { t =>
+      Warehouse.writeBucketed(minhashSigFrom(shingleIndex3(spark, dir)), t, "doc_id")
     }
-    spark.table(t)
-  }
 
   /** LSH band rows (doc_id, b, bh) — 4 bands x 4 rows over the 16 minima. */
   private def lshBands(sig: DataFrame): DataFrame =
@@ -263,26 +249,21 @@ object Dedup {
     spark.read.parquet((0 until passes).map(r => s"$staging/pass_$r"): _*)
   }
 
-  /** The FULL cluster assignment from the multipass pair set, materialized
-    * once per (session, sf-dir) as a bucketed table — [[clusterTable]]'s
+  /** The FULL cluster assignment from the multipass pair set, an
+    * artifact written as a bucketed table — [[clusterTable]]'s
     * bounded-disk twin, and the shared drop-set source for every FULL-chain
     * deliverable (d6/d8/p1/p5/p8f). Same staging-freshness contract as
     * [[d2MultipassPairs]]. */
   private[graft] def clusterTableMultipass(spark: SparkSession, dir: String,
-                                           passes: Int, staging: String): DataFrame = {
-    val t = s"graft_ccf_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val pairs = d2MultipassPairs(spark, dir, passes, staging)
-          .select("doc_a", "doc_b").persist()
-        Warehouse.writeBucketed(
-          connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-          t, "doc_id")
-        pairs.unpersist()
-      }
+                                           passes: Int, staging: String): DataFrame =
+    Artifact.table(spark, "ccf", dir, Docs) { t =>
+      val pairs = d2MultipassPairs(spark, dir, passes, staging)
+        .select("doc_a", "doc_b").persist()
+      Warehouse.writeBucketed(
+        connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
+        t, "doc_id")
+      pairs.unpersist()
     }
-    spark.table(t)
-  }
 
   /** C6-FULL: d6's cluster report over the MULTIPASS full pair set —
     * byte-equal output to [[d6DupClusters]] (spec-pinned at sf0.01 via
@@ -321,32 +302,27 @@ object Dedup {
     * the 60-bit form is what the DuckDB oracle replays. */
   val D3Hamming = 3
 
-  /** The 60-bit SimHash signature table, materialized ONCE per (session,
-    * sf-dir) — one row per doc, another stored signature-build output.
+  /** The 60-bit SimHash signature table artifact — one row per doc,
+    * another stored signature-build output.
     * Per-token hash once, then ALL 60 bit-sums as map-side partial
     * aggregates in ONE groupBy — summing +-1 per occurrence equals the
     * count-weighted per-distinct-word sum, so no (doc, word) pre-count
     * and, crucially, no 60x bit-explode shuffle (that shape moves 60x
     * the token count through the exchange at 100 TB). */
-  private def simhashSig(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_shsig_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val tok = Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-          .withColumn("h", DetHash.h60(col("w")))
-        val bitAggs = (0 until 60).map { b =>
-          sum(expr(s"2 * ((h >> $b) & 1) - 1")).as(s"s$b")
-        }
-        val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-          .select(col("doc_id"),
-            (0 until 60).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-              .reduce(_ + _).as("sig"))
-        Warehouse.writeBucketed(sig, t, "doc_id")
+  private def simhashSig(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "shsig", dir, Docs) { t =>
+      val tok = Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .withColumn("h", DetHash.h60(col("w")))
+      val bitAggs = (0 until 60).map { b =>
+        sum(expr(s"2 * ((h >> $b) & 1) - 1")).as(s"s$b")
       }
+      val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
+        .select(col("doc_id"),
+          (0 until 60).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
+            .reduce(_ + _).as("sig"))
+      Warehouse.writeBucketed(sig, t, "doc_id")
     }
-    spark.table(t)
-  }
 
   def d3Simhash(spark: SparkSession, dir: String): DataFrame =
     d3SimhashChunked(spark, dir, chunkCount = 4)
@@ -356,28 +332,23 @@ object Dedup {
     * 120 bit-sums as map-side partial aggregates in the SAME single
     * groupBy shape as [[simhashSig]] — the wide build costs one more
     * column pass, never a second shuffle. */
-  private def simhashSigWide(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_shsigw_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val tok = Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-          .withColumn("h0", DetHash.h60(col("w")))
-          .withColumn("h1", DetHash.h60Seeded(lit(1), col("w")))
-        val bitAggs =
-          (0 until 60).map(b => sum(expr(s"2 * ((h0 >> $b) & 1) - 1")).as(s"a$b")) ++
-            (0 until 60).map(b => sum(expr(s"2 * ((h1 >> $b) & 1) - 1")).as(s"b$b"))
-        val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-          .select(col("doc_id"),
-            (0 until 60).map(b => when(col(s"a$b") > 0, lit(1L << b)).otherwise(0L))
-              .reduce(_ + _).as("sig0"),
-            (0 until 60).map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(0L))
-              .reduce(_ + _).as("sig1"))
-        Warehouse.writeBucketed(sig, t, "doc_id")
-      }
+  private def simhashSigWide(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "shsigw", dir, Docs) { t =>
+      val tok = Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .withColumn("h0", DetHash.h60(col("w")))
+        .withColumn("h1", DetHash.h60Seeded(lit(1), col("w")))
+      val bitAggs =
+        (0 until 60).map(b => sum(expr(s"2 * ((h0 >> $b) & 1) - 1")).as(s"a$b")) ++
+          (0 until 60).map(b => sum(expr(s"2 * ((h1 >> $b) & 1) - 1")).as(s"b$b"))
+      val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
+        .select(col("doc_id"),
+          (0 until 60).map(b => when(col(s"a$b") > 0, lit(1L << b)).otherwise(0L))
+            .reduce(_ + _).as("sig0"),
+          (0 until 60).map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(0L))
+            .reduce(_ + _).as("sig1"))
+      Warehouse.writeBucketed(sig, t, "doc_id")
     }
-    spark.table(t)
-  }
 
   /** C3b (d3w, r14): the WIDE SimHash the C3 scaladoc promised for the
     * regime where n^2/2^15 bucket pressure bites (~100 TB corpora) — a
@@ -482,18 +453,15 @@ object Dedup {
     * shuffle is keyed by (shingle, block), never an all-pairs block product. */
   def d4NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     // the 4-gram index feeds both self-join sides and the per-doc counts —
-    // materialized once per (session, sf-dir) like the 3-gram index (the
+    // an artifact like the 3-gram index (the
     // explode+window chain otherwise executes 4x per query, per run)
-    val t4 = s"graft_sh4_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t4))
-        Warehouse.writeBucketed(
-          shingleHashRows(
-            Tables.documents(spark, dir)
-              .withColumn("len_bucket", (col("n_chars") / 200).cast("long")),
-            4, Seq("lang", "len_bucket")), t4, "doc_id")
+    val ex = Artifact.table(spark, "sh4", dir, Docs) { t =>
+      Warehouse.writeBucketed(
+        shingleHashRows(
+          Tables.documents(spark, dir)
+            .withColumn("len_bucket", (col("n_chars") / 200).cast("long")),
+          4, Seq("lang", "len_bucket")), t, "doc_id")
     }
-    val ex = spark.table(t4)
     val nsh = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = ex.as("x").join(ex.as("y"),
         col("x.hs") === col("y.hs") && col("x.lang") === col("y.lang") &&
@@ -670,27 +638,22 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** The (doc_id, cluster_id) near-dup cluster assignment, materialized
-    * ONCE per (session, sf-dir) as a bucketed table — the d2 candidate
+  /** The (doc_id, cluster_id) near-dup cluster assignment, an artifact
+    * written as a bucketed table — the d2 candidate
     * chain plus the iterative CC loop is the most expensive index build in
     * the dedup family, and both d6 (cluster report) and d8 (canonical
     * corpus) consume it; clustering is also inherently a whole-corpus
     * artifact, so at warehouse scale it IS a written table, not a
     * per-query recompute. Same within-session immutable-input assumption
     * as [[shingleIndex3]]. */
-  private[graft] def clusterTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_cc_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val pairs = d2MinhashLsh(spark, dir).select("doc_a", "doc_b").persist()
-        Warehouse.writeBucketed(
-          connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-          t, "doc_id")
-        pairs.unpersist()
-      }
+  private[graft] def clusterTable(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "cc", dir, Docs) { t =>
+      val pairs = d2MinhashLsh(spark, dir).select("doc_a", "doc_b").persist()
+      Warehouse.writeBucketed(
+        connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
+        t, "doc_id")
+      pairs.unpersist()
     }
-    spark.table(t)
-  }
 
   /** C6s/C8s shared artifact (r15, verdict r14 #3): the SAMPLED-chain
     * cluster assignment — connected components over [[d2sMinhashLshSampled]]
@@ -706,19 +669,14 @@ object Dedup {
     * is the difference between a verdict and a disk-bound exclusion: the
     * full pair stream's verify-join spill (>65 GB) was the wall, and the
     * sampled stream divides it by the sample rate. */
-  private[graft] def clusterTableSampled(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_ccs_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val pairs = d2sMinhashLshSampled(spark, dir).select("doc_a", "doc_b").persist()
-        Warehouse.writeBucketed(
-          connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-          t, "doc_id")
-        pairs.unpersist()
-      }
+  private[graft] def clusterTableSampled(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "ccs", dir, Docs) { t =>
+      val pairs = d2sMinhashLshSampled(spark, dir).select("doc_a", "doc_b").persist()
+      Warehouse.writeBucketed(
+        connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
+        t, "doc_id")
+      pairs.unpersist()
     }
-    spark.table(t)
-  }
 
   /** C6s: d6's cluster report over the sampled-chain assignment. */
   def d6sDupClustersSampled(spark: SparkSession, dir: String): DataFrame = {
@@ -808,58 +766,46 @@ object Dedup {
     * pair-count groupBy) is unchanged and never all-pairs. */
   val D7DfCap = 100
 
-  /** The df-capped (stop-shingle-free) inverted index, materialized ONCE
-    * per (session, sf-dir) and BUCKETED BY SHINGLE HASH — the join key of
+  /** The df-capped (stop-shingle-free) inverted index, an artifact
+    * BUCKETED BY SHINGLE HASH — the join key of
     * every consumer: d7's exhaustive truth join and d10's decontamination
     * probe both self/semi-join it on hs, so the bucketed layout makes
     * those joins exchange-free. One groupBy (df) + one semi join at build
     * time, amortized across consumers. */
-  private def rareShingleIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_rare3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val ex = shingleIndex3(spark, dir)
-        Warehouse.writeBucketed(
-          ex.join(
-            ex.groupBy("hs").agg(count(lit(1)).as("df"))
-              .filter(col("df") <= D7DfCap).select("hs"),
-            Seq("hs"), "left_semi"), t, "hs")
-      }
+  private def rareShingleIndex(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "rare3", dir, Docs) { t =>
+      val ex = shingleIndex3(spark, dir)
+      Warehouse.writeBucketed(
+        ex.join(
+          ex.groupBy("hs").agg(count(lit(1)).as("df"))
+            .filter(col("df") <= D7DfCap).select("hs"),
+          Seq("hs"), "left_semi"), t, "hs")
     }
-    spark.table(t)
-  }
 
   /** The exhaustive near-dup ground-truth pair set (Jaccard >= 0.5 over
-    * the rare-shingle inverted index), materialized ONCE per (session,
-    * sf-dir) — in practice a recall-eval asset is a STORED artifact
+    * the rare-shingle inverted index), an artifact — in practice a recall-eval asset is a STORED artifact
     * versioned with the corpus, recomputed on refresh, probed by every
     * eval run. The inverted-index pair join (~sum(df^2) rows through one
     * exchange, df-capped) is the dominant build cost; the stored result
     * is just id pairs. */
-  private def truthPairs(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_truth3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val sig = minhashSig(spark, dir)
-        val nsh = sig.select(col("doc_id"), col("n"))
-        val rare = rareShingleIndex(spark, dir)
-        val inter = rare.as("x").join(rare.as("y"),
-            col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
-          .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("i"))
-        Warehouse.writeBucketed(
-          inter
-            .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-            .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-            .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
-            .select("doc_a", "doc_b"), t, "doc_a")
-      }
+  private def truthPairs(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "truth3", dir, Docs) { t =>
+      val sig = minhashSig(spark, dir)
+      val nsh = sig.select(col("doc_id"), col("n"))
+      val rare = rareShingleIndex(spark, dir)
+      val inter = rare.as("x").join(rare.as("y"),
+          col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
+        .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("i"))
+      Warehouse.writeBucketed(
+        inter
+          .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+          .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+          .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
+          .select("doc_a", "doc_b"), t, "doc_a")
     }
-    spark.table(t)
-  }
 
-  /** The LSH candidate-pair set, materialized ONCE per (session, sf-dir)
-    * — the d7/d7s recall grades probe it (r17 optimization round): like
+  /** The LSH candidate-pair set, an artifact — the d7/d7s recall grades probe it (r17 optimization round): like
     * [[truthPairs]], the candidate index a recall eval scores is a STORED
     * asset versioned with the corpus (it derives deterministically from
     * the signature table), and before this each recall run re-ran the
@@ -867,15 +813,11 @@ object Dedup {
     * feed its two aggregate consumers. The d2 queries keep deriving
     * candidates inline — candidate GENERATION is the operator d2 grades;
     * candidate RECALL is what d7 grades, and it probes the stored set. */
-  private def candPairsTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_cand3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(
-          lshCandidates(minhashSig(spark, dir)), t, "doc_a")
+  private def candPairsTable(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "cand3", dir, Docs) { t =>
+      Warehouse.writeBucketed(
+        lshCandidates(minhashSig(spark, dir)), t, "doc_a")
     }
-    spark.table(t)
-  }
 
   def d7LshRecall(spark: SparkSession, dir: String): DataFrame = {
     val cand = candPairsTable(spark, dir)
@@ -908,7 +850,7 @@ object Dedup {
     * exact over the sampled queries and the oracle is a hash compare at
     * every scale. Same output schema as d7. */
   /** The SAMPLED truth-pair asset ([[truthPairs]]' 1-in-101 twin),
-    * materialized ONCE per (session, sf-dir) — same production rule: a
+    * an artifact — same production rule: a
     * recall-eval ground truth is a stored artifact recomputed on corpus
     * refresh, probed by every eval run (r17). The sample filter stays
     * INSIDE the build (x side of the hs-bucketed self-join) so the build
@@ -916,31 +858,26 @@ object Dedup {
     * the full 5M-doc index at sf100d where the unsampled build is the
     * documented disk wall. Content == truthPairs WHERE doc_a % 101 = 0
     * (doc_a is the smaller id, exactly the sampled x side). */
-  private def truthPairsSampled(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_truth3s_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val sig = minhashSig(spark, dir)
-        val nsh = sig.select(col("doc_id"), col("n"))
-        val rare = rareShingleIndex(spark, dir)
-        // sample filter on the bucketed index's x side only: the
-        // hs-bucketed self-join stays exchange-free, the pair stream
-        // shrinks 101x
-        val inter = rare.filter(col("doc_id") % 101 === 0).as("x")
-          .join(rare.as("y"),
-            col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
-          .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("i"))
-        Warehouse.writeBucketed(
-          inter
-            .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-            .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-            .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
-            .select("doc_a", "doc_b"), t, "doc_a")
-      }
+  private def truthPairsSampled(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "truth3s", dir, Docs) { t =>
+      val sig = minhashSig(spark, dir)
+      val nsh = sig.select(col("doc_id"), col("n"))
+      val rare = rareShingleIndex(spark, dir)
+      // sample filter on the bucketed index's x side only: the
+      // hs-bucketed self-join stays exchange-free, the pair stream
+      // shrinks 101x
+      val inter = rare.filter(col("doc_id") % 101 === 0).as("x")
+        .join(rare.as("y"),
+          col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
+        .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("i"))
+      Warehouse.writeBucketed(
+        inter
+          .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+          .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+          .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
+          .select("doc_a", "doc_b"), t, "doc_a")
     }
-    spark.table(t)
-  }
 
   def d7sLshRecallSampled(spark: SparkSession, dir: String): DataFrame = {
     // both sides stored assets (r17, see d7LshRecall): the sampled truth
@@ -1079,8 +1016,7 @@ object Dedup {
     * O(index) regardless of duplication structure. The per-doc fold is
     * the index's bucketed doc_id layout re-aggregated after the df join;
     * the fraction is e6-exact. */
-  /** The CROSS-DOCUMENT (df >= 2) shingle set, materialized ONCE per
-    * (session, sf-dir) bucketed by hs (r17 optimization round): document
+  /** The CROSS-DOCUMENT (df >= 2) shingle set, an artifact bucketed by hs (r17 optimization round): document
     * frequency is INDEX metadata — BM25 stores df beside its postings,
     * and Lee et al.'s substring dedup materializes the repeated-substring
     * structure once — yet d11, d12 and (through d12) d13 each re-ran the
@@ -1088,17 +1024,13 @@ object Dedup {
     * key set only (the single predicate all three consumers test), so it
     * is strictly smaller than the index; the bucketed-by-hs layout feeds
     * their hash joins without exchanging the artifact side. */
-  private def dupShingleTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_dup3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(
-          shingleIndex3(spark, dir)
-            .groupBy("hs").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2).select("hs"), t, "hs")
+  private def dupShingleTable(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "dup3", dir, Docs) { t =>
+      Warehouse.writeBucketed(
+        shingleIndex3(spark, dir)
+          .groupBy("hs").agg(count(lit(1)).as("df"))
+          .filter(col("df") >= 2).select("hs"), t, "hs")
     }
-    spark.table(t)
-  }
 
   def d11DupTextFraction(spark: SparkSession, dir: String): DataFrame = {
     val ex = shingleIndex3(spark, dir)
@@ -1231,16 +1163,13 @@ object Dedup {
     * scrub (r17's chunking applied before d12), not a bigger buffer. */
   val D13MaxDocTokens = 4000000L
 
-  /** Measured max doc token count, memoized per (session, corpus) like
-    * every build artifact — the guard costs one narrow scan once. */
-  private val d13MaxCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   def d13ScrubbedCorpus(spark: SparkSession, dir: String,
                         maxDocTokens: Long = D13MaxDocTokens): DataFrame = {
-    val worst = d13MaxCache.getOrElseUpdate(s"${Warehouse.tableSuffix(dir)}_${docSig(dir)}",
+    // the measured max doc token count, an artifact value: one narrow scan
+    val worst = Artifact.value(spark, "d13max", dir, Docs) {
       Tables.documents(spark, dir)
-        .agg(max(size(split(col("text"), " ")))).collect()(0).getInt(0).toLong)
+        .agg(max(size(split(col("text"), " ")))).collect()(0).getInt(0).toLong
+    }
     if (worst > maxDocTokens) throw new IllegalArgumentException(
       s"d13 buffer bound exceeded: corpus $dir has a $worst-token document > " +
         s"maxDocTokens=$maxDocTokens — the per-document reassembly buffer " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.{Artifact, Warehouse}
 
 /** Document chunking for RAG ingestion (SURVEY.md §2.B) — the standard
   * fixed-size sliding window with overlap: 32-word chunks on a 24-word
@@ -70,35 +71,28 @@ object Chunking {
     * excluded; top-5 per query. */
 
   /** The chunk postings index — sparse rows (doc_id, chunk_id, bucket, s,
-    * n2) with s != 0, materialized ONCE per (session, sf-dir) bucketed by
-    * doc_id: the ingest artifact a chunked RAG corpus stores. n2 (the
+    * n2) with s != 0, an artifact bucketed by doc_id: the ingest artifact a chunked RAG corpus stores. n2 (the
     * chunk's exact squared norm) is denormalized onto each posting row so
     * scoring needs no second join. The doc_id bucketing makes the
     * post-join (query_id, doc_id, chunk_id) aggregation exchange-free
     * (doc_id ⊆ the grouping keys), so retrieval is: bucketed scan ->
     * broadcast join on bucket -> partial+final HashAggregate, one shuffle
     * of the tiny aggregated candidate rows only. */
-  private def chunkFeatureIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_chunkfeat_${graft.sources.Warehouse.tableSuffix(dir)}_${graft.sources.Warehouse.srcSigSuffix(dir, "documents.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        // the (doc_id, chunk_id) pair rides through Embed.features' single
-        // id column as a synthesized key, split back after — no re-join
-        val chunks = chunkRows(Tables.documents(spark, dir), withText = true)
-          .select(concat_ws("#", col("doc_id"), col("chunk_id")).as("ck"), col("ctext"))
-        val cf = Embed.features(chunks, "ck", "ctext")
-          .filter(col("s") =!= 0)
-          .withColumn("doc_id", split_part(col("ck"), lit("#"), lit(1)).cast("long"))
-          .withColumn("chunk_id", split_part(col("ck"), lit("#"), lit(2)).cast("long"))
-          .select("doc_id", "chunk_id", "bucket", "s")
-        val norms = cf.groupBy("doc_id", "chunk_id")
-          .agg(sum(col("s") * col("s")).as("n2"))
-        graft.sources.Warehouse.writeBucketed(
-          cf.join(norms, Seq("doc_id", "chunk_id")), t, "doc_id")
-      }
+  private def chunkFeatureIndex(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "chunkfeat", dir, Seq("documents.parquet")) { t =>
+      // the (doc_id, chunk_id) pair rides through Embed.features' single
+      // id column as a synthesized key, split back after — no re-join
+      val chunks = chunkRows(Tables.documents(spark, dir), withText = true)
+        .select(concat_ws("#", col("doc_id"), col("chunk_id")).as("ck"), col("ctext"))
+      val cf = Embed.features(chunks, "ck", "ctext")
+        .filter(col("s") =!= 0)
+        .withColumn("doc_id", split_part(col("ck"), lit("#"), lit(1)).cast("long"))
+        .withColumn("chunk_id", split_part(col("ck"), lit("#"), lit(2)).cast("long"))
+        .select("doc_id", "chunk_id", "bucket", "s")
+      val norms = cf.groupBy("doc_id", "chunk_id")
+        .agg(sum(col("s") * col("s")).as("n2"))
+      Warehouse.writeBucketed(cf.join(norms, Seq("doc_id", "chunk_id")), t, "doc_id")
     }
-    spark.table(t)
-  }
 
   /** B18: chunk-level search over the inverted sparse-feature index.
     *

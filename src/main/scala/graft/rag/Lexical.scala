@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{DetHash, Exact}
-import graft.sources.Warehouse
+import graft.sources.{Artifact, Warehouse}
 
 /** Lexical (keyword) retrieval — BM25 and hybrid lexical+vector fusion
   * (SURVEY.md §2.B). The reference engine searches by embedding only
@@ -38,38 +38,31 @@ object Lexical {
 
   private def words(c: Column): Column = split(c, " ")
 
-  /** The lexical inverted index, materialized ONCE per (session, sf-dir):
-    * one row per (term-hash, doc) carrying tf, doc length, and the term's
+  private val Docs = Seq("documents.parquet")
+
+  /** The lexical inverted index artifact: one row per (term-hash, doc)
+    * carrying tf, doc length, and the term's
     * document frequency, bucketed by term hash (the postings join key). */
-  private def lexIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_lex_${Warehouse.tableSuffix(dir)}_${Warehouse.srcSigSuffix(dir, "documents.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val docs = Tables.documents(spark, dir)
-        val tf = docs
-          .select(col("doc_id"), explode(words(col("text"))).as("w"))
-          .select(col("doc_id"), DetHash.h60(col("w")).as("hs"))
-          .groupBy("doc_id", "hs").agg(count(lit(1)).as("tf"))
-        val dl = docs.select(col("doc_id"), size(words(col("text"))).cast("long").as("dl"))
-        val df = tf.groupBy("hs").agg(count(lit(1)).as("df"))
-        Warehouse.writeBucketed(tf.join(dl, "doc_id").join(df, "hs"), t, "hs")
-      }
+  private def lexIndex(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "lex", dir, Docs) { t =>
+      val docs = Tables.documents(spark, dir)
+      val tf = docs
+        .select(col("doc_id"), explode(words(col("text"))).as("w"))
+        .select(col("doc_id"), DetHash.h60(col("w")).as("hs"))
+        .groupBy("doc_id", "hs").agg(count(lit(1)).as("tf"))
+      val dl = docs.select(col("doc_id"), size(words(col("text"))).cast("long").as("dl"))
+      val df = tf.groupBy("hs").agg(count(lit(1)).as("df"))
+      Warehouse.writeBucketed(tf.join(dl, "doc_id").join(df, "hs"), t, "hs")
     }
-    spark.table(t)
-  }
 
   /** Corpus size + average doc length (the BM25 normalizer), one row. */
-  private def lexStats(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_lexstats_${Warehouse.tableSuffix(dir)}_${Warehouse.srcSigSuffix(dir, "documents.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeTable(
-          Tables.documents(spark, dir)
-            .select(size(words(col("text"))).cast("long").as("dl"))
-            .agg(count(lit(1)).as("n"), avg(col("dl")).as("avglen")), t)
+  private def lexStats(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "lexstats", dir, Docs) { t =>
+      Warehouse.writeTable(
+        Tables.documents(spark, dir)
+          .select(size(words(col("text"))).cast("long").as("dl"))
+          .agg(count(lit(1)).as("n"), avg(col("dl")).as("avglen")), t)
     }
-    spark.table(t)
-  }
 
   /** B14: BM25 top-k — query docs retrieve by their [[QTerms]] RAREST
     * terms (lexical more-like-this, the keyword twin of r5). Candidate
@@ -118,26 +111,21 @@ object Lexical {
   }
 
   /** Pass-1 BM25 candidate scores (query_id, doc_id, score_e6) for the
-    * rarest-terms query formulation, materialized ONCE per (session,
-    * data-dir) bucketed by query_id. Bounded: each query contributes at
-    * most the union of its [[QTerms]] rare-term posting lists. This is the
+    * rarest-terms query formulation, an artifact bucketed by query_id.
+    * Bounded: each query contributes at most the union of its [[QTerms]]
+    * rare-term posting lists. This is the
     * shared pre-ranking artifact of the whole lexical stack — r14 ranks it
     * to top-10, r15 to top-[[RrfDepth]], r19 merges it (exact-integer
     * partial sums) with the expansion-term scores — so the postings join
     * runs once per corpus, not once per query family member. The bucketed
     * layout means every downstream per-query window sorts locally with no
     * exchange. */
-  private def bm25Candidates(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_bm25c_${Warehouse.tableSuffix(dir)}_${Warehouse.srcSigSuffix(dir, "documents.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val idx = lexIndex(spark, dir)
-        Warehouse.writeBucketed(
-          termScores(rarestTerms(idx), idx, lexStats(spark, dir)), t, "query_id")
-      }
+  private def bm25Candidates(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "bm25c", dir, Docs) { t =>
+      val idx = lexIndex(spark, dir)
+      Warehouse.writeBucketed(
+        termScores(rarestTerms(idx), idx, lexStats(spark, dir)), t, "query_id")
     }
-    spark.table(t)
-  }
 
   def r14Bm25TopK(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
     rankTopK(bm25Candidates(spark, dir), k)
@@ -191,17 +179,14 @@ object Lexical {
     *
     * Both ranker inputs are the materialized first-stage shortlists
     * ([[bm25Candidates]] ranked to [[RrfDepth]], [[Search.knnShortlist101]])
-    * and the fused top-[[TopK]] is itself materialized once per (session,
-    * data-dir): r16 and r20 consume the same shortlist, and before this
-    * each of them re-ran BOTH rankers from raw corpus scans (the r6 bench's
-    * single most expensive recompute). */
-  def r15HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_rrf_${Warehouse.tableSuffix(dir)}_${Warehouse.srcSigSuffix(dir, "documents.parquet", "embeddings.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) Warehouse.writeTable(fuseRrf(spark, dir), t)
-    }
-    spark.table(t).orderBy("query_id", "rnk")
-  }
+    * and the fused top-[[TopK]] is itself an artifact: r16 and r20
+    * consume the same shortlist, and before this each of them re-ran
+    * BOTH rankers from raw corpus scans (the r6 bench's single most
+    * expensive recompute). */
+  def r15HybridRrf(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "rrf", dir, Docs :+ "embeddings.parquet") { t =>
+      Warehouse.writeTable(fuseRrf(spark, dir), t)
+    }.orderBy("query_id", "rnk")
 
   /** The fusion plan behind [[r15HybridRrf]] (build side of its artifact). */
   private def fuseRrf(spark: SparkSession, dir: String): DataFrame = {

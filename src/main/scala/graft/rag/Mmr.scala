@@ -41,7 +41,7 @@ object Mmr {
     import spark.implicits._
     // the shared materialized first-stage shortlist (same query set and
     // depth r15's vector ranker uses) — the corpus brute-force pass behind
-    // it runs once per (session, dir), not once per retrieval query
+    // it runs once per corpus version, not once per retrieval query
     val shortlist = Search.knnShortlist101(spark, dir)
       .select(col("query_id"), col("vec_id"), col("similarity"))
     val e = Search.corpus(spark, dir)

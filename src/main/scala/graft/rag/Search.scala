@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Vec
+import graft.sources.{Artifact, Warehouse}
 
 /** Vector search (SURVEY.md §2.B3-B5, B8, §2.D1) — the reference's
   * `rag_search` / `find_similar_documents` / `compute_similarity` re-expressed
@@ -229,24 +230,20 @@ object Search {
   /** Depth of the shared first-stage retrieval shortlist (r15/r16/r20). */
   val ShortlistK = 50
 
-  /** The %101 query set's raw-cosine top-[[ShortlistK]], materialized ONCE
-    * per (session, data-dir) bucketed by query_id — the shared first-stage
+  /** The %101 query set's raw-cosine top-[[ShortlistK]], an artifact
+    * bucketed by query_id — the shared first-stage
     * vector ranker of the retrieval stack (r15's fusion input, r16's MMR
     * candidate pool, transitively r20's rerank shortlist). Before this
     * artifact each of those queries re-scanned the full corpus; now only
     * the first call pays the brute-force pass, and the bucketed layout
     * feeds the per-query windows/joins downstream without an exchange. */
-  private[graft] def knnShortlist101(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_knn101_${graft.sources.Warehouse.tableSuffix(dir)}_${graft.sources.Warehouse.srcSigSuffix(dir, "embeddings.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writeBucketed(
-          knn(spark, dir, col("vec_id") % 101 === 0, k = ShortlistK,
-            threshold = -1.0, clampZero = false, sameLabel = false),
-          t, "query_id")
+  private[graft] def knnShortlist101(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "knn101", dir, Seq("embeddings.parquet")) { t =>
+      Warehouse.writeBucketed(
+        knn(spark, dir, col("vec_id") % 101 === 0, k = ShortlistK,
+          threshold = -1.0, clampZero = false, sameLabel = false),
+        t, "query_id")
     }
-    spark.table(t)
-  }
 
   /** Brute-force ground truth@10 for a `vec_id % qmod` query set, read
     * from the [[knnShortlist101]] artifact instead of re-scanning the

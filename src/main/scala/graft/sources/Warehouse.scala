@@ -254,43 +254,6 @@ object Warehouse {
     spark.catalog.createTable(table, loc.toString, "parquet"): Unit
   }
 
-  /** Collision-safe per-data-dir table-name suffix: 64 bits of the md5 of
-    * the absolute path (a 32-bit String.hashCode collided at ~2^16 dirs —
-    * and a collision silently serves the wrong index). Within-session the
-    * input dir is assumed immutable; data changing under the same path
-    * needs a new session (or a data fingerprint in place of the path). */
-  private[graft] def tableSuffix(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8"))
-    d.take(8).map(b => f"$b%02x").mkString
-  }
-
-  /** 8-hex DATA-SIGNATURE suffix for session-materialized artifact tables
-    * (r18, verdict r17 #1 — the staleness-key gap): md5 over (name,
-    * length, mtime) of every part file of the named source dataset(s)
-    * under `dir`, cheap driver-side stat calls only. Appended to a
-    * warehouse table name beside [[tableSuffix]], it makes a corpus
-    * regenerated IN PLACE within one live session rebuild its artifacts
-    * instead of serving stale dedup keys / eval truth — the
-    * Pq.srcSignature / a13z staleness rule, generalized to every
-    * artifact table. Multi-source artifacts (e.g. the RRF fusion
-    * shortlist, which derives from documents AND embeddings) pass every
-    * source so a refresh of either re-keys. */
-  private[graft] def srcSigSuffix(dir: String, files: String*): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    files.foreach { fn =>
-      val root = new java.io.File(s"$dir/$fn")
-      val parts =
-        if (root.isDirectory) root.listFiles().sortBy(_.getName)
-        else Array(root)
-      parts.foreach { f =>
-        d.update(s"${f.getName}:${f.length}:${f.lastModified};".getBytes("UTF-8"))
-      }
-    }
-    d.digest().take(4).map(b => f"$b%02x").mkString
-  }
-
   /** Write partitioned by a low-cardinality column (e.g. IVF list_id). */
   def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)

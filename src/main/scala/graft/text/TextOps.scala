@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{DetHash, Exact}
+import graft.sources.{Artifact, Warehouse}
 
 /** Text-analysis pipeline operators (SURVEY.md §2.E) over `documents`.
   *
@@ -253,25 +254,18 @@ object TextOps {
         DetHash.h60(col("p.w1")).as("w1g"))
   }
 
-  /** The corpus bigram LM, materialized ONCE per (session, sf-dir):
-    * (g, c12, c1) — bigram count and its first-word context count, the
+  /** The corpus bigram LM artifact: (g, c12, c1) — bigram count and its first-word context count, the
     * denominator pre-joined so scoring is a single equality join on the
     * 8-byte gram hash. The LM is a corpus-version artifact exactly like
     * the shingle and postings indexes. */
-  private def lmTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_lm2_${graft.sources.Warehouse.tableSuffix(dir)}_${graft.sources.Warehouse.srcSigSuffix(dir, "documents.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val rows = bigramRows(spark, dir)
-        val big = rows.groupBy("g").agg(count(lit(1)).as("c12"),
-          max(col("w1g")).as("w1g"))
-        val uni = rows.groupBy("w1g").agg(count(lit(1)).as("c1"))
-        graft.sources.Warehouse.writeBucketed(
-          big.join(uni, "w1g").select("g", "c12", "c1"), t, "g")
-      }
+  private def lmTable(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "lm2", dir, Seq("documents.parquet")) { t =>
+      val rows = bigramRows(spark, dir)
+      val big = rows.groupBy("g").agg(count(lit(1)).as("c12"),
+        max(col("w1g")).as("w1g"))
+      val uni = rows.groupBy("w1g").agg(count(lit(1)).as("c1"))
+      Warehouse.writeBucketed(big.join(uni, "w1g").select("g", "c12", "c1"), t, "g")
     }
-    spark.table(t)
-  }
 
   /** E8 (t8): bigram-LM quality scoring — the CCNet-style model-based
     * filter: score each document by its average bigram log-probability

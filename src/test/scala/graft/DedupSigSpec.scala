@@ -1,22 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.ann.{IvfPqR, KmeansIvf, Sq}
 import graft.dedup.Dedup
 
-/** In-place regeneration freshness for the DOCUMENTS- and EMBEDDINGS-
-  * derived artifact tables (r18, verdict r17 #1 — the staleness-key gap):
-  * the dedup shingle/signature/truth/candidate/dup-key tables, the RAG
-  * postings/shortlist artifacts and the knn101 eval-truth table cached by
-  * (path) only, so a corpus regenerated IN PLACE within one live session
-  * would serve stale dedup keys / stale recall truth with no error —
-  * exactly the wrong-answer class PqSigSpec closed for the PQ tables in
-  * r17. Every artifact table now carries Warehouse.srcSigSuffix(dir,
-  * sources...) beside the path hash; this spec is the executable proof:
-  * build + serve at corpus v1, regenerate the SAME path with different
-  * content, and pin the in-place result row-identical to a never-cached
-  * fresh-directory compute of the identical v2 corpus.
+/** In-place regeneration freshness for the derived artifacts: every
+  * artifact is keyed by `Artifact.signature` of the sources it derives
+  * from, so a corpus regenerated IN PLACE within one live session must
+  * rebuild instead of serving stale dedup keys, eval truth, index codes,
+  * MV partials or memory rows. Each case below builds + serves at
+  * version 1, regenerates the SAME path with version-2 content, and pins
+  * the in-place result row-identical to a never-cached fresh-directory
+  * compute of the identical version-2 source. Results are compared as
+  * multisets (sorted on every column): artifact reads are unordered.
   */
 class DedupSigSpec extends SparkSpec {
 
@@ -42,7 +41,7 @@ class DedupSigSpec extends SparkSpec {
   }
 
   /** PqSigSpec's deterministic embeddings corpus, seeded by version. */
-  private def writeVecs(dir: String, version: Int, n: Int = 300): Unit = {
+  private def writeVecs(dir: String, version: Int): Unit = {
     val rnd = new java.util.Random(20260818L + version)
     val dim = 32
     def unit(): Array[Float] = {
@@ -50,7 +49,7 @@ class DedupSigSpec extends SparkSpec {
       val nrm = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
       v.map(_ / nrm)
     }
-    val rows = (0 until n).map(i => Row(i.toLong, unit().toSeq, i % 10))
+    val rows = (0 until 300).map(i => Row(i.toLong, unit().toSeq, i % 10))
     val schema = StructType(Seq(
       StructField("vec_id", LongType, nullable = false),
       StructField("embedding", ArrayType(FloatType, containsNull = false)),
@@ -59,46 +58,66 @@ class DedupSigSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
   }
 
-  private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
-
-  test("in-place documents regeneration rebuilds the dedup artifact chain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsig").toString
-    writeDocs(dir, version = 1)
-    // build + serve the chain at v1: d11 consumes sh3 + dup3; d7 consumes
-    // mhsig -> rare3 -> truth3 + cand3 — between them the full
-    // shingle/signature/truth/candidate artifact stack
-    val d11v1 = rowsOf(Dedup.d11DupTextFraction(spark, dir))
-    val d7v1 = rowsOf(Dedup.d7LshRecall(spark, dir))
-    assert(d11v1.nonEmpty && d7v1.nonEmpty)
-
-    // regenerate the SAME path with different duplicate structure
-    writeDocs(dir, version = 2)
-    val fresh = java.nio.file.Files.createTempDirectory("graft_dsig_f").toString
-    writeDocs(fresh, version = 2)
-
-    val d11in = rowsOf(Dedup.d11DupTextFraction(spark, dir))
-    assert(d11in === rowsOf(Dedup.d11DupTextFraction(spark, fresh)),
-      "d11 served a stale sh3/dup3 artifact after in-place regeneration")
-    assert(d11in !== d11v1,
-      "v2 regeneration produced the v1 answer — dup-key table not data-keyed")
-    assert(rowsOf(Dedup.d7LshRecall(spark, dir)) ===
-      rowsOf(Dedup.d7LshRecall(spark, fresh)),
-      "d7 served stale candidate/truth artifacts after in-place regeneration")
+  /** The sf0.001 `table`: whole at version 1, without the `drop` rows at
+    * version 2. One part file, so a trained (k-means) artifact sees the
+    * same partitioning in the in-place and the fresh directory. */
+  private def writeFrom(table: String, drop: Column)(dir: String, version: Int): Unit = {
+    val src = spark.read.parquet(s"$Sf/$table.parquet")
+    (if (version == 1) src else src.filter(!drop))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$table.parquet")
   }
 
-  test("in-place embeddings regeneration rebuilds the knn101 eval shortlist") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ksig").toString
-    writeVecs(dir, version = 1)
-    val v1 = rowsOf(graft.rag.Search.knnShortlist101(spark, dir))
-    assert(v1.nonEmpty)
-    writeVecs(dir, version = 2)
-    val fresh = java.nio.file.Files.createTempDirectory("graft_ksig_f").toString
-    writeVecs(fresh, version = 2)
-    val inPlace = rowsOf(graft.rag.Search.knnShortlist101(spark, dir))
-    assert(inPlace === rowsOf(graft.rag.Search.knnShortlist101(spark, fresh)),
-      "knn101 served a stale shortlist after in-place regeneration — the " +
-        "recall queries' stored ground truth would silently grade v1 truth")
-    assert(inPlace !== v1,
-      "v2 regeneration produced the v1 shortlist — table not data-keyed")
+  /** A multiset of rows, in a fixed order: sorted on every column. */
+  private def rowsOf(df: DataFrame): Seq[Row] =
+    df.orderBy(df.columns.toSeq.map(c => col(s"`$c`")): _*).collect().toSeq
+
+  /** (what regenerates, its writer, the queries reading its artifacts);
+    * the first query's answer must also differ from version 1's, or the
+    * case could not tell a stale artifact from a fresh one. */
+  private case class Regen(what: String, write: (String, Int) => Unit,
+                           queries: Seq[(String, String => DataFrame)])
+
+  private val cases = Seq(
+    // d11 consumes sh3 + dup3; d7 consumes mhsig -> rare3 -> truth3 +
+    // cand3 — between them the full shingle/signature/truth/candidate stack
+    Regen("documents regeneration rebuilds the dedup artifact chain", writeDocs, Seq(
+      "d11" -> (Dedup.d11DupTextFraction(spark, _)),
+      "d7" -> (Dedup.d7LshRecall(spark, _)))),
+    Regen("embeddings regeneration rebuilds the knn101 eval shortlist", writeVecs, Seq(
+      "knn101" -> (graft.rag.Search.knnShortlist101(spark, _)))),
+    Regen("embeddings regeneration rebuilds the SQ, residual-PQ and k-means IVF indexes",
+      writeFrom("embeddings", col("vec_id") > 250), Seq(
+        "a16" -> (IvfPqR.a16IvfPqResidualTopK(spark, _)),
+        "a12" -> (Sq.a12SqRecall(spark, _)),
+        "a4" -> (KmeansIvf.a4KnnIvfKmeans(spark, _)),
+        "a18" -> (IvfPqR.a18IvfPqrKmeansTopK(spark, _)))),
+    Regen("lineitem regeneration rebuilds the q23 partial-aggregate MV",
+      writeFrom("lineitem", col("l_orderkey") % 7 === 0), Seq(
+        "q23" -> (graft.analytics.Queries.q23IncrementalAgg(spark, _)))),
+    Regen("events regeneration rebuilds the memory table",
+      writeFrom("events", col("event_id") % 5 === 0), Seq(
+        "memoryTable" -> (graft.memory.MemoryOps.memoryTable(spark, _)))))
+
+  cases.foreach { c =>
+    test(s"in-place ${c.what}") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_sig").toString
+      c.write(dir, 1)
+      val v1 = c.queries.map { case (_, q) => rowsOf(q(dir)) }
+      assert(v1.forall(_.nonEmpty))
+
+      // regenerate the SAME path; the oracle is a never-cached fresh dir
+      c.write(dir, 2)
+      val fresh = java.nio.file.Files.createTempDirectory("graft_sig_f").toString
+      c.write(fresh, 2)
+
+      val inPlace = c.queries.map { case (name, q) =>
+        val got = rowsOf(q(dir))
+        assert(got === rowsOf(q(fresh)),
+          s"$name served a stale artifact after in-place regeneration")
+        got
+      }
+      assert(inPlace.head !== v1.head,
+        s"${c.queries.head._1}: version 2 produced the version-1 answer — artifact not data-keyed")
+    }
   }
 }

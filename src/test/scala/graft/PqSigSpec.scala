@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ann.Pq
+import graft.sources.{Artifact, Warehouse}
 
 /** In-place regeneration freshness for the PQ artifact caches (r17,
   * verdict r16 #2): codesTable (pqcodes), the default-nlists ivfPqTable,
@@ -16,6 +17,8 @@ import graft.ann.Pq
   * the missing executable proof: generate at dim 32, serve, regenerate
   * the SAME path at dim 64, and pin the in-place result row-identical to
   * a never-cached fresh-directory compute of the identical corpus.
+  * The registry's own contract (missing sources, generations,
+  * single-flight builds) is pinned at the end.
   */
 class PqSigSpec extends SparkSpec {
 
@@ -46,10 +49,13 @@ class PqSigSpec extends SparkSpec {
 
   private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
 
+  private def sig(dir: String): String =
+    Artifact.signature(spark, dir, Seq("embeddings.parquet"))
+
   test("in-place dim regeneration serves fresh PQ artifacts, not cached-width tables") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pqsig").toString
     writeCorpus(dir, dim = 32, n = 600)
-    val sig32 = Pq.srcSignature(dir)
+    val sig32 = sig(dir)
     assert(Pq.subDimOf(spark, dir) === 32 / Pq.M)
     // build + serve every cached artifact flavor at dim 32: pqcodes (a5),
     // default-nlists ivfPqTable (a13), and the composed a22 serving shape
@@ -59,7 +65,7 @@ class PqSigSpec extends SparkSpec {
 
     // regenerate the SAME path at dim 64 within the SAME session
     writeCorpus(dir, dim = 64, n = 600)
-    assert(Pq.srcSignature(dir) !== sig32,
+    assert(sig(dir) !== sig32,
       "regeneration must move the data signature or every cache aliases")
     assert(Pq.subDimOf(spark, dir) === 64 / Pq.M)
 
@@ -100,5 +106,56 @@ class PqSigSpec extends SparkSpec {
     assert(rowsOf(Pq.a9PqKmeansTopK(spark, dir)) ===
       rowsOf(Pq.a9PqKmeansTopK(spark, fresh)),
       "a9 served a stale-signature trained codebook or code table")
+  }
+
+  /** A one-row-per-id source whose content (and so signature) is `n`. */
+  private def writeSource(dir: String, n: Int): Unit =
+    spark.range(n).coalesce(1).write.mode("overwrite").parquet(s"$dir/src.parquet")
+
+  private def specTable(kind: String, dir: String)(onBuild: => Unit = ()): DataFrame =
+    Artifact.table(spark, kind, dir, Seq("src.parquet")) { t =>
+      onBuild
+      Warehouse.writeTable(spark.read.parquet(s"$dir/src.parquet"), t)
+    }
+
+  test("a missing source throws, naming its path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sig_missing").toString
+    val e = intercept[java.io.FileNotFoundException](
+      specTable("specmissing", dir)(fail("built an artifact of absent data")))
+    assert(e.getMessage.contains(s"$dir/src.parquet"))
+  }
+
+  test("a superseded generation stays readable; older ones are dropped") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sig_gen").toString
+    def generations = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_specgen_")).toSeq
+    writeSource(dir, 1)
+    val g1 = specTable("specgen", dir)()
+    writeSource(dir, 2)
+    assert(specTable("specgen", dir)().count() === 2L)
+    assert(g1.count() === 1L, "a resolved generation must survive one rebuild")
+    writeSource(dir, 3)
+    assert(specTable("specgen", dir)().count() === 3L)
+    assert(generations.size === 2,
+      s"two rebuilds must leave exactly two generations: $generations")
+  }
+
+  test("concurrent callers of one key cause one build") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sig_flight").toString
+    writeSource(dir, 5)
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val callers = (0 until 2).map { _ =>
+      val th = new Thread(() => {
+        start.await()
+        specTable("specflight", dir) { builds.incrementAndGet(); Thread.sleep(200) }.count(): Unit
+      })
+      th.start()
+      th
+    }
+    start.countDown()
+    callers.foreach(_.join())
+    assert(builds.get === 1)
+    assert(specTable("specflight", dir)().count() === 5L)
   }
 }
