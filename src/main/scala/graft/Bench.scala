@@ -282,35 +282,22 @@ object Bench {
     if (changed.nonEmpty)
       System.err.println(s"[bench] ${changed.size} plan fingerprint(s) changed since last run")
     // EVIDENCE ON DRIFT (verdict r16 #1): any fingerprint that differs
-    // from the committed baseline auto-persists its scrubbed plan text to
-    // fpdiff/<name>.txt — unconditional, no env var — so a flutter seen
+    // from the baseline auto-persists its scrubbed plan text (see
+    // [[dumpDrifted]]) — unconditional, no env var — so a flutter seen
     // only in the DRIVER's end-of-round session leaves a diffable artifact
     // in the tree. Diff against the committed plans_baseline/<name>.txt
     // (written by the re-baseline run via SPARK_GRAFT_DUMP_PLANS) to read
-    // the exact drifting token. Stale dumps from earlier runs are cleared
-    // first so the directory always reflects the LATEST baseline compare;
-    // best-effort (an unwritable dir must not fail the bench).
+    // the exact drifting token. Best-effort: an unwritable dir must not
+    // fail the bench.
     if (prevPlans.nonEmpty) try {
-      val dir = java.nio.file.Paths.get("fpdiff")
-      if (java.nio.file.Files.isDirectory(dir)) {
-        val it = java.nio.file.Files.list(dir)
-        try it.forEach { p =>
-          if (p.toString.endsWith(".txt")) java.nio.file.Files.delete(p)
-        } finally it.close()
-      }
-      val drifted = results.filter(r =>
-        prevPlans.get(r.name).exists(old =>
-          old != r.fp && r.fp != "err" && old != "err") && r.plan.nonEmpty)
-      if (drifted.nonEmpty) {
-        java.nio.file.Files.createDirectories(dir)
-        drifted.foreach { r =>
-          java.nio.file.Files.write(dir.resolve(s"${r.name}.txt"),
-            r.plan.getBytes("UTF-8")): Unit
-        }
+      val drifted = results.collect { case r
+        if prevPlans.get(r.name).exists(old => old != r.fp && r.fp != "err" && old != "err") &&
+          r.plan.nonEmpty => r.name -> r.plan }
+      val dir = dumpDrifted(outPath, results.map(_.name), drifted)
+      if (drifted.nonEmpty)
         System.err.println(
           s"[bench] scrubbed plan text for ${drifted.size} drifted " +
-            "fingerprint(s) written to fpdiff/ — diff vs plans_baseline/")
-      }
+            s"fingerprint(s) written to $dir — diff vs plans_baseline/")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] fpdiff dump failed: ${e.getMessage}")
     }
@@ -481,6 +468,23 @@ object Bench {
     val t1 = common.map(sf1Sec(_)).sum
     s""","sf1":{"nq":${common.size},"sf1_total_sec":${r2(t1)},"sf01_total_sec":${r2(t01)},"scale_x_total":${r2(t1 / math.max(t01, 0.001))},"cold_total_sec":${r2(root.path("cold_total").asDouble(-1))},"scale_x":${famScale.mkString("{", ",", "}")}}"""
   } catch { case _: Throwable => "" }
+
+  /** Writes each `drifted` (query, scrubbed plan) to `fpdiff/<query>.txt`
+    * beside the bench output `outPath`, after deleting the dumps of every
+    * `measured` query — so the directory reflects the latest baseline
+    * compare of each query this run measured, a subset run leaves the
+    * other queries' dumps alone, and a run redirected elsewhere never
+    * touches the committed `./fpdiff`. Returns the directory. */
+  private[graft] def dumpDrifted(outPath: String, measured: Seq[String],
+                                 drifted: Seq[(String, String)]): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(outPath).toAbsolutePath.getParent.resolve("fpdiff")
+    measured.foreach(q => java.nio.file.Files.deleteIfExists(dir.resolve(s"$q.txt")))
+    if (drifted.nonEmpty) java.nio.file.Files.createDirectories(dir)
+    drifted.foreach { case (q, plan) =>
+      java.nio.file.Files.write(dir.resolve(s"$q.txt"), plan.getBytes("UTF-8"))
+    }
+    dir
+  }
 
   /** The fingerprint gate's decision: which changed-plan queries are NOT
     * covered by the allowlist. `allow` is comma-separated, each entry an

@@ -1,12 +1,12 @@
 package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Vec
 import graft.rag.Search
+import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** IVF approximate-nearest-neighbor search (SURVEY.md §2.D2) — the scale
@@ -79,10 +79,6 @@ object Ann {
   def a10IvfFiltered(spark: SparkSession, dir: String): DataFrame =
     ivfTopK(spark, dir, sameLabel = true)
 
-  private def centroids(e: DataFrame, nlists: Int = 8): DataFrame =
-    e.filter(col("vec_id") < nlists)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-
   /** Corpus-side list assignment — ROW-LOCAL: the nlists centroids are
     * collected (sorted, so the one-row aggregate is deterministic) into a
     * single broadcast array row, and the argmax (rounded cosine desc,
@@ -104,21 +100,11 @@ object Ann {
     * being assigned and the centroid source must be separable. */
   private[graft] def listAssignment(e: DataFrame,
                                     centSource: Option[DataFrame] = None,
-                                    nlists: Int = 8): DataFrame = {
-    val cent = centroids(centSource.getOrElse(e), nlists)
-    val centRow = cent.agg(sort_array(collect_list(
-      struct(col("cent_id"), col("cv"), col("cnrm")))).as("cents"))
-    e.crossJoin(broadcast(centRow))
+                                    nlists: Int = 8): DataFrame =
+    e.crossJoin(broadcast(Stages.centroidRow(centSource.getOrElse(e), nlists)))
       .select(col("vec_id"),
-        array_min(transform(col("cents"), c => struct(
-          negate(round(
-            when(col("nrm") * c.getField("cnrm") === 0.0, 0.0)
-              .otherwise(Vec.dotNative(col("v"), c.getField("cv"))
-                / (col("nrm") * c.getField("cnrm"))), 6)).as("ncs"),
-          c.getField("cent_id").as("cent_id"))))
-          .getField("cent_id").as("list_id"),
+        array_min(Stages.centroidScores).getField("cent_id").as("list_id"),
         col("label"), col("v"), col("nrm"))
-  }
 
   /** The IVF-flat index table: raw vectors + list assignment, written
     * PARTITIONED BY list_id, one artifact per dial — the FAISS
@@ -217,19 +203,10 @@ object Ann {
     // centSource (r16, default e): the streamed-append composition probes
     // a combined (batch ∪ streamed) query set against the VERSIONED batch
     // centroid artifact — the a20/H12 rule on the query side
-    val cent = centroids(centSource.getOrElse(e), nlists)
-    val centRow = cent.agg(sort_array(collect_list(
-      struct(col("cent_id"), col("cv"), col("cnrm")))).as("cents"))
-    val scored = transform(col("cents"), c => struct(
-      negate(round(
-        when(col("nrm") * c.getField("cnrm") === 0.0, 0.0)
-          .otherwise(Vec.dotNative(col("v"), c.getField("cv"))
-            / (col("nrm") * c.getField("cnrm"))), 6)).as("ncs"),
-      c.getField("cent_id").as("cent_id")))
     e.filter(col("vec_id") % qmod === 0)
-      .crossJoin(broadcast(centRow))
+      .crossJoin(broadcast(Stages.centroidRow(centSource.getOrElse(e), nlists)))
       .select(col("vec_id").as("query_id"),
-        explode(slice(sort_array(scored), 1, nprobe)).as("probe"),
+        explode(slice(sort_array(Stages.centroidScores), 1, nprobe)).as("probe"),
         col("label").as("qlabel"), col("v").as("qv"), col("nrm").as("qnrm"))
       .select(col("query_id"), col("probe.cent_id").as("list_id"),
         col("qlabel"), col("qv"), col("qnrm"))
@@ -255,29 +232,28 @@ object Ann {
                       nlists: Int = 8, nprobe: Int = 3,
                       qmod: Int = 101,
                       staticPruned: Boolean = false): DataFrame = {
-    val e = Search.corpus(spark, dir)  // vec_id, label, v, nrm
-    val asg0 = ivfListTable(spark, dir, nlists)
-    val asg =
-      if (staticPruned)
-        asg0.filter(col("list_id").isin(
-          probedListIdsCached(spark, dir, nprobe, nlists, qmod): _*))
-      else asg0
-    val probes = listProbes(e, nprobe, nlists, qmod)
-    val sim = round(
-      when(col("qnrm") * col("nrm") === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("qv"), col("v")) / (col("qnrm") * col("nrm"))), 6)
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
+    val asg = ivfListTable(spark, dir, nlists)
+    listTopK(
+      if (staticPruned) asg.filter(col("list_id").isin(
+        probedListIdsCached(spark, dir, nprobe, nlists, qmod): _*))
+      else asg,
+      listProbes(Search.corpus(spark, dir), nprobe, nlists, qmod), 10, sameLabel)
+  }
+
+  /** Exact cosine top-`k` of each query's probed lists: list rows `asg`
+    * (vec_id, list_id, label, v, nrm) joined to `probes` (query_id,
+    * list_id, qlabel, qv, qnrm) — restricted to the query's label when
+    * `sameLabel`. The IVF-flat list scan of a2/a10, a4, a19 and the
+    * streamed serve. */
+  private[ann] def listTopK(asg: DataFrame, probes: DataFrame, k: Int,
+                            sameLabel: Boolean = false): DataFrame = {
     val joinCond = asg("list_id") === probes("list_id") &&
       col("vec_id") =!= col("query_id") &&
       (if (sameLabel) col("label") === col("qlabel") else lit(true))
     // fixed-Q contract (Ann scaladoc): probes is O(queries × nprobe),
     // small by the serving contract, not by the testdata's vec_id % 101.
-    asg.join(broadcast(probes), joinCond)
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= 10)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Stages.rankTopK(asg.join(broadcast(probes), joinCond),
+      Stages.cosine(col("qv"), col("qnrm"), col("v"), col("nrm")), k)
   }
 
   /** [[ivfTopK]] over an EXPLICIT corpus (vec_id, label, v, nrm) with the
@@ -292,22 +268,9 @@ object Ann {
     * partition-pruned artifact read. */
   private[graft] def ivfTopKOver(corpus: DataFrame, centSource: DataFrame,
                                  nlists: Int, nprobe: Int,
-                                 qmod: Int = 101): DataFrame = {
-    val asg = listAssignment(corpus, Some(centSource), nlists)
-    val probes = listProbes(corpus, nprobe, nlists, qmod, Some(centSource))
-    val sim = round(
-      when(col("qnrm") * col("nrm") === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("qv"), col("v")) / (col("qnrm") * col("nrm"))), 6)
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
-    // fixed-Q contract: see [[ivfTopK]]
-    asg.join(broadcast(probes),
-        asg("list_id") === probes("list_id") && col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= 10)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
-  }
+                                 qmod: Int = 101): DataFrame =
+    listTopK(listAssignment(corpus, Some(centSource), nlists),
+      listProbes(corpus, nprobe, nlists, qmod, Some(centSource)), 10)
 
   // ------------------------------------------------------------ auto mode
 
@@ -393,15 +356,12 @@ object Ann {
     * batch artifact (the a20/H12 rule), never the appended rows. */
   private[graft] def splinterOf(centSource: DataFrame, nlists: Int,
                                 tau: Double = 0.5): Int = {
-    val cent = centroids(centSource, nlists)
+    val cent = Stages.centroids(centSource, nlists)
     val srcStride = math.max(1L, nlists.toLong / 4096L)
     val src = cent.filter(col("cent_id") % srcStride === 0)
       .select(col("cent_id").as("src"), col("cv").as("sv"), col("cnrm").as("snrm"))
-    val cs = round(
-      when(col("snrm") * col("cnrm") === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("sv"), col("cv")) / (col("snrm") * col("cnrm"))), 6)
     src.join(broadcast(cent), lit(true))
-      .filter(cs >= tau)
+      .filter(Stages.cosine(col("sv"), col("snrm"), col("cv"), col("cnrm")) >= tau)
       .groupBy("src").agg(count(lit(1)).as("nn"))
       .agg(max(col("nn"))).collect()(0).getLong(0).toInt
   }
@@ -581,8 +541,6 @@ object Ann {
     "a10_ivf_filtered" -> ((s, d) => a10IvfFiltered(s, d)),
     "a20_incremental_ivf" -> ((s, d) => a20IncrementalIvf(s, d)),
   )
-
-  private def dotSql(a: String, b: String): String = Search.dotSql(a, b)
 
   /** Shared CTE chain producing the IVF ranked results (a2 + a3 unfiltered;
     * a10 with the label predicate inside the probe join). */

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Vec
 import graft.rag.Search
+import graft.rag.Search.dotSql
 import graft.sources.Artifact
 
 /** D19: GRAPH-ordered probe selection over the IVF centroids (SURVEY.md
@@ -38,10 +38,6 @@ object GraphProbe {
   val Beam = 1   // hop-1 frontier width carried into the second hop
   val TopK = 10
 
-  private def cosRounded(a: org.apache.spark.sql.Column, an: org.apache.spark.sql.Column,
-                         b: org.apache.spark.sql.Column, bn: org.apache.spark.sql.Column) =
-    round(when(an * bn === 0.0, 0.0).otherwise(Vec.dotNative(a, b) / (an * bn)), 6)
-
   /** Centroid k-NN graph: per source centroid, its Degree nearest other
     * centroids by rounded cosine (dst tie-break). 8×8 → 8×3 rows; at scale
     * a once-per-corpus broadcast artifact. */
@@ -50,7 +46,7 @@ object GraphProbe {
     val we = Window.partitionBy(col("src")).orderBy(col("cs").desc, col("dst"))
     cent.select(col("cent_id").as("src"), col("cv"), col("cnrm"))
       .join(broadcast(c2), col("dst") =!= col("src"))
-      .withColumn("cs", cosRounded(col("cv"), col("cnrm"), col("cv2"), col("cnrm2")))
+      .withColumn("cs", Stages.cosine(col("cv"), col("cnrm"), col("cv2"), col("cnrm2")))
       .withColumn("rn", row_number().over(we)).filter(col("rn") <= Degree)
       .select("src", "dst")
   }
@@ -77,9 +73,7 @@ object GraphProbe {
     * driver-trivial at any scale that can hold centroids. */
   private def edgeMapOf(spark: SparkSession, dir: String): Map[Long, Seq[Long]] =
     Artifact.value(spark, "edges", dir, Ann.Emb) {
-      val cent = Search.corpus(spark, dir).filter(col("vec_id") < NLists)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-      centroidEdges(cent).collect()
+      centroidEdges(Stages.centroids(Search.corpus(spark, dir), NLists)).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
         .groupBy(_._1).map { case (s, ds) => (s, ds.map(_._2).sorted) }
     }
@@ -100,19 +94,12 @@ object GraphProbe {
     * Oracle hashes pin the equality (the DuckDB side is unchanged). */
   private def graphProbes(spark: SparkSession, dir: String, e: DataFrame,
                           qmod: Int): DataFrame = {
-    val cent = e.filter(col("vec_id") < NLists)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val centRow = cent.agg(sort_array(collect_list(
-      struct(col("cent_id"), col("cv"), col("cnrm")))).as("cents"))
     val em = edgeMapOf(spark, dir)
     // plan-literal edge map (the probedListIds static-IN-set precedent:
     // deterministic per corpus version, so fingerprints stay stable)
     val edgeCol = map(em.toSeq.sortBy(_._1).flatMap { case (s, ds) =>
       Seq(lit(s), array(ds.map(lit): _*)) }: _*)
-    val sc = sort_array(transform(col("cents"), c => struct(
-      negate(cosRounded(col("v"), col("nrm"),
-        c.getField("cv"), c.getField("cnrm"))).as("ncs"),
-      c.getField("cent_id").as("cent_id"))))
+    val sc = sort_array(Stages.centroidScores)
     val entry = element_at(col("sc"), 1).getField("cent_id")
     val h1 = element_at(edgeCol, col("entry"))
     val b1 = transform(
@@ -124,7 +111,7 @@ object GraphProbe {
     val probes = slice(filter(col("sc"),
       s => array_contains(col("cands"), s.getField("cent_id"))), 1, NProbe)
     e.filter(col("vec_id") % qmod === 0)
-      .crossJoin(broadcast(centRow))
+      .crossJoin(broadcast(Stages.centroidRow(e, NLists)))
       .withColumn("sc", sc)
       .withColumn("entry", entry)
       .withColumn("h1", h1)
@@ -140,28 +127,15 @@ object GraphProbe {
   /** D19 (a19): top-10 via graph-ordered probes — a2's pruned list scan
     * with the greedy probe set. */
   def a19GraphTopK(spark: SparkSession, dir: String, qmod: Int = 101): DataFrame = {
-    val e = Search.corpus(spark, dir)
     // serve from the STORED partitioned IVF list table (r17 optimization
     // round) — the scaladoc's "a2's partition-pruned plan" made literal:
     // the r16 body re-ran Ann.listAssignment's O(corpus · nlists) argmin
     // inline on every serve, and the inline shape can never partition-
     // prune. Same rows (the table IS the materialized assignment); the
     // probes join now drives dynamic partition pruning exactly as a2's.
-    val asg = Ann.ivfListTable(spark, dir, NLists)
-    val probes = graphProbes(spark, dir, e, qmod)
-    val sim = round(
-      when(col("qnrm") * col("nrm") === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("qv"), col("v")) / (col("qnrm") * col("nrm"))), 6)
-    val wr = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
-    // fixed-Q contract (Ann scaladoc): probes is O(queries × nprobe); the
-    // edge/cand broadcasts above are O(nlists × degree) index artifacts.
-    asg.join(broadcast(probes),
-        asg("list_id") === probes("list_id") && col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(wr))
-      .filter(col("rnk") <= TopK)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    // The edge/cand broadcasts are O(nlists × degree) index artifacts.
+    Ann.listTopK(Ann.ivfListTable(spark, dir, NLists),
+      graphProbes(spark, dir, Search.corpus(spark, dir), qmod), TopK)
   }
 
   /** D19 recall: graph-ordered probes vs brute force — same ground truth
@@ -181,8 +155,6 @@ object GraphProbe {
   )
 
   // ---------------------------------------------------------------- oracle
-
-  private def dotSql(a: String, b: String): String = Search.dotSql(a, b)
 
   /** graphCte(101) is the registered text byte-for-byte. */
   private def graphCte(qmod: Int): String =

@@ -1,11 +1,11 @@
 package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
+import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** RESIDUAL-encoded IVFPQ (SURVEY.md §2.D) — the full Jégou et al. 2011
@@ -31,71 +31,38 @@ object IvfPqR {
 
   import Pq.{M, D, K}
 
-  private def subvec(v: Column, m: Int): Column = slice(v, m * D + 1, D)
-
   private def vd(c: Column): Column = Vec.toDouble(c)
 
-  /** Residual frame (vec_id, list_id, rv double[64], cvd double[64]) from
-    * any coarse assignment (vec_id, list_id, v) + centroid set (cent_id,
-    * cvd double[64]) — shared by the deterministic-coarse (a16) and
-    * k-means-coarse (a18) variants. */
+  /** Residual frame (vec_id, list_id, rv double[dim], cvd double[dim])
+    * from any coarse assignment (vec_id, list_id, v) + centroid set
+    * (cent_id, cvd double[dim]) — shared by the deterministic-coarse (a16)
+    * and k-means-coarse (a18) variants. */
   private def residualFrame(asg: DataFrame, cent: DataFrame): DataFrame =
     asg.join(broadcast(cent), col("list_id") === col("cent_id"))
       .select(col("vec_id"), col("list_id"),
         zip_with(vd(col("v")), col("cvd"), (a, b) => a - b).as("rv"),
         col("cvd"))
 
-  /** Residual frame for the deterministic coarse quantizer (a16). */
-  private def residuals(e: DataFrame): DataFrame = {
-    val cent = e.filter(col("vec_id") < 8)
+  /** The deterministic coarse centroids (vec_id < 8) as (cent_id, cvd). */
+  private def coarse(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cent_id"), vd(col("v")).as("cvd"))
-    residualFrame(Ann.listAssignment(e).select("vec_id", "list_id", "v"), cent)
-  }
 
-  /** Residual codebook (m, k, c double[D], cn2): the residuals of rows
+  /** Residual codebook (m, k, c double[d], cn2): the residuals of rows
     * 8 <= vec_id < 8+K (k = vec_id - 8) — deterministic and replayable. */
-  private def residualCodebook(res: DataFrame): DataFrame =
-    res.filter(col("vec_id") >= 8 && col("vec_id") < 8 + K)
-      .select((col("vec_id") - 8).as("k"),
-        explode(array((0 until M).map { m =>
-          struct(lit(m).as("m"), subvec(col("rv"), m).as("c"))
-        }: _*)).as("s"))
-      .select(col("s.m").as("m"), col("k"), col("s.c").as("c"))
-      .withColumn("cn2", Vec.dotNative(col("c"), col("c")))
+  private def residualCodebook(res: DataFrame, d: Int): DataFrame =
+    Stages.codebook(res.filter(col("vec_id") >= 8 && col("vec_id") < 8 + K),
+      (col("vec_id") - 8).as("k"), col("rv"), d)
 
-  /** The residual IVFPQ index artifact: encode + exact rn2, written
-    * PARTITIONED BY list_id. Row-local argmin over the
-    * broadcast pivoted codebook (no explode, no exchange), as Pq.encode;
-    * candidates additionally carry dot(c_list_m, cc) so rn2 assembles in
-    * the same pass. */
+  /** The residual IVFPQ index artifact: codes + exact rn2, written
+    * PARTITIONED BY list_id. The encoder's candidates additionally carry
+    * the cross term dot(c_list_m, cc), so rn2 assembles in the same pass. */
   private def indexTable(spark: SparkSession, kind: String, dir: String,
-                         res: DataFrame, rcb: DataFrame): DataFrame =
+                         res: DataFrame, rcb: DataFrame, d: Int): DataFrame =
     Artifact.table(spark, kind, dir, Ann.Emb) { t =>
-      val cbAggs = (for (m <- 0 until M; k <- 0 until K) yield
-        max(when(col("m") === m && col("k") === k,
-          struct(col("k"), col("c"), col("cn2")))).as(s"cb_${m}_$k")).toSeq
-      val cbRow = rcb.groupBy().agg(cbAggs.head, cbAggs.tail: _*)
-      val chosen = (0 until M).map { m =>
-        val sv = subvec(col("rv"), m)
-        val cands = (0 until K).map { k =>
-          val cc = col(s"cb_${m}_$k")
-          when(cc.isNotNull, struct(
-            round(lit(-2.0) * Vec.dotNative(sv, cc.getField("c")) +
-              cc.getField("cn2"), 6).as("dist"),
-            cc.getField("k").as("k"),
-            cc.getField("cn2").as("cn2"),
-            Vec.dotNative(subvec(col("cvd"), m), cc.getField("c")).as("cross")))
-        }
-        least(cands: _*)
-      }
-      val outCols = (0 until M).flatMap { m =>
-        Seq(chosen(m).getField("k").as(s"code$m"),
-          chosen(m).getField("cn2").as(s"cn$m"),
-          chosen(m).getField("cross").as(s"cx$m"))
-      }
-      val enc = res.crossJoin(broadcast(cbRow))
-        .select(Seq(col("vec_id"), col("list_id"),
-          Vec.dotNative(col("cvd"), col("cvd")).as("cn2c")) ++ outCols: _*)
+      val enc = Stages.encode(res, rcb, col("rv"), d,
+        Seq(col("vec_id"), col("list_id"), Vec.dotNative(col("cvd"), col("cvd")).as("cn2c")),
+        cross = Some(col("cvd")))
       val rn2 = col("cn2c") +
         lit(2.0) * (0 until M).map(m => col(s"cx$m")).reduce(_ + _) +
         (0 until M).map(m => col(s"cn$m")).reduce(_ + _)
@@ -106,28 +73,16 @@ object IvfPqR {
     }
 
   /** ADC scoring shared by a16/a18: probes carry (query_id, list_id, qvd
-    * double[64], qnrm, qc = dot(q, c_list)); codes is the encoded index.
-    * Builds the per-query residual LUTs (m -> map k -> dot(q_m, cc)),
-    * broadcasts probe×LUT, and ranks approx cosine within probed lists. */
+    * double[dim], qnrm, qc = dot(q, c_list)); codes is the encoded index.
+    * Builds the per-query residual LUTs, broadcasts probe×LUT, and ranks
+    * approx cosine within probed lists. */
   private def adcTopK(codes: DataFrame, probes: DataFrame, rcb: DataFrame,
-                      k: Int): DataFrame = {
-    // NOTE (r17 optimization round): the row-local residual-LUT variant
-    // (rcb pivoted into one broadcast row, maps computed per probe row)
-    // was tried and measured 2.6x SLOWER across the PQ family in a
-    // same-window A/B — see Pq.queryLut. The distinct + groupBy(query_id)
-    // exchanges below are O(queries), scale-independent; keep them.
-    val qd = (0 until M).map(m => (m, Vec.dotNative(subvec(col("qvd"), m), col("c"))))
-      .foldRight(lit(null).cast("double")) { case ((m, d), acc) =>
-        when(col("m") === m, d).otherwise(acc)
-      }
-    val lutAggs = (0 until M).map { m =>
-      map_from_entries(collect_list(when(col("m") === m, struct(col("k"), col("qd"))))).as(s"l$m")
-    }
-    val lut = probes.select(col("query_id"), col("qvd")).distinct()
-      .join(broadcast(rcb), lit(true))
-      .withColumn("qd", qd)
-      .groupBy(col("query_id"))
-      .agg(lutAggs.head, lutAggs.tail: _*)
+                      k: Int, d: Int): DataFrame = {
+    // The distinct + groupBy(query_id) exchanges of the LUT build are
+    // O(queries), scale-independent; a row-local LUT measured 2.6x
+    // slower (Stages.lut).
+    val lut = Stages.lut(probes.select(col("query_id"), col("qvd")).distinct(),
+      rcb, col("qvd"), d, col("query_id"))
     // broadcast(lut): both sides are O(queries) (fixed-Q contract); the
     // stats-less aggregate output otherwise plans a SortMergeJoin with 2
     // Exchanges + 2 Sorts inside every residual probe subtree (r18, guide
@@ -135,38 +90,28 @@ object IvfPqR {
     val probeLut = probes.join(broadcast(lut), "query_id")
       .select(Seq(col("query_id"), col("list_id").as("p_list"), col("qnrm"), col("qc")) ++
         (0 until M).map(m => col(s"l$m")): _*)
-    val approx = col("qc") +
-      (0 until M).map(m => element_at(col(s"l$m"), col(s"code$m"))).reduce(_ + _)
-    val sim = round(
-      when(col("qnrm") * sqrt(col("rn2")) === 0.0, 0.0)
-        .otherwise(approx / (col("qnrm") * sqrt(col("rn2")))), 6)
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
     // fixed-Q contract (Ann scaladoc): probeLut is O(queries × nprobe).
-    codes.join(broadcast(probeLut),
-        col("list_id") === col("p_list") && col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Stages.rankTopK(codes.join(broadcast(probeLut),
+        col("list_id") === col("p_list") && col("vec_id") =!= col("query_id")),
+      Stages.adcScore(col("rn2"), Some(col("qc"))), k)
   }
 
-  /** D16 (a16): residual-IVFPQ top-10 for the standard probe set. */
+  /** D16 (a16): residual-IVFPQ top-10 for the standard probe set, encoded
+    * at the corpus's live subspace width ([[Pq.subDimOf]]). */
   def a16IvfPqResidualTopK(spark: SparkSession, dir: String, k: Int = 10,
                            qmod: Int = 101): DataFrame = {
     val e = Search.corpus(spark, dir)
-    val res = residuals(e)
-    val rcb = residualCodebook(res)
-    val codes = indexTable(spark, "ivfpqr", dir, res, rcb)
-    val cent = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cent_id"), vd(col("v")).as("cvd"))
+    val d = Pq.subDimOf(spark, dir)
+    val res = residualFrame(Ann.listAssignment(e).select("vec_id", "list_id", "v"), coarse(e))
+    val rcb = residualCodebook(res, d)
+    val codes = indexTable(spark, "ivfpqr", dir, res, rcb, d)
     // per-(query, probed list): the dot(q, c_list) offset
     val probes = Ann.listProbes(e, qmod = qmod)
       .select(col("query_id"), col("list_id"), vd(col("qv")).as("qvd"), col("qnrm"))
-      .join(broadcast(cent), col("list_id") === col("cent_id"))
+      .join(broadcast(coarse(e)), col("list_id") === col("cent_id"))
       .withColumn("qc", Vec.dotNative(col("qvd"), col("cvd")))
       .select("query_id", "list_id", "qvd", "qnrm", "qc")
-    adcTopK(codes, probes, rcb, k)
+    adcTopK(codes, probes, rcb, k, d)
   }
 
   /** D18 (a18): residual IVFPQ with a LEARNED (k-means) coarse quantizer —
@@ -182,24 +127,20 @@ object IvfPqR {
     * probe fan-out bound, and recall at-least-matching the deterministic
     * a17 path. */
   def a18IvfPqrKmeansTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
+    val d = Pq.subDimOf(spark, dir)
     val (asg, centDf) = KmeansIvf.ivfIndex(spark, dir)
     val cent = centDf.select(col("cent_id"), col("cv").as("cvd"), col("csq"))
     val res = residualFrame(asg.select("vec_id", "list_id", "v"),
       cent.select("cent_id", "cvd"))
-    val rcb = residualCodebook(res)
-    val codes = indexTable(spark, "ivfpqrk", dir, res, rcb)
+    val rcb = residualCodebook(res, d)
+    val codes = indexTable(spark, "ivfpqrk", dir, res, rcb, d)
     // probe selection: nearest trained centroids by squared L2 (a4's rule)
     val queries = asg.filter(col("vec_id") % 101 === 0)
       .select(col("vec_id").as("query_id"), vd(col("v")).as("qvd"), col("nrm").as("qnrm"))
-    val d2 = Vec.dotNative(col("qvd"), col("qvd")) -
-      lit(2.0) * Vec.dotNative(col("qvd"), col("cvd")) + col("csq")
-    val wp = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cent_id"))
-    val probes = queries.join(broadcast(cent), lit(true))
-      .withColumn("d2", round(d2, 6))
-      .withColumn("rn", row_number().over(wp)).filter(col("rn") <= KmeansIvf.NProbe)
+    val probes = Stages.nearestL2(queries, cent, col("qvd"), col("cvd"), KmeansIvf.NProbe)
       .withColumn("qc", Vec.dotNative(col("qvd"), col("cvd")))
       .select(col("query_id"), col("cent_id").as("list_id"), col("qvd"), col("qnrm"), col("qc"))
-    adcTopK(codes, probes, rcb, k)
+    adcTopK(codes, probes, rcb, k, d)
   }
 
   /** D18 recall: k-means-coarse residual IVFPQ vs the same brute-force
@@ -225,8 +166,6 @@ object IvfPqR {
   )
 
   // ---------------------------------------------------------------- oracle
-
-  private def dotSql(a: String, b: String): String = Search.dotSql(a, b)
 
   /** DOUBLE[8] subvector m of 64-dim list v (m is a SQL expression). */
   private def subSql(v: String, m: String): String =

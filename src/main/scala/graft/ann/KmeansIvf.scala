@@ -3,7 +3,6 @@ package graft.ann
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -59,30 +58,12 @@ object KmeansIvf {
 
   def a4KnnIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
     val (asg, centDf) = ivfIndex(spark, dir)
-
     // probe selection: nearest centroids by squared L2
     val queries = asg.filter(col("vec_id") % 101 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val qsq = Vec.dotNative(col("qv"), col("qv"))
-    val dist = qsq - lit(2.0) * Vec.dotNative(col("qv"), col("cv")) + col("csq")
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cent_id"))
-    val probes = queries.join(broadcast(centDf), lit(true))
-      .withColumn("d2", round(dist, 6))
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= NProbe)
+    val probes = Stages.nearestL2(queries, centDf, col("qv"), col("cv"), NProbe)
       .select(col("query_id"), col("cent_id").as("list_id"), col("qv"), col("qnrm"))
-
-    val sim = round(
-      when(col("qnrm") * col("nrm") === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("qv"), col("v")) / (col("qnrm") * col("nrm"))), 6)
-    val wr = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
-    // fixed-Q contract (Ann scaladoc): probes is O(queries × nprobe).
-    asg.join(broadcast(probes),
-        asg("list_id") === probes("list_id") && col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(wr))
-      .filter(col("rnk") <= TopK)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Ann.listTopK(asg, probes, TopK)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,11 +1,11 @@
 package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
+import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** Product quantization ANN (SURVEY.md §2.D5) — the memory-compression
@@ -53,53 +53,15 @@ object Pq {
       dim / M
     }
 
-  private def subvec(v: Column, m: Int, d: Int = D): Column =
-    slice(v, m * d + 1, d)
-
-  /** Codebook: (m, k, c float[d], cn2) from the corpus rows with vec_id < K. */
-  private def codebook(e: DataFrame, d: Int = D): DataFrame = {
-    val base = e.filter(col("vec_id") < K)
-      .select(col("vec_id").as("k"), col("v"))
-    base.select(col("k"), explode(array((0 until M).map { m =>
-        struct(lit(m).as("m"), subvec(col("v"), m, d).as("c"))
-      }: _*)).as("s"))
-      .select(col("s.m").as("m"), col("k"), col("s.c").as("c"))
-      .withColumn("cn2", Vec.dotNative(col("c"), col("c")))
-  }
+  /** Codebook: (m, k, c, cn2) from the corpus rows with vec_id < K. */
+  private def codebook(e: DataFrame, d: Int = D): DataFrame =
+    Stages.codebook(e.filter(col("vec_id") < K).select(col("vec_id").as("k"), col("v")),
+      col("k"), col("v"), d)
 
   /** PQ codes, one row per vector: code0..code7 + per-subspace
-    * chosen-centroid norms cn0..cn7 (summed left-to-right downstream).
-    *
-    * The M*K codebook is pivoted into ONE broadcast row and the per-subspace
-    * L2 argmin (-2*dot + |c|^2; the |x|^2 term is constant per (vec, m)) is
-    * computed ROW-LOCALLY with `least()` over (dist, k, cn2) candidate
-    * structs — Spark struct ordering is lexicographic, so the tie-break is
-    * exactly the oracle's ORDER BY dist, k. Encoding is therefore a single
-    * narrow codegen'd map over the corpus: NO explode, NO join fan-out, NO
-    * exchange — at 100 TB the index build is one pass over the data.
-    * (The previous shape windowed corpus x M x K rows through a full
-    * Exchange+Sort — the dominant index-build cost at scale.)
-    * A missing (m, k) cell yields a null candidate, which `least` skips —
-    * same candidate set as the oracle's join against the present rows. */
-  private def encode(e: DataFrame, cb: DataFrame, d: Int = D): DataFrame = {
-    val cbAggs = (for (m <- 0 until M; k <- 0 until K) yield
-      max(when(col("m") === m && col("k") === k,
-        struct(col("k"), col("c"), col("cn2")))).as(s"cb_${m}_$k")).toSeq
-    val cbRow = cb.groupBy().agg(cbAggs.head, cbAggs.tail: _*)
-    val outCols = (0 until M).flatMap { m =>
-      val sv = subvec(col("v"), m, d)
-      val cands = (0 until K).map { k =>
-        val cc = col(s"cb_${m}_$k")
-        when(cc.isNotNull, struct(
-          round(lit(-2.0) * Vec.dotNative(sv, cc.getField("c")) + cc.getField("cn2"), 6).as("dist"),
-          cc.getField("k").as("k"),
-          cc.getField("cn2").as("cn2")))
-      }
-      val best = least(cands: _*)
-      Seq(best.getField("k").as(s"code$m"), best.getField("cn2").as(s"cn$m"))
-    }
-    e.crossJoin(broadcast(cbRow)).select(col("vec_id") +: outCols: _*)
-  }
+    * chosen-centroid norms cn0..cn7 (summed left-to-right downstream). */
+  private def encode(e: DataFrame, cb: DataFrame, d: Int = D): DataFrame =
+    Stages.encode(e, cb, col("v"), d, Seq(col("vec_id")))
 
   /** A PQ code index per codebook flavor, an artifact written as a
     * bucketed parquet table — the production shape: a PQ
@@ -124,66 +86,30 @@ object Pq {
     adcTopK(e, cb, k, codesTable(spark, dir, e, cb, "pqcodes", d), qmod, d)
   }
 
+  /** Per-query ADC lookup tables (query_id, qnrm, l0..l7) against ANY
+    * (m, k, c, cn2) codebook ([[Stages.lut]]). */
+  private def queryLut(e: DataFrame, cb: DataFrame, qmod: Int = 101,
+                       d: Int = D): DataFrame =
+    Stages.lut(e.filter(col("vec_id") % qmod === 0)
+        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")),
+      cb, col("qv"), d, col("query_id"), col("qnrm"))
+
+  /** ADC similarity of a scored (codes x lut) row: the reconstruction
+    * norm is the left-to-right sum of the chosen centroids' cn<m>. */
+  private def adcSim: Column =
+    Stages.adcScore((0 until M).map(m => col(s"cn$m")).reduce(_ + _))
+
   /** ADC search against ANY (m, k, c, cn2) codebook — shared by the
     * deterministic (a5, pre-encoded `codesOpt` index) and k-means-trained
     * (a9, inline encode) paths. */
-  /** Per-query ADC lookup tables (query_id, qnrm, l0..l7): for each m a
-    * map k -> dot(q_sub_m, centroid). The slice offset depends on m, so
-    * qd is a CASE chain over m. LUT maps are keyed BY k (not array
-    * position): robust to a sparse centroid id range — codes always come
-    * from the same codebook, so the lookup can't silently shift the way a
-    * positional element_at could. */
-  private def queryLut(e: DataFrame, cb: DataFrame, qmod: Int = 101,
-                       d: Int = D): DataFrame = {
-    // NOTE (r17 optimization round): a row-local rewrite of this LUT build
-    // (codebook pivoted into one broadcast row, each query row computing
-    // its M maps inline — the encode() pattern) was tried and MEASURED
-    // SLOWER, 2.6x across the whole PQ family in a same-window A/B
-    // (14.0s -> 37.0s over the 23 a5..a22 bench queries at sf0.1).
-    // The groupBy(query_id) Exchange this shape pays is O(queries) — tiny
-    // and scale-independent under the fixed-Q serving contract — while the
-    // row-local variant's M*K-branch expression tree ran far slower than
-    // the shuffle it saved. Keep the aggregate shape (guide §1.1: the
-    // "ideal" plan lost to the measured one).
-    val probes = e.filter(col("vec_id") % qmod === 0)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val qd = (0 until M).map(m => (m, Vec.dotNative(subvec(col("qv"), m, d), col("c"))))
-      .foldRight(lit(null).cast("double")) { case ((m, dot), acc) =>
-        when(col("m") === m, dot).otherwise(acc)
-      }
-    val lutAggs = (0 until M).map { m =>
-      map_from_entries(collect_list(when(col("m") === m, struct(col("k"), col("qd"))))).as(s"l$m")
-    }
-    probes.join(broadcast(cb), lit(true))
-      .withColumn("qd", qd)
-      .groupBy(col("query_id"), col("qnrm"))
-      .agg(lutAggs.head, lutAggs.tail: _*)
-  }
-
-  /** ADC similarity from a scored (codes x lut) row: 8 map lookups +
-    * left-to-right sums on both engines. */
-  private def adcSim: Column = {
-    val approx = (0 until M).map(m =>
-      element_at(col(s"l$m"), col(s"code$m"))).reduce(_ + _)
-    val rn2 = (0 until M).map(m => col(s"cn$m")).reduce(_ + _)
-    round(
-      when(col("qnrm") * sqrt(rn2) === 0.0, 0.0).otherwise(approx / (col("qnrm") * sqrt(rn2))), 6)
-  }
-
   private def adcTopK(e: DataFrame, cb: DataFrame, k: Int,
                       codesOpt: DataFrame = null, qmod: Int = 101,
                       d: Int = D): DataFrame = {
     val codes = Option(codesOpt).getOrElse(encode(e, cb, d))
-    val lut = queryLut(e, cb, qmod, d)
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
     // fixed-Q contract (Ann scaladoc): the per-query LUT is O(queries),
     // small by the serving contract, not by the testdata's vec_id % 101.
-    codes.join(broadcast(lut), col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", adcSim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Stages.rankTopK(codes.join(broadcast(queryLut(e, cb, qmod, d)),
+      col("vec_id") =!= col("query_id")), adcSim, k)
   }
 
   /** D7: PQ with exact re-rank — the production shape: the 8-byte codes
@@ -233,15 +159,7 @@ object Pq {
     val cand = vecSource.getOrElse(e).select(col("vec_id"), col("v"), col("nrm"))
       .join(broadcast(shortlist), "vec_id")
       .join(broadcast(probes), "query_id")
-    val sim = round(
-      when(col("qnrm") * col("nrm") === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("qv"), col("v")) / (col("qnrm") * col("nrm"))), 6)
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
-    cand.withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= 10)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Stages.rankTopK(cand, Stages.cosine(col("qv"), col("qnrm"), col("v"), col("nrm")), 10)
   }
 
   /** D24 (a22, r13): IVFPQ + exact re-rank — the full production index
@@ -342,19 +260,12 @@ object Pq {
         .withColumn("list_id", col("list_id").cast(listType)))
     // a13's probe join, with probes/LUTs drawn from the combined query
     // set against the versioned centroids/codebook
-    val probe = Ann.listProbes(combined, nprobe = nprobe, nlists = nlists,
-        qmod = qmod, centSource = Some(e))
-      .select(col("query_id"), col("list_id"))
-      .join(queryLut(combined, cb, qmod, d), "query_id")
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("similarity").desc, col("vec_id"))
-    val shortlist = codes.join(broadcast(probe),
-        codes("list_id") === probe("list_id") && col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", adcSim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= rerankDepth)
-      .select(col("query_id"), col("vec_id"))
-    exactRerank(spark, dir, shortlist, qmod, corpusOver = Some(combined))
+    val shortlist = probedAdcTopK(codes,
+      Ann.listProbes(combined, nprobe = nprobe, nlists = nlists, qmod = qmod,
+        centSource = Some(e)),
+      queryLut(combined, cb, qmod, d), rerankDepth)
+    exactRerank(spark, dir, shortlist.select(col("query_id"), col("vec_id")), qmod,
+      corpusOver = Some(combined))
   }
 
   /** D28's flat-ADC sibling: [[a7PqRerank]] over (batch ∪ streamed) —
@@ -448,7 +359,7 @@ object Pq {
     sample.count()
     val rows = (0 until M).par.flatMap { m =>
       val sub = sample.select(
-        org.apache.spark.ml.functions.array_to_vector(subvec(col("v"), m, d)).as("features"))
+        org.apache.spark.ml.functions.array_to_vector(Stages.subvec(col("v"), m, d)).as("features"))
       val model = new org.apache.spark.ml.clustering.KMeans()
         .setK(K).setSeed(42L + m).setMaxIter(3).setInitMode("random")
         .setFeaturesCol("features")
@@ -689,23 +600,27 @@ object Pq {
       case Some(ids) => codes0.filter(col("list_id").isin(ids: _*))
       case None => codes0
     }
-    // broadcast(queryLut): both sides are O(queries) (fixed-Q contract),
-    // but the stats-less aggregate outputs made the planner pick a
+    probedAdcTopK(codes,
+      Ann.listProbes(e, nprobe = nprobe, nlists = nlists, qmod = qmod),
+      queryLut(e, cb, qmod, d), k)
+  }
+
+  /** ADC top-`k` within each query's probed lists — the IVFPQ serve of
+    * a13, a13z and the streamed a22: `probes` (query_id, list_id) ⋈ `lut`
+    * ⋈ `codes` (vec_id, code<m>, cn<m>, list_id). */
+  private def probedAdcTopK(codes: DataFrame, probes: DataFrame,
+                            lut: DataFrame, k: Int): DataFrame = {
+    // broadcast(lut): both sides are O(queries) (fixed-Q contract), but
+    // the stats-less aggregate outputs made the planner pick a
     // SortMergeJoin — 2 Exchanges + 2 Sorts inside EVERY IVFPQ probe
     // subtree (r18, guide §3.1; measured in plans/r18/a13_*_before.txt).
     // The hint collapses it to a BroadcastHashJoin of two tiny frames.
-    val probe = Ann.listProbes(e, nprobe = nprobe, nlists = nlists, qmod = qmod)
-      .select(col("query_id"), col("list_id"))
-      .join(broadcast(queryLut(e, cb, qmod, d)), "query_id")
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
+    val probe = probes.select(col("query_id"), col("list_id"))
+      .join(broadcast(lut), "query_id")
     // fixed-Q contract (Ann scaladoc): probe is O(queries × nprobe).
-    codes.join(broadcast(probe),
-        codes("list_id") === probe("list_id") && col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", adcSim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Stages.rankTopK(codes.join(broadcast(probe),
+        codes("list_id") === probe("list_id") && col("vec_id") =!= col("query_id")),
+      adcSim, k)
   }
 
   /** The z-ordered flat code table — [[writeZOrderedCodes]]' layout as
@@ -754,9 +669,8 @@ object Pq {
     val d = subDimOf(spark, dir) // == D at the pinned dim-64 corpora
     val cb = codebook(e, d)
     val codes = spark.read.parquet(zCodesDir(spark, dir))
-    // broadcast(queryLut): SMJ -> BHJ on two O(queries) frames, as a13
-    val probe = Ann.listProbes(e, qmod = qmod).select(col("query_id"), col("list_id"))
-      .join(broadcast(queryLut(e, cb, qmod, d)), "query_id")
+    val probes = Ann.listProbes(e, qmod = qmod)
+    val lut = queryLut(e, cb, qmod, d)
     // The probed-list id set is deterministic per corpus, so the driver-
     // side selection job (a probe-side scan) is an artifact value — the
     // per-query cost is the pruned scan + join
@@ -764,18 +678,11 @@ object Pq {
     // collect() returns shuffle order, and an unordered literal IN-list
     // would make the plan text (and its fingerprint) flutter.
     val probed = Artifact.value(spark, "zprobed", dir, Ann.Emb, s"q$qmod") {
-      probe.select("list_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
+      probes.select(col("query_id"), col("list_id")).join(broadcast(lut), "query_id")
+        .select("list_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
     }
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
-    codes.filter(col("list_id").isin(probed.toIndexedSeq: _*))
-      // fixed-Q contract (Ann scaladoc): probe is O(queries × nprobe).
-      .join(broadcast(probe),
-        codes("list_id") === probe("list_id") && col("vec_id") =!= col("query_id"))
-      .withColumn("similarity", adcSim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    probedAdcTopK(codes.filter(col("list_id").isin(probed.toIndexedSeq: _*)),
+      probes, lut, k)
   }
 
   /** D14 (a14): IVFPQ recall@10 vs exact brute force — the compounded
@@ -813,8 +720,6 @@ object Pq {
   )
 
   // ---------------------------------------------------------------- oracle
-
-  private def dotSql(a: String, b: String): String = Search.dotSql(a, b)
 
   /** DOUBLE[8] subvector m of 64-dim list `v` (m is a SQL expression). */
   private def subSql(v: String, m: String): String =

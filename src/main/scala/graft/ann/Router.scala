@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.rag.Search
+import graft.rag.Search.dotSql
 import graft.sources.Artifact
 
 /** ANN FAMILY ROUTER (r13) — the sequel to the r12 operating-point
@@ -467,8 +468,6 @@ object Router {
     "a21_routed_topk_io" -> ((s, d) =>
       aRouteTopk(s, d, regime = IoBound, retrieval = PartitionStore)),
   )
-
-  private def dotSql(a: String, b: String): String = Search.dotSql(a, b)
 
   /** Shared stats CTEs: dynamic-dial assignment at the sqrt-law nlists —
     * the [[Ann]] IvfCte shape with the literal 8 freed to a scalar.

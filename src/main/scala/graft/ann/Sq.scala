@@ -1,11 +1,11 @@
 package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
+import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** Scalar quantization (SQ8) ANN (SURVEY.md §2.D) — the middle point of
@@ -77,19 +77,11 @@ object Sq {
     val q = e.filter(col("vec_id") % qmod === 0)
       .select(col("vec_id").as("query_id"), Vec.toDouble(col("v")).as("qv"),
         col("nrm").as("qnrm"))
-    val recon = reconOf(col("codes"), col("mn"), col("sc"))
-    val sim = round(
-      when(col("qnrm") * sqrt(col("rn2")) === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("qv"), recon) / (col("qnrm") * sqrt(col("rn2")))), 6)
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
     // fixed-Q contract (Ann scaladoc): q is the O(queries) probe batch.
-    codes.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .crossJoin(broadcast(st))
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Stages.rankTopK(codes.join(broadcast(q), col("vec_id") =!= col("query_id"))
+        .crossJoin(broadcast(st)),
+      Stages.cosine(col("qv"), col("qnrm"), reconOf(col("codes"), col("mn"), col("sc")),
+        sqrt(col("rn2"))), k)
   }
 
   /** D12: SQ8 recall@10 vs exact brute force — the measured point between
@@ -103,8 +95,6 @@ object Sq {
   )
 
   // ---------------------------------------------------------------- oracle
-
-  private def dotSql(a: String, b: String): String = Search.dotSql(a, b)
 
   /** qmod-parameterized a12 oracle; a12Sql(101) is the registered text
     * byte-for-byte (driver-scale grades unchanged). */

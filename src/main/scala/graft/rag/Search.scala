@@ -1,10 +1,10 @@
 package graft.rag
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ann.Stages
 import graft.functions.Vec
 import graft.sources.{Artifact, Warehouse}
 
@@ -46,9 +46,6 @@ object Search {
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
       .withColumn("nrm", Vec.norm2Native(col("v")))
 
-  private def cosineOf(qn: Column, n: Column, d: Column): Column =
-    when(qn * n === 0.0, 0.0).otherwise(d / (qn * n))
-
   /** Generic broadcast cosine search.
     * @param clampZero  reference similarity = max(0, cosine)
     * @param sameLabel  metadata equality filter (reference metadata_filter)
@@ -70,20 +67,14 @@ object Search {
     val cond = if (sameLabel)
       col("vec_id") =!= col("query_id") && col("label") === col("qlabel")
     else col("vec_id") =!= col("query_id")
-    val raw = cosineOf(col("qnrm"), col("nrm"), Vec.dotNative(col("qv"), col("v")))
-    val sim = round(if (clampZero) greatest(raw, lit(0.0)) else raw, 6)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("similarity").desc, col("vec_id"))
     // Broadcast CONTRACT: `q` here is the user's query batch — fixed-Q in
     // production (a search request carries a handful of vectors), so the
     // hint is sound at 100 TB. The testdata's `vec_id % 100` predicate makes
     // q corpus-proportional ONLY as a fixture artifact; a caller with an
     // unbounded query side should use the un-hinted r5/r5b path instead.
-    e.join(broadcast(q), cond)
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k && col("similarity") >= threshold)
-      .select("query_id", "vec_id", "similarity", "rnk")
-      .orderBy("query_id", "rnk")
+    Stages.rankTopK(e.join(broadcast(q), cond),
+      Stages.cosine(col("qv"), col("qnrm"), col("v"), col("nrm"), clampZero), k,
+      Some(threshold))
   }
 
   /** B3: rag_search — queries are vectors with vec_id % 100 == 0. */
@@ -118,16 +109,15 @@ object Search {
     // r5bFindSimilarBlocked is the scale path).
     val q = e.join(srcDocs, col("vec_id") === col("doc_id"))
       .select(col("doc_id").as("query_doc_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val sim = round(greatest(
-      cosineOf(col("qnrm"), col("nrm"), Vec.dotNative(col("qv"), col("v"))), lit(0.0)), 6)
-    val w = Window.partitionBy(col("query_doc_id")).orderBy(col("similarity").desc, col("vec_id"))
-    e.join(q, col("vec_id") =!= col("query_doc_id"))
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5 && col("similarity") >= 0.3)
-      .select(col("query_doc_id"), col("vec_id").as("doc_id"), col("similarity"), col("rnk"))
-      .orderBy("query_doc_id", "rnk")
+    findSimilarTop5(e.join(q, col("vec_id") =!= col("query_doc_id")))
   }
+
+  /** r5/r5b's ranking: per query doc, the top 5 by clamped cosine with
+    * similarity >= 0.3, as (query_doc_id, doc_id, similarity, rnk). */
+  private def findSimilarTop5(pairs: DataFrame): DataFrame =
+    Stages.rankTopK(pairs,
+      Stages.cosine(col("qv"), col("qnrm"), col("v"), col("nrm"), clampZero = true),
+      5, Some(0.3), query = "query_doc_id", idAs = "doc_id")
 
   /** B5b: [[r5FindSimilar]]'s semantics on the SCALE PATH — the candidate
     * set comes from d5's 16-bit/4-band random-hyperplane LSH blocking
@@ -180,17 +170,7 @@ object Search {
       .select("query_doc_id", "vec_id").distinct()
     val q = e.select(col("vec_id").as("query_doc_id"),
       col("v").as("qv"), col("nrm").as("qnrm"))
-    val sim = round(greatest(
-      cosineOf(col("qnrm"), col("nrm"), Vec.dotNative(col("qv"), col("v"))), lit(0.0)), 6)
-    val w = Window.partitionBy(col("query_doc_id"))
-      .orderBy(col("similarity").desc, col("vec_id"))
-    cand.join(q, "query_doc_id").join(e, "vec_id")
-      .withColumn("similarity", sim)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5 && col("similarity") >= 0.3)
-      .select(col("query_doc_id"), col("vec_id").as("doc_id"),
-        col("similarity"), col("rnk"))
-      .orderBy("query_doc_id", "rnk")
+    findSimilarTop5(cand.join(q, "query_doc_id").join(e, "vec_id"))
   }
 
   /** B5b AUTO MODE (r11, the d5 chooser applied at r5b's entry): dials
@@ -215,8 +195,7 @@ object Search {
     val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na"))
     val b = e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.join(broadcast(b), col("vec_a") < col("vec_b"))
-      .withColumn("similarity",
-        round(cosineOf(col("na"), col("nb"), Vec.dotNative(col("va"), col("vb"))), 6))
+      .withColumn("similarity", Stages.cosine(col("va"), col("na"), col("vb"), col("nb")))
       .select("vec_a", "vec_b", "similarity")
       .orderBy("vec_a", "vec_b")
   }

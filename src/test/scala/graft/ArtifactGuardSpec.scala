@@ -2,22 +2,34 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every derived table and driver-side memo goes through
-  * `graft.sources.Artifact`, the one place that keys, builds and retires
-  * them. This scan of the main sources fails, listing the offending
-  * lines, when a build-once check, a memo map or a second source
-  * signature appears anywhere else — the copies that left artifact
-  * families keyed by path only. `Warehouse.readTableOrFiles` may ask the
+/** One mechanism per concern, enforced on the main sources: every derived
+  * table and driver-side memo goes through `graft.sources.Artifact`, the
+  * one place that keys, builds and retires them, and every vector search
+  * ranks, scores cosines and pivots PQ codebooks through
+  * `graft.ann.Stages`. This scan fails, listing the offending lines, when
+  * a rule's token appears in its scope outside the rule's allowed file —
+  * the copies that left artifact families keyed by path only and let the
+  * ANN files drift apart. `Warehouse.readTableOrFiles` may ask the
   * catalog: it reads stream state, not a derived artifact. */
 class ArtifactGuardSpec extends AnyFunSuite {
 
   private val Registry = "graft/sources/Artifact.scala"
+  private val Stages = "graft/ann/Stages.scala"
+  private val Everywhere = Seq("graft/")
+  private val Search = Seq("graft/ann/", "graft/rag/Search.scala")
+
+  /** (token, what it is, the one file allowed to hold it, scope). */
   private val Forbidden = Seq(
-    "catalog.tableExists" -> "a build-once check",
-    "TrieMap.empty" -> "a memo map",
-    "HashSet.empty" -> "a memo set",
-    "lastModified" -> "a source signature (file mtime)",
-    "getModificationTime" -> "a source signature (file mtime)")
+    ("catalog.tableExists", "a build-once check", Registry, Everywhere),
+    ("TrieMap.empty", "a memo map", Registry, Everywhere),
+    ("HashSet.empty", "a memo set", Registry, Everywhere),
+    ("lastModified", "a source signature (file mtime)", Registry, Everywhere),
+    ("getModificationTime", "a source signature (file mtime)", Registry, Everywhere),
+    ("""orderBy(col("similarity").desc, col("vec_id"))""", "a top-k ranking window",
+      Stages, Search),
+    ("=== 0.0, 0.0)", "a zero-norm cosine guard", Stages, Search),
+    ("""max(when(col("m") === m && col("k") === k""", "a PQ codebook pivot",
+      Stages, Search))
 
   private def sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -26,19 +38,31 @@ class ArtifactGuardSpec extends AnyFunSuite {
     walk(new java.io.File("src/main/scala"))
   }
 
-  test("derived artifacts and memos go through the registry only") {
+  private def offenders(allowedFile: String): Seq[String] = {
     val files = sources
-    assert(files.exists(_.getPath.endsWith(Registry)), "main sources not found")
-    val offenders = for {
-      f <- files if !f.getPath.endsWith(Registry)
+    assert(files.exists(_.getPath.endsWith(allowedFile)), s"$allowedFile not found")
+    for {
+      f <- files
+      rel = f.getPath.stripPrefix("src/main/scala/")
       lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
       (line, i) <- lines.zipWithIndex
-      (token, what) <- Forbidden if line.contains(token)
+      (token, what, allowed, scope) <- Forbidden
+      if allowed == allowedFile && rel != allowed && scope.exists(rel.startsWith) &&
+        line.contains(token)
       enclosing = lines.take(i).reverseIterator
         .collectFirst { case l if l.contains(" def ") => l.trim }.getOrElse("")
-      if !(f.getPath.endsWith("graft/sources/Warehouse.scala") &&
+      if !(rel == "graft/sources/Warehouse.scala" &&
         token == "catalog.tableExists" && enclosing.startsWith("def readTableOrFiles("))
-    } yield s"${f.getPath}:${i + 1}: $what — use graft.sources.Artifact: ${line.trim}"
-    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    } yield s"${f.getPath}:${i + 1}: $what — use $allowed: ${line.trim}"
+  }
+
+  test("derived artifacts and memos go through the registry only") {
+    val found = offenders(Registry)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("vector search ranks, scores and pivots codebooks through the ANN stages only") {
+    val found = offenders(Stages)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

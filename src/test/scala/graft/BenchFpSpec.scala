@@ -291,4 +291,25 @@ class BenchFpSpec extends AnyFunSuite {
     java.nio.file.Files.write(f, "not json at all".getBytes("UTF-8"))
     assert(Bench.readPrevPlans(f.toString).isEmpty)
   }
+
+  test("fpdiff dumps land beside the output; a run replaces only its measured queries' dumps") {
+    import java.nio.file.{Files, Paths}
+    def read(p: java.nio.file.Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val out = Files.createTempDirectory("benchfpdiff")
+    val dir = out.resolve("fpdiff")
+    Files.createDirectories(dir)
+    Seq("a", "b").foreach(q => Files.write(dir.resolve(s"$q.txt"), s"old $q".getBytes("UTF-8")))
+    def local = Option(new java.io.File("fpdiff").listFiles()).toSeq.flatten
+      .map(f => f.getName -> read(f.toPath)).sorted
+    val before = local
+    // a subset run measured a and c; only c drifted
+    assert(Bench.dumpDrifted(out.resolve("BENCH_SUBSET.json").toString,
+      Seq("a", "c"), Seq("c" -> "plan c")) === dir)
+    assert(!Files.exists(dir.resolve("a.txt")), "a measured, undrifted query kept its stale dump")
+    assert(read(dir.resolve("b.txt")) === "old b", "an unmeasured query's dump was touched")
+    assert(read(dir.resolve("c.txt")) === "plan c")
+    assert(local === before, "a run redirected elsewhere touched ./fpdiff")
+    // the default, relative output path keeps the working-directory dumps
+    assert(Bench.dumpDrifted("BENCH_FULL.json", Nil, Nil) === Paths.get("fpdiff").toAbsolutePath)
+  }
 }

@@ -158,4 +158,31 @@ class PqSigSpec extends SparkSpec {
     assert(builds.get === 1)
     assert(specTable("specflight", dir)().count() === 5L)
   }
+
+  test("the registry keys, refuses and rebuilds through a non-local FileSystem") {
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfake.impl", classOf[GraftFakeFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("graft_sig_fakefs").toString
+    val dir = s"graftfake://$local"
+    val missing = intercept[java.io.FileNotFoundException](
+      Artifact.signature(spark, dir, Seq("src.parquet")))
+    assert(missing.getMessage.contains(s"graftfake:$local/src.parquet"))
+    def fakeTable() = Artifact.table(spark, "specfake", dir, Seq("src.parquet")) { t =>
+      Warehouse.writeTable(spark.read.parquet(s"$dir/src.parquet"), t)
+    }
+    writeSource(local, 1)
+    val sig1 = Artifact.signature(spark, dir, Seq("src.parquet"))
+    assert(fakeTable().count() === 1L)
+    writeSource(local, 2)
+    assert(Artifact.signature(spark, dir, Seq("src.parquet")) !== sig1,
+      "a rewrite must move the signature read through the FileSystem")
+    assert(fakeTable().count() === 2L, "the rewritten source must rebuild its artifact")
+  }
+}
+
+/** A FileSystem under its own scheme (`graftfake://`) over local files:
+  * the registry must reach data only through the Hadoop FileSystem API,
+  * never through `java.io` paths. */
+class GraftFakeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfake:///")
+  override def getScheme: String = "graftfake"
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ann.{Ann, Pq, Router}
+import graft.ann.{Ann, IvfPqR, Pq, Router}
 
 /** End-to-end dim ≠ 64 proof (r15, verdict r14 #3): RouterSpec's law
   * tests pinned the byte MODEL as dimension-honest, but nothing executed
@@ -100,6 +100,13 @@ class RouterDimSpec extends SparkSpec {
       .agg(avg(col("recall"))).head().getDouble(0)
     assert(rec >= 0.8, f"dim-128 PQ rerank recall $rec%.3f — encode likely " +
       "sliced a stale subspace width")
+    // (4) the residual IVFPQ chain encodes at the live width too (the
+    // pinned 8-wide slices quantized only the residual's first 64 dims;
+    // mean recall there was 0.46, at the live width it is 0.44 — the
+    // floor pins the live-width figure on this seeded corpus)
+    val rec17 = IvfPqR.a17IvfPqResidualRecall(spark, dir)
+      .agg(avg(col("recall"))).head().getDouble(0)
+    assert(rec17 >= 0.44 - 1e-9, f"dim-128 residual IVFPQ recall $rec17%.3f")
   }
 
   test("vector-payload io pricing scales with the live dim: 128 vs 32") {
@@ -116,5 +123,9 @@ class RouterDimSpec extends SparkSpec {
     val dir = makeCorpus(dim = 60, n = 200, k = 8)
     val e = intercept[IllegalArgumentException](Pq.subDimOf(spark, dir))
     assert(e.getMessage.contains("dim=60"))
+    // the residual encoder (a16/a17) splits at the same width: slice 7
+    // would otherwise come back 4 wide
+    val e16 = intercept[IllegalArgumentException](IvfPqR.a16IvfPqResidualTopK(spark, dir))
+    assert(e16.getMessage.contains("dim=60"))
   }
 }
