@@ -1,10 +1,8 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-import graft.functions.Vec
 import graft.rag.Search
 import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
@@ -486,20 +484,8 @@ object Ann {
     * (rounded similarity, id tie-break), so recall itself is oracle-checked:
     * the accuracy/speed trade of the index is a first-class, graded number
     * rather than a claim. */
-  def a3IvfRecall(spark: SparkSession, dir: String): DataFrame = {
-    // truth from the stored shortlist artifact (r17, Search.bruteTruth10
-    // scaladoc) — identical rows to the previous inline knn(k=10)
-    val bf = Search.bruteTruth10(spark, dir, 101)
-    val ivf = a2KnnIvf(spark, dir).select(col("query_id"), col("vec_id"))
-    val common = bf.join(ivf, Seq("query_id", "vec_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_common"))
-    bf.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-      .join(common, Seq("query_id"), "left")
-      .withColumn("n_common", coalesce(col("n_common"), lit(0L)))
-      .withColumn("recall", round(col("n_common").cast("double") / col("n_true"), 6))
-      .select("query_id", "n_true", "n_common", "recall")
-      .orderBy("query_id")
-  }
+  def a3IvfRecall(spark: SparkSession, dir: String): DataFrame =
+    Pq.recallVsBruteForce(spark, dir, a2KnnIvf(spark, dir))
 
   /** Split rule for the incremental-index scenario: every 13th vector is
     * "today's ingest"; the rest are the already-indexed corpus. */

@@ -33,17 +33,19 @@ object Stages {
              clampZero: Boolean = false): Column =
     cosineOf(Vec.dotNative(a, b), an, bn, clampZero)
 
-  /** Per-query top-`k` of `scored` by `sim`: row_number over (similarity
-    * desc, vec_id asc) within each `query`, kept while rnk <= k (and
-    * similarity >= `threshold` when given), as (query, vec_id renamed
-    * `idAs`, similarity, rnk) ordered by (query, rnk). */
-  def rankTopK(scored: DataFrame, sim: Column, k: Int,
+  /** Per-query top-`k` of the candidate `pairs` scored by `sim`:
+    * row_number over (similarity desc, vec_id asc) within each `query`,
+    * kept while rnk <= k (and similarity >= `threshold` when given), as
+    * (query, vec_id renamed `idAs`, similarity, rnk) ordered by (query,
+    * rnk). */
+  def rankTopK(pairs: DataFrame, sim: Column, k: Int,
                threshold: Option[Double] = None, query: String = "query_id",
                idAs: String = "vec_id"): DataFrame = {
     val w = Window.partitionBy(col(query)).orderBy(col("similarity").desc, col("vec_id"))
     val top = col("rnk") <= k
+    // no alias when the name stays: a same-name alias would print in the plan
     val id = if (idAs == "vec_id") col("vec_id") else col("vec_id").as(idAs)
-    scored.withColumn("similarity", sim)
+    pairs.withColumn("similarity", sim)
       .withColumn("rnk", row_number().over(w))
       .filter(threshold.fold(top)(t => top && col("similarity") >= t))
       .select(col(query), id, col("similarity"), col("rnk"))
