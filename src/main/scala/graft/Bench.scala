@@ -1,47 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle parallelism is a DEPLOYMENT dial, not a constant: partitions
-    // must scale with the data so a sort/SMJ partition stays memory-sized.
-    // The sf100 floor study measured the failure mode: at shuffle
-    // partitions=4, a lineitem SMJ partition is ~150M rows and every task
-    // lives inside UnsafeExternalSorter.spill (hours, 4 cores pegged); at
-    // 256 the same join streams. Default stays `cpus` so the committed
-    // sf0.1 baseline plans (Exchange partition counts print into the
-    // fingerprinted plan string) are byte-identical when the env is unset.
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .flatMap(_.toIntOption).map(_.max(1).toString).getOrElse(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      // UTC pinned for parity with Verify/Scratch/specs: with NTZ parquet
-      // columns in the testdata, NTZ↔TZ casts fold the session timezone
-      // into the plan, and an unpinned bench would fingerprint (and time)
-      // a different plan than Verify checks for correctness.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Scan-metadata values (DataFilters/Location/ReadSchema...) are
-      // width-truncated at this many chars of RAW text — i.e. BEFORE the
-      // exprId scrub — so whether a given list truncates at all depends on
-      // the session-global exprId counter's digit widths at plan time
-      // (registry composition, warm-up retries, bench n). The truncated
-      // and untruncated renderings of the SAME plan can never scrub to
-      // the same string (one carries the detail, the other a damage
-      // token): this is the d9 fingerprint flutter that survived three
-      // rounds of regex normalization (r14-r16 — each round fixed a real
-      // drift INSIDE truncated text, none removed the truncation-boundary
-      // sensitivity itself). Kill the CAUSE: render untruncated (display-
-      // only config, the executed plan is untouched), so the scrub always
-      // sees complete balanced lists whose exprIds it normalizes exactly.
-      // The scrubber's truncation handling stays as a defensive layer for
-      // foreign sessions; PlanFp pins the same dial.
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Harness.DefaultSfDir)
+    val cpus = Harness.cpus
+    val shufflePartitions = Harness.shufflePartitions
+    val spark = Harness.session()
     // Warm the session (parquet footers, codegen cache, shuffle machinery,
     // JIT) so per-query timings measure the plans, not first-query startup.
     Seq("lineitem", "events", "documents", "embeddings")
@@ -130,6 +97,7 @@ object Bench {
       dt
     }
     (1 to 5).foreach(_ => probeMs()) // JIT-warm the spin loop itself
+    val work = new Work(spark.sparkContext)
     val benchT0 = System.nanoTime()
     case class QRes(name: String, dt: Double, cold: Double, flaky: Int,
                     fp: String, plan: String, gc: Long, tOff: Double,
@@ -154,7 +122,8 @@ object Bench {
       // host during the window whose median the JSON reports
       val tOff = (System.nanoTime() - benchT0) / 1e9
       val probe = probeMs()
-      val runs = (1 to n).map(_ => run())
+      // the first measured run's jobs/stages/tasks go to `work`
+      val runs = (1 to n).map(i => if (i == 1) work.tagged(name)(run()) else run())
       val times = runs.map(_._1)
       // gc attributed to the MEDIAN-defining population: sum over the
       // successful measured runs (driver-side; executor == driver here)
@@ -184,9 +153,8 @@ object Bench {
         val plan = Bench.scrubPlan(
           fn(spark, sfDir).queryExecution.executedPlan.toString)
         // SPARK_GRAFT_DUMP_PLANS=<dir>: keep the scrubbed text per query —
-        // diffing two runs' dumps pinpoints any token that keeps a
-        // fingerprint from settling (PlanFp covers the fresh-session case,
-        // this covers plans that only differ mid-bench)
+        // diffing two runs' dumps (a BENCH_ONLY subset for a few queries)
+        // pinpoints any token that keeps a fingerprint from settling
         sys.env.get("SPARK_GRAFT_DUMP_PLANS").foreach { d =>
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
           java.nio.file.Files.write(java.nio.file.Paths.get(d, s"$name.txt"),
@@ -201,12 +169,9 @@ object Bench {
       QRes(name, dt, cold, times.count(_ < 0) + (if (cold < 0) 1 else 0),
         fp, planTxt, gc, tOff, probe)
     }
-    // Locale.ROOT: the f"" interpolator uses the JVM default locale, and a
-    // comma-decimal locale (de_DE, fr_FR) would print 0,52 — invalid JSON.
     def fmt(v: Double): String = {
       val a = math.abs(v)
-      val p = if (a >= 100) "%.0f" else if (a >= 10) "%.1f" else "%.2f"
-      String.format(java.util.Locale.ROOT, p, Double.box(v))
+      Harness.fmt(v, if (a >= 100) 0 else if (a >= 10) 1 else 2)
     }
     val qs = results.map(r => "\"" + r.name + "\":" + fmt(r.dt))
       .mkString("{", ",", "}")
@@ -339,11 +304,17 @@ object Bench {
     // Drift-attribution fields (see probeMs above): full maps, file-only
     // cost — the driver's short line is unaffected. t_off at 0.1 s
     // granularity (window attribution needs minutes, not ms).
-    val tOffField = results.map(r => "\"" + r.name + "\":" +
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(r.tOff)))
+    val tOffField = results.map(r => "\"" + r.name + "\":" + Harness.fmt(r.tOff, 1))
       .mkString(",\"t_off\":{", ",", "}")
     val probeField = results.map(r => "\"" + r.name + "\":" + r.probe)
       .mkString(",\"probe_ms\":{", ",", "}")
+    // Spark work of each query's first measured run: deterministic per
+    // plan, so it ranks structural optimization targets where wall time
+    // is noisy (a driver-side collect is one more job, a shuffle one
+    // more stage)
+    work.drain()
+    val workField = results.map(r => "\"" + r.name + "\":" + work.of(r.name).mkString("[", ",", "]"))
+      .mkString(",\"jobs_stages_tasks\":{", ",", "}")
     // External perf anchor (r8 verdict #5): ORACLE_TIMES.json carries
     // per-query DuckDB wall-times for the SAME oracle SQL over the SAME
     // parquet (produced by tools/oracle_times.py, committed). When its sf
@@ -372,7 +343,7 @@ object Bench {
     // driver's tail window always contains it whole, whatever the query
     // count grows to. The full detail is also written to BENCH_FULL.json
     // next to the build so the per-query numbers survive the truncation.
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$coldField$flakyField$plans$changedField$violField$gcField$tOffField$probeField$oracleField$sf1Field,"sf":"$sfName","cpus":"$cpus","shuffle_partitions":"$shufflePartitions","n":$n,"cold_total":${fmt(coldTotal)}}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$coldField$flakyField$plans$changedField$violField$gcField$tOffField$probeField$workField$oracleField$sf1Field,"sf":"$sfName","cpus":"$cpus","shuffle_partitions":"$shufflePartitions","n":$n,"cold_total":${fmt(coldTotal)}}"""
     println(full)
     try {
       val p = java.nio.file.Paths.get(outPath)
@@ -416,8 +387,7 @@ object Bench {
     val common = sparkSec.keySet.intersect(oracleMs.keySet).toSeq.sorted
     if (common.isEmpty) return ""
     def fam(q: String): String = q.takeWhile(!_.isDigit)
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    def r3(v: Double): String = Harness.fmt(v, 2)
     val famRatios = common.groupBy(fam).toSeq.sortBy(_._1).map { case (fm, qs) =>
       val s = qs.map(sparkSec(_) * 1000).sum
       val o = qs.map(oracleMs(_)).sum
@@ -459,8 +429,7 @@ object Bench {
     val common = sparkSec.keySet.intersect(sf1Sec.keySet).toSeq.sorted
     if (common.isEmpty) return ""
     def fam(q: String): String = q.takeWhile(!_.isDigit)
-    def r2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    def r2(v: Double): String = Harness.fmt(v, 2)
     val famScale = common.groupBy(fam).toSeq.sortBy(_._1).map { case (fm, qs) =>
       "\"" + fm + "\":" + r2(qs.map(sf1Sec(_)).sum / math.max(qs.map(sparkSec(_)).sum, 0.001))
     }
@@ -565,8 +534,7 @@ object Bench {
     * so its hash is stable across processes: canonicalization handles
     * exprIds but closure-bearing operators still print lambda class
     * names, object identity hashes, and RDD/plan ids that differ every
-    * run. Shared by the bench fingerprint and [[PlanFp]] (the debug main
-    * that diffs two runs' plans when a fingerprint won't settle). */
+    * run. */
   private[graft] def scrubPlan(s: String): String = {
     val tok = s
       .replaceAll("\\$?Lambda/0x[0-9a-fA-F]+", "<lambda>")
@@ -711,7 +679,7 @@ object Bench {
     * `dropIsNotNull` additionally strips constraint-inferred isnotnull
     * elements (see scrubPlan's keys table).
     *
-    * DEFENSIVE-ONLY as of r17: Bench and PlanFp sessions render plans with
+    * DEFENSIVE-ONLY as of r17: [[Harness.session]] renders plans with
     * spark.sql.maxMetadataStringLength raised far past any real metadata
     * value, so width truncation — and with it this branch's known blind
     * spot (the collapse also erases the truncated line's following
@@ -771,32 +739,50 @@ object Bench {
     sb.append(s.substring(i))
     sb.toString
   }
-}
 
-/** Debug tool: print the scrubbed canonicalized plan of the named
-  * queries (`runMain graft.PlanFp q1,q2 [sfDir]`). Diffing two runs'
-  * output pinpoints exactly which token keeps a bench plan fingerprint
-  * from settling. Not part of the driver contract. */
-object PlanFp {
-  def main(args: Array[String]): Unit = {
-    val names = args.headOption.map(_.split(',').toSeq).getOrElse(Seq("q1_agg"))
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same untruncated-metadata dial as Bench: a PlanFp dump must be
-      // byte-comparable against the bench's scrubbed texts
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      println(s"===== $n =====")
-      println(Bench.scrubPlan(df.queryExecution.executedPlan.toString))
+  /** Jobs, stages and tasks per query, from one listener. A run wrapped
+    * in [[tagged]] carries the query name on a job-local property, so the
+    * listener charges every job the run starts, with its stages and
+    * tasks, to that query — no pause between queries, one [[drain]] at
+    * the end. */
+  private[graft] final class Work(sc: SparkContext) extends SparkListener {
+    private val Key = "graft.bench.query"
+    private val Marker = "graft.bench.drain"
+    private val counts = scala.collection.mutable.Map.empty[String, Array[Long]]
+    private val stageQuery = scala.collection.mutable.Map.empty[Int, String]
+    sc.addSparkListener(this)
+
+    def tagged[T](query: String)(body: => T): T = {
+      sc.setLocalProperty(Key, query)
+      try body finally sc.setLocalProperty(Key, null)
     }
-    spark.stop()
+
+    /** (jobs, stages, tasks) charged to `query`. */
+    def of(query: String): Seq[Long] =
+      synchronized(counts.get(query).map(_.toSeq).getOrElse(Seq(0L, 0L, 0L)))
+
+    /** Returns once every event posted before the call has been counted:
+      * the bus delivers in order, so a marker job's completed stage comes
+      * after them all. */
+    def drain(): Unit = {
+      tagged(Marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (of(Marker)(1) == 0 && System.nanoTime() < deadline) Thread.sleep(5)
+    }
+
+    private def add(query: String, i: Int): Unit =
+      synchronized(counts.getOrElseUpdate(query, new Array[Long](3))(i) += 1)
+
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      Option(js.properties).flatMap(p => Option(p.getProperty(Key))).foreach { q =>
+        synchronized(js.stageIds.foreach(stageQuery(_) = q))
+        add(q, 0)
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized(stageQuery.get(e.stageInfo.stageId)).foreach(add(_, 1))
+
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+      synchronized(stageQuery.get(te.stageId)).foreach(add(_, 2))
   }
 }

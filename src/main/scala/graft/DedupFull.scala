@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Solo runner for the d6-FULL bounded-disk verification (r17, verdict
   * r16 #8): computes the complete (un-sampled) d2 verified-pair set in
   * residue passes, clusters it, dumps the d6 report parquet, and writes
@@ -12,32 +10,30 @@ import org.apache.spark.sql.SparkSession
   * job that exceeded the box.
   *
   * Usage: runMain graft.DedupFull <sfDir> <outDir> [passes=13]
-  * Env:   SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE_PARTITIONS (as Verify).
+  * Env:   SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE_PARTITIONS ([[Harness]]).
   */
 object DedupFull {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val passes = if (args.length > 2) args(2).toInt else 13
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .flatMap(_.toIntOption).map(_.max(1).toString).getOrElse(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reclaim finished passes' shuffle files promptly — the bounded-disk
-      // contract depends on pass N's spill being gone before pass N+2
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // reclaim finished passes' shuffle files promptly — the bounded-disk
+    // contract depends on pass N's spill being gone before pass N+2
+    val spark = Harness.session("spark.cleaner.periodicGC.interval" -> "2min")
     new java.io.File(outDir).mkdirs()
     val t0 = System.nanoTime()
     val staging = s"$outDir/d2_pairs_staged"
     val d6 = graft.dedup.Dedup.d6DupClustersFull(spark, sfDir, passes, staging)
     d6.write.mode("overwrite").parquet(s"$outDir/d6_dup_clusters")
+    // writes one deliverable to `outDir/name` and returns its row count
+    def deliver(name: String)(df: => org.apache.spark.sql.DataFrame): Long = {
+      val (n, sec) = Harness.timed {
+        df.write.mode("overwrite").parquet(s"$outDir/$name")
+        spark.read.parquet(s"$outDir/$name").count()
+      }
+      System.err.println(s"[graft] $name: $n rows, ${Harness.fmt(sec, 1)} s")
+      n
+    }
     // the FULL-chain deliverables share the materialized multipass cluster
     // table, so each is one more composed query over already-built layers
     val chainQueries = Map[String, () => org.apache.spark.sql.DataFrame](
@@ -50,43 +46,25 @@ object DedupFull {
       "p8f_curation_audit_full" -> (() =>
         graft.pipeline.Pipeline.p8fCurationAuditFull(spark, sfDir, passes, staging)))
     val chainRows = chainQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val tq = System.nanoTime()
-      fn().write.mode("overwrite").parquet(s"$outDir/$name")
-      val n = spark.read.parquet(s"$outDir/$name").count()
-      System.err.println(f"[graft] $name: $n rows, ${(System.nanoTime() - tq) / 1e9}%.1f s")
-      s""""$name":$n"""
+      s""""$name":${deliver(name)(fn())}"""
     }
     // r17 feasibility flips: d3's Spark side goes multipass (its one-job
     // candidate DISTINCT is itself the disk-bound shape at 5M docs);
     // d11/d13's Spark sides are the registered queries verbatim (both
     // complete on this box — it was their DuckDB sides that exhausted the
     // box, now staged via Dedup.flipExtras)
-    val td3 = System.nanoTime()
-    graft.dedup.Dedup.d3SimhashFull(spark, sfDir, passes, s"$outDir/d3_staged")
-      .write.mode("overwrite").parquet(s"$outDir/d3_simhash_full")
-    val d3Rows = spark.read.parquet(s"$outDir/d3_simhash_full").count()
-    System.err.println(
-      f"[graft] d3_simhash_full: $d3Rows rows, ${(System.nanoTime() - td3) / 1e9}%.1f s")
+    val d3Rows = deliver("d3_simhash_full")(
+      graft.dedup.Dedup.d3SimhashFull(spark, sfDir, passes, s"$outDir/d3_staged"))
     val flipRows = Seq(
       "d11_dup_text_fraction" -> "d11_dup_text_fraction_full",
       "d13_scrubbed_corpus" -> "d13_scrubbed_corpus_full").map { case (query, out) =>
-      val tq = System.nanoTime()
-      SparkEntry.queries(query)(spark, sfDir)
-        .write.mode("overwrite").parquet(s"$outDir/$out")
-      val n = spark.read.parquet(s"$outDir/$out").count()
-      System.err.println(f"[graft] $out: $n rows, ${(System.nanoTime() - tq) / 1e9}%.1f s")
-      s""""$out":$n"""
+      s""""$out":${deliver(out)(SparkEntry.queries(query)(spark, sfDir))}"""
     }
     // r6-FULL: the last spark_disk_bound shape, verified at full Q in its
     // own query-residue passes (Spark side always runs — that side IS the
     // conversion; the oracle side's brute truth is priced by the runner)
-    val tr6 = System.nanoTime()
-    graft.rag.RagOps.r6ContextAssemblyFull(spark, sfDir, passes,
-        s"$outDir/r6_staged")
-      .write.mode("overwrite").parquet(s"$outDir/r6_context_assembly_full")
-    val r6Rows = spark.read.parquet(s"$outDir/r6_context_assembly_full").count()
-    System.err.println(
-      f"[graft] r6_context_assembly_full: $r6Rows rows, ${(System.nanoTime() - tr6) / 1e9}%.1f s")
+    val r6Rows = deliver("r6_context_assembly_full")(
+      graft.rag.RagOps.r6ContextAssemblyFull(spark, sfDir, passes, s"$outDir/r6_staged"))
     val r6Extra = graft.dedup.Dedup.StagedExtra(
       name = "r6_context_assembly_full",
       passes = passes,
@@ -110,10 +88,10 @@ object DedupFull {
           graft.pipeline.Pipeline.stagedChainOracles,
         graft.dedup.Dedup.flipExtras(passes) :+ r6Extra))
     println(s"""{"metric":"d6_full","sf":"${sfDir.split('/').last}","passes":$passes,""" +
-      f""""pairs":$pairs,"rows":$rows,${chainRows.mkString(",")},""" +
-      f""""d3_simhash_full":$d3Rows,${flipRows.mkString(",")},""" +
-      f""""r6_context_assembly_full":$r6Rows,""" +
-      f""""sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
+      s""""pairs":$pairs,"rows":$rows,${chainRows.mkString(",")},""" +
+      s""""d3_simhash_full":$d3Rows,${flipRows.mkString(",")},""" +
+      s""""r6_context_assembly_full":$r6Rows,""" +
+      s""""sec":${Harness.fmt((System.nanoTime() - t0) / 1e9, 1)}}""")
     spark.stop()
   }
 }

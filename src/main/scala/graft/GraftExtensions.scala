@@ -9,7 +9,7 @@ import graft.functions.DotProduct
 /** SparkSessionExtensions entry point registering graft's native functions.
   *
   * Install with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)` — after
+  * or the session builder's `withExtensions(new GraftExtensions)` — after
   * which `graft_dot(a, b)` is available to SQL and `call_function` alike.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

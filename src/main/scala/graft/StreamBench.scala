@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -42,13 +41,7 @@ object StreamBench {
   }
   def main(args: Array[String]): Unit = {
     val n = args.headOption.flatMap(_.toIntOption).getOrElse(200000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -263,7 +256,7 @@ object StreamBench {
       ((nEv / sec).round, sec / nBatches * 1000)
     }
 
-    val fmtD = (v: Double) => String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+    val fmtD = (v: Double) => Harness.fmt(v, 1)
     // 100x headline key cardinality (r7 swept 10x): 100k live keys is the
     // regime where a per-key-state bug shows super-linear bytes or falling
     // throughput; linear bytes + flat rows/s at 100k is the evidence the

@@ -21,7 +21,7 @@ import graft.sources.{Artifact, Warehouse}
   * ivfPqTable contract on the raw-vector path), so a probe is a
   * partition-pruned read of nprobe/nlists of the data, paid once per
   * corpus ("build once, probe forever"; Bench reports the build under
-  * `cold`). `nlists` is a real dial (grow ~ sqrt(N); graft.AnnDial
+  * `cold`). `nlists` is a real dial (grow ~ sqrt(N); `graft.Dial ivf`
   * measures the recall/cost curve); real deployments train centroids with
   * k-means|| ([[KmeansIvf]] models that); deterministic centroid choice
   * keeps the oracle replayable.
@@ -60,7 +60,7 @@ object Ann {
     * probe cost ~nprobe*sqrt(N) per query. Centroids are vec_id < nlists,
     * so widening the dial never re-randomizes the prefix an oracle already
     * pinned (same contract as d5's hyperplanes). Recall/cost across the
-    * dial is MEASURED (graft.AnnDial, PLANS.md §ivf-dial), never assumed;
+    * dial is MEASURED (`graft.Dial ivf`, PLANS.md §ivf-dial), never assumed;
     * the 8/3 default stays byte-identical to the committed oracle plan. */
   def a2KnnIvf(spark: SparkSession, dir: String, nlists: Int,
                nprobe: Int, qmod: Int = 101): DataFrame =
@@ -104,42 +104,26 @@ object Ann {
         array_min(Stages.centroidScores).getField("cent_id").as("list_id"),
         col("label"), col("v"), col("nrm"))
 
-  /** The IVF-flat index table: raw vectors + list assignment, written
-    * PARTITIONED BY list_id, one artifact per dial — the FAISS
-    * `IVFx,Flat` layout as physical parquet, and the a13 ivfPqTable
-    * contract applied to the raw-vector path: a2/a10 probes are
-    * partition-pruned reads of nprobe/nlists of the data, not a per-run
-    * re-derivation of the assignment (which also re-evaluated the argmax
-    * 3x per row through constraint-inferred join filters). */
-  /** The raw-vector list table, exposed for the a22 pruned-rerank read
-    * ([[Pq.a22IvfPqRerank]]): the refine stage retrieves its raw vectors
-    * from the probed partitions of THIS table instead of re-scanning the
-    * flat corpus file. */
-  private[ann] def listTable(spark: SparkSession, dir: String,
-                             nlists: Int): DataFrame =
-    ivfListTable(spark, dir, nlists)
-
-  /** The DISTINCT inverted lists a query batch probes, collected to the
-    * driver for a static `IN` partition filter (the a13z memoized-IN-set
-    * precedent). O(queries × nprobe) rows bounded by the fixed-Q
-    * contract; the result is ≤ nlists ids. The contract is ENFORCED here
-    * (r14, ADVICE r13): the same aggregate that yields the distinct ids
-    * also counts the probe rows — the collect stays ≤ nlists rows and a
-    * caller violating fixed-Q gets the family's documented throw, never
-    * an unbounded driver collect. */
-  /** [[probedListIds]] as a driver-side artifact value (r18): the
-    * probed-list set is deterministic per (corpus, nlists, nprobe, qmod),
-    * lands in the plan as literal `IN` values, and was the last per-serve
-    * driver-side JOB the a22/a2-pruned chains still paid (a rollup +
-    * collect over the probe subtree, every run). Fingerprint-neutral by
-    * construction — the memo feeds the SAME sorted literals into the
-    * SAME plan. */
+  /** The DISTINCT inverted lists a query batch probes ([[probedListIds]])
+    * as a driver-side artifact value (r18), for a static `IN` partition
+    * filter (the a13z memoized-IN-set precedent). The set is deterministic
+    * per (corpus, nlists, nprobe, qmod) and lands in the plan as literal
+    * `IN` values; memoizing it removed the last per-serve driver-side JOB
+    * the a22/a2-pruned chains paid (a rollup + collect over the probe
+    * subtree, every run). Fingerprint-neutral by construction — the memo
+    * feeds the SAME sorted literals into the SAME plan. */
   private[ann] def probedListIdsCached(spark: SparkSession, dir: String,
       nprobe: Int, nlists: Int, qmod: Int): Seq[Long] =
     Artifact.value(spark, "probed", dir, Emb, s"${nlists}x${nprobe}q$qmod") {
       probedListIds(Search.corpus(spark, dir), nprobe, nlists, qmod)
     }
 
+  /** The probed lists, collected to the driver. O(queries × nprobe) rows
+    * bounded by the fixed-Q contract; the result is ≤ nlists ids. The
+    * contract is ENFORCED here (r14, ADVICE r13): the same aggregate that
+    * yields the distinct ids also counts the queries, so the collect stays
+    * ≤ nlists + 1 rows and a caller violating fixed-Q gets the family's
+    * documented throw, never an unbounded driver collect. */
   private[ann] def probedListIds(e: DataFrame, nprobe: Int, nlists: Int,
                                  qmod: Int): Seq[Long] = {
     // guard on the QUERY count, the same unit every other entry point
@@ -171,6 +155,16 @@ object Ann {
     }.sorted.toSeq
   }
 
+  /** The IVF-flat index table: raw vectors + list assignment, written
+    * PARTITIONED BY list_id, one artifact per dial — the FAISS
+    * `IVFx,Flat` layout as physical parquet, and the a13 ivfPqTable
+    * contract applied to the raw-vector path: a2/a10 probes are
+    * partition-pruned reads of nprobe/nlists of the data, not a per-run
+    * re-derivation of the assignment (which also re-evaluated the argmax
+    * 3x per row through constraint-inferred join filters). The a22
+    * pruned rerank ([[Pq.a22IvfPqRerank]]) retrieves its raw vectors from
+    * the probed partitions of this table instead of re-scanning the flat
+    * corpus file. */
   private[ann] def ivfListTable(spark: SparkSession, dir: String,
                                 nlists: Int): DataFrame =
     Artifact.table(spark, "ivf", dir, Emb, s"$nlists") { t =>

@@ -201,7 +201,7 @@ object Pq {
       Some(Ann.probedListIdsCached(spark, dir, nprobe, nlists, qmod))
     else None // pre-r13 shape: refine re-scans the flat corpus file
     val vecSource = probed.map(ids =>
-      Ann.listTable(spark, dir, nlists).filter(col("list_id").isin(ids: _*)))
+      Ann.ivfListTable(spark, dir, nlists).filter(col("list_id").isin(ids: _*)))
     exactRerank(spark, dir,
       a13IvfPqTopK(spark, dir, k = rerankDepth, qmod = qmod,
         nlists = nlists, nprobe = nprobe,

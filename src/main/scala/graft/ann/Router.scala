@@ -65,7 +65,7 @@ object Router {
     * the store can retrieve R raw vectors by id ([[RowStore]] — a
     * key-value store, or parquet with row-level secondary indexes). On a
     * plain partitioned-parquet layout ([[PartitionStore]] — this repo's
-    * warehouse, measured by [[graft.IoBytesDial]]) the floor for "fetch
+    * warehouse, measured by `graft.Dial io_bytes`) the floor for "fetch
     * the shortlist's raw vectors" is re-reading the PROBED PARTITIONS of
     * the list table (a22's pruned rerank: 1.69 MB at 8x3 vs the 12.8 KB
     * R·VecBytes ideal at sf1-clustered), and a flat-PQ shortlist spans
@@ -81,7 +81,7 @@ object Router {
   /** Measured on THIS box (PLANS §clustered-corpus, sf10, N=200k):
     * 66.8 s = 40.1 s · (alpha·N + R)/N at R=7518 → alpha = 1.63. The ADC
     * gather beats a codegen'd dot only on bytes, never on cycles here.
-    * Re-measure path (r14): [[graft.IoBytesDial]] emits
+    * Re-measure path (r14): `graft.Dial io_bytes` emits
     * `adc_alpha_measured` — the floor-subtracted ADC/brute scan ratio on
     * whatever box runs it — and [[route]] takes `alpha` as a parameter,
     * so a deployment overrides this box's anchor without a code change
@@ -89,7 +89,7 @@ object Router {
     * alpha > 1 keeps the reachable-set proof and the gated oracle).
     *
     * INVARIANCE BAND, not load-bearing precision (r17, verdict r16): the
-    * per-round IoBytesDial re-measurement drifts with the host window
+    * per-round `graft.Dial io_bytes` re-measurement drifts with the host window
     * (1.63 at r13, 1.86 at r16) and the routing decision is invariant
     * across the whole band — the compute regime needs only alpha > 1
     * (ADC then never beats brute: cost_pq = alpha·N + R > N, and
@@ -100,7 +100,7 @@ object Router {
     * do not read 1.63 vs 1.86 as a decision input. */
   val AdcAlpha = 1.63
 
-  /** The r16 IoBytesDial re-measurement of the same ratio (IOBYTES_r16
+  /** The r16 `graft.Dial io_bytes` re-measurement of the same ratio (IOBYTES_r16
     * .json `adc_alpha_measured`) — the other end of the measured band;
     * RouterSpec pins decision-invariance at both points. */
   val AdcAlphaR16 = 1.86

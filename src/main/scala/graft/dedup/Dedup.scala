@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ann.Stages
 import graft.functions.{DetHash, Exact, Vec}
 import graft.sources.{Artifact, Warehouse}
 
@@ -503,7 +504,7 @@ object Dedup {
     * a band's collision probability p^bits (p = 1 - theta/pi), so recall
     * at a fixed cosine threshold is traded against cost; `bands` buys
     * recall back (1-(1-p^bits)^bands) at one more corpus pass per band.
-    * Measured curve (graft.D5Dial, PLANS.md §d5-dial): cost and recall at
+    * Measured curve (`graft.Dial d5`, PLANS.md §d5-dial): cost and recall at
     * 2/3/4 bits x 4 bands at sf0.1 and sf1. The 4x4 default is pinned by
     * the DuckDB oracle at driver scales. */
   def d5EmbeddingNeardup(spark: SparkSession, dir: String,
@@ -540,9 +541,7 @@ object Dedup {
     cand
       .join(e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na")), "vec_a")
       .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb")), "vec_b")
-      .withColumn("similarity",
-        round(when(col("na") * col("nb") === 0.0, 0.0)
-          .otherwise(Vec.dotNative(col("va"), col("vb")) / (col("na") * col("nb"))), 6))
+      .withColumn("similarity", Stages.cosine(col("va"), col("na"), col("vb"), col("nb")))
       .filter(col("similarity") >= simThreshold)
       .select("vec_a", "vec_b", "similarity")
       .orderBy("vec_a", "vec_b")
@@ -608,7 +607,7 @@ object Dedup {
   }
 
   /** Closed-form recall of a (bitsPerBand, bands) setting at a cosine
-    * threshold — the curve `graft.D5Dial` measures empirically. */
+    * threshold — the curve `graft.Dial d5` measures empirically. */
   def d5ClosedFormRecall(bitsPerBand: Int, bands: Int, simThreshold: Double): Double = {
     val p = 1.0 - math.acos(simThreshold) / math.Pi
     1.0 - math.pow(1.0 - math.pow(p, bitsPerBand), bands)

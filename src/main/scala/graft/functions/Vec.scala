@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * (`aggregate` is a sequential left fold), matching DuckDB's in-order
   * list kernels, so oracle hash-compares agree after round(_, 6).
   *
-  * Mirrors the reference's cosine-similarity semantics:
-  * /root/reference/mcp_synaptic/rag/embeddings/manager.py:95-110
-  * (compute_similarity: dot/(||a||*||b||)).
+  * The cosine built on these (zero-norm guard, rounding) is
+  * [[graft.ann.Stages.cosine]].
   */
 object Vec {
 
@@ -29,50 +28,9 @@ object Vec {
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity in [-1, 1]; null-safe on zero norms (returns 0.0,
-    * matching the reference's guard in manager.py:compute_similarity). */
-  def cosine(a: Column, b: Column): Column = {
-    val d  = dot(a, b)
-    val nn = norm2(a) * norm2(b)
-    when(nn === 0.0, 0.0).otherwise(d / nn)
-  }
-
-  /** Cosine rounded for cross-engine rank stability (SURVEY.md §5.3). */
-  def cosineRounded(a: Column, b: Column, scale: Int = 6): Column =
-    round(cosine(a, b), scale)
-
-  /** Squared L2 distance (no sqrt — ranking-equivalent, cheaper). */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-
-  // ------------------------------------------------------------------
-  // Fixed-dimension fast path. Array higher-order functions (aggregate/
-  // zip_with) run interpreted — outside whole-stage codegen — which
-  // dominates scan-side cosine cost. When the dimension is statically
-  // known we unroll the dot product into a left-associated sum of
-  // element_at terms: identical addition order (and therefore identical
-  // doubles) to the sequential fold, but fully codegen'd.
-  // element_at(_, i).cast(double) on the raw float array avoids a
-  // per-row `transform` cast that the optimizer would otherwise inline
-  // into every term.
-
-  /** In-order unrolled dot product over float/double arrays of known dim. */
-  def dotN(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map { i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double")
-    }.reduce(_ + _)
-
-  def norm2N(a: Column, dim: Int): Column = sqrt(dotN(a, a, dim))
-
-  /** Unrolled dot of a float-array column with a literal vector. */
-  def dotLit(a: Column, r: Seq[Double]): Column =
-    r.indices.map { i =>
-      element_at(a, i + 1).cast("double") * lit(r(i))
-    }.reduce(_ + _)
-
   // ------------------------------------------------------------------
   // Native path: the custom Catalyst expression [[DotProduct]] — a
-  // codegen'd primitive loop, the fastest of the three strategies (see
+  // codegen'd primitive loop, faster than the fold above (see
   // DotProductExpr.scala). Accepts float or double arrays directly
   // (per-element exact widening), so no array-cast projection is needed.
 
@@ -81,11 +39,4 @@ object Vec {
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   def norm2Native(a: Column): Column = sqrt(dotNative(a, a))
-
-  /** Cosine via the native dot (null-safe on zero norms). */
-  def cosineNative(a: Column, b: Column): Column = {
-    val d  = dotNative(a, b)
-    val nn = norm2Native(a) * norm2Native(b)
-    when(nn === 0.0, 0.0).otherwise(d / nn)
-  }
 }

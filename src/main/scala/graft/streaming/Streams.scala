@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.ann.Stages
 import graft.functions.Vec
 
 /** Structured Streaming operators (SURVEY.md §2.H) — the streaming analog of
@@ -63,10 +64,7 @@ object Streams {
                       threshold: Double, watermark: String = "10 minutes"): DataFrame = {
     val q = (if (queries.isStreaming) queries.withWatermark("ts", watermark) else queries)
       .withColumn("qnrm", Vec.norm2Native(col("qv")))
-    val sim = round(greatest(
-      when(col("qnrm") * col("nrm") === 0.0, 0.0)
-        .otherwise(Vec.dotNative(col("qv"), col("v")) / (col("qnrm") * col("nrm"))),
-      lit(0.0)), 6)
+    val sim = Stages.cosine(col("qv"), col("qnrm"), col("v"), col("nrm"), clampZero = true)
     broadcast(q).join(corpus, col("vec_id") =!= col("query_id"))
       .withColumn("similarity", sim)
       .filter(col("similarity") >= threshold)

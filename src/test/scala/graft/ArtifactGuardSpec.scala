@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One mechanism per concern, enforced on the main sources: every derived
   * table and driver-side memo goes through `graft.sources.Artifact`, the
-  * one place that keys, builds and retires them, and every vector search
+  * one place that keys, builds and retires them; every vector search
   * ranks, scores cosines and pivots PQ codebooks through
-  * `graft.ann.Stages`. This scan fails, listing the offending lines, when
+  * `graft.ann.Stages`; and every entry point gets its session from
+  * `graft.Harness`. This scan fails, listing the offending lines, when
   * a rule's token appears in its scope outside the rule's allowed file —
   * the copies that left artifact families keyed by path only and let the
   * ANN files drift apart. `Warehouse.readTableOrFiles` may ask the
@@ -15,6 +16,7 @@ class ArtifactGuardSpec extends AnyFunSuite {
 
   private val Registry = "graft/sources/Artifact.scala"
   private val Stages = "graft/ann/Stages.scala"
+  private val Harness = "graft/Harness.scala"
   private val Everywhere = Seq("graft/")
   private val Search = Seq("graft/ann/", "graft/rag/Search.scala")
 
@@ -27,9 +29,10 @@ class ArtifactGuardSpec extends AnyFunSuite {
     ("getModificationTime", "a source signature (file mtime)", Registry, Everywhere),
     ("""orderBy(col("similarity").desc, col("vec_id"))""", "a top-k ranking window",
       Stages, Search),
-    ("=== 0.0, 0.0)", "a zero-norm cosine guard", Stages, Search),
+    ("=== 0.0, 0.0)", "a zero-norm cosine guard", Stages, Everywhere),
     ("""max(when(col("m") === m && col("k") === k""", "a PQ codebook pivot",
-      Stages, Search))
+      Stages, Search),
+    ("SparkSession.builder()", "a session builder", Harness, Everywhere))
 
   private def sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -63,6 +66,11 @@ class ArtifactGuardSpec extends AnyFunSuite {
 
   test("vector search ranks, scores and pivots codebooks through the ANN stages only") {
     val found = offenders(Stages)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("entry points build their sessions through the harness only") {
+    val found = offenders(Harness)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -158,7 +158,8 @@ class BenchFpSpec extends AnyFunSuite {
     java.nio.file.Files.write(f,
       ("""{"metric":"total","value":1.0,"queries":{"q1":0.1},""" +
         """"plans":{"q1_agg":"0123456789ab","m5_cleanup":"err"},""" +
-        """"plan_changes":{"q1_agg":"ffffffffffff"},"sf":"sf0.1"}""").getBytes("UTF-8"))
+        """"plan_changes":{"q1_agg":"ffffffffffff"},""" +
+        """"jobs_stages_tasks":{"q1_agg":[2,3,9],"m5_cleanup":[1,1,4]},"sf":"sf0.1"}""").getBytes("UTF-8"))
     val m = Bench.readPrevPlans(f.toString)
     assert(m == Map("q1_agg" -> "0123456789ab", "m5_cleanup" -> "err"))
   }

@@ -133,7 +133,7 @@ class DedupSpec extends SparkSpec {
 
   test("d5 closed form reproduces the measured dial curve over two decades") {
     // PLANS.md §d5-dial: recall = 1-(1-p^r)^b with p = 1 - acos(sim)/pi.
-    // The nine D5Dial measurements (sf0.1 / sf1 / sf10, ~0.02 band of
+    // The nine `graft.Dial d5` measurements (sf0.1 / sf1 / sf10, ~0.02 band of
     // truth-mass over-performance) pin the model; the tolerance brackets
     // the largest observed deviation.
     val measured = Seq( // (bits, bands, measured recall, scale)

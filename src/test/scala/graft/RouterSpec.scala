@@ -234,7 +234,7 @@ class RouterSpec extends SparkSpec {
   }
 
   test("alpha is a live parameter: the box anchor is overridable, laws hold") {
-    // r14: IoBytesDial emits adc_alpha_measured; route() consumes it here.
+    // r14: `graft.Dial io_bytes` emits adc_alpha_measured; route() consumes it here.
     // The compute reachable-set proof needs only alpha > 1 — any such box
     // still never routes a code-scanning family under compute
     Seq(1.01, 1.63, 5.0).foreach { a =>
@@ -253,7 +253,7 @@ class RouterSpec extends SparkSpec {
   }
 
   test("the latest committed alpha measurement sits on the anchor's side of 1") {
-    // r15 (verdict r14 #6): IoBytesDial re-measures alpha per round
+    // r15 (verdict r14 #6): `graft.Dial io_bytes` re-measures alpha per round
     // (IOBYTES_r{N}.json, adc_alpha_measured). The compute reachable-set
     // proof needs only SIGN agreement with the anchor (alpha > 1); a box
     // where the ADC gather beats the codegen dot (alpha < 1) must fail
@@ -270,7 +270,7 @@ class RouterSpec extends SparkSpec {
       finally src.close()
     assume(line.isDefined,
       s"${latest.getName} carries no adc_alpha_measured (floor-guard " +
-        "suppressed emission — re-run graft.IoBytesDial on a quiet box)")
+        "suppressed emission — re-run `graft.Dial io_bytes` on a quiet box)")
     val alpha = """"adc_alpha_measured":\s*([0-9.]+)""".r
       .findFirstMatchIn(line.get).map(_.group(1).toDouble)
       .getOrElse(fail(s"unparseable alpha in ${latest.getName}"))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.ann.Stages
 import graft.functions.{DetHash, Vec}
 
 class VecSpec extends SparkSpec {
@@ -14,7 +15,8 @@ class VecSpec extends SparkSpec {
       (Seq(0.0, 0.0), Seq(1.0, 1.0), 0.0),
       (Seq(1.0, 0.0), Seq(-1.0, 0.0), -1.0),
     ).toDF("a", "b", "want")
-    val bad = df.filter(abs(Vec.cosineRounded(col("a"), col("b")) - col("want")) > 1e-9)
+    val sim = Stages.cosine(col("a"), Vec.norm2Native(col("a")), col("b"), Vec.norm2Native(col("b")))
+    val bad = df.filter(abs(sim - col("want")) > 1e-9)
     assert(bad.count() == 0)
   }
 
