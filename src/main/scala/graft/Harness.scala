@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one measurement harness every entry point (Bench, Verify, DedupFull,
   * StreamBench, Dial) shares: the only session builder, the cold-run-then-
-  * median timer, the locale-safe number format and the JSON-lines emitter.
+  * median timer, the locale-safe number format, the JSON string escaper and
+  * the JSON-lines emitter.
   *
   * Session dials come from the environment:
   *   - `SPARK_GRAFT_CPUS` (default 4): `local[cpus]`.
@@ -71,6 +72,19 @@ object Harness {
     * may print a decimal comma, which is not JSON. */
   def fmt(v: Double, digits: Int = 3): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** `s` as a JSON string literal. Backslash, quote and every control
+    * character below 0x20 are escaped: a tab or CR in an oracle's SQL
+    * would otherwise make a strict `json.load` reject the file. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Prints each JSON line as it is emitted; [[write]] puts them all in
     * `out`, when given, one per line. */

@@ -5,24 +5,22 @@ import java.nio.file.{Files, Paths}
   * the cheap input for tools/oracle_times.py, which times each oracle in
   * DuckDB to give the bench an external denominator (BASELINE.json
   * publishes no reference wall-times, so round-over-round was the only
-  * comparison; the DuckDB ratio anchors every scale). Shares Verify's
-  * escaping contract: the two files must stay byte-compatible for the
-  * driver's json.load. */
+  * comparison; the DuckDB ratio anchors every scale). */
 object OracleSqlDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/oracle_sql.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
-    System.err.println(s"[oracle-dump] ${SparkEntry.oracleSql.size} oracle queries -> $out")
+    val n = write(out)
+    System.err.println(s"[oracle-dump] $n oracle queries -> $out")
+  }
+
+  /** Writes the oracles whose names pass `keep` to `path` as one JSON
+    * object (name -> SQL) — the `oracle_sql.json` that tools/check.py
+    * reads — and returns how many it wrote. */
+  def write(path: String, keep: String => Boolean = _ => true): Int = {
+    import Harness.jsonString
+    val kept = SparkEntry.oracleSql.filter { case (k, _) => keep(k) }
+    Files.writeString(Paths.get(path),
+      kept.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}"))
+    kept.size
   }
 }

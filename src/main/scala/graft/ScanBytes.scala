@@ -67,11 +67,4 @@ object ScanBytes {
     }
     (rows, reads)
   }
-
-  /** Sum of selected files/bytes across every scan — the coarse headline;
-    * see [[selectedScanReads]] for per-table attribution. */
-  def selectedScanBytes(df: DataFrame): (Long, Long, Long) = {
-    val (rows, reads) = selectedScanReads(df)
-    (rows, reads.map(_.files).sum, reads.map(_.bytes).sum)
-  }
 }

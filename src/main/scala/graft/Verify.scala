@@ -1,5 +1,4 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,27 +23,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Skipped queries are dropped from oracle_sql.json too: otherwise
     // check.py reports each skipped name as FAIL ("spark output
     // unreadable") unless the caller mirrors the skip list in its exclude
     // arg — one knob must control both sides (ADVICE r10). The driver
     // never sets the skip env, so driver runs always emit the full map.
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => !skipped(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    OracleSqlDump.write(s"$outDir/oracle_sql.json", n => !skipped(n))
     spark.stop()
   }
 }

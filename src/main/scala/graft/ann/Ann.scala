@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.rag.Search
-import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** IVF approximate-nearest-neighbor search (SURVEY.md §2.D2) — the scale
@@ -522,47 +521,26 @@ object Ann {
     "a20_incremental_ivf" -> ((s, d) => a20IncrementalIvf(s, d)),
   )
 
+  import Stages.Sql.{centroids, corpus, cosine, keepTopK, probes, ranked, recallAt}
+
   /** Shared CTE chain producing the IVF ranked results (a2 + a3 unfiltered;
     * a10 with the label predicate inside the probe join). */
   private def ivfCte(sameLabel: Boolean): String = {
     val labelCond = if (sameLabel) " AND a.label = p.qlabel" else ""
-    s"""WITH e0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |en AS (SELECT vec_id, label, v, sqrt(${dotSql("v", "v")}) AS nrm FROM e0),
-         |cent AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM en WHERE vec_id < 8),
-         |asg0 AS (
-         |  SELECT en.vec_id, en.label, cent.cent_id, en.v, en.nrm,
-         |    round(CASE WHEN en.nrm*cent.cnrm = 0 THEN 0.0
-         |      ELSE ${dotSql("en.v", "cent.cv")}/(en.nrm*cent.cnrm) END, 6) AS cs
-         |  FROM en, cent
-         |), asg AS (
-         |  SELECT vec_id, label, cent_id AS list_id, v, nrm FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-         |    FROM asg0) WHERE rn = 1
-         |), probes AS (
-         |  SELECT vec_id AS query_id, label AS qlabel, cent_id AS list_id, v AS qv, nrm AS qnrm FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-         |    FROM asg0 WHERE vec_id % 101 = 0) WHERE rn <= 3
-         |), scored AS (
+    s"""${corpus(label = true)},
+         |${centroids("8", label = true, vectors = true)},
+         |${probes("probes", 101, "3", label = true, vectors = true)}, scored AS (
          |  SELECT p.query_id, a.vec_id,
-         |    round(CASE WHEN p.qnrm*a.nrm = 0 THEN 0.0
-         |      ELSE ${dotSql("p.qv", "a.v")}/(p.qnrm*a.nrm) END, 6) AS similarity
+         |    ${cosine("p.qv", "p.qnrm", "a.v", "a.nrm")} AS similarity
          |  FROM probes p JOIN asg a ON a.list_id = p.list_id AND a.vec_id <> p.query_id$labelCond
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-         |  FROM scored)""".stripMargin
+         |), ${ranked("ranked", "scored")}""".stripMargin
   }
   private val IvfCte: String = ivfCte(sameLabel = false)
 
   val oracle: Map[String, String] = Map(
-    "a2_knn_ivf" -> (IvfCte +
-      """
-         |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-         |ORDER BY query_id, rnk""".stripMargin),
+    "a2_knn_ivf" -> (IvfCte + keepTopK()),
 
-    "a10_ivf_filtered" -> (ivfCte(sameLabel = true) +
-      """
-         |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-         |ORDER BY query_id, rnk""".stripMargin),
+    "a10_ivf_filtered" -> (ivfCte(sameLabel = true) + keepTopK()),
 
     "a20_incremental_ivf" -> (IvfCte +
       """
@@ -572,29 +550,6 @@ object Ann {
          |  CAST(count(*) AS BIGINT) AS n_total
          |FROM asg GROUP BY list_id ORDER BY list_id""".stripMargin),
 
-    "a3_ivf_recall" -> (IvfCte +
-      s"""
-         |, ivf AS (
-         |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 10
-         |), bfs AS (
-         |  SELECT q.vec_id AS query_id, en2.vec_id,
-         |    round(CASE WHEN q.nrm*en2.nrm = 0 THEN 0.0
-         |      ELSE ${dotSql("q.v", "en2.v")}/(q.nrm*en2.nrm) END, 6) AS similarity
-         |  FROM en q JOIN en en2 ON en2.vec_id <> q.vec_id
-         |  WHERE q.vec_id % 101 = 0
-         |), bf AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-         |    FROM bfs) WHERE rnk <= 10
-         |), common AS (
-         |  SELECT bf.query_id, count(*) AS n_common
-         |  FROM bf JOIN ivf ON bf.query_id = ivf.query_id AND bf.vec_id = ivf.vec_id
-         |  GROUP BY bf.query_id
-         |)
-         |SELECT t.query_id, t.n_true, coalesce(c.n_common, 0) AS n_common,
-         |  round(CAST(coalesce(c.n_common, 0) AS DOUBLE) / t.n_true, 6) AS recall
-         |FROM (SELECT query_id, count(*) AS n_true FROM bf GROUP BY query_id) t
-         |LEFT JOIN common c ON c.query_id = t.query_id
-         |ORDER BY t.query_id""".stripMargin),
+    "a3_ivf_recall" -> (IvfCte + recallAt("ivf")),
   )
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.rag.Search
-import graft.rag.Search.dotSql
 import graft.sources.Artifact
 
 /** D19: GRAPH-ordered probe selection over the IVF centroids (SURVEY.md
@@ -156,24 +155,14 @@ object GraphProbe {
 
   // ---------------------------------------------------------------- oracle
 
+  import Stages.Sql.{centroids, corpus, cosine, keepTopK, nearest, ranked, recallAt}
+
   /** graphCte(101) is the registered text byte-for-byte. */
   private def graphCte(qmod: Int): String =
-    s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |en AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm FROM e0),
-       |cent AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM en WHERE vec_id < $NLists),
-       |asg0 AS (
-       |  SELECT en.vec_id, cent.cent_id, en.v, en.nrm,
-       |    round(CASE WHEN en.nrm*cent.cnrm = 0 THEN 0.0
-       |      ELSE ${dotSql("en.v", "cent.cv")}/(en.nrm*cent.cnrm) END, 6) AS cs
-       |  FROM en, cent
-       |), asg AS (
-       |  SELECT vec_id, cent_id AS list_id, v, nrm FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM asg0) WHERE rn = 1
-       |), edges0 AS (
+    s"""${corpus(label = false)},
+       |${centroids(s"$NLists", label = false, vectors = true)}, edges0 AS (
        |  SELECT c1.cent_id AS src, c2.cent_id AS dst,
-       |    round(CASE WHEN c1.cnrm*c2.cnrm = 0 THEN 0.0
-       |      ELSE ${dotSql("c1.cv", "c2.cv")}/(c1.cnrm*c2.cnrm) END, 6) AS cs
+       |    ${cosine("c1.cv", "c1.cnrm", "c2.cv", "c2.cnrm")} AS cs
        |  FROM cent c1 JOIN cent c2 ON c2.cent_id <> c1.cent_id
        |), edges AS (
        |  SELECT src, dst FROM (
@@ -184,8 +173,7 @@ object GraphProbe {
        |  FROM asg0 WHERE vec_id % $qmod = 0
        |), entry AS (
        |  SELECT query_id, cent_id AS entry FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM qcos) WHERE rn = 1
+       |    ${nearest("qcos", "query_id")}) WHERE rn = 1
        |), h1 AS (
        |  SELECT e.query_id, g.dst AS cand FROM entry e JOIN edges g ON g.src = e.entry
        |), b1 AS (
@@ -210,12 +198,9 @@ object GraphProbe {
        |  ) WHERE rn <= $NProbe
        |), scored AS (
        |  SELECT p.query_id, a.vec_id,
-       |    round(CASE WHEN p.qnrm*a.nrm = 0 THEN 0.0
-       |      ELSE ${dotSql("p.qv", "a.v")}/(p.qnrm*a.nrm) END, 6) AS similarity
+       |    ${cosine("p.qv", "p.qnrm", "a.v", "a.nrm")} AS similarity
        |  FROM probes p JOIN asg a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |  FROM scored)""".stripMargin
+       |), ${ranked("ranked", "scored")}""".stripMargin
 
   private lazy val GraphCte: String = graphCte(101)
 
@@ -225,26 +210,13 @@ object GraphProbe {
   private val GraphSharedCtes = Seq("en", "asg0", "asg", "edges", "qcos", "bf")
 
   val oracle: Map[String, String] = Map(
-    "a19_graph_topk" -> (GraphCte +
-      s"""
-         |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= $TopK
-         |ORDER BY query_id, rnk""".stripMargin),
+    "a19_graph_topk" -> (GraphCte + keepTopK(k = TopK)),
 
-    "a19_graph_recall" -> (GraphCte +
-      s"""
-         |, graphp AS (
-         |  SELECT query_id, vec_id FROM ranked WHERE rnk <= $TopK
-         |)""".stripMargin + Pq.recallTailSql("graphp")),
+    "a19_graph_recall" -> (GraphCte + recallAt("graphp", k = TopK)),
 
-    "a19s_graph_topk" -> Pq.materializeShared(graphCte(1313) +
-      s"""
-         |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= $TopK
-         |ORDER BY query_id, rnk""".stripMargin, GraphSharedCtes),
+    "a19s_graph_topk" -> Pq.materializeShared(graphCte(1313) + keepTopK(k = TopK), GraphSharedCtes),
 
-    "a19s_graph_recall" -> Pq.materializeShared(graphCte(1313) +
-      s"""
-         |, graphp AS (
-         |  SELECT query_id, vec_id FROM ranked WHERE rnk <= $TopK
-         |)""".stripMargin + Pq.recallTailSql("graphp", 1313), GraphSharedCtes),
+    "a19s_graph_recall" -> Pq.materializeShared(
+      graphCte(1313) + recallAt("graphp", k = TopK, qmod = 1313), GraphSharedCtes),
   )
 }

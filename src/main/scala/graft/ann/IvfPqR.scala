@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
-import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** RESIDUAL-encoded IVFPQ (SURVEY.md §2.D) — the full Jégou et al. 2011
@@ -167,87 +166,39 @@ object IvfPqR {
 
   // ---------------------------------------------------------------- oracle
 
-  /** DOUBLE[8] subvector m of 64-dim list v (m is a SQL expression). */
-  private def subSql(v: String, m: String): String =
-    s"list_transform(range(1, ${D + 1}), j -> $v[$m*$D + j])"
+  import Stages.Sql.{adcSum, centroids, codebook, corpus, cosineOf, dot, encode, keepTopK,
+    lutJoins, probes, ranked, recallAt, subvec}
 
   private def residualCte(qmod: Int): String = {
-    val codePivot = (0 until M).map(m =>
-      s"max(CASE WHEN m = $m THEN code END) AS code$m").mkString(",\n        ")
-    val cnPivot = (0 until M).map(m =>
-      s"max(CASE WHEN m = $m THEN cn2 END) AS cnp$m").mkString(",\n        ")
-    val cxPivot = (0 until M).map(m =>
-      s"max(CASE WHEN m = $m THEN cx END) AS cx$m").mkString(",\n        ")
     val cxSum = (0 until M).map(m => s"cx$m").mkString(" + ")
     val cnSum = (0 until M).map(m => s"cnp$m").mkString(" + ")
-    val lutJoins = (0 until M).map(m =>
-      s"JOIN lut l$m ON l$m.query_id = pq.query_id AND l$m.m = $m AND l$m.k = s.code$m")
-      .mkString("\n  ")
-    val lutSum = (0 until M).map(m => s"l$m.qd").mkString(" + ")
-    s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |en AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm FROM e0),
-       |cent AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM en WHERE vec_id < 8),
-       |asg0 AS (
-       |  SELECT en.vec_id, cent.cent_id, en.v, en.nrm,
-       |    round(CASE WHEN en.nrm*cent.cnrm = 0 THEN 0.0
-       |      ELSE ${dotSql("en.v", "cent.cv")}/(en.nrm*cent.cnrm) END, 6) AS cs
-       |  FROM en, cent
-       |), asg AS (
-       |  SELECT vec_id, cent_id AS list_id, v FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM asg0) WHERE rn = 1
-       |), resid AS (
+    val rcb = codebook("rcb", "r.vec_id - 8", "r.rv", "resid r",
+      s"r.vec_id >= 8 AND r.vec_id < ${8 + K}", D)
+    s"""${corpus(label = false)},
+       |${centroids("8", label = false, vectors = true)}, resid AS (
        |  SELECT a.vec_id, a.list_id,
        |    list_transform(range(1, 65), i -> a.v[i] - c.cv[i]) AS rv, c.cv
        |  FROM asg a JOIN cent c ON c.cent_id = a.list_id
-       |), rcb AS (
-       |  SELECT t.m, r.vec_id - 8 AS k, ${subSql("r.rv", "t.m")} AS c,
-       |    ${dotSql(subSql("r.rv", "t.m"), subSql("r.rv", "t.m"))} AS cn2
-       |  FROM resid r, range(0, $M) t(m) WHERE r.vec_id >= 8 AND r.vec_id < ${8 + K}
-       |), subv AS (
-       |  SELECT r.vec_id, r.cv, t.m, ${subSql("r.rv", "t.m")} AS sub
-       |  FROM resid r, range(0, $M) t(m)
-       |), dists AS (
-       |  SELECT s.vec_id, s.m, c.k,
-       |    round(-2.0*${dotSql("s.sub", "c.c")} + c.cn2, 6) AS dist, c.cn2,
-       |    ${dotSql(subSql("s.cv", "s.m"), "c.c")} AS cx
-       |  FROM subv s JOIN rcb c ON c.m = s.m
-       |), codes AS (
-       |  SELECT vec_id, m, k AS code, cn2, cx FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
-       |    FROM dists) WHERE rn = 1
-       |), cp AS (
-       |  SELECT vec_id,
-       |        $codePivot,
-       |        $cnPivot,
-       |        $cxPivot
-       |  FROM codes GROUP BY vec_id
-       |), cpx AS (
+       |), $rcb,
+       |${encode("rcb", "resid", "r", "rv", D, cross = Some("cv"))}, cpx AS (
        |  SELECT cp.*, a.list_id,
-       |    ${dotSql("r.cv", "r.cv")} + 2.0 * ($cxSum) + ($cnSum) AS rn2
+       |    ${dot("r.cv", "r.cv")} + 2.0 * ($cxSum) + ($cnSum) AS rn2
        |  FROM cp
        |  JOIN asg a ON a.vec_id = cp.vec_id
        |  JOIN resid r ON r.vec_id = cp.vec_id
-       |), probes0 AS (
-       |  SELECT vec_id AS query_id, cent_id AS list_id, v AS qv, nrm AS qnrm FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM asg0 WHERE vec_id % $qmod = 0) WHERE rn <= 3
-       |), pq AS (
-       |  SELECT p.query_id, p.list_id, p.qnrm, ${dotSql("p.qv", "c.cv")} AS qc
+       |), ${probes("probes0", qmod, "3", label = false, vectors = true)}, pq AS (
+       |  SELECT p.query_id, p.list_id, p.qnrm, ${dot("p.qv", "c.cv")} AS qc
        |  FROM probes0 p JOIN cent c ON c.cent_id = p.list_id
        |), lut AS (
-       |  SELECT q.query_id, c.m, c.k, ${dotSql(subSql("q.qv", "c.m"), "c.c")} AS qd
+       |  SELECT q.query_id, c.m, c.k, ${dot(subvec("q.qv", "c.m", D), "c.c")} AS qd
        |  FROM (SELECT DISTINCT query_id, qv FROM probes0) q, rcb c
        |), scored AS (
        |  SELECT pq.query_id, s.vec_id,
-       |    round(CASE WHEN pq.qnrm * sqrt(s.rn2) = 0 THEN 0.0
-       |      ELSE (pq.qc + ($lutSum)) / (pq.qnrm * sqrt(s.rn2)) END, 6) AS similarity
+       |    ${cosineOf(s"pq.qc + ($adcSum)", "pq.qnrm", "sqrt(s.rn2)")} AS similarity
        |  FROM pq
        |  JOIN cpx s ON s.list_id = pq.list_id AND s.vec_id <> pq.query_id
-       |  $lutJoins
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |  FROM scored)""".stripMargin
+       |  ${lutJoins("pq")}
+       |), ${ranked("ranked", "scored")}""".stripMargin
   }
 
   private lazy val ResidualCte: String = residualCte(101)
@@ -259,27 +210,14 @@ object IvfPqR {
     "probes0", "pq", "lut", "bf")
 
   val oracle: Map[String, String] = Map(
-    "a16_ivfpqr_topk" -> (ResidualCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin),
+    "a16_ivfpqr_topk" -> (ResidualCte + keepTopK()),
 
-    "a17_ivfpqr_recall" -> (ResidualCte +
-      """
-        |, ivfpqr AS (
-        |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 10
-        |)""".stripMargin + Pq.recallTailSql("ivfpqr")),
+    "a17_ivfpqr_recall" -> (ResidualCte + recallAt("ivfpqr")),
 
     // ---- sampled variants (r12, d7s pattern — see Pq.scala)
-    "a16s_ivfpqr_topk" -> Pq.materializeShared(residualCte(1313) +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin, ResidualSharedCtes),
+    "a16s_ivfpqr_topk" -> Pq.materializeShared(residualCte(1313) + keepTopK(), ResidualSharedCtes),
 
-    "a17s_ivfpqr_recall" -> Pq.materializeShared(residualCte(1313) +
-      """
-        |, ivfpqr AS (
-        |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 10
-        |)""".stripMargin + Pq.recallTailSql("ivfpqr", 1313), ResidualSharedCtes),
+    "a17s_ivfpqr_recall" -> Pq.materializeShared(
+      residualCte(1313) + recallAt("ivfpqr", qmod = 1313), ResidualSharedCtes),
   )
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
-import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** Product quantization ANN (SURVEY.md §2.D5) — the memory-compression
@@ -721,13 +720,9 @@ object Pq {
 
   // ---------------------------------------------------------------- oracle
 
-  /** DOUBLE[8] subvector m of 64-dim list `v` (m is a SQL expression). */
-  private def subSql(v: String, m: String): String =
-    s"list_transform(range(1, $D + 1), j -> $v[$m*$D + j])"
+  import Stages.Sql.{adcSum, centroids, corpus, cosine, cosineOf, dot, keepTopK, lutJoins,
+    probes, ranked, recallAt, subvec}
 
-  /** Shared CTE chain to the ranked PQ results (mirrors codebook + encode +
-    * LUT scoring; every multi-term sum written left-to-right like the Spark
-    * side so the rounded similarity is bit-identical). */
   /** CTE chain to the ranked ADC results (mirrors codebook + encode + LUT
     * scoring; every multi-term sum written left-to-right like the Spark
     * side so the rounded similarity is bit-identical). `extraCtes` injects
@@ -735,57 +730,24 @@ object Pq {
     * replaces the candidate-generation FROM/WHERE of the scoring stage. */
   private def pqCteWith(extraCtes: String, scoredFromWhere: String,
                         qmod: Int = 101): String = {
-    val codePivot = (0 until M).map(m =>
-      s"max(CASE WHEN m = $m THEN code END) AS code$m").mkString(",\n        ")
-    val cnPivot = (0 until M).map(m =>
-      s"max(CASE WHEN m = $m THEN cn2 END) AS cnp$m").mkString(",\n        ")
-    val approx = (0 until M).map(m => s"l$m.qd").mkString(" + ")
     val rn2 = (0 until M).map(m => s"s.cnp$m").mkString(" + ")
-    s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |en AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm FROM e0),
-       |cbn AS (
-       |  SELECT t.m, e.vec_id AS k, ${subSql("e.v", "t.m")} AS c,
-       |    ${dotSql(subSql("e.v", "t.m"), subSql("e.v", "t.m"))} AS cn2
-       |  FROM en e, range(0, $M) t(m) WHERE e.vec_id < $K
-       |), subv AS (
-       |  SELECT e.vec_id, t.m, ${subSql("e.v", "t.m")} AS sub
-       |  FROM en e, range(0, $M) t(m)
-       |), dists AS (
-       |  SELECT s.vec_id, s.m, c.k,
-       |    round(-2.0*${dotSql("s.sub", "c.c")} + c.cn2, 6) AS dist, c.cn2
-       |  FROM subv s JOIN cbn c ON c.m = s.m
-       |), codes AS (
-       |  SELECT vec_id, m, k AS code, cn2 FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
-       |    FROM dists) WHERE rn = 1
-       |), cp AS (
-       |  SELECT vec_id,
-       |        $codePivot,
-       |        $cnPivot
-       |  FROM codes GROUP BY vec_id
-       |), probes AS (
+    s"""${corpus(label = false)},
+       |${Stages.Sql.codebook("cbn", "e.vec_id", "e.v", "en e", s"e.vec_id < $K", D)},
+       |${Stages.Sql.encode("cbn", "en", "e", "v", D)}, probes AS (
        |  SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM en WHERE vec_id % $qmod = 0
        |), lut AS (
-       |  SELECT p.query_id, c.m, c.k, ${dotSql(subSql("p.qv", "c.m"), "c.c")} AS qd
+       |  SELECT p.query_id, c.m, c.k, ${dot(subvec("p.qv", "c.m", D), "c.c")} AS qd
        |  FROM probes p, cbn c
        |)$extraCtes, scored AS (
        |  SELECT p.query_id, s.vec_id,
-       |    round(CASE WHEN p.qnrm * sqrt($rn2) = 0 THEN 0.0
-       |      ELSE ($approx) / (p.qnrm * sqrt($rn2)) END, 6) AS similarity
+       |    ${cosineOf(adcSum, "p.qnrm", s"sqrt($rn2)")} AS similarity
        |  $scoredFromWhere
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |  FROM scored)""".stripMargin
+       |), ${ranked("ranked", "scored")}""".stripMargin
   }
-
-  /** The ADC lut joins of the scoring stage (shared by every variant). */
-  private lazy val LutJoinsSql: String = (0 until M).map(m =>
-    s"JOIN lut l$m ON l$m.query_id = p.query_id AND l$m.m = $m AND l$m.k = s.code$m")
-    .mkString("\n  ")
 
   private def pqCte(qmod: Int): String = pqCteWith("",
     s"""FROM cp s CROSS JOIN probes p
-       |  $LutJoinsSql
+       |  ${lutJoins("p")}
        |  WHERE s.vec_id <> p.query_id""".stripMargin, qmod)
 
   private lazy val PqCte: String = pqCte(101)
@@ -805,27 +767,13 @@ object Pq {
     * formulation as Ann's oracle, label-free), scoring restricted to
     * (query, list) probe pairs. */
   private def ivfPqCte(qmod: Int): String = pqCteWith(
-    s""", cent AS (
-       |  SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM en WHERE vec_id < 8
-       |), asg0 AS (
-       |  SELECT en.vec_id, cent.cent_id,
-       |    round(CASE WHEN en.nrm*cent.cnrm = 0 THEN 0.0
-       |      ELSE ${dotSql("en.v", "cent.cv")}/(en.nrm*cent.cnrm) END, 6) AS cs
-       |  FROM en, cent
-       |), asg AS (
-       |  SELECT vec_id, cent_id AS list_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM asg0) WHERE rn = 1
-       |), plist AS (
-       |  SELECT vec_id AS query_id, cent_id AS list_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM asg0 WHERE vec_id % $qmod = 0) WHERE rn <= 3
-       |)""".stripMargin,
+    s""", ${centroids("8", label = false, vectors = false)},
+       |${probes("plist", qmod, "3", label = false, vectors = false)}""".stripMargin,
     s"""FROM plist pl
        |  JOIN probes p ON p.query_id = pl.query_id
        |  JOIN asg a ON a.list_id = pl.list_id
        |  JOIN cp s ON s.vec_id = a.vec_id
-       |  $LutJoinsSql
+       |  ${lutJoins("p")}
        |  WHERE s.vec_id <> p.query_id""".stripMargin, qmod)
 
   private lazy val IvfPqCte: String = ivfPqCte(101)
@@ -837,135 +785,56 @@ object Pq {
        |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 50
        |), rr AS (
        |  SELECT s.query_id, s.vec_id,
-       |    round(CASE WHEN p.qnrm*e2.nrm = 0 THEN 0.0
-       |      ELSE ${dotSql("p.qv", "e2.v")}/(p.qnrm*e2.nrm) END, 6) AS similarity
+       |    ${cosine("p.qv", "p.qnrm", "e2.v", "e2.nrm")} AS similarity
        |  FROM shortlist s
        |  JOIN en e2 ON e2.vec_id = s.vec_id
        |  JOIN probes p ON p.query_id = s.query_id
-       |), rranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |  FROM rr)""".stripMargin
-
-  /** Shared recall-vs-brute-force SQL tail: joins `approxRel`
-    * (query_id, vec_id) against the exact top-10 (mirror of
-    * recallVsBruteForce — change the recall definition in ONE place). */
-  private[ann] def recallTailSql(approxRel: String, qmod: Int = 101): String =
-    s"""
-       |, bfs AS (
-       |  SELECT q.vec_id AS query_id, en2.vec_id,
-       |    round(CASE WHEN q.nrm*en2.nrm = 0 THEN 0.0
-       |      ELSE ${dotSql("q.v", "en2.v")}/(q.nrm*en2.nrm) END, 6) AS similarity
-       |  FROM en q JOIN en en2 ON en2.vec_id <> q.vec_id
-       |  WHERE q.vec_id % $qmod = 0
-       |), bf AS (
-       |  SELECT query_id, vec_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |    FROM bfs) WHERE rnk <= 10
-       |), common AS (
-       |  SELECT bf.query_id, count(*) AS n_common
-       |  FROM bf JOIN $approxRel a ON bf.query_id = a.query_id AND bf.vec_id = a.vec_id
-       |  GROUP BY bf.query_id
-       |)
-       |SELECT t.query_id, t.n_true, coalesce(c.n_common, 0) AS n_common,
-       |  round(CAST(coalesce(c.n_common, 0) AS DOUBLE) / t.n_true, 6) AS recall
-       |FROM (SELECT query_id, count(*) AS n_true FROM bf GROUP BY query_id) t
-       |LEFT JOIN common c ON c.query_id = t.query_id
-       |ORDER BY t.query_id""".stripMargin
+       |), ${ranked("rranked", "rr")}""".stripMargin
 
   val oracle: Map[String, String] = Map(
-    "a5_pq_topk" -> (PqCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin),
+    "a5_pq_topk" -> (PqCte + keepTopK()),
 
-    "a7_pq_rerank" -> (PqCte + RerankCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM rranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin),
+    "a7_pq_rerank" -> (PqCte + RerankCte + keepTopK("rranked")),
 
-    "a8_pq_rerank_recall" -> (PqCte + RerankCte +
-      """
-        |, rr10 AS (
-        |  SELECT query_id, vec_id FROM rranked WHERE rnk <= 10
-        |)""".stripMargin + recallTailSql("rr10")),
+    "a8_pq_rerank_recall" -> (PqCte + RerankCte + recallAt("rr10", "rranked")),
 
-    "a13_ivfpq_topk" -> (IvfPqCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin),
+    "a13_ivfpq_topk" -> (IvfPqCte + keepTopK()),
 
     // a13z reads a different physical layout of the SAME index — identical
     // logical semantics, so the oracle is a13's verbatim
-    "a13z_ivfpq_topk" -> (IvfPqCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin),
+    "a13z_ivfpq_topk" -> (IvfPqCte + keepTopK()),
 
-    "a14_ivfpq_recall" -> (IvfPqCte +
-      """
-        |, ivfpq AS (
-        |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 10
-        |)""".stripMargin + recallTailSql("ivfpq")),
+    "a14_ivfpq_recall" -> (IvfPqCte + recallAt("ivfpq")),
 
-    "a6_pq_recall" -> (PqCte +
-      """
-        |, pq AS (
-        |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 10
-        |)""".stripMargin + recallTailSql("pq")),
+    "a6_pq_recall" -> (PqCte + recallAt("pq")),
 
     // ---- sampled variants (qmod 1313): same builders, shared CTEs
     // materialized for DuckDB feasibility one decade up (see
     // materializeShared) — results are qmod-restricted, never re-derived
-    "a5s_pq_topk" -> materializeShared(pqCte(1313) +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin, PqSharedCtes),
+    "a5s_pq_topk" -> materializeShared(pqCte(1313) + keepTopK(), PqSharedCtes),
 
-    "a7s_pq_rerank" -> materializeShared(pqCte(1313) + RerankCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM rranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin, PqSharedCtes),
+    "a7s_pq_rerank" -> materializeShared(
+      pqCte(1313) + RerankCte + keepTopK("rranked"), PqSharedCtes),
 
-    "a8s_pq_rerank_recall" -> materializeShared(pqCte(1313) + RerankCte +
-      """
-        |, rr10 AS (
-        |  SELECT query_id, vec_id FROM rranked WHERE rnk <= 10
-        |)""".stripMargin + recallTailSql("rr10", 1313), PqSharedCtes),
+    "a8s_pq_rerank_recall" -> materializeShared(
+      pqCte(1313) + RerankCte + recallAt("rr10", "rranked", qmod = 1313), PqSharedCtes),
 
-    "a6s_pq_recall" -> materializeShared(pqCte(1313) +
-      """
-        |, pq AS (
-        |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 10
-        |)""".stripMargin + recallTailSql("pq", 1313), PqSharedCtes),
+    "a6s_pq_recall" -> materializeShared(pqCte(1313) + recallAt("pq", qmod = 1313), PqSharedCtes),
 
-    "a13s_ivfpq_topk" -> materializeShared(ivfPqCte(1313) +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin, PqSharedCtes),
+    "a13s_ivfpq_topk" -> materializeShared(ivfPqCte(1313) + keepTopK(), PqSharedCtes),
 
     // a13zs reads the z-ordered physical layout of the SAME index —
     // identical logical semantics, so the oracle is a13s's verbatim
-    "a13zs_ivfpq_topk" -> materializeShared(ivfPqCte(1313) +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin, PqSharedCtes),
+    "a13zs_ivfpq_topk" -> materializeShared(ivfPqCte(1313) + keepTopK(), PqSharedCtes),
 
-    "a14s_ivfpq_recall" -> materializeShared(ivfPqCte(1313) +
-      """
-        |, ivfpq AS (
-        |  SELECT query_id, vec_id FROM ranked WHERE rnk <= 10
-        |)""".stripMargin + recallTailSql("ivfpq", 1313), PqSharedCtes),
+    "a14s_ivfpq_recall" -> materializeShared(
+      ivfPqCte(1313) + recallAt("ivfpq", qmod = 1313), PqSharedCtes),
 
     // a22: the IVFPQ chain's ADC ranking re-ranked exactly — RerankCte's
     // shortlist reads `ranked`, which here is the probe-pruned variant
-    "a22_ivfpq_rerank" -> (IvfPqCte + RerankCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM rranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin),
+    "a22_ivfpq_rerank" -> (IvfPqCte + RerankCte + keepTopK("rranked")),
 
-    "a22s_ivfpq_rerank" -> materializeShared(ivfPqCte(1313) + RerankCte +
-      """
-        |SELECT query_id, vec_id, similarity, rnk FROM rranked WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin, PqSharedCtes),
+    "a22s_ivfpq_rerank" -> materializeShared(
+      ivfPqCte(1313) + RerankCte + keepTopK("rranked"), PqSharedCtes),
   )
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.rag.Search
-import graft.rag.Search.dotSql
 import graft.sources.Artifact
 
 /** ANN FAMILY ROUTER (r13) — the sequel to the r12 operating-point
@@ -469,12 +468,16 @@ object Router {
       aRouteTopk(s, d, regime = IoBound, retrieval = PartitionStore)),
   )
 
+  import Stages.Sql.{centroids, corpus, cosine, probes, ranked}
+
   /** Shared stats CTEs: dynamic-dial assignment at the sqrt-law nlists —
     * the [[Ann]] IvfCte shape with the literal 8 freed to a scalar.
     * Parameterized by the io regime's refine-fetch pricing ([[Retrieval]],
     * mirroring [[route]]'s match): RowStore fetches the R shortlist rows;
     * PartitionStore re-reads the probed partitions (ivf_pq_r) or the
-    * whole corpus (flat pq shortlist). */
+    * whole corpus (flat pq shortlist). The corpus, the assignment scan and
+    * the decision chain are each read more than once, so they are
+    * materialized. */
   private def statsCte(retrieval: Retrieval): String = {
     val (ivfPqRFetch, pqFetch) = retrieval match {
       case RowStore => (
@@ -484,23 +487,11 @@ object Router {
         "CAST(nprobe_need AS DOUBLE) * CAST(occupancy AS DOUBLE) * (4.0 * dim)",
         "CAST(n AS DOUBLE) * (4.0 * dim)")
     }
-    s"""WITH e0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |en AS MATERIALIZED (SELECT vec_id, label, v, sqrt(${dotSql("v", "v")}) AS nrm FROM e0),
+    Pq.materializeShared(s"""${corpus(label = true)},
        |nl AS (SELECT CAST(greatest(8, least(65536, ceil(sqrt(CAST(count(*) AS DOUBLE))))) AS BIGINT) AS nlists,
        |              count(*) AS n,
        |              CAST(max(len(v)) AS INTEGER) AS dim FROM en),
-       |cent AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM en
-       |         WHERE vec_id < (SELECT nlists FROM nl)),
-       |asg0 AS MATERIALIZED (
-       |  SELECT en.vec_id, en.label, cent.cent_id, en.v, en.nrm,
-       |    round(CASE WHEN en.nrm*cent.cnrm = 0 THEN 0.0
-       |      ELSE ${dotSql("en.v", "cent.cv")}/(en.nrm*cent.cnrm) END, 6) AS cs
-       |  FROM en, cent
-       |), asg AS (
-       |  SELECT vec_id, label, cent_id AS list_id, v, nrm FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM asg0) WHERE rn = 1
-       |), occ AS (
+       |${centroids("(SELECT nlists FROM nl)", label = true, vectors = true)}, occ AS (
        |  SELECT max(sz) AS occupancy FROM (
        |    SELECT count(*) AS sz FROM asg GROUP BY list_id)
        |), spl AS (
@@ -508,9 +499,7 @@ object Router {
        |  -- tau=0.5, stride-sampled past 4096 source centroids
        |  SELECT CAST(max(nn) AS INTEGER) AS splinter FROM (
        |    SELECT s.cent_id, count(*) AS nn
-       |    FROM cent s JOIN cent c ON round(
-       |      CASE WHEN s.cnrm*c.cnrm = 0 THEN 0.0
-       |        ELSE ${dotSql("s.cv", "c.cv")}/(s.cnrm*c.cnrm) END, 6) >= 0.5
+       |    FROM cent s JOIN cent c ON ${cosine("s.cv", "s.cnrm", "c.cv", "c.cnrm")} >= 0.5
        |    WHERE s.cent_id % greatest(1, (SELECT nlists FROM nl) // 4096) = 0
        |    GROUP BY s.cent_id)
        |), dials AS (
@@ -524,9 +513,9 @@ object Router {
        |      (0.64 + (2.56 - 0.64) * (0.9 - 0.803) / (1.0 - 0.803))
        |        * occ.occupancy * 2.0)) AS BIGINT) AS depth
        |  FROM nl, occ, spl
-       |), dials2 AS MATERIALIZED (
+       |), dials2 AS (
        |  SELECT *, (depth <= 65536 AND depth < n) AS pq_feasible FROM dials
-       |), costs AS MATERIALIZED (
+       |), costs AS (
        |  -- byte prices are LIVE (r14): vec_bytes = 4.0*dim from the corpus
        |  -- schema (nl CTE), code_bytes = M interpolated from the SAME Scala
        |  -- constant the code-table schema is generated from (Pq.M), alpha
@@ -554,11 +543,11 @@ object Router {
        |     OR (f.family = 'ivf_flat' AND dials2.ivf_feasible)
        |     OR (f.family = 'ivf_pq_r' AND dials2.ivf_feasible AND dials2.pq_feasible)
        |     OR (f.family = 'pq_rerank' AND dials2.pq_feasible)
-       |), winner AS MATERIALIZED (
+       |), winner AS (
        |  SELECT regime, family FROM (
        |    SELECT *, row_number() OVER (PARTITION BY regime ORDER BY cost, prio) AS rn
        |    FROM costs) WHERE rn = 1
-       |)""".stripMargin
+       |)""".stripMargin, Seq("en", "asg0", "dials2", "costs", "winner"))
   }
 
   /** The qmod=101 serving batch against the winner's family, as a gated
@@ -566,37 +555,27 @@ object Router {
     * io-regime dispatch oracles (identical candidate SQL; only the winner
     * gate's regime differs, and the io dispatch's pruned scan is
     * row-identical to the full one by the static-IN contract). */
-  private def dispatchSql(regime: String): String =
+  private def dispatchSql(regime: String): String = {
+    val probesCte = probes("probes", 101, "(SELECT nprobe_need FROM dials2)",
+      label = false, vectors = true)
     s"""
-       |, probes AS (
-       |  SELECT vec_id AS query_id, cent_id AS list_id, v AS qv, nrm AS qnrm FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rn
-       |    FROM asg0 WHERE vec_id % 101 = 0)
-       |  WHERE rn <= (SELECT nprobe_need FROM dials2)
-       |), ivf_scored AS (
+       |, $probesCte, ivf_scored AS (
        |  SELECT p.query_id, a.vec_id,
-       |    round(CASE WHEN p.qnrm*a.nrm = 0 THEN 0.0
-       |      ELSE ${dotSql("p.qv", "a.v")}/(p.qnrm*a.nrm) END, 6) AS similarity
+       |    ${cosine("p.qv", "p.qnrm", "a.v", "a.nrm")} AS similarity
        |  FROM probes p JOIN asg a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-       |), ivf_ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |  FROM ivf_scored
-       |), brute_scored AS (
+       |), ${ranked("ivf_ranked", "ivf_scored")}, brute_scored AS (
        |  SELECT q.vec_id AS query_id, c.vec_id,
-       |    round(CASE WHEN q.nrm*c.nrm = 0 THEN 0.0
-       |      ELSE ${dotSql("q.v", "c.v")}/(q.nrm*c.nrm) END, 6) AS similarity
+       |    ${cosine("q.v", "q.nrm", "c.v", "c.nrm")} AS similarity
        |  FROM en q JOIN en c ON c.vec_id <> q.vec_id
        |  WHERE q.vec_id % 101 = 0
-       |), brute_ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |  FROM brute_scored
-       |)
+       |), ${ranked("brute_ranked", "brute_scored")}
        |SELECT query_id, vec_id, similarity, rnk FROM ivf_ranked
        |WHERE rnk <= 10 AND (SELECT family FROM winner WHERE regime = '$regime') = 'ivf_flat'
        |UNION ALL
        |SELECT query_id, vec_id, similarity, rnk FROM brute_ranked
        |WHERE rnk <= 10 AND (SELECT family FROM winner WHERE regime = '$regime') = 'brute'
        |ORDER BY query_id, rnk""".stripMargin
+  }
 
   val oracle: Map[String, String] = Map(
     "a21_route" -> (statsCte(RowStore) +

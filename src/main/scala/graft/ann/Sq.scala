@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.rag.Search
-import graft.rag.Search.dotSql
 import graft.sources.{Artifact, Warehouse}
 
 /** Scalar quantization (SQ8) ANN (SURVEY.md §2.D) — the middle point of
@@ -96,10 +95,12 @@ object Sq {
 
   // ---------------------------------------------------------------- oracle
 
+  import Stages.Sql.{corpus, cosine, dot, recallTail, topIds}
+
   /** qmod-parameterized a12 oracle; a12Sql(101) is the registered text
     * byte-for-byte (driver-scale grades unchanged). */
   private def a12Sql(qmod: Int): String =
-    Search.CorpusCte +
+    corpus(label = true) +
       s""", pd AS (
          |  SELECT i AS pos, min(v[i]) AS mn, max(v[i]) AS mx
          |  FROM en, range(1, 65) t(i) GROUP BY 1
@@ -117,19 +118,16 @@ object Sq {
          |    list_transform(range(1, 65), i -> mn[i] + codes[i] * sc[i]) AS r
          |  FROM codes, st
          |), rn AS (
-         |  SELECT vec_id, r, sqrt(${dotSql("r", "r")}) AS rnrm FROM recon
+         |  SELECT vec_id, r, sqrt(${dot("r", "r")}) AS rnrm FROM recon
          |), q AS (
          |  SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM en WHERE vec_id % $qmod = 0
          |), sqscored AS (
          |  SELECT q.query_id, rn.vec_id,
-         |    round(CASE WHEN q.qnrm*rn.rnrm = 0 THEN 0.0
-         |      ELSE ${dotSql("q.qv", "rn.r")}/(q.qnrm*rn.rnrm) END, 6) AS similarity
+         |    ${cosine("q.qv", "q.qnrm", "rn.r", "rn.rnrm")} AS similarity
          |  FROM q JOIN rn ON rn.vec_id <> q.query_id
          |), sq10 AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-         |    FROM sqscored) WHERE rnk <= $TopK
-         |)""".stripMargin + Pq.recallTailSql("sq10", qmod)
+         |  ${topIds("sqscored", TopK)}
+         |)""".stripMargin + recallTail("sq10", qmod)
 
   val oracle: Map[String, String] = Map(
     "a12_sq8_recall" -> a12Sql(101),

@@ -222,33 +222,13 @@ object Dedup {
     * On a real cluster the SAME shape is how a 100 TB dedup verify runs
     * under a fixed scratch-disk quota: partition the candidate keyspace,
     * verify per partition, land each partition's verdict in the lake,
-    * union downstream. Resume-safe: a pass whose `_SUCCESS` marker exists
-    * is not recomputed (the caller owns `staging` and must hand a fresh
-    * dir for a regenerated corpus — same contract as the warehouse
-    * tables' once-per-session materialization). */
+    * union downstream ([[Warehouse.stagedPasses]], resume-safe; the
+    * caller owns `staging`). */
   private[graft] def d2MultipassPairs(spark: SparkSession, dir: String,
-                                      passes: Int, staging: String): DataFrame = {
-    require(passes >= 1, s"d2 multipass needs passes >= 1, got $passes")
-    val conf = spark.sparkContext.hadoopConfiguration
-    (0 until passes).foreach { r =>
-      val out = new org.apache.hadoop.fs.Path(s"$staging/pass_$r")
-      val fs = out.getFileSystem(conf)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(out, "_SUCCESS"))) {
-        val t0 = System.nanoTime()
-        d2VerifiedPairsSlice(spark, dir, Some((passes, r)))
-          .write.mode("overwrite").parquet(out.toString)
-        // nudge the ContextCleaner between passes: the previous pass's
-        // shuffle files are unreachable once its write action returns, and
-        // reclaiming them NOW is the bounded-disk contract this method
-        // exists for (periodicGC alone can lag a whole pass behind)
-        System.gc()
-        System.err.println(f"[graft] d2 pass $r/$passes: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s, free disk " +
-          f"${new java.io.File("/").getUsableSpace / 1e9}%.1f GB")
-      }
+                                      passes: Int, staging: String): DataFrame =
+    Warehouse.stagedPasses(spark, staging, passes, "d2") { r =>
+      d2VerifiedPairsSlice(spark, dir, Some((passes, r)))
     }
-    spark.read.parquet((0 until passes).map(r => s"$staging/pass_$r"): _*)
-  }
 
   /** The FULL cluster assignment from the multipass pair set, an
     * artifact written as a bucketed table — [[clusterTable]]'s
@@ -427,25 +407,10 @@ object Dedup {
     * [[d2MultipassPairs]]. The final cross-pass distinct moves only the
     * VERIFIED pairs (hamming-filtered, ~15x fewer than candidates). */
   private[graft] def d3SimhashFull(spark: SparkSession, dir: String,
-                                   passes: Int, staging: String): DataFrame = {
-    require(passes >= 1, s"d3 multipass needs passes >= 1, got $passes")
-    val conf = spark.sparkContext.hadoopConfiguration
-    (0 until passes).foreach { r =>
-      val out = new org.apache.hadoop.fs.Path(s"$staging/pass_$r")
-      val fs = out.getFileSystem(conf)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(out, "_SUCCESS"))) {
-        val t0 = System.nanoTime()
-        d3VerifiedPairs(spark, dir, chunkCount = 4, col("cv") % passes === r)
-          .write.mode("overwrite").parquet(out.toString)
-        System.gc()
-        System.err.println(f"[graft] d3 pass $r/$passes: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s, free disk " +
-          f"${new java.io.File("/").getUsableSpace / 1e9}%.1f GB")
-      }
-    }
-    spark.read.parquet((0 until passes).map(r => s"$staging/pass_$r"): _*)
-      .distinct().orderBy("doc_a", "doc_b")
-  }
+                                   passes: Int, staging: String): DataFrame =
+    Warehouse.stagedPasses(spark, staging, passes, "d3") { r =>
+      d3VerifiedPairs(spark, dir, chunkCount = 4, col("cv") % passes === r)
+    }.distinct().orderBy("doc_a", "doc_b")
 
   /** C4: word 4-gram Jaccard within (lang, length-bucket) blocks — the
     * metadata-blocked pairwise path (cross-block dups are C2's job).
@@ -492,6 +457,23 @@ object Dedup {
 
   /** The oracle-pinned default tensor: 16 planes (4 bands x 4 bits). */
   private[graft] val Hyperplanes: Seq[Seq[Double]] = hyperplanes(16)
+
+  /** The DuckDB twin of the default 4x4 banding over the corpus CTE `en`:
+    * CTEs `hp` ([[Hyperplanes]]), `bits` (one sign bit per (vec, plane))
+    * and `bands` (vec_id, band, bv) — shared by the d5 and r5b oracles. */
+  private[graft] val BandsSql: String =
+    s"""hp AS (
+       |  SELECT j, list_transform(range(0, 64), d ->
+       |    (CAST('0x' || substr(md5('hp' || CAST(j AS VARCHAR) || 'd' || CAST(d AS VARCHAR)), 1, 15) AS BIGINT) % 2001 - 1000)/1000.0) AS r
+       |  FROM range(0, 16) t(j)
+       |), bits AS (
+       |  SELECT en.vec_id, hp.j,
+       |    CASE WHEN ${Stages.Sql.dot("en.v", "hp.r")} > 0 THEN 1 ELSE 0 END AS bit
+       |  FROM en, hp
+       |), bands AS (
+       |  SELECT vec_id, j // 4 AS band, CAST(sum(bit << (j % 4)) AS BIGINT) AS bv
+       |  FROM bits GROUP BY 1, 2
+       |)""".stripMargin
 
   /** C5: embedding near-dup via random-hyperplane LSH: `bands` bands of
     * `bitsPerBand` sign bits each; candidates collide on a full band;
@@ -1558,26 +1540,17 @@ object Dedup {
         |WHERE ((2000000*(len(list_intersect(a.hh, b.hh))) + (len(list_distinct(a.hh || b.hh)))) // (2*(len(list_distinct(a.hh || b.hh))))) >= 300000
         |ORDER BY doc_a, doc_b""".stripMargin,
 
-    "d5_embedding_neardup" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |en AS (SELECT vec_id, v,
-        |  sqrt(list_reduce(list_transform(range(1, len(v)+1), i -> v[i]*v[i]), (acc,x) -> acc+x)) AS nrm FROM e0),
-        |hp AS (SELECT j, list_transform(range(0, 64), d ->
-        |    (CAST('0x' || substr(md5('hp' || CAST(j AS VARCHAR) || 'd' || CAST(d AS VARCHAR)), 1, 15) AS BIGINT) % 2001 - 1000)/1000.0) AS r
-        |  FROM range(0, 16) t(j)),
-        |bits AS (SELECT en.vec_id, hp.j,
-        |    CASE WHEN list_reduce(list_transform(range(1, len(en.v)+1), i -> en.v[i]*hp.r[i]), (acc,x) -> acc+x) > 0 THEN 1 ELSE 0 END AS bit
-        |  FROM en, hp),
-        |bands AS (SELECT vec_id, j // 4 AS band, CAST(sum(bit << (j % 4)) AS BIGINT) AS bv FROM bits GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.vec_id < b.vec_id)
-        |SELECT vec_a, vec_b,
-        |  round(CASE WHEN a.nrm*b.nrm = 0 THEN 0.0 ELSE
-        |    list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]), (acc,x) -> acc+x)/(a.nrm*b.nrm) END, 6) AS similarity
-        |FROM cand JOIN en a ON a.vec_id = cand.vec_a JOIN en b ON b.vec_id = cand.vec_b
-        |WHERE round(CASE WHEN a.nrm*b.nrm = 0 THEN 0.0 ELSE
-        |    list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]), (acc,x) -> acc+x)/(a.nrm*b.nrm) END, 6) >= 0.4
-        |ORDER BY vec_a, vec_b""".stripMargin,
+    "d5_embedding_neardup" -> {
+      val sim = Stages.Sql.cosine("a.v", "a.nrm", "b.v", "b.nrm")
+      s"""${Stages.Sql.corpus(label = false)}, $BandsSql,
+         |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.vec_id < b.vec_id)
+         |SELECT vec_a, vec_b,
+         |  $sim AS similarity
+         |FROM cand JOIN en a ON a.vec_id = cand.vec_a JOIN en b ON b.vec_id = cand.vec_b
+         |WHERE $sim >= 0.4
+         |ORDER BY vec_a, vec_b""".stripMargin
+    },
 
     "d9_incremental_dedup" -> (MinhashCandCte +
         """, mixed AS (
@@ -1937,15 +1910,7 @@ object Dedup {
         |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
         |FROM (SELECT doc_id, lbl AS cluster_id FROM t_lbl)
         |ORDER BY doc_id""".stripMargin
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import graft.Harness.{jsonString => q}
     val chainJson = chain.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
     val extrasJson = extras.map { e =>

@@ -54,9 +54,6 @@ object DetHash {
   def h60Sql(e: String): String =
     s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
-  def h60SeededSql(seedE: String, e: String): String =
-    h60Sql(s"CAST($seedE AS VARCHAR) || ':' || CAST($e AS VARCHAR)")
-
   def h56Sql(e: String): String =
     s"CAST('0x' || substr(md5($e), 1, 14) AS BIGINT)"
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ann.Stages
 import graft.functions.{DetHash, Exact}
 import graft.sources.{Artifact, Warehouse}
 
@@ -286,12 +287,11 @@ object Lexical {
          |SELECT query_id, doc_id, score_e6, rnk FROM prf ORDER BY query_id, rnk""".stripMargin,
 
     "r15_hybrid_rrf" ->
-      (Search.CorpusCte + s""", ${bm25Cte(RrfDepth)}, q AS (
+      (Stages.Sql.corpus(label = true) + s""", ${bm25Cte(RrfDepth)}, q AS (
          |  SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM en WHERE vec_id % $QueryMod = 0
          |), vscored AS (
          |  SELECT q.query_id, en.vec_id AS doc_id,
-         |    round(CASE WHEN q.qnrm*en.nrm = 0 THEN 0.0
-         |      ELSE (${Search.dotSql("q.qv", "en.v")})/(q.qnrm*en.nrm) END, 6) AS similarity
+         |    ${Stages.Sql.cosine("q.qv", "q.qnrm", "en.v", "en.nrm")} AS similarity
          |  FROM q JOIN en ON en.vec_id <> q.query_id
          |), vranked AS (
          |  SELECT query_id, doc_id,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ann.Stages
+import graft.sources.Warehouse
 
 /** RAG document-store operators (SURVEY.md §2.B1/B2/B6/B7).
   *
@@ -93,25 +95,10 @@ object RagOps {
     * Spec-pinned byte-equal to [[r6ContextAssembly]]; same staging
     * contract as the d2 multipass. */
   def r6ContextAssemblyFull(spark: SparkSession, dir: String,
-                            passes: Int, staging: String): DataFrame = {
-    require(passes >= 1, s"r6 multipass needs passes >= 1, got $passes")
-    val conf = spark.sparkContext.hadoopConfiguration
-    (0 until passes).foreach { r =>
-      val out = new org.apache.hadoop.fs.Path(s"$staging/pass_$r")
-      val fs = out.getFileSystem(conf)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(out, "_SUCCESS"))) {
-        val t0 = System.nanoTime()
-        r6Assemble(spark, dir, col("vec_id") % (100 * passes) === 100L * r)
-          .write.mode("overwrite").parquet(out.toString)
-        System.gc()
-        System.err.println(f"[graft] r6 pass $r/$passes: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s, free disk " +
-          f"${new java.io.File("/").getUsableSpace / 1e9}%.1f GB")
-      }
-    }
-    spark.read.parquet((0 until passes).map(r => s"$staging/pass_$r"): _*)
-      .orderBy("query_id")
-  }
+                            passes: Int, staging: String): DataFrame =
+    Warehouse.stagedPasses(spark, staging, passes, "r6") { r =>
+      r6Assemble(spark, dir, col("vec_id") % (100 * passes) === 100L * r)
+    }.orderBy("query_id")
 
   private def r6Assemble(spark: SparkSession, dir: String,
                          queryPred: Column): DataFrame = {
@@ -300,18 +287,14 @@ object RagOps {
     * (graft.DedupFull's r6 extra) uses one residue class per pass. One
     * builder, so the assembly formula cannot drift between forms. */
   private[graft] def r6OracleSqlWhere(queryWhere: String): String = {
-      val hitsSql = Search.CorpusCte +
+      val hitsSql = Stages.Sql.corpus(label = true) +
         s""", q AS (
           |  SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM en WHERE $queryWhere
           |), scored0 AS (
           |  SELECT q.query_id, en.vec_id,
-          |    round(greatest(CASE WHEN q.qnrm*en.nrm = 0 THEN 0.0
-          |      ELSE (list_reduce(list_transform(range(1, len(q.qv)+1), i -> q.qv[i]*en.v[i]), (acc,x) -> acc+x))/(q.qnrm*en.nrm) END, 0.0), 6) AS similarity
+          |    ${Stages.Sql.cosine("q.qv", "q.qnrm", "en.v", "en.nrm", clampZero = true)} AS similarity
           |  FROM q JOIN en ON en.vec_id <> q.query_id
-          |), ranked AS (
-          |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-          |  FROM scored0
-          |), hits AS (
+          |), ${Stages.Sql.ranked("ranked", "scored0")}, hits AS (
           |  SELECT query_id, vec_id, rnk FROM ranked WHERE rnk <= 5 AND similarity >= 0.2
           |)""".stripMargin
       hitsSql +

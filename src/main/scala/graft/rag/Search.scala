@@ -261,39 +261,20 @@ object Search {
 
   // ---------------------------------------------------------------- oracle
 
-  /** In-order left-fold dot product in DuckDB — matches Spark's sequential
-    * `aggregate(zip_with(...))` (SURVEY.md §5.3). */
-  def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, len($a)+1), i -> $a[i]*$b[i]), (acc,x) -> acc+x)"
-
-  /** Shared corpus CTE: double-cast vectors + per-row norms. */
-  val CorpusCte: String =
-    s"""WITH e0 AS (
-       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), en AS (
-       |  SELECT vec_id, label, v, sqrt(${dotSql("v", "v")}) AS nrm FROM e0
-       |)""".stripMargin
-
-  private def cosSql(d: String, qn: String, n: String, clamp: Boolean): String = {
-    val c = s"CASE WHEN $qn*$n = 0 THEN 0.0 ELSE ($d)/($qn*$n) END"
-    if (clamp) s"round(greatest($c, 0.0), 6)" else s"round($c, 6)"
-  }
+  import Stages.Sql.{cosine, ranked, corpus => corpusSql}
 
   private def knnSql(queryPred: String, k: Int, threshold: Double,
                      clamp: Boolean, sameLabel: Boolean): String = {
     val joinCond = if (sameLabel) "en.vec_id <> q.query_id AND en.label = q.qlabel"
     else "en.vec_id <> q.query_id"
-    s"""$CorpusCte, q AS (
+    s"""${corpusSql(label = true)}, q AS (
        |  SELECT vec_id AS query_id, label AS qlabel, v AS qv, nrm AS qnrm
        |  FROM en WHERE $queryPred
        |), scored AS (
        |  SELECT q.query_id, en.vec_id,
-       |    ${cosSql(dotSql("q.qv", "en.v"), "q.qnrm", "en.nrm", clamp)} AS similarity
+       |    ${cosine("q.qv", "q.qnrm", "en.v", "en.nrm", clamp)} AS similarity
        |  FROM q JOIN en ON $joinCond
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY similarity DESC, vec_id) AS rnk
-       |  FROM scored
-       |)
+       |), ${ranked("ranked", "scored")}
        |SELECT query_id, vec_id, similarity, rnk FROM ranked
        |WHERE rnk <= $k AND similarity >= $threshold
        |ORDER BY query_id, rnk""".stripMargin
@@ -303,23 +284,20 @@ object Search {
     "r3_search_topk" -> knnSql("vec_id % 100 = 0", 10, 0.2, clamp = true, sameLabel = false),
     "r4_search_filtered" -> knnSql("vec_id % 100 = 0", 10, 0.1, clamp = true, sameLabel = true),
     "r5_find_similar" ->
-      s"""$CorpusCte, q AS (
+      s"""${corpusSql(label = true)}, q AS (
          |  SELECT d.doc_id AS query_doc_id, en.v AS qv, en.nrm AS qnrm
          |  FROM documents d JOIN en ON en.vec_id = d.doc_id
          |  WHERE d.source = 'src0'
          |), scored AS (
          |  SELECT q.query_doc_id, en.vec_id AS doc_id,
-         |    ${cosSql(dotSql("q.qv", "en.v"), "q.qnrm", "en.nrm", clamp = true)} AS similarity
+         |    ${cosine("q.qv", "q.qnrm", "en.v", "en.nrm", clampZero = true)} AS similarity
          |  FROM q JOIN en ON en.vec_id <> q.query_doc_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_doc_id ORDER BY similarity DESC, doc_id) AS rnk
-         |  FROM scored
-         |)
+         |), ${ranked("ranked", "scored", "query_doc_id", "doc_id")}
          |SELECT query_doc_id, doc_id, similarity, rnk FROM ranked
          |WHERE rnk <= 5 AND similarity >= 0.3
          |ORDER BY query_doc_id, rnk""".stripMargin,
-    // Same hyperplane/band construction as d5's oracle (hash-proven there);
-    // scoring/ranking is r5's, restricted to the banded candidate set.
+    // d5's hyperplane/band CTEs; scoring/ranking is r5's, restricted to
+    // the banded candidate set.
     "r5b_find_similar_blocked" -> r5bSql(""),
     "r5bs_find_similar_blocked" -> r5bSql(" AND doc_id % 13 = 0"),
   ) ++ oracleTail
@@ -328,18 +306,7 @@ object Search {
     * "" = the registered full query set; the sampled variant restricts
     * the LEFT side only, exactly as the Spark path's `sampleMod`). */
   private def r5bSql(samplePred: String): String =
-      s"""$CorpusCte, hp AS (
-         |  SELECT j, list_transform(range(0, 64), d ->
-         |    (CAST('0x' || substr(md5('hp' || CAST(j AS VARCHAR) || 'd' || CAST(d AS VARCHAR)), 1, 15) AS BIGINT) % 2001 - 1000)/1000.0) AS r
-         |  FROM range(0, 16) t(j)
-         |), bits AS (
-         |  SELECT en.vec_id, hp.j,
-         |    CASE WHEN ${dotSql("en.v", "hp.r")} > 0 THEN 1 ELSE 0 END AS bit
-         |  FROM en, hp
-         |), bands AS (
-         |  SELECT vec_id, j // 4 AS band, CAST(sum(bit << (j % 4)) AS BIGINT) AS bv
-         |  FROM bits GROUP BY 1, 2
-         |), qd AS (
+      s"""${corpusSql(label = true)}, ${graft.dedup.Dedup.BandsSql}, qd AS (
          |  SELECT doc_id FROM documents WHERE source = 'src0'$samplePred
          |), cand AS (
          |  SELECT DISTINCT qb.vec_id AS query_doc_id, b.vec_id
@@ -347,21 +314,18 @@ object Search {
          |  JOIN bands b ON qb.band = b.band AND qb.bv = b.bv AND b.vec_id <> qb.vec_id
          |), scored AS (
          |  SELECT c.query_doc_id, c.vec_id AS doc_id,
-         |    ${cosSql(dotSql("qe.v", "en.v"), "qe.nrm", "en.nrm", clamp = true)} AS similarity
+         |    ${cosine("qe.v", "qe.nrm", "en.v", "en.nrm", clampZero = true)} AS similarity
          |  FROM cand c JOIN en qe ON qe.vec_id = c.query_doc_id JOIN en ON en.vec_id = c.vec_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_doc_id ORDER BY similarity DESC, doc_id) AS rnk
-         |  FROM scored
-         |)
+         |), ${ranked("ranked", "scored", "query_doc_id", "doc_id")}
          |SELECT query_doc_id, doc_id, similarity, rnk FROM ranked
          |WHERE rnk <= 5 AND similarity >= 0.3
          |ORDER BY query_doc_id, rnk""".stripMargin
 
   private def oracleTail: Map[String, String] = Map(
     "r8_pairwise_similarity" ->
-      s"""$CorpusCte
+      s"""${corpusSql(label = true)}
          |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         |  ${cosSql(dotSql("a.v", "b.v"), "a.nrm", "b.nrm", clamp = false)} AS similarity
+         |  ${cosine("a.v", "a.nrm", "b.v", "b.nrm")} AS similarity
          |FROM en a JOIN en b ON a.vec_id < b.vec_id
          |WHERE a.vec_id < 20 AND b.vec_id < 20
          |ORDER BY vec_a, vec_b""".stripMargin,

@@ -78,7 +78,15 @@ object Warehouse {
     // pins it) while splitting a list past the advisory partition size
     // across writer tasks: a skewed list costs a few extra files, never
     // a single-task write.
-    clusterByPartition(df, partCol)
+    //
+    // Rows are sorted within each file on (partition key, vec_id) when the
+    // frame carries vec_id (every index list table does): the shuffle
+    // delivers a list's rows in map-task order, so without the sort the
+    // same index rebuilt twice could encode its files differently and
+    // byte counts of the code tables drifted by a few bytes per rebuild.
+    val order = (partCol +: df.columns.toSeq.filter(_ == "vec_id"))
+      .map(org.apache.spark.sql.functions.col)
+    clusterByPartition(df, partCol).sortWithinPartitions(order: _*)
       .write.mode(SaveMode.Overwrite)
       .format("parquet")
       .partitionBy(partCol)
@@ -254,6 +262,37 @@ object Warehouse {
     spark.catalog.createTable(table, loc.toString, "parquet"): Unit
   }
 
+  /** `slice(r)` for r < `passes`, each written to `staging`/pass_r, then
+    * read back as one frame: the bounded-disk shape of a corpus-sized job
+    * (partition the keyspace into residue classes, land each class in the
+    * lake, union downstream), so peak spill is one pass's, never the
+    * corpus's. Resume-safe: a pass whose `_SUCCESS` marker exists is not
+    * recomputed, so the caller must hand a fresh `staging` for a
+    * regenerated corpus. `label` names the job in the error and progress
+    * lines. */
+  def stagedPasses(spark: SparkSession, staging: String, passes: Int, label: String)(
+      slice: Int => DataFrame): DataFrame = {
+    require(passes >= 1, s"$label multipass needs passes >= 1, got $passes")
+    val conf = spark.sparkContext.hadoopConfiguration
+    (0 until passes).foreach { r =>
+      val out = new org.apache.hadoop.fs.Path(s"$staging/pass_$r")
+      val fs = out.getFileSystem(conf)
+      if (!fs.exists(new org.apache.hadoop.fs.Path(out, "_SUCCESS"))) {
+        val t0 = System.nanoTime()
+        slice(r).write.mode("overwrite").parquet(out.toString)
+        // nudge the ContextCleaner between passes: the previous pass's
+        // shuffle files are unreachable once its write action returns, and
+        // reclaiming them NOW is the bounded-disk contract (periodicGC
+        // alone can lag a whole pass behind)
+        System.gc()
+        System.err.println(f"[graft] $label pass $r/$passes: " +
+          f"${(System.nanoTime() - t0) / 1e9}%.1f s, free disk " +
+          f"${new java.io.File("/").getUsableSpace / 1e9}%.1f GB")
+      }
+    }
+    spark.read.parquet((0 until passes).map(r => s"$staging/pass_$r"): _*)
+  }
+
   /** Write partitioned by a low-cardinality column (e.g. IVF list_id). */
   def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
@@ -316,10 +355,6 @@ object Warehouse {
       shiftleft(shiftrightunsigned(c, i).bitwiseAND(lit(1L)), i * n + j)
     ).reduce(_ bitwiseOR _)
   }
-
-  def zorderKey(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-                bits: Int = 16): org.apache.spark.sql.Column =
-    zorderKeyN(Seq(a, b), bits)
 
   /** Write `df` clustered by the Z-order of `colsN`: normalize each
     * dimension to its own [min, max] range (the raw interleave degenerates

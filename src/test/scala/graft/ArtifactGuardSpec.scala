@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * table and driver-side memo goes through `graft.sources.Artifact`, the
   * one place that keys, builds and retires them; every vector search
   * ranks, scores cosines and pivots PQ codebooks through
-  * `graft.ann.Stages`; and every entry point gets its session from
-  * `graft.Harness`. This scan fails, listing the offending lines, when
-  * a rule's token appears in its scope outside the rule's allowed file —
-  * the copies that left artifact families keyed by path only and let the
-  * ANN files drift apart. `Warehouse.readTableOrFiles` may ask the
+  * `graft.ann.Stages`; every DuckDB oracle that grades them takes its
+  * cosine guard, dot fold, centroid-assignment and top-k windows from the
+  * stages' SQL twins (`Stages.Sql`); and every entry point gets its
+  * session from `graft.Harness`. This scan fails, listing the offending
+  * lines, when a rule's token appears in its scope outside the rule's
+  * allowed file — the copies that left artifact families keyed by path
+  * only and let the ANN files and their oracles drift apart. `Warehouse.readTableOrFiles` may ask the
   * catalog: it reads stream state, not a derived artifact. */
 class ArtifactGuardSpec extends AnyFunSuite {
 
@@ -19,6 +21,7 @@ class ArtifactGuardSpec extends AnyFunSuite {
   private val Harness = "graft/Harness.scala"
   private val Everywhere = Seq("graft/")
   private val Search = Seq("graft/ann/", "graft/rag/Search.scala")
+  private val Oracles = Seq("graft/ann/", "graft/rag/")
 
   /** (token, what it is, the one file allowed to hold it, scope). */
   private val Forbidden = Seq(
@@ -32,6 +35,10 @@ class ArtifactGuardSpec extends AnyFunSuite {
     ("=== 0.0, 0.0)", "a zero-norm cosine guard", Stages, Everywhere),
     ("""max(when(col("m") === m && col("k") === k""", "a PQ codebook pivot",
       Stages, Search),
+    ("= 0 THEN 0.0", "a DuckDB zero-norm cosine guard", Stages, Everywhere),
+    ("list_reduce(list_transform(range(1, len(", "a DuckDB dot fold", Stages, Everywhere),
+    ("ORDER BY cs DESC, cent_id)", "an oracle centroid-assignment window", Stages, Oracles),
+    ("ORDER BY similarity DESC, vec_id)", "an oracle top-k window", Stages, Oracles),
     ("SparkSession.builder()", "a session builder", Harness, Everywhere))
 
   private def sources: Seq[java.io.File] = {

@@ -60,15 +60,28 @@ class SourcesSpec extends SparkSpec {
     val asg = graft.rag.Search.corpus(spark, Sf)
       .withColumn("list_id", (col("vec_id") % 4).cast("int"))
       .select("vec_id", "list_id")
+    def dataFiles(table: String): Map[String, Seq[java.io.File]] = {
+      val loc = new java.io.File(Warehouse.tableLocation(spark, table).toUri.getPath)
+      loc.listFiles().filter(_.getName.startsWith("list_id="))
+        .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq)
+        .toMap
+    }
     Warehouse.writePartitionedTable(asg, "graft_spec_filecount", "list_id")
-    val loc = new java.io.File(
-      Warehouse.tableLocation(spark, "graft_spec_filecount").toUri.getPath)
-    val perDir = loc.listFiles().filter(_.getName.startsWith("list_id="))
-      .map(d => d.getName -> d.listFiles()
-        .count(f => f.getName.endsWith(".parquet")))
-    assert(perDir.length === 4, s"expected 4 list dirs: ${perDir.mkString(",")}")
-    perDir.foreach { case (d, n) =>
-      assert(n === 1, s"$d must hold exactly one data file, found $n")
+    val perDir = dataFiles("graft_spec_filecount")
+    assert(perDir.size === 4, s"expected 4 list dirs: ${perDir.keys.mkString(",")}")
+    perDir.foreach { case (d, fs) =>
+      assert(fs.size === 1, s"$d must hold exactly one data file, found ${fs.size}")
+    }
+    // the same rows in another input order write byte-identical files
+    // (checkpointed, so the optimizer cannot drop the sort before the
+    // write's own shuffle)
+    Warehouse.writePartitionedTable(asg.orderBy(col("vec_id").desc).localCheckpoint(),
+      "graft_spec_filecount_rev", "list_id")
+    def md5s(fs: Seq[java.io.File]): Seq[String] = fs.map(f =>
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString)
+    dataFiles("graft_spec_filecount_rev").foreach { case (d, fs) =>
+      assert(md5s(fs) == md5s(perDir(d)), s"$d differs when the input order changes")
     }
   }
 
