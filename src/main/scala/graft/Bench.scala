@@ -1,7 +1,18 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId, Expression, IsNotNull, Literal, NamedLambdaVariable}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{BaseSubqueryExec, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.types.UTF8String
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -132,27 +143,13 @@ object Bench {
       val dt =
         if (good.isEmpty) times.head // all failed: keep the negative marker
         else good(good.size / 2)     // upper median of the successful runs
-      // Plan fingerprint: md5 of the scrubbed RAW initial physical plan
-      // (pre-AQE, so runtime re-planning — a broadcast conversion, a skew
-      // split — does not perturb it). A timing regression with an
-      // UNCHANGED fingerprint is environment noise; a changed fingerprint
-      // is a plan change to diff. Free: the plan is derived, never
-      // executed. RAW, not `.canonicalized` (r8 change): canonicalization
-      // REORDERS commutative operands by expression hashCode, and that
-      // order proved ENVIRONMENT-sensitive — the r7 driver's runs flipped
-      // `qnrm * sqrt(...)` to `sqrt(...) * qnrm` (and the OR-of-AND
-      // nests of q19) on 11 queries vs identical-code builder runs,
-      // polluting plan_changes with phantom replans. The raw plan prints
-      // operands in SOURCE order — deterministic from code by
-      // construction. What canonicalization bought is re-created by the
-      // scrub: exprIds (#\d+ → #n), lambda class names, object identity
-      // hashes, RDD/plan ids, and the genuinely set-ordered lists
-      // (verified: unscrubbed, 20 of 113 fingerprints differ between two
-      // runs of IDENTICAL code — exactly the typed/closure plans).
+      // Plan fingerprint: md5 of [[renderPlan]]. A timing regression with
+      // an UNCHANGED fingerprint is environment noise; a changed
+      // fingerprint is a plan change to diff. Free: the plan is derived,
+      // never executed.
       val (fp, planTxt) = try {
-        val plan = Bench.scrubPlan(
-          fn(spark, sfDir).queryExecution.executedPlan.toString)
-        // SPARK_GRAFT_DUMP_PLANS=<dir>: keep the scrubbed text per query —
+        val plan = Bench.renderPlan(fn(spark, sfDir).queryExecution.executedPlan)
+        // SPARK_GRAFT_DUMP_PLANS=<dir>: keep the rendering per query —
         // diffing two runs' dumps (a BENCH_ONLY subset for a few queries)
         // pinpoints any token that keeps a fingerprint from settling
         sys.env.get("SPARK_GRAFT_DUMP_PLANS").foreach { d =>
@@ -222,7 +219,7 @@ object Bench {
     }
     val sfName = sfDir.split('/').last
     // Fingerprints are only comparable at EQUAL deployment dials: the
-    // shuffle-partition count prints inside every numbered Exchange, so a
+    // shuffle-partition count is part of every hash/range exchange, so a
     // 4-cpu run diffed against a 32-cpu baseline reports every
     // exchange-bearing plan as "changed" (r15: exactly that produced 133
     // phantom violations — the driver benches at SPARK_GRAFT_CPUS=32, a
@@ -235,39 +232,37 @@ object Bench {
     // against every pre-r15 file (review r15 #1). A missing FILE also
     // yields None here, which readPrevPlans already treats as empty.
     val prevPlans =
-      if (readPrevSf(outPath).exists(_ != sfName) ||
+      if (readPrevField(outPath, "sf").exists(_ != sfName) ||
           !dialEq(readPrevField(outPath, "cpus"), cpus) ||
           !dialEq(readPrevField(outPath, "shuffle_partitions"), shufflePartitions))
         Map.empty[String, String]
       else readPrevPlans(outPath)
-    val changed = results.collect { case r
-      if prevPlans.get(r.name).exists(old => old != r.fp && r.fp != "err" && old != "err") =>
-        "\"" + r.name + "\":\"" + prevPlans(r.name) + "\""
-    }
-    if (changed.nonEmpty)
-      System.err.println(s"[bench] ${changed.size} plan fingerprint(s) changed since last run")
+    // the queries whose fingerprint differs from the baseline's
+    val moved = results.filter(r =>
+      prevPlans.get(r.name).exists(old => old != r.fp && r.fp != "err" && old != "err"))
+    if (moved.nonEmpty)
+      System.err.println(s"[bench] ${moved.size} plan fingerprint(s) changed since last run")
     // EVIDENCE ON DRIFT (verdict r16 #1): any fingerprint that differs
-    // from the baseline auto-persists its scrubbed plan text (see
+    // from the baseline auto-persists its plan rendering (see
     // [[dumpDrifted]]) — unconditional, no env var — so a flutter seen
     // only in the DRIVER's end-of-round session leaves a diffable artifact
     // in the tree. Diff against the committed plans_baseline/<name>.txt
     // (written by the re-baseline run via SPARK_GRAFT_DUMP_PLANS) to read
-    // the exact drifting token. Best-effort: an unwritable dir must not
+    // the exact drifting node. Best-effort: an unwritable dir must not
     // fail the bench.
     if (prevPlans.nonEmpty) try {
-      val drifted = results.collect { case r
-        if prevPlans.get(r.name).exists(old => old != r.fp && r.fp != "err" && old != "err") &&
-          r.plan.nonEmpty => r.name -> r.plan }
+      val drifted = moved.collect { case r if r.plan.nonEmpty => r.name -> r.plan }
       val dir = dumpDrifted(outPath, results.map(_.name), drifted)
       if (drifted.nonEmpty)
         System.err.println(
-          s"[bench] scrubbed plan text for ${drifted.size} drifted " +
+          s"[bench] plan rendering for ${drifted.size} drifted " +
             s"fingerprint(s) written to $dir — diff vs plans_baseline/")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] fpdiff dump failed: ${e.getMessage}")
     }
-    val changedField =
-      if (changed.isEmpty) "" else changed.mkString(",\"plan_changes\":{", ",", "}")
+    val changedField = if (moved.isEmpty) "" else moved
+      .map(r => "\"" + r.name + "\":\"" + prevPlans(r.name) + "\"")
+      .mkString(",\"plan_changes\":{", ",", "}")
     // GATE (r7 verdict #5): a changed fingerprint is only acceptable when
     // DECLARED — the committer lists the queries whose plans they expect to
     // change in SPARK_GRAFT_FP_ALLOW ("q8_rollup,m*" — names or prefix
@@ -281,11 +276,9 @@ object Bench {
     // FP_ALLOW file (first non-comment line) — the driver doesn't set env
     // vars, so a round that intentionally re-plans a family declares it in
     // the repo where the round log (and the next committer) can read it.
-    val changedNames = results.collect { case r
-      if prevPlans.get(r.name).exists(old => old != r.fp && r.fp != "err" && old != "err") => r.name }
     val allowSpec = sys.env.get("SPARK_GRAFT_FP_ALLOW")
       .orElse(readAllowFile("FP_ALLOW")).getOrElse("")
-    val violations = fpViolations(changedNames, allowSpec)
+    val violations = fpViolations(moved.map(_.name), allowSpec)
     if (violations.nonEmpty)
       System.err.println(s"[bench] FP GATE: ${violations.size} UNDECLARED plan change(s): " +
         violations.mkString(", ") + " — declare via SPARK_GRAFT_FP_ALLOW or investigate")
@@ -438,7 +431,7 @@ object Bench {
     s""","sf1":{"nq":${common.size},"sf1_total_sec":${r2(t1)},"sf01_total_sec":${r2(t01)},"scale_x_total":${r2(t1 / math.max(t01, 0.001))},"cold_total_sec":${r2(root.path("cold_total").asDouble(-1))},"scale_x":${famScale.mkString("{", ",", "}")}}"""
   } catch { case _: Throwable => "" }
 
-  /** Writes each `drifted` (query, scrubbed plan) to `fpdiff/<query>.txt`
+  /** Writes each `drifted` (query, plan rendering) to `fpdiff/<query>.txt`
     * beside the bench output `outPath`, after deleting the dumps of every
     * `measured` query — so the directory reflects the latest baseline
     * compare of each query this run measured, a subset run leaves the
@@ -495,21 +488,10 @@ object Bench {
     }
   } catch { case _: Throwable => Map.empty }
 
-  /** The `"sf"` field of a previous bench's JSON (same textual-slice
-    * stance as [[readPrevPlans]]); None when absent/unreadable. Guards the
-    * fingerprint compare: a baseline measured at a different scale is NO
-    * baseline — sf1 plans legitimately differ from sf0.1 plans (stats-
-    * driven join strategy), and diffing across scales would bury real
-    * violations under phantom ones. */
-  private[graft] def readPrevSf(path: String): Option[String] =
-    // delegate to the LAST-match reader (ADVICE r16): "sf" sits in the
-    // JSON tail with the other dials, so the same anchoring that keeps a
-    // free-text field from shadowing "cpus" protects "sf" too
-    readPrevField(path, "sf")
-
   /** A string-valued top-level field from the previous bench JSON (the
-    * cpus / shuffle_partitions dial guard) — None when the file or the
-    * field is absent, so baselines predating the field diff nothing. */
+    * sf / cpus / shuffle_partitions guard: a baseline at another scale or
+    * dial is no baseline) — None when the file or the field is absent, so
+    * baselines predating the field diff nothing. */
   private[graft] def readPrevField(path: String, field: String): Option[String] = try {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) None
@@ -530,214 +512,129 @@ object Bench {
       case _ => p == cur
     })
 
-  /** Normalize JVM-run-specific tokens out of a canonicalized plan string
-    * so its hash is stable across processes: canonicalization handles
-    * exprIds but closure-bearing operators still print lambda class
-    * names, object identity hashes, and RDD/plan ids that differ every
-    * run. */
-  private[graft] def scrubPlan(s: String): String = {
-    val tok = s
-      .replaceAll("\\$?Lambda/0x[0-9a-fA-F]+", "<lambda>")
-      .replaceAll("\\$?Lambda\\$\\d+/0x[0-9a-fA-F]+", "<lambda>")
-      .replaceAll("@[0-9a-fA-F]{4,}", "@obj")
-      .replaceAll("0x[0-9a-fA-F]{4,}", "0xN")
-      .replaceAll("#\\d+", "#n")
-      // Higher-order-function lambda variables print as `lambda x_197#805`
-      // — the NAME suffix is a session-global counter (one per lambda
-      // analysis), so it depends on how many HOF plans the session built
-      // before this one (bench n, warm-up retries, query order). The
-      // exprId scrub above catches the `#805`, not the `_197`: scrub the
-      // name counter too, or every filter/transform/zip_with query
-      // fingerprints differently across sessions with identical code
-      // (observed: 17 queries flagged vs a baseline built by a same-code
-      // session that had run a different number of analyses).
-      .replaceAll("\\blambda ([A-Za-z_][A-Za-z0-9_]*?)_\\d+#n", "lambda $1_n#n")
-      // Every artifact name ends in an 8-hex DATA-SIGNATURE suffix
-      // (graft.sources.Artifact.signature: md5 of the source part files'
-      // names+sizes+MTIMES): a cache key, not plan semantics. Test data
-      // regenerated between runs gets new mtimes, so without this scrub
-      // every artifact-reading fingerprint would drift against a baseline
-      // refreshed on identical code (caught r13). The name is
-      // graft_<kind><params>_<16-hex path hash>_<sig>; kind+params are
-      // [a-z0-9]+ and the underscore-delimited path hash stops the class
-      // from over-consuming.
-      .replaceAll("\\b(graft_[a-z0-9]+_[0-9a-f]{16})_[0-9a-f]{8}\\b", "$1_sig")
-      .replaceAll("\\[id=#?\\d+\\]", "[id=n]")
-      .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=n]")
-      .replaceAll("RDD\\[\\d+\\]", "RDD[n]")
-      // Scan-metadata lists (DataFilters etc.) truncate at a fixed CHAR
-      // width (spark.sql.maxMetadataStringLength) — but the cut lands on
-      // the RAW text, whose exprId digit counts vary per session, so the
-      // scrubbed tail ends mid-token at shifting points. Drop the final
-      // partial element of any "..."-truncated list: the fingerprint
-      // loses one element's fidelity, the flutter goes away. The match is
-      // anchored to where width truncation actually cuts: StringUtils
-      // .abbreviate appends `...` and the ONE-LINE FileScan metadata
-      // string continues with `, NextKey: ` (or the line/text ends, or a
-      // `]` closes an untruncated-bracket case) — so the lookahead admits
-      // `]`, end-of-line/text, and `, Capitalized: `. A literal `...`
-      // inside e.g. a Contains() string predicate is followed by `)` and
-      // can no longer eat its preceding comma-element. May not cross
-      // lines.
-      .replaceAll(
-        ",[^,\\[\\]\\r\\n]*\\.\\.\\.(?=\\]|\\r?\\n|$|, [A-Z][A-Za-z]*: )",
-        ", ...")
-    // MergeScalarSubqueries numbers its fused groups (gid tags + the
-    // Expand node's literal group ids) in optimizer-visit order, which
-    // varies run to run — normalize the NUMBERS (they are internal tags,
-    // not semantics) so the sorts below can line the elements up. Bare
-    // digits are normalized ONLY inside Expand row-lists; `gid#n = K`
-    // comparisons are targeted directly.
-    val gidNorm = normalizeExpandTags(
-      tok.replaceAll("gid#n = \\d+", "gid#n = g"))
-    // Some delimited lists print in internal SET/MAP iteration order that
-    // genuinely varies run to run on identical code (measured: DPP scans
-    // swap [isnotnull, dynamicpruningexpression] in PartitionFilters;
-    // MergeScalarSubqueries swaps the FILTER-tagged functions of the
-    // fused aggregate AND its Expand projection rows; canonicalization's
-    // multicommutativeop prints its AND/OR children in set order). Sort
-    // those lists' top-level elements — iterated to fixpoint so nested
-    // occurrences settle — output=[..] is NOT sorted (column order is
-    // semantic).
-    // The three scan-metadata *Filters lists additionally DROP their
-    // isnotnull elements: constraint-inferred isnotnulls come and go with
-    // session-state-dependent optimizer bookkeeping (the d9 flutter,
-    // verdict r15 #1) — they are never the semantic filter, whose real
-    // predicates sit beside them and in the Filter nodes above.
-    val keys = Seq(("functions=", '[', ']', false),
-      ("PartitionFilters: ", '[', ']', true),
-      ("DataFilters: ", '[', ']', true), ("PushedFilters: ", '[', ']', true),
-      ("multicommutativeop", '(', ')', false), ("Expand ", '[', ']', false))
-    var prev = ""
-    var cur = gidNorm
-    var rounds = 0
-    while (cur != prev && rounds < 5) {
-      prev = cur
-      cur = keys.foldLeft(cur) { case (acc, (k, o, c, drop)) =>
-        sortDelimited(acc, k, o, c, drop) }
-      rounds += 1
-    }
-    cur
+  /** The plan-fingerprint rendering of `plan`: one line per node of the
+    * pre-AQE physical plan (an adaptive plan's `initialPlan`, so runtime
+    * re-planning does not show), indented by depth. Each line holds the
+    * node class and its constructor arguments; subqueries, DPP broadcasts
+    * and reused exchanges referenced from an argument render as `<k>`
+    * there and follow the node's children as `<k>` subtrees. What varies
+    * between sessions on identical code renders by structure only:
+    * expression ids are renumbered by first appearance, lambda variables
+    * keep only their (renumbered) id, closures and other opaque objects
+    * print their class without the JVM's lambda suffix, a scan names its
+    * catalog table without the artifact signature or its paths relative
+    * to their source directory, and its partition, data and pushed
+    * filters are sorted sets without the inferred `isnotnull`s.
+    * Operands keep source order: `.canonicalized` would reorder them by
+    * hashCode, which differed between JVMs. */
+  private[graft] def renderPlan(plan: SparkPlan): String = {
+    val r = new PlanRendering
+    r.node(plan, 0, "")
+    r.text
   }
 
-  /** Normalize bare integer literals inside `Expand [[...], [...]]` row
-    * lists to `g`: the trailing literal of each Expand projection row is
-    * the grouping id MergeScalarSubqueries / rollup assigned in optimizer
-    * -visit order — an internal tag, renumbered nondeterministically on
-    * identical code. Scoped to the Expand block so real literals
-    * elsewhere in the plan are untouched. */
-  private[graft] def normalizeExpandTags(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var j = s.indexOf("Expand [", i)
-    while (j >= 0) {
-      val start = j + "Expand [".length
-      var depth = 1
-      var k = start
-      while (k < s.length && depth > 0) {
-        val c = s.charAt(k)
-        if (c == '[') depth += 1 else if (c == ']') depth -= 1
-        k += 1
+  private final class PlanRendering {
+    private val out = new StringBuilder
+    private val ids = mutable.Map.empty[Long, Int]
+    /** The plans the node being rendered references from its arguments. */
+    private var inner = mutable.ArrayBuffer.empty[SparkPlan]
+
+    def text: String = out.toString
+
+    def node(p: SparkPlan, depth: Int, label: String): Unit = {
+      val outer = inner
+      inner = mutable.ArrayBuffer.empty
+      val (args, children) = p match {
+        case a: AdaptiveSparkPlanExec => (Nil, Seq(a.initialPlan))
+        case s: FileSourceScanExec => (scan(s), Nil)
+        case _ =>
+          // a subquery's name is a label ending in the id of the
+          // expression that references it
+          val name = p match { case b: BaseSubqueryExec => Some(b.name); case _ => None }
+          (p.productIterator.filterNot {
+            case c: SparkPlan => p.children.exists(_ eq c)
+            case a => name.contains(a)
+          }.map(value).toSeq, p.children)
       }
-      if (depth > 0) {
-        // Bracket never balanced (truncated/unexpected text): pass the
-        // remainder through UNCHANGED rather than dropping the real final
-        // character and appending a spurious `]`.
-        sb.append(s.substring(i))
-        i = s.length
-        j = -1
-      } else {
-        sb.append(s.substring(i, start))
-          .append(s.substring(start, k - 1)
-            .replaceAll("(?<=[\\[, ])\\d+(?=[,\\]])", "g"))
-          .append(']')
-        i = k
-        j = s.indexOf("Expand [", i)
-      }
+      val referenced = inner
+      inner = outer
+      out ++= "  " * depth ++= label ++= p.getClass.getSimpleName ++=
+        args.mkString("(", ", ", ")") += '\n'
+      children.foreach(node(_, depth + 1, ""))
+      referenced.zipWithIndex.foreach { case (q, k) => node(q, depth + 1, s"<${k + 1}> ") }
     }
-    sb.append(s.substring(i))
-    sb.toString
+
+    private def id(e: ExprId): String = "#" + ids.getOrElseUpdate(e.id, ids.size)
+
+    def value(x: Any): String = x match {
+      case null => "null"
+      case p: SparkPlan => inner += p; s"<${inner.size}>"
+      case l: LogicalPlan => l.getClass.getSimpleName + l.expressions.map(value).mkString("(", ", ", ")")
+      // a name holding `#` is generated from an expression rendered
+      // beside it (an aggregate's result) and prints its session's ids
+      case a: AttributeReference =>
+        (if (a.name.contains('#')) "" else a.name) + id(a.exprId) + ":" + a.dataType.catalogString
+      case v: NamedLambdaVariable => "lambda" + id(v.exprId) + ":" + v.dataType.catalogString
+      case a: Alias => s"Alias(${value(a.child)}, ${a.name}${id(a.exprId)})"
+      // through Scala and back: `sql` spells out generic arrays, structs
+      // and maps, where an unsafe array prints only a hash of its bytes
+      case l: Literal => Literal.create(CatalystTypeConverters.convertToScala(l.value, l.dataType),
+        l.dataType).sql + ":" + l.dataType.catalogString
+      case e: ExprId => id(e)
+      case t: DataType => t.catalogString
+      case s: Iterable[_] => s.map(value).mkString("[", ", ", "]")
+      case a: Array[_] => a.map(value).mkString("[", ", ", "]")
+      case p: Product if p.productArity == 0 => p.productPrefix
+      case p: Product => p.productPrefix + p.productIterator.map(value).mkString("(", ", ", ")")
+      case v @ (_: String | _: java.lang.Number | _: java.lang.Boolean | _: java.lang.Character |
+                _: UTF8String | _: Enumeration#Value) => v.toString
+      case c: Class[_] => c.getName
+      case o =>
+        val n = o.getClass.getName
+        if (n.contains("$$Lambda")) n.substring(0, n.indexOf("$$Lambda")) else n
+    }
+
+    /** A file scan's arguments: the relation as its catalog table or
+      * its paths, then the filter sets, then the rest. */
+    private def scan(s: FileSourceScanExec): Seq[String] = {
+      val roots = s.relation.location.rootPaths
+      val relation = s.tableIdentifier match {
+        case Some(t) =>
+          // partition directories below the table's own directory
+          def below(p: Path): Option[String] =
+            if (p == null) None
+            else if (p.getName == t.table) Some("")
+            else below(p.getParent).map(_ + "/" + p.getName)
+          t.copy(table = unsigned(t.table)).unquotedString +
+            roots.map(p => below(p).getOrElse(p.getName)).filter(_.nonEmpty).sorted
+              .mkString("[", ", ", "]")
+        case None => roots.map(p => unsigned(p.getName)).sorted.mkString("[", ", ", "]")
+      }
+      // protected to Scala callers, public in the bytecode
+      val pushed = s.getClass.getMethod("pushedDownFilters").invoke(s)
+        .asInstanceOf[Seq[sources.Filter]]
+      def filters(fs: Seq[Expression]): String =
+        fs.filterNot(_.isInstanceOf[IsNotNull])
+          .sortBy(f => new PlanRendering().value(f)).map(value).mkString("{", ", ", "}")
+      Seq(relation, s.relation.fileFormat.toString, value(s.output),
+        s.requiredSchema.catalogString, filters(s.partitionFilters), filters(s.dataFilters),
+        pushed.filterNot(_.isInstanceOf[sources.IsNotNull]).map(_.toString)
+          .sorted.mkString("{", ", ", "}"),
+        value(s.stream), value(s.optionalBucketSet), value(s.optionalNumCoalescedBuckets),
+        s.disableBucketedScan.toString)
+    }
   }
 
-  /** Sort the top-level comma-separated elements of every `key<open>...
-    * <close>` occurrence, respecting nesting depth (elements contain
-    * parenthesized commas: `first(a, true) FILTER (WHERE ...)`).
-    *
-    * LINE-BOUNDED (r16, the d9 flutter root cause): plan nodes print one
-    * per line, so a delimited list never legitimately crosses a newline —
-    * but scan-metadata values truncate at spark.sql
-    * .maxMetadataStringLength WITHOUT their closing bracket, and the
-    * previous unbounded scan then swallowed every following LINE until
-    * brackets happened to re-balance, alphabetically scrambling whole
-    * subtrees. The swallow extent shifted with session-global exprId
-    * digit widths (the raw text is cut BEFORE the exprId scrub), so two
-    * full-registry runs fingerprinted d9 differently. Now: a list that
-    * does not close on its own line is TRUNCATION DAMAGE — its tail is
-    * already partial — so the whole remainder-of-line normalizes to one
-    * deterministic `<truncated>` token (determinism beats fidelity: the
-    * Filter nodes above the scan carry the same predicates untruncated).
-    * `dropIsNotNull` additionally strips constraint-inferred isnotnull
-    * elements (see scrubPlan's keys table).
-    *
-    * DEFENSIVE-ONLY as of r17: [[Harness.session]] renders plans with
-    * spark.sql.maxMetadataStringLength raised far past any real metadata
-    * value, so width truncation — and with it this branch's known blind
-    * spot (the collapse also erases the truncated line's following
-    * `Key: [...]` fields, ADVICE r16) — cannot occur in any session whose
-    * fingerprints the gate compares. The branch stays for foreign-session
-    * plan text fed to scrubPlan directly. */
-  private def sortDelimited(s: String, key: String, open: Char, close: Char,
-                            dropIsNotNull: Boolean = false): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var j = s.indexOf(key + open, i)
-    while (j >= 0) {
-      val start = j + key.length + 1
-      var depth = 1
-      var k = start
-      while (k < s.length && depth > 0 &&
-             s.charAt(k) != '\n' && s.charAt(k) != '\r') {
-        val c = s.charAt(k)
-        if (c == '[' || c == '(') depth += 1
-        else if (c == ']' || c == ')') depth -= 1
-        k += 1
-      }
-      if (depth > 0) {
-        // Unbalanced at end-of-line/text: truncated metadata. Replace the
-        // remainder of the line with one stable token.
-        sb.append(s.substring(i, start)).append("<truncated>").append(close)
-        i = k
-      } else {
-        val inner = s.substring(start, k - 1)
-        val parts = scala.collection.mutable.ArrayBuffer[String]()
-        var d = 0
-        var last = 0
-        var m = 0
-        while (m < inner.length) {
-          // NOT <>: comparison operators appear unpaired ((a > 5)), and
-          // generic types (struct<a:bigint,b:int>) print commas without a
-          // trailing space, so they can never be split points anyway
-          val c = inner.charAt(m)
-          if (c == '(' || c == '[') d += 1
-          else if (c == ')' || c == ']') d -= 1
-          else if (c == ',' && d == 0 && m + 1 < inner.length && inner.charAt(m + 1) == ' ') {
-            parts += inner.substring(last, m)
-            last = m + 2
-          }
-          m += 1
-        }
-        parts += inner.substring(last)
-        val kept =
-          if (dropIsNotNull) parts.filterNot(p =>
-            p.startsWith("isnotnull(") || p.startsWith("IsNotNull("))
-          else parts
-        sb.append(s.substring(i, start)).append(kept.sorted.mkString(", ")).append(close)
-        i = k
-      }
-      j = s.indexOf(key + open, i)
-    }
-    sb.append(s.substring(i))
-    sb.toString
+  /** An artifact name (`graft_<kind><params>_<path hash>_<signature>`,
+    * [[graft.sources.Artifact]]) with its 8-hex data signature replaced by
+    * `sig`: the signature keys the data version, so it changes when the
+    * corpus is regenerated while the plan does not. Other names pass. */
+  private def unsigned(name: String): String = {
+    val parts = name.split('_')
+    def hex(s: String, n: Int) = s.length == n && s.forall(Character.digit(_, 16) >= 0)
+    if (name.startsWith("graft_") && parts.length >= 4 &&
+        hex(parts.last, 8) && hex(parts(parts.length - 2), 16)) name.dropRight(8) + "sig"
+    else name
   }
 
   /** Jobs, stages and tasks per query, from one listener. A run wrapped

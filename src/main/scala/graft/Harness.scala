@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *     not a constant. At sf100 a lineitem SMJ partition at 4 shuffle
   *     partitions is ~150M rows and every task lives in the external
   *     sorter's spill; at 256 the same join streams. Exchange partition
-  *     counts print into plan fingerprints, so an unset variable keeps the
+  *     counts are part of plan fingerprints, so an unset variable keeps the
   *     committed baselines byte-identical.
   */
 object Harness {
@@ -31,12 +31,7 @@ object Harness {
     * Always set: UTC (NTZ parquet columns cast through the session zone,
     * so an unpinned session would plan and answer differently from the
     * oracle), `nanosAsLong` (the TIMESTAMP(NANOS) shape of `events.ts`
-    * reads only as a raw long), no UI, and untruncated scan metadata.
-    * Metadata values are width-truncated on the RAW text, before the
-    * fingerprint's exprId scrub, so whether a list truncates depended on
-    * the session's exprId digit widths; rendering untruncated (display
-    * only, the executed plan is untouched) lets the scrub always see
-    * complete lists. */
+    * reads only as a raw long) and no UI. */
   def session(extra: (String, String)*): SparkSession = {
     val base = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -44,7 +39,6 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxMetadataStringLength", "100000")
     val spark = extra.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

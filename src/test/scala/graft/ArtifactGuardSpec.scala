@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ranks, scores cosines and pivots PQ codebooks through
   * `graft.ann.Stages`; every DuckDB oracle that grades them takes its
   * cosine guard, dot fold, centroid-assignment and top-k windows from the
-  * stages' SQL twins (`Stages.Sql`); and every entry point gets its
-  * session from `graft.Harness`. This scan fails, listing the offending
+  * stages' SQL twins (`Stages.Sql`); every entry point gets its session
+  * from `graft.Harness`; and plans are read only by Bench's structural
+  * fingerprint, never as text. This scan fails, listing the offending
   * lines, when a rule's token appears in its scope outside the rule's
   * allowed file — the copies that left artifact families keyed by path
   * only and let the ANN files and their oracles drift apart. `Warehouse.readTableOrFiles` may ask the
@@ -19,6 +20,7 @@ class ArtifactGuardSpec extends AnyFunSuite {
   private val Registry = "graft/sources/Artifact.scala"
   private val Stages = "graft/ann/Stages.scala"
   private val Harness = "graft/Harness.scala"
+  private val Bench = "graft/Bench.scala"
   private val Everywhere = Seq("graft/")
   private val Search = Seq("graft/ann/", "graft/rag/Search.scala")
   private val Oracles = Seq("graft/ann/", "graft/rag/")
@@ -39,7 +41,8 @@ class ArtifactGuardSpec extends AnyFunSuite {
     ("list_reduce(list_transform(range(1, len(", "a DuckDB dot fold", Stages, Everywhere),
     ("ORDER BY cs DESC, cent_id)", "an oracle centroid-assignment window", Stages, Oracles),
     ("ORDER BY similarity DESC, vec_id)", "an oracle top-k window", Stages, Oracles),
-    ("SparkSession.builder()", "a session builder", Harness, Everywhere))
+    ("SparkSession.builder()", "a session builder", Harness, Everywhere),
+    ("executedPlan.toString", "a plan-text reader", Bench, Everywhere))
 
   private def sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -78,6 +81,11 @@ class ArtifactGuardSpec extends AnyFunSuite {
 
   test("entry points build their sessions through the harness only") {
     val found = offenders(Harness)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("plans are read through the fingerprint rendering only") {
+    val found = offenders(Bench)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -60,24 +60,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("scrubPlan is idempotent and permutation-invariant on sortable lists") {
-    // idempotence matters because the scrub is a normal form: if a second
-    // pass changed the text, two pipelines applying it a different number
-    // of times would fingerprint the same plan differently
-    val exprs = Gen.oneOf(
-      "isnotnull(a#1)", "(b#22 < 8)", "dynamicpruningexpression(d#333 IN subquery)",
-      "first(x#4, true) FILTER (WHERE (p#5 = 1))", "sum(y#66)")
-    val lists = Gen.nonEmptyListOf(exprs)
-    samples(lists, 60).foreach { l =>
-      val s = s"PartitionFilters: [${l.mkString(", ")}], output=[k#7, v#8]"
-      val once = Bench.scrubPlan(s)
-      assert(Bench.scrubPlan(once) == once, s"not idempotent on: $s")
-      // any permutation of a sorted list scrubs to the same normal form
-      val perm = s"PartitionFilters: [${l.reverse.mkString(", ")}], output=[k#7, v#8]"
-      assert(Bench.scrubPlan(perm) == once, s"not permutation-invariant on: $s")
-    }
-  }
-
   test("zorderKeyN interleave: monotone per dimension, bijective on the grid") {
     import spark.implicits._
     // 16x16 grid at 4 bits: the interleave must be a bijection (no two
