@@ -53,34 +53,27 @@ object SparkEntry {
     "q23_incremental_agg" -> ((s, dir) => Queries.q23IncrementalAgg(s, dir)),
   )
 
+  /** q1's oracle, which q23 shares: q23 answers q1 from a stored MV plus
+    * the delta rows, so the two must report the same rows. */
+  private val Q1Oracle =
+    """SELECT l_returnflag, l_linestatus,
+      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
+      |  CAST(sum(CAST(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) AS DECIMAL(20,0))) AS DOUBLE) / 1e4 AS sum_disc_price,
+      |  CAST(sum(CAST(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT)) AS DECIMAL(20,0))) AS DOUBLE) / 1e6 AS sum_charge,
+      |  count(*) AS count_order
+      |FROM lineitem
+      |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+      |GROUP BY l_returnflag, l_linestatus
+      |ORDER BY l_returnflag, l_linestatus""".stripMargin
+
   /** DuckDB-runnable oracle SQL per query (same column names + order). */
   def oracleSql: Map[String, String] =
     MemoryOps.oracle ++ RagOps.oracle ++ Search.oracle ++ Embed.oracle ++ Lexical.oracle ++ Chunking.oracle ++
     TextOps.oracle ++ Dedup.oracle ++ Ann.oracle ++ Pq.oracle ++ Router.oracle ++ Sq.oracle ++ IvfPqR.oracle ++ GraphProbe.oracle ++ Binary.oracle ++
     EventOps.oracle ++ Pipeline.oracle ++ Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-        |  CAST(sum(CAST(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) AS DECIMAL(20,0))) AS DOUBLE) / 1e4 AS sum_disc_price,
-        |  CAST(sum(CAST(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT)) AS DECIMAL(20,0))) AS DOUBLE) / 1e6 AS sum_charge,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q23_incremental_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-        |  CAST(sum(CAST(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) AS DECIMAL(20,0))) AS DOUBLE) / 1e4 AS sum_disc_price,
-        |  CAST(sum(CAST(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT)) AS DECIMAL(20,0))) AS DOUBLE) / 1e6 AS sum_charge,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+    "q1_agg" -> Q1Oracle,
+    "q23_incremental_agg" -> Q1Oracle,
 
     "q3_join_agg" ->
       """SELECT l_orderkey, o_orderdate, o_orderpriority,

@@ -84,9 +84,9 @@ object StreamBench {
     // the per-BATCH fixed cost (read MV + overwrite) at this batch size —
     // the quantity that sizes micro-batch triggers for an MV pipeline.
     val mvTable = "graft_sbench_mv"
-    // dropStale (not bare DROP): the staged MV write registers an external
-    // table, so DROP leaves its files and a bare drop would let the next
-    // run's readTableOrFiles resurrect them
+    // dropStale (not bare DROP): the MV registers an external table over
+    // its committed state directory, so DROP leaves the files and a bare
+    // drop would let the next run's merge resurrect them
     graft.sources.Warehouse.dropStale(spark, mvTable)
     val in3 = MemoryStream[Streams.LiDelta]
     val flags = Array("N", "R", "A")

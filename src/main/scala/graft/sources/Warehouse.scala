@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Warehouse layout helpers (SURVEY.md §6) — the materialization side of the
@@ -15,6 +16,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Both are spec-verified: the bucketed self-join plans with no Exchange,
   * and the pruned read scans only the probed partitions.
+  *
+  * State that must survive a crash — the streamed q1 MV and the streamed
+  * IVF/PQ index — commits through one protocol, a versioned record naming
+  * the live directories ([[live]], [[commitNext]], [[sweep]]).
   */
 object Warehouse {
 
@@ -106,13 +111,11 @@ object Warehouse {
 
   /** The single source of truth for where a warehouse table's files live
     * (warehouse root + lowercased name). Every path-level operation —
-    * stale-dir cleanup, the staged swap, the restart-fallback read — must
-    * resolve through here; a second inline copy of the convention is how a
-    * writer and its reader silently diverge. */
-  private[graft] def tableLocation(spark: SparkSession, table: String): org.apache.hadoop.fs.Path = {
-    val root = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    new org.apache.hadoop.fs.Path(root, table.toLowerCase)
-  }
+    * stale-dir cleanup, the committed state of the H11 MV — must resolve
+    * through here; a second inline copy of the convention is how a writer
+    * and its reader silently diverge. */
+  private[graft] def tableLocation(spark: SparkSession, table: String): Path =
+    new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), table.toLowerCase)
 
   /** Remove a stale managed-table location left by a previous session: the
     * in-memory catalog forgets tables on JVM exit but their parquet files
@@ -120,146 +123,128 @@ object Warehouse {
     * location it doesn't own (LOCATION_ALREADY_EXISTS). Deletion goes
     * through the Hadoop FileSystem API so it works on whatever filesystem
     * backs spark.sql.warehouse.dir (local, hdfs://, s3a://) — a
-    * java.io.File delete is a silent no-op off the local disk. Also clears
-    * the `__stage`/`__old` siblings a [[writeTableStaged]] swap may have
-    * left, so tests and benches get a genuinely clean slate. */
+    * java.io.File delete is a silent no-op off the local disk. */
   private[graft] def dropStale(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(loc, stagePath(loc), oldPath(loc)).foreach { p =>
-      if (fs.exists(p)) fs.delete(p, true): Unit
-    }
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true): Unit
   }
 
-  private def stagePath(loc: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(loc.toString + "__stage")
-  private def oldPath(loc: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(loc.toString + "__old")
-  private val ManifestFile = "_GRAFT_MANIFEST"
+  /** The name prefix of a record; the version follows it ([[live]]). */
+  private[graft] val RecordPrefix = "_folded.v"
 
-  /** Sidecar manifest: one `name\tlength` line per data file, sorted.
-    * `_SUCCESS` proves the WRITER finished; the manifest lets a READER
-    * prove the directory it sees still holds every byte the writer
-    * produced — the check that catches a torn directory "rename" on
-    * object stores (copy+delete, file by file), where a partial copy can
-    * carry `_SUCCESS` without all its data files. Lexicographic luck is
-    * on our side: `_GRAFT_MANIFEST` sorts before `_SUCCESS` and `part-*`,
-    * so a listing-ordered copy transfers the manifest before the marker —
-    * a torn copy that passes the `_SUCCESS` gate almost always carries
-    * the manifest that convicts it. A dir with NO manifest (plain
-    * [[writeTable]], partitioned layouts, pre-manifest state) keeps the
-    * `_SUCCESS`-only contract. */
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: org.apache.hadoop.fs.Path): Unit = {
-    val entries = fs.listStatus(dir)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(s => s"${s.getPath.getName}\t${s.getLen}").sorted
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, ManifestFile), true)
-    try out.write((entries.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** A location as one listing saw it: the usable record's `version`
+    * (0: none), the `compact` id it names (0: none) and the ingest tags it
+    * has `folded`; the live `dirs` a reader trusts; and the `last` record
+    * version present, usable or not, which the next commit goes above. */
+  private[graft] final case class Live(loc: Path, version: Int, compact: Int,
+                                       folded: Set[String], dirs: Seq[Path], last: Int)
 
-  private def manifestOk(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Boolean = {
-    val mf = new org.apache.hadoop.fs.Path(p, ManifestFile)
-    if (!fs.exists(mf)) true
-    else try {
-      val in = fs.open(mf)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-      txt.split('\n').filter(_.nonEmpty).forall { line =>
-        val i = line.lastIndexOf('\t')
-        i > 0 && {
-          val f = new org.apache.hadoop.fs.Path(p, line.substring(0, i))
-          fs.exists(f) && fs.getFileStatus(f).getLen == line.substring(i + 1).toLong
-        }
+  private def ingestTag(p: Path): Option[String] =
+    Some(p.getName).filter(_.startsWith("ingest=")).map(_.stripPrefix("ingest="))
+  private def compactId(tag: String): Option[Int] =
+    if (tag.startsWith("compact_")) tag.stripPrefix("compact_").toIntOption else None
+  private def recordVersion(p: Path): Option[Int] =
+    Some(p.getName).filter(_.startsWith(RecordPrefix)).flatMap(_.stripPrefix(RecordPrefix).toIntOption)
+
+  private def parseRecord(text: String): Option[(Int, Set[String])] =
+    text.split("\n", -1) match {
+      case Array(line, "") => line.split("\t", -1) match {
+        case Array(tag, folded) =>
+          compactId(tag).map(_ -> folded.split(',').filter(_.nonEmpty).toSet)
+        case _ => None
       }
-    } catch {
-      // a manifest that cannot be read or parsed (torn copy truncated the
-      // sidecar itself) is evidence AGAINST the dir: convict, don't crash —
-      // the reader then falls through to an intact __stage/__old sibling
-      case _: java.io.IOException | _: NumberFormatException => false
+      case _ => None
     }
+
+  /** What readers trust at `loc`, under graft's one commit protocol for
+    * state that must survive a crash (the H11 q1 MV, the H12-H14 streamed
+    * IVF/PQ index). A location holds
+    *
+    *  - `ingest=<tag>`: an ingest directory (one streamed micro-batch),
+    *    live once its writer's `_SUCCESS` marker exists, unless a record
+    *    folds its tag;
+    *  - `ingest=compact_<k>`: a state directory, live only while the
+    *    usable record names it — every other one is dead;
+    *  - `_folded.v<N>`: a record, the one line
+    *    `compact_<k><TAB><folded tag>,<folded tag>,...` and a newline. The
+    *    usable record is the newest one that parses and names a
+    *    `_SUCCESS`-committed directory; a torn record, or one naming a
+    *    torn directory, is passed over.
+    *
+    * A replace ([[commitNext]], then [[sweep]]) writes `compact_<k+1>` in
+    * full, commits record N+1 naming it and folding every ingest tag it
+    * absorbed, then deletes the directories and records that record made
+    * dead. The commit is one small file renamed into place; no directory
+    * is ever renamed or copied, so even an object store, whose rename is
+    * a copy, makes the commit visible whole or not at all — the single
+    * pointer a Delta or Iceberg log commits. A crash before the rename
+    * leaves the previous record in force and an orphan directory the next
+    * replace overwrites; a crash after it leaves the new record in force
+    * and dead directories the next sweep deletes. Folded tags stay in
+    * every later record, so an at-least-once stream that replays a folded
+    * batch re-creates a directory no reader trusts. One writer per
+    * location: callers serialize their replaces. */
+  private[graft] def live(spark: SparkSession, loc: Path): Live = {
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val entries = if (fs.exists(loc)) fs.listStatus(loc).toSeq else Nil
+    def committed(dir: Path) = fs.exists(new Path(dir, "_SUCCESS"))
+    val records = entries.map(_.getPath).flatMap(p => recordVersion(p).map(_ -> p)).sortBy(-_._1)
+    val usable = records.iterator.flatMap { case (v, p) =>
+      val in = fs.open(p)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      parseRecord(text).filter(r => committed(new Path(loc, s"ingest=compact_${r._1}")))
+        .map(v -> _)
+    }.nextOption()
+    val (version, (compact, folded)) = usable.getOrElse((0, (0, Set.empty[String])))
+    val dirs = entries.filter(_.isDirectory).map(_.getPath).filter(p => ingestTag(p).exists(tag =>
+      compactId(tag).fold(!folded(tag) && committed(p))(_ == compact))).sortBy(_.getName)
+    Live(loc, version, compact, folded, dirs, records.headOption.fold(0)(_._1))
   }
 
-  /** A write reached its commit point iff the committer's `_SUCCESS`
-    * marker exists AND (when a [[writeManifest]] sidecar is present)
-    * every manifested data file survives at its recorded length — the
-    * single completeness convention shared by the swap repair and the
-    * restart-fallback read. */
-  private def isComplete(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) && manifestOk(fs, p)
+  /** The live directories as one frame, read from the files alone (the
+    * catalog is not asked, so it works after a restart); the partition
+    * column `ingest` names each row's directory. None: nothing is live. */
+  private[graft] def read(spark: SparkSession, live: Live): Option[DataFrame] =
+    if (live.dirs.isEmpty) None
+    else Some(spark.read.option("basePath", live.loc.toString)
+      .parquet(live.dirs.map(_.toString): _*))
 
-  /** Crash-safe overwrite of a small state table (the H11 MV): the new
-    * contents are fully written (with `_SUCCESS`) to a `__stage` sibling
-    * BEFORE the live directory is touched, then swapped in with two FS
-    * renames. At every instant at least one complete, `_SUCCESS`-marked
-    * copy of either the old or the new state exists on disk, so a JVM
-    * crash at any point leaves [[readTableOrFiles]] a consistent MV to
-    * recover (either side of the swap is fine: the replay guard carried
-    * IN the state makes re-merging the in-flight batch a no-op iff the
-    * new copy won). A plain [[writeTable]] deletes-then-rewrites — a
-    * crash mid-write loses the state entirely. The catalog entry is
-    * re-registered as an external table over the live path so in-session
-    * readers (`spark.table`) keep working; DROP on it never deletes data. */
-  /** Repair a [[writeTableStaged]] swap a crash interrupted between the
-    * two renames (live dir gone or partial, complete new state still in
-    * `__stage`): promote stage to live. Called at every staged-write
-    * entry BEFORE the stage dir is cleaned — without this, the next
-    * write's stage cleanup would erase the only copy of the newest
-    * state, and a second crash would roll the MV back to `__old` while
-    * the stream's checkpoint has already committed the batch, losing its
-    * deltas permanently. */
-  private[graft] def repairStaged(spark: SparkSession, table: String): Unit = {
-    val loc = tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = stagePath(loc)
-    if (!isComplete(fs, loc) && isComplete(fs, stage)) {
-      if (fs.exists(loc)) fs.delete(loc, true): Unit
-      if (!fs.rename(stage, loc))
-        throw new java.io.IOException(s"staged repair failed for $table (stage -> live)")
-    }
+  /** The commit half of a replace: `write` fills the next state directory
+    * (its path is the argument) from what it read of `live`; the next
+    * record then names it and folds every ingest directory of `live`.
+    * Returns the new state directory. */
+  private[graft] def commitNext(spark: SparkSession, live: Live)(write: String => Unit): String = {
+    val fs = live.loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tag = s"compact_${live.compact + 1}"
+    val dir = new Path(live.loc, s"ingest=$tag")
+    write(dir.toString)
+    val folded = live.folded ++ live.dirs.flatMap(ingestTag).filter(compactId(_).isEmpty)
+    val v = live.last + 1
+    val tmp = new Path(live.loc, s".$RecordPrefix$v.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(s"$tag\t${folded.toSeq.sorted.mkString(",")}\n".getBytes("UTF-8"))
+    finally out.close()
+    if (!fs.rename(tmp, new Path(live.loc, s"$RecordPrefix$v")))
+      throw new java.io.IOException(s"record commit failed for ${live.loc}")
+    dir.toString
   }
 
-  /** ATOMICITY PRECONDITION: the "one complete copy at every instant"
-    * invariant of this staged swap (and of [[repairStaged]] /
-    * `compactPartitioned`) holds only on filesystems with atomic
-    * directory rename — local disk and HDFS. Object stores expose rename
-    * as a non-atomic copy+delete (s3a), so a crash mid-"rename" can leave
-    * a torn directory that still carries `_SUCCESS` from its source; the
-    * [[writeManifest]] sidecar makes [[isComplete]] DETECT such a copy
-    * (missing/short data files fail the manifest check) and fall through
-    * to an intact `__stage`/`__old` sibling, but detection is not
-    * atomicity. On such stores use a real table
-    * format whose commit is a single atomic pointer swap (Delta/Iceberg
-    * metadata log — the public-design analog of this staged layout) or an
-    * HDFS-semantics layer; this implementation intentionally stays on
-    * plain parquet + rename because the test/bench environment is
-    * rename-atomic. */
-  def writeTableStaged(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
-    val loc = tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = stagePath(loc)
-    val old = oldPath(loc)
-    repairStaged(spark, table)
-    if (fs.exists(stage)) fs.delete(stage, true): Unit
-    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    writeManifest(fs, stage)
-    // legacy managed entry: DROP would delete loc's files — safe because a
-    // complete new copy already sits in stage and the reader falls back
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    if (fs.exists(old)) fs.delete(old, true): Unit
-    if (fs.exists(loc) && !fs.rename(loc, old))
-      throw new java.io.IOException(s"staged swap failed for $table (live -> old)")
-    if (!fs.rename(stage, loc)) {
-      if (fs.exists(old)) fs.rename(old, loc): Unit
-      throw new java.io.IOException(s"staged swap failed for $table (stage -> live, rolled back)")
+  /** The cleanup half of a replace: delete what the usable record made
+    * dead — every other state directory, every folded ingest directory,
+    * every older record. A crash mid-sweep loses nothing: whatever
+    * survives stays dead to readers and goes with the next sweep. No
+    * usable record, no deletion. */
+  private[graft] def sweep(spark: SparkSession, loc: Path): Unit = {
+    val l = live(spark, loc)
+    if (l.version > 0) {
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(loc).map(_.getPath).foreach { p =>
+        val dead = recordVersion(p).exists(_ < l.version) ||
+          ingestTag(p).exists(tag => compactId(tag).fold(l.folded(tag))(_ != l.compact))
+        if (dead) fs.delete(p, true): Unit
+      }
     }
-    if (fs.exists(old)) fs.delete(old, true): Unit
-    spark.catalog.createTable(table, loc.toString, "parquet"): Unit
   }
 
   /** `slice(r)` for r < `passes`, each written to `staging`/pass_r, then
@@ -313,26 +298,27 @@ object Warehouse {
     * in with two FS renames — the smallest non-transactional swap window;
     * a production deployment gets the atomic version of this from a table
     * format's (Delta/Iceberg) OPTIMIZE, which this models on plain
-    * parquet. */
+    * parquet. It keeps the swap, not the record commit ([[live]]): callers
+    * read `path` itself with `spark.read.parquet`, which would see every
+    * directory under it, dead or live — no record can hide one. */
   def compactPartitioned(spark: SparkSession, path: String, partCol: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact")
-    val dst = new org.apache.hadoop.fs.Path(path)
+    val tmp = new Path(path + "__compact")
+    val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(tmp)) fs.delete(tmp, true): Unit
     clusterByPartition(spark.read.parquet(path), partCol)
       .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    if (fs.exists(old)) fs.delete(old, true): Unit
-    if (!fs.rename(dst, old))
+    val prev = new Path(path + "__prev")
+    if (fs.exists(prev)) fs.delete(prev, true): Unit
+    if (!fs.rename(dst, prev))
       throw new java.io.IOException(s"compaction swap failed for $path")
     if (!fs.rename(tmp, dst)) {
       // roll the original back into place rather than leaving no dataset
-      // at `path` while an intact copy sits under __old
-      fs.rename(old, dst): Unit
+      // at `path` while an intact copy sits under __prev
+      fs.rename(prev, dst): Unit
       throw new java.io.IOException(s"compaction swap failed for $path (rolled back)")
     }
-    fs.delete(old, true): Unit
+    fs.delete(prev, true): Unit
   }
 
   /** I7: Morton (Z-order) interleave of N non-negative integer columns —
@@ -420,28 +406,4 @@ object Warehouse {
     writeZOrderedN(df, path, Seq(colA, colB), files, bits)
 
   def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** Read a managed table even across a JVM restart: the in-memory
-    * catalog forgets tables on exit but their parquet files survive in
-    * the warehouse dir, so state that must outlive the session (the H11
-    * MV) falls back to reading the files directly. None = the table has
-    * never been (completely) written.
-    *
-    * Only a `_SUCCESS`-marked directory is trusted — a dir the writer
-    * died inside holds partial task files and must not be promoted to
-    * authoritative state. If the live dir is missing or incomplete, the
-    * [[writeTableStaged]] swap siblings are consulted: `__stage` first
-    * (a complete NEW state whose crash window is after the live dir was
-    * retired), then `__old` (the complete PREVIOUS state retired just
-    * before the crash). Either choice is consistent: the merge's replay
-    * guard travels inside the state itself, so the interrupted batch
-    * either shows as merged (stage won) or re-merges cleanly (old won). */
-  def readTableOrFiles(spark: SparkSession, table: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(table)) Some(spark.table(table))
-    else {
-      val loc = tableLocation(spark, table)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq(loc, stagePath(loc), oldPath(loc)).find(isComplete(fs, _))
-        .map(p => spark.read.parquet(p.toString))
-    }
 }

@@ -2,12 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ann.Stages
 import graft.functions.Vec
+import graft.sources.Warehouse
 
 /** Structured Streaming operators (SURVEY.md §2.H) — the streaming analog of
   * the reference's SSE event feed (/root/reference/mcp_synaptic/core/server.py
@@ -23,6 +25,11 @@ import graft.functions.Vec
   * machine keys state by memory_key (same partitioning as the batch memory
   * table) and uses event-time timeouts, so state size is O(live keys) and
   * expiry emission needs no separate scan.
+  *
+  * The stateful sinks — the H11 q1 MV and the H12-H14 streamed IVF/PQ
+  * index — commit through the warehouse's one crash-safe protocol
+  * ([[graft.sources.Warehouse.live]]); nothing here renames a file or
+  * parses a commit record.
   */
 object Streams {
 
@@ -191,13 +198,13 @@ object Streams {
     * mode=Overwrite — foreachBatch is at-least-once, and a re-delivered
     * batch OVERWRITES its own directory instead of double-appending
     * (same identity rule as H11's marks: appId from the checkpoint dir,
-    * batchId from the stream). The per-directory `_SUCCESS` marker plays
-    * the staged-swap role at batch granularity — a write that died
-    * mid-batch leaves no marker, is never trusted by readers
-    * (readTableOrFiles discipline), and is replaced wholesale on replay;
-    * an H11-style whole-table swap would be O(corpus) per batch, which
-    * contradicts the O(batch) append contract (a transactional table
-    * format supplies the same guarantee with ACID appends at 100 TB).
+    * batchId from the stream). The per-directory `_SUCCESS` marker is the
+    * batch's commit — a write that died mid-batch leaves no marker, is
+    * never trusted by readers ([[graft.sources.Warehouse.live]]), and is
+    * replaced wholesale on replay; replacing the whole index per batch
+    * would be O(corpus), which contradicts the O(batch) append contract
+    * (a transactional table format supplies the same guarantee with ACID
+    * appends at 100 TB).
     * Probes read every ingest dir's `list_id=N`: list_id stays a partition column
     * under every ingest dir, so partition pruning is unchanged —
     * StreamIvfSpec proves streamed appends == a20's batch rebuild on the
@@ -234,8 +241,8 @@ object Streams {
     * codebook/centroid artifact — the a20 rule), so the streamed code
     * rows are byte-identical to a batch rebuild's; the ingest-directory
     * commit/replay/compaction contract is H12's verbatim (same writer
-    * discipline, same [[readIvfIndex]]/[[compactIvfIndex]] — the
-    * manifest machinery is schema-agnostic). O(batch·(M·K + nlists)) per
+    * discipline, same [[readIvfIndex]]/[[compactIvfIndex]] — the commit
+    * protocol is schema-agnostic). O(batch·(M·K + nlists)) per
     * batch, row-local, no touch of existing code partitions. */
   private[graft] def appendIvfPqBatch(batch: DataFrame, indexDir: String,
                                       corpusSource: DataFrame, batchTag: String,
@@ -260,81 +267,14 @@ object Streams {
       .start()
   }
 
-  /** The fold manifest of the streamed index (r12): newline-delimited
-    * `compactTag<TAB>foldedTag,foldedTag,...` records, one per completed
-    * [[compactIvfIndex]] run. Versioned (`_folded.v1`, `_folded.v2`, ...)
-    * rather than overwritten in place: readers take the highest version
-    * that parses, so a writer crash can never leave a moment with NO
-    * manifest (the delete-then-rename overwrite would), and the manifest
-    * append IS the compaction's commit point — before it the new compact
-    * directory is ignored and the originals serve; after it the compact
-    * directory serves and every folded tag is dead forever, INCLUDING a
-    * replayed micro-batch that re-creates its directory after the fold
-    * (at-least-once streams replay tags, so deletion alone cannot retire
-    * one). */
-  private val FoldManifestPrefix = "_folded.v"
-
-  private def foldManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: org.apache.hadoop.fs.Path):
-      (Int, Map[String, Seq[String]]) = {
-    val versions =
-      if (!fs.exists(dir)) Array.empty[(Int, org.apache.hadoop.fs.Path)]
-      else fs.listStatus(dir).flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(FoldManifestPrefix))
-          scala.util.Try(n.stripPrefix(FoldManifestPrefix).toInt).toOption
-            .map(_ -> st.getPath)
-        else None
-      }
-    versions.sortBy(-_._1).collectFirst { case (v, p) =>
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val entries = text.linesIterator.filter(_.nonEmpty).map { line =>
-        val Array(tag, folded) = line.split('\t')
-        tag -> folded.split(',').toSeq.filter(_.nonEmpty)
-      }.toMap
-      (v, entries)
-    }.getOrElse((0, Map.empty[String, Seq[String]]))
-  }
-
-  /** The ingest directories a reader may trust: `_SUCCESS`-committed
-    * (ADVICE r11: a foreachBatch writer that dies mid-batch leaves part
-    * files with no marker — readTableOrFiles discipline, applied per
-    * ingest dir), not folded into a committed compact directory, and —
-    * for compact directories themselves — recorded in the manifest (a
-    * compact write that died before its manifest commit is invisible). */
-  private def committedIngestDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-    val (_, manifest) = foldManifest(fs, dir)
-    val folded = manifest.values.flatten.toSet
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest="))
-      .map(_.getPath)
-      .filter { p =>
-        val tag = p.getName.stripPrefix("ingest=")
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) &&
-          !folded.contains(tag) &&
-          (!tag.startsWith("compact_") || manifest.contains(tag))
-      }
-      .sortBy(_.getName)
-  }
-
   /** The streamed index, read back with both partition columns discovered
     * (ingest for commit identity, list_id for probe pruning). Reads ONLY
-    * the committed, un-folded ingest directories ([[committedIngestDirs]])
-    * — a partial batch or a superseded (folded/replayed-after-fold)
-    * directory never contributes rows. */
-  def readIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = committedIngestDirs(fs, dir)
-    if (dirs.isEmpty)
-      throw new IllegalStateException(s"no committed ingest directories under $indexDir")
-    spark.read.option("basePath", indexDir).parquet(dirs.map(_.toString): _*)
-  }
+    * the live directories of [[graft.sources.Warehouse.live]] — a partial
+    * batch or a superseded (folded/replayed-after-fold) directory never
+    * contributes rows. */
+  def readIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
+    Warehouse.read(spark, Warehouse.live(spark, new Path(indexDir))).getOrElse(
+      throw new IllegalStateException(s"no committed ingest directories under $indexDir"))
 
   /** H12's missing half (r12, verdict #2): fold the accumulated
     * `ingest=*` micro-batch directories into ONE canonical
@@ -343,63 +283,31 @@ object Streams {
     * lands one directory per batch forever; without this it walks into
     * exactly the small-files wall compactPartitioned was built to repair.
     *
-    * Cost is O(moved rows): one pruned read of the committed dirs, one
+    * Cost is O(moved rows): one pruned read of the live dirs, one
     * clustering shuffle on list_id (Warehouse.clusterByPartition — one
     * file per unskewed inverted list, a skewed list splits across writer
-    * tasks, r14), one partitioned write. Commit protocol
-    * (scaladoc at [[FoldManifestPrefix]]): data first under
-    * `ingest=compact_<k>` (k deterministic — max committed compact id
-    * + 1, so a crashed attempt is overwritten, never leaked), then the
-    * manifest version append as the atomic commit point, then best-effort
-    * deletion of folded directories (leftovers — including a replayed
-    * batch directory re-created AFTER the fold — stay invisible via the
-    * manifest and are swept by the next compaction). At every instant a
-    * reader sees exactly one complete view: pre-commit the originals,
-    * post-commit the compact dir. StreamIvfSpec proves compacted ==
-    * pre-compact union (rows, probe results, pruning) and replay safety
-    * across the fold. */
+    * tasks, r14), one partitioned write. The fold is a replace under the
+    * warehouse's commit protocol ([[graft.sources.Warehouse.live]]): the
+    * compact directory is written first, the record naming it and the
+    * folded tags commits, then the folded directories are deleted — a
+    * replayed batch that re-creates one after the fold stays dead and
+    * goes with the next sweep. At every instant a reader sees exactly one
+    * complete view. StreamIvfSpec proves compacted == pre-compact union
+    * (rows, probe results, pruning) and replay safety across the fold. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    // sweep leftovers a previous fold already retired (crash between its
-    // manifest commit and deletes, or a replay that re-created a dir)
-    val (ver0, manifest0) = foldManifest(fs, dir)
-    val folded0 = manifest0.values.flatten.toSet
-    fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("ingest=") &&
-          folded0.contains(n.stripPrefix("ingest=")))
-        fs.delete(st.getPath, true): Unit
-    }
-    val dirs = committedIngestDirs(fs, dir)
-    if (dirs.size <= 1) return // already canonical
-    val tags = dirs.map(_.getName.stripPrefix("ingest="))
-    val nextId = manifest0.keys
-      .flatMap(t => scala.util.Try(t.stripPrefix("compact_").toInt).toOption)
-      .foldLeft(0)(math.max) + 1
-    val compactTag = s"compact_$nextId"
-    // schema-agnostic (r13): the raw-vector layout carries
-    // (vec_id, label, v, nrm), the H14 code layout (vec_id, code*, cn*) —
-    // either way `ingest` is commit bookkeeping, not index content, and
-    // list_id is the partition key both layouts share
-    graft.sources.Warehouse.clusterByPartition(
-        readIvfIndex(spark, indexDir).drop("ingest"), "list_id")
-      .write.mode("overwrite")
-      .partitionBy("list_id")
-      .parquet(s"$indexDir/ingest=$compactTag")
-    // the commit point: next manifest version carries the new fold record
-    val lines = (manifest0 + (compactTag -> tags)).toSeq.sortBy(_._1)
-      .map { case (t, f) => s"$t\t${f.mkString(",")}" }
-    val next = new org.apache.hadoop.fs.Path(dir, s"$FoldManifestPrefix${ver0 + 1}")
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$FoldManifestPrefix${ver0 + 1}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, next))
-      throw new java.io.IOException(s"fold-manifest commit failed for $indexDir")
-    // best-effort GC; anything that survives stays manifest-invisible
-    tags.foreach(t => fs.delete(
-      new org.apache.hadoop.fs.Path(dir, s"ingest=$t"), true): Unit)
+    val loc = new Path(indexDir)
+    val live = Warehouse.live(spark, loc)
+    if (live.dirs.size > 1) Warehouse.commitNext(spark, live) { out =>
+      // schema-agnostic (r13): the raw-vector layout carries
+      // (vec_id, label, v, nrm), the H14 code layout (vec_id, code*, cn*) —
+      // either way `ingest` is commit bookkeeping, not index content, and
+      // list_id is the partition key both layouts share
+      Warehouse.clusterByPartition(Warehouse.read(spark, live).get.drop("ingest"), "list_id")
+        .write.mode("overwrite")
+        .partitionBy("list_id")
+        .parquet(out)
+    }: Unit
+    Warehouse.sweep(spark, loc)
   }
 
   /** One lineitem-shaped delta row (the H11 MV stream's input schema;
@@ -422,65 +330,48 @@ object Streams {
       col("p_n").cast("long").as("p_n"))
 
   /** One micro-batch fold: aggregate the batch to q1 partial states and
-    * merge them into the MV table (create on first batch). The merge
-    * touches O(delta) input + O(groups) state — never the base fact table.
-    * `localCheckpoint` materializes the merged state (MV-sized: group
-    * cardinality, a handful of rows) before the overwrite so the write
-    * doesn't read the very table it replaces; a production deployment
-    * would use a transactional MERGE INTO (Delta/Iceberg) here, which
-    * this models with plain parquet tables.
+    * merge them into the MV (create on first batch). The merge touches
+    * O(delta) input + O(groups) state — never the base fact table. It is a
+    * replace under the warehouse's commit protocol
+    * ([[graft.sources.Warehouse.live]]) at the table's location: read the
+    * live state, write the merged state as the next state directory,
+    * commit the record naming it, re-point the catalog table at it, then
+    * delete the state it replaced. A production deployment would use a
+    * transactional MERGE INTO (Delta/Iceberg) here, which this models with
+    * plain parquet.
     *
     * REPLAY-SAFE: foreachBatch is at-least-once — after a failure the
     * restarted query re-delivers the last uncommitted batch, and a blind
     * merge would double-count its deltas. Every MV row carries `marks`, a
-    * map of app_id -> max_batch_id holding ONE high-water mark PER query
-    * incarnation (Delta's txnAppId/txnVersion, all apps at once): a batch
-    * whose id is <= the stored mark for ITS OWN app is a replay and
+    * map of app_id -> (max_batch_id, seq) holding ONE high-water mark PER
+    * query incarnation (Delta's txnAppId/txnVersion, all apps at once): a
+    * batch whose id is <= the stored mark for ITS OWN app is a replay and
     * skips, while a FRESH incarnation (new checkpoint dir, batch ids
     * restarting at 0) merges normally. Keeping the whole map — not just
     * the last writer's pair — means incarnation B's merges cannot erase
     * incarnation A's mark, so a late replay from a still-draining A is
     * caught too (StreamMvSpec proves same-app no-op, fresh-app merge,
     * and the cross-incarnation replay). The map rides inside the state
-    * rows so mark + state commit in the same single write; the write
-    * itself goes through [[graft.sources.Warehouse.writeTableStaged]]
-    * (stage + rename swap), and the state is read back via
-    * [[graft.sources.Warehouse.readTableOrFiles]], so the guard survives
-    * a JVM crash or restart at ANY point — whichever complete copy the
-    * reader recovers, marks and aggregates are mutually consistent. The
-    * MV is read ONCE per batch (localCheckpoint), serving both the
-    * mark probe and the merge union. */
+    * rows so mark + state commit in the same record, and the state is read
+    * from the files, not the catalog, so the guard survives a JVM crash
+    * or restart at ANY point — whichever record is in force, marks and
+    * aggregates are mutually consistent. The live state is read ONCE per
+    * batch (localCheckpoint), serving both the mark probe and the merge
+    * union. */
   private[graft] def mergeQ1Mv(batch: DataFrame, mvTable: String,
                                batchId: Long, appId: String,
                                maxApps: Int = 64): Unit = synchronized {
     val spark = batch.sparkSession
-    val existing = graft.sources.Warehouse.readTableOrFiles(spark, mvTable)
-      .map(_.localCheckpoint(true))
+    val loc = Warehouse.tableLocation(spark, mvTable)
+    val live = Warehouse.live(spark, loc)
+    val existing = Warehouse.read(spark, live).map(_.localCheckpoint(true))
     // marks value = (batch_id, seq): seq is a monotone merge counter used
     // ONLY for retention ordering (which app wrote least recently)
-    val oldMarks: Map[String, (Long, Long)] = existing.flatMap { cur =>
-      if (cur.columns.contains("marks")) {
-        val structValued = cur.schema("marks").dataType match {
-          case org.apache.spark.sql.types.MapType(_, _: org.apache.spark.sql.types.StructType, _) => true
-          case _ => false
-        }
-        cur.select(col("marks")).limit(1).collect().headOption
-          .filterNot(_.isNullAt(0))
-          .map { r =>
-            if (structValued)
-              r.getMap[String, org.apache.spark.sql.Row](0)
-                .view.mapValues(v => (v.getLong(0), v.getLong(1))).toMap
-            else // map<string,long> generation: no seq recorded
-              r.getMap[String, Long](0).view.mapValues(b => (b, 0L)).toMap
-          }
-      } else if (cur.columns.contains("app_id"))
-        // MV written before the map schema: a single (app_id, max_batch_id)
-        // pair stamped on every row — lift it into the map form
-        cur.select(col("app_id"), col("max_batch_id")).limit(1).collect().headOption
-          .filterNot(_.isNullAt(0))
-          .map(r => Map(r.getString(0) -> (r.getLong(1), 0L)))
-      else None
-    }.getOrElse(Map.empty)
+    val oldMarks: Map[String, (Long, Long)] = existing.flatMap(
+      _.select(col("marks")).limit(1).collect().headOption.filterNot(_.isNullAt(0))
+    ).map(_.getMap[String, org.apache.spark.sql.Row](0)
+      .view.mapValues(v => (v.getLong(0), v.getLong(1))).toMap
+    ).getOrElse(Map.empty)
     if (oldMarks.get(appId).exists(_._1 >= batchId)) return
     val delta = normQ1State(graft.analytics.Queries.q1Partials(batch))
     val states = existing match {
@@ -504,9 +395,11 @@ object Streams {
     val newMarks =
       if (withNew.size <= maxApps) withNew
       else withNew.toSeq.sortBy { case (_, (_, seq)) => -seq }.take(maxApps).toMap
-    val merged = states.withColumn("marks", typedLit(newMarks))
-    val snap = merged.localCheckpoint(true)
-    graft.sources.Warehouse.writeTableStaged(snap, mvTable)
+    val dir = Warehouse.commitNext(spark, live)(
+      states.withColumn("marks", typedLit(newMarks)).write.mode("overwrite").parquet(_))
+    spark.sql(s"DROP TABLE IF EXISTS `$mvTable`")
+    spark.catalog.createTable(mvTable, dir, "parquet"): Unit
+    Warehouse.sweep(spark, loc)
   }
 
   /** The replay-guard app id for a checkpoint dir. The checkpoint dir IS

@@ -9,18 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.ann.Stages`; every DuckDB oracle that grades them takes its
   * cosine guard, dot fold, centroid-assignment and top-k windows from the
   * stages' SQL twins (`Stages.Sql`); every entry point gets its session
-  * from `graft.Harness`; and plans are read only by Bench's structural
-  * fingerprint, never as text. This scan fails, listing the offending
+  * from `graft.Harness`; plans are read only by Bench's structural
+  * fingerprint, never as text; and every filesystem commit (a rename) is
+  * `graft.sources.Warehouse`'s. This scan fails, listing the offending
   * lines, when a rule's token appears in its scope outside the rule's
   * allowed file — the copies that left artifact families keyed by path
-  * only and let the ANN files and their oracles drift apart. `Warehouse.readTableOrFiles` may ask the
-  * catalog: it reads stream state, not a derived artifact. */
+  * only and let the ANN files and their oracles drift apart. */
 class ArtifactGuardSpec extends AnyFunSuite {
 
   private val Registry = "graft/sources/Artifact.scala"
   private val Stages = "graft/ann/Stages.scala"
   private val Harness = "graft/Harness.scala"
   private val Bench = "graft/Bench.scala"
+  private val Warehouse = "graft/sources/Warehouse.scala"
   private val Everywhere = Seq("graft/")
   private val Search = Seq("graft/ann/", "graft/rag/Search.scala")
   private val Oracles = Seq("graft/ann/", "graft/rag/")
@@ -42,7 +43,8 @@ class ArtifactGuardSpec extends AnyFunSuite {
     ("ORDER BY cs DESC, cent_id)", "an oracle centroid-assignment window", Stages, Oracles),
     ("ORDER BY similarity DESC, vec_id)", "an oracle top-k window", Stages, Oracles),
     ("SparkSession.builder()", "a session builder", Harness, Everywhere),
-    ("executedPlan.toString", "a plan-text reader", Bench, Everywhere))
+    ("executedPlan.toString", "a plan-text reader", Bench, Everywhere),
+    (".rename(", "a filesystem commit", Warehouse, Everywhere))
 
   private def sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -62,10 +64,6 @@ class ArtifactGuardSpec extends AnyFunSuite {
       (token, what, allowed, scope) <- Forbidden
       if allowed == allowedFile && rel != allowed && scope.exists(rel.startsWith) &&
         line.contains(token)
-      enclosing = lines.take(i).reverseIterator
-        .collectFirst { case l if l.contains(" def ") => l.trim }.getOrElse("")
-      if !(rel == "graft/sources/Warehouse.scala" &&
-        token == "catalog.tableExists" && enclosing.startsWith("def readTableOrFiles("))
     } yield s"${f.getPath}:${i + 1}: $what — use $allowed: ${line.trim}"
   }
 
@@ -86,6 +84,11 @@ class ArtifactGuardSpec extends AnyFunSuite {
 
   test("plans are read through the fingerprint rendering only") {
     val found = offenders(Bench)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("filesystem commits go through the warehouse only") {
+    val found = offenders(Warehouse)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

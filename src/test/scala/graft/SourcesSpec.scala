@@ -322,95 +322,92 @@ class SourcesSpec extends SparkSpec {
       s"both predicates must be pushed to the scan:\n$planStr")
   }
 
-  test("staged table write survives catalog loss and ignores partial dirs") {
+  test("MV commit: every crash point leaves one state, in the catalog and in the files") {
     import spark.implicits._
-    val t = "graft_staged_spec"
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import graft.streaming.Streams
+    val t = "graft_commit_spec"
     Warehouse.dropStale(spark, t)
-    val df = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
-    Warehouse.writeTableStaged(df, t)
-    // in-session read through the catalog
-    assert(spark.table(t).count() == 2)
-    // a second overwrite swaps cleanly (exercises the rename path over an
-    // existing live dir + external catalog entry)
-    Warehouse.writeTableStaged(df.withColumn("k", col("k") + 10), t)
-    assert(spark.table(t).select(min(col("k"))).collect()(0).getLong(0) == 11L)
-    // simulate a JVM restart: the catalog forgets the (external) table but
-    // its files survive — readTableOrFiles must recover the state
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    val recovered = Warehouse.readTableOrFiles(spark, t)
-    assert(recovered.exists(_.count() == 2), "restart fallback must read the files")
-    // a writer that died mid-write leaves no _SUCCESS: such a dir must NOT
-    // be promoted to authoritative state
     val loc = Warehouse.tableLocation(spark, t)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"), false)
-    assert(Warehouse.readTableOrFiles(spark, t).isEmpty,
-      "a partial (no _SUCCESS) dir must be ignored")
-    Warehouse.dropStale(spark, t)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = loc.getFileSystem(conf)
+    // each merge adds n in-window rows to one q1 group, so count_order is
+    // the number of rows merged so far
+    def rows(n: Int) = Seq.fill(n)(Streams.LiDelta("A", "F", 1.0, 10.0, 0.0, 0.0,
+      java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))).toDF()
+    def merge(n: Int, id: Long): Unit = Streams.mergeQ1Mv(rows(n), t, id, "spec")
+    def count(df: org.apache.spark.sql.DataFrame): Long =
+      graft.analytics.Queries.q1MergeFinalize(df).head().getAs[Long]("count_order")
+    def live = Warehouse.live(spark, loc)
+    def named(prefix: String) =
+      fs.listStatus(loc).map(_.getPath.getName).filter(_.startsWith(prefix)).toSeq
+    def dirs = named("ingest=")
+    def records = named(Warehouse.RecordPrefix)
+    // a state directory unlike the live one: a reader that trusts it is caught
+    def forge(dir: Path, extra: Long): Unit =
+      Warehouse.read(spark, live).get.drop("ingest")
+        .withColumn("p_n", col("p_n") + extra).write.parquet(dir.toString)
+    // the catalog reader, then the files alone after DROP TABLE, the state
+    // a restart leaves (the next merge registers the table again)
+    def holds(expected: Long, what: String): Unit = {
+      assert(count(spark.table(t)) == expected, s"catalog: $what")
+      spark.sql(s"DROP TABLE $t")
+      assert(Warehouse.read(spark, live).map(count).contains(expected), s"files: $what")
+    }
 
-    // crash BETWEEN the swap renames: live dir gone, complete NEW state
-    // still in __stage. The reader must serve the newest complete copy,
-    // and repair must promote it to live before any cleanup can touch it
-    // (else a later write's stage cleanup erases the only copy of a
-    // checkpoint-committed batch)
-    Warehouse.writeTableStaged(df, t) // v1
-    df.withColumn("k", col("k") + 100)
-      .write.parquet(loc.toString + "__stage") // complete v2, as the swap stages it
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    assert(fs.rename(loc, new org.apache.hadoop.fs.Path(loc.toString + "__old")))
-    val crashRead = Warehouse.readTableOrFiles(spark, t)
-    assert(crashRead.exists(_.agg(min(col("k"))).collect()(0).getLong(0) == 101L),
-      "mid-swap crash must recover the NEWEST complete state (stage)")
-    Warehouse.repairStaged(spark, t)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(loc.toString + "__stage")),
-      "repair must promote stage to live")
-    assert(spark.read.parquet(loc.toString).agg(min(col("k"))).collect()(0).getLong(0) == 101L)
-    Warehouse.dropStale(spark, t)
-  }
+    merge(1, 0)
+    holds(1, "the first write")
+    merge(2, 1)
+    assert(dirs.size == 1 && records.size == 1, s"$dirs $records")
 
-  test("manifest sidecar convicts a torn directory copy despite _SUCCESS") {
-    import spark.implicits._
-    val t = "graft_manifest_spec"
+    // crash after the next state directory is written, before its record
+    forge(new Path(loc, s"ingest=compact_${live.compact + 1}"), 100)
+    holds(3, "a state directory whose record was never committed")
+    merge(4, 2)
+    holds(7, "the write after that crash")
+    assert(dirs.size == 1 && records.size == 1, s"the orphan must be swept: $dirs $records")
+
+    // crash after the record is committed, before the old state is deleted
+    merge(8, 3)
+    val old = live
+    val saved = new Path(Files.createTempDirectory("graft_commit_spec").toString)
+    val oldRecord = new Path(loc, s"${Warehouse.RecordPrefix}${old.version}")
+    Seq(old.dirs.head, oldRecord).foreach(p =>
+      FileUtil.copy(fs, p, fs, new Path(saved, p.getName), false, conf))
+    merge(16, 4)
+    Seq(old.dirs.head, oldRecord).foreach(p =>
+      FileUtil.copy(fs, new Path(saved, p.getName), fs, p, false, conf))
+    assert(dirs.size == 2 && records.size == 2, s"$dirs $records")
+    holds(31, "a committed record whose predecessor is not yet deleted")
+    // the replay guard travels in the files: re-delivering batch 4 is a no-op
+    merge(16, 4)
+    assert(Warehouse.read(spark, live).map(count).contains(31L), "a replay after a restart")
+
+    // a record naming a state directory without _SUCCESS (a torn copy), and
+    // a newer record that does not parse (no final newline), naming a
+    // complete directory: neither is used
+    merge(32, 5)
+    val good = live
+    Warehouse.commitNext(spark, good) { out =>
+      forge(new Path(out), 1000)
+      fs.delete(new Path(out, "_SUCCESS"), false): Unit
+    }: Unit
+    forge(new Path(loc, "ingest=compact_90"), 10000)
+    val torn = fs.create(new Path(loc, s"${Warehouse.RecordPrefix}${good.version + 2}"))
+    try torn.write("compact_90\t".getBytes("UTF-8")) finally torn.close()
+    holds(63, "a torn state directory or an unparsable record")
+    merge(64, 6)
+    holds(127, "the write after them")
+    assert(dirs.size == 1 && records.size == 1, s"$dirs $records")
+
+    // retention: the location never holds more than two of either
+    (7L until 57L).foreach { id =>
+      merge(1, id)
+      assert(dirs.size <= 2 && records.size <= 2, s"after batch $id: $dirs $records")
+    }
+    holds(177, "50 consecutive writes")
     Warehouse.dropStale(spark, t)
-    val df = (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v")
-      .repartition(4) // several data files: a torn copy can lose just one
-    Warehouse.writeTableStaged(df, t)
-    val loc = Warehouse.tableLocation(spark, t)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(loc, "_GRAFT_MANIFEST")),
-      "staged write must leave a manifest sidecar")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    assert(Warehouse.readTableOrFiles(spark, t).exists(_.count() == 50))
-    // a torn object-store "rename": a data file vanished while _SUCCESS
-    // (and the manifest, which sorts before it in a listing-ordered copy)
-    // survived — _SUCCESS alone would wrongly bless this dir
-    val part = fs.listStatus(loc)
-      .filter(s => s.getPath.getName.startsWith("part-")).head.getPath
-    fs.delete(part, false)
-    assert(Warehouse.readTableOrFiles(spark, t).isEmpty,
-      "a dir missing a manifested file must NOT be trusted")
-    // a torn copy with a SHORT file (length mismatch) is equally convicted
-    Warehouse.dropStale(spark, t)
-    Warehouse.writeTableStaged(df, t)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    val part2 = fs.listStatus(loc)
-      .filter(s => s.getPath.getName.startsWith("part-")).head.getPath
-    fs.delete(part2, false)
-    val out = fs.create(part2, true)
-    out.write(Array[Byte](1, 2, 3)); out.close()
-    assert(Warehouse.readTableOrFiles(spark, t).isEmpty,
-      "a dir with a truncated manifested file must NOT be trusted")
-    // a copy that tore the MANIFEST itself (no tab, no parsable length)
-    // is evidence against the dir too: convict, don't crash
-    Warehouse.dropStale(spark, t)
-    Warehouse.writeTableStaged(df, t)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    val mf = fs.create(new org.apache.hadoop.fs.Path(loc, "_GRAFT_MANIFEST"), true)
-    mf.write("part-torn-no-tab".getBytes("UTF-8")); mf.close()
-    assert(Warehouse.readTableOrFiles(spark, t).isEmpty,
-      "an unparsable manifest must convict the dir, not crash the reader")
-    Warehouse.dropStale(spark, t)
+    fs.delete(saved, true): Unit
   }
 
   test("documents survive an ORC round-trip with pushdown intact") {

@@ -25,9 +25,9 @@ class StreamMvSpec extends SparkSpec {
     assert(rows.length > 100)
 
     val mvTable = "graft_h11_mv_spec"
-    // dropStale clears the catalog entry AND the parquet files (incl. the
-    // staged-swap siblings) a previous JVM's run left behind — DROP alone
-    // forgets the table but readTableOrFiles would resurrect stale state
+    // dropStale clears the catalog entry AND the parquet files (state
+    // directories and records) a previous JVM's run left behind — DROP
+    // alone forgets the table but the next merge would resurrect its state
     graft.sources.Warehouse.dropStale(spark, mvTable)
     val stream = MemoryStream[LiDelta]
     val ckptDir = s"/tmp/graft_h11_ckpt_${System.nanoTime()}"
