@@ -25,46 +25,6 @@ object Dedup {
   /** The source every dedup artifact derives from. */
   private val Docs = Seq("documents.parquet")
 
-  /** Exploded DISTINCT 60-bit-HASHED word n-gram shingles: one row per
-    * (doc_id, hs), plus carried metadata columns.
-    *
-    * Built ROW-LOCALLY (r17 optimization round, guide §2.4): arrays_zip of
-    * n shifted slices of the pre-projected token array (the t7 bigram
-    * pattern, and exactly the oracle's list_transform over range). The
-    * r1-r16 shape was posexplode + lead-Window — chosen over array
-    * higher-order functions because HOF LAMBDAS are interpreted outside
-    * whole-stage codegen — but it paid an
-    * Exchange(hashpartitioning(doc_id)) + Sort over the FULL token stream
-    * before hashing, a whole extra shuffle of the corpus parse (the
-    * dominant dedup build pass at 100 TB). arrays_zip/slice are plain
-    * codegen'd expressions (no lambda, so the old HOF objection does not
-    * apply), and the token array is projected ONCE so the split is not
-    * re-evaluated per slice. Same shingle set: slice o covers token
-    * positions o..o+size−n; docs shorter than n tokens zip to an empty
-    * array, exactly the old lead-not-null drop. The trailing distinct is
-    * unchanged and now carries the parse's ONLY exchange.
-    *
-    * Shingles are hashed to 60-bit longs (md5-derived, oracle-reproducible)
-    * BEFORE the distinct, so every downstream shuffle and join — dedup,
-    * signature build, inverted-index verification — moves 8-byte keys
-    * instead of ~25-char strings: 3-4x less exchange traffic at 100 TB.
-    * At 2^60 the collision probability over even billions of distinct
-    * shingles is negligible (~n^2/2^61), and both engines hash identically
-    * so any collision affects them identically. */
-  private def shingleHashRows(df: DataFrame, n: Int, carry: Seq[String]): DataFrame = {
-    val keyCols = col("doc_id") +: carry.map(col)
-    val withWs = df.select(keyCols :+ split(col("text"), " ").as("ws"): _*)
-    val zipped = arrays_zip((0 until n).map(o =>
-      slice(col("ws"), lit(o + 1), greatest(size(col("ws")) - (n - 1), lit(0))).as(s"w$o")): _*)
-    withWs.select(keyCols :+ explode(zipped).as("sh"): _*)
-      // h60nn: hs is the join key of every downstream index probe — the
-      // non-nullable type folds away inferred IsNotNull filters that
-      // would re-run the md5 chain per row (DetHash.h60nn scaladoc)
-      .select(keyCols :+ DetHash.h60nn(concat_ws(" ",
-        (0 until n).map(o => col(s"sh.w$o")): _*)).as("hs"): _*)
-      .distinct()
-  }
-
   /** The 3-gram shingle index, an artifact written as a
     * parquet table bucketed+sorted by doc_id, then read by every consumer —
     * d2/d6/d7/d8 between them walk the index ~7 times per run (signature
@@ -79,7 +39,7 @@ object Dedup {
   private def shingleIndex3(spark: SparkSession, dir: String): DataFrame =
     Artifact.table(spark, "sh3", dir, Docs) { t =>
       Warehouse.writeBucketed(
-        shingleHashRows(Tables.documents(spark, dir), 3, Nil), t, "doc_id")
+        DupStages.shingles(Tables.documents(spark, dir), 3), t, "doc_id")
     }
 
   /** C1: exact dedup — md5 hash groups with canonical (min) doc id. */
@@ -89,17 +49,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("canonical_doc_id"))
       .withColumn("is_dup_group", col("n_docs") > 1)
       .orderBy("content_hash")
-
-  /** MinHash universal-hash permutation coefficients over the Mersenne prime
-    * 2^31-1: h_p(x) = (a_p * x + b_p) mod M with md5-derived a_p, b_p.
-    * One md5 per shingle total; the 16 permutations are integer arithmetic
-    * (codegen'd, no per-permutation hashing). Values are inlined as literals
-    * in both the Spark plan and the DuckDB oracle. */
-  private[graft] val MersenneM = 2147483647L
-  private[graft] val MinhashCoef: Seq[(Long, Long)] =
-    (0 until 16).map { p =>
-      (DetHash.h60Local(s"ma$p") % (MersenneM - 1) + 1, DetHash.h60Local(s"mb$p") % MersenneM)
-    }
 
   /** C2: MinHash + LSH banding. 16 permutations over word 3-gram shingles,
     * 4 bands x 4 rows; candidates = band-hash collisions; Jaccard >= 0.5
@@ -111,48 +60,14 @@ object Dedup {
     * Plan shape at scale: explode shingles (narrow) -> one md5 each ->
     * groupBy(doc) with 16 min() partial aggs (one shuffle) -> band explode
     * (x4) -> equality self-join on (band, band_hash) -> count-join verify.
-    */
-  /** MinHash signatures (sig0..sig15 + per-doc shingle count n) from the
-    * shingle index — the minima AND the count ride ONE groupBy shuffle
-    * (exchange-free on the bucketed index layout). */
-  private def minhashSigFrom(ex: DataFrame): DataFrame = {
-    val hashed = ex.withColumn("h31", col("hs") % MersenneM)
-    val aggs = MinhashCoef.zipWithIndex.map { case ((a, b), p) =>
-      min((lit(a) * col("h31") + lit(b)) % MersenneM).as(s"sig$p")
-    } :+ count(lit(1)).as("n")
-    hashed.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The signature table artifact: like
-    * the shingle index it derives deterministically from the corpus
-    * version and feeds d2, d7, and d9 (signatures, band rows, and the
-    * per-doc shingle counts all read it) — in production it is the stored
-    * output of the signature-build pass, bucketed by doc_id so the
-    * count-attach joins stay exchange-free. */
+    * The signature table is an artifact: like the shingle index it derives
+    * deterministically from the corpus version and feeds d2, d7, d9 and
+    * d10 (signatures, band rows, and the per-doc shingle counts all read
+    * it), bucketed by doc_id so the count-attach joins stay exchange-free. */
   private def minhashSig(spark: SparkSession, dir: String): DataFrame =
     Artifact.table(spark, "mhsig", dir, Docs) { t =>
-      Warehouse.writeBucketed(minhashSigFrom(shingleIndex3(spark, dir)), t, "doc_id")
+      Warehouse.writeBucketed(DupStages.signature(shingleIndex3(spark, dir)), t, "doc_id")
     }
-
-  /** LSH band rows (doc_id, b, bh) — 4 bands x 4 rows over the 16 minima. */
-  private def lshBands(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"),
-        explode(array((0 until 4).map { b =>
-          struct(lit(b).as("b"),
-            md5(concat_ws(",", (0 until 4).map(o => col(s"sig${4 * b + o}").cast("string")): _*)).as("bh"))
-        }: _*)).as("band"))
-      .select(col("doc_id"), col("band.b").as("b"), col("band.bh").as("bh"))
-
-  /** LSH banding over the signatures -> distinct candidate (doc_a < doc_b)
-    * pairs colliding on at least one band. */
-  private def lshCandidates(sig: DataFrame): DataFrame = {
-    val bands = lshBands(sig)
-    bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-  }
 
   def d2MinhashLsh(spark: SparkSession, dir: String): DataFrame =
     d2VerifiedPairs(spark, dir, candSampleMod = None)
@@ -196,18 +111,11 @@ object Dedup {
     // per branch.
     val ex = shingleIndex3(spark, dir)
     val sig = minhashSig(spark, dir)
-    val cand = candSlice.foldLeft(lshCandidates(sig)) { case (c, (m, r)) =>
+    val cand = candSlice.foldLeft(DupStages.candidates(sig)) { case (c, (m, r)) =>
       c.filter(col("doc_a") % m === r)
     }
-    val nsh = sig.select(col("doc_id"), col("n"))
-    val inter = cand
-      .join(ex.select(col("doc_id").as("doc_a"), col("hs")), "doc_a")
-      .join(ex.select(col("doc_id").as("doc_b"), col("hs")), Seq("doc_b", "hs"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
-    inter
-      .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .withColumn("jaccard", Exact.ratio6(col("i"), col("na") + col("nb") - col("i")))
+    DupStages.sized(DupStages.probe(cand, ex, "doc_a", "doc_b"), sig, "doc_a", "doc_b")
+      .withColumn("jaccard", DupStages.jaccard(Exact.ratio6))
       .filter(col("jaccard") >= 0.5)
       .select("doc_a", "doc_b", "jaccard")
   }
@@ -230,33 +138,23 @@ object Dedup {
       d2VerifiedPairsSlice(spark, dir, Some((passes, r)))
     }
 
-  /** The FULL cluster assignment from the multipass pair set, an
-    * artifact written as a bucketed table — [[clusterTable]]'s
-    * bounded-disk twin, and the shared drop-set source for every FULL-chain
-    * deliverable (d6/d8/p1/p5/p8f). Same staging-freshness contract as
-    * [[d2MultipassPairs]]. */
+  /** The FULL cluster assignment ([[DupStages.clusters]]) of the
+    * multipass pair set — [[clusterTable]]'s bounded-disk twin, and the
+    * drop-set source for every FULL-chain deliverable (d6/d8/p1/p5/p8f).
+    * Same staging-freshness contract as [[d2MultipassPairs]]. */
   private[graft] def clusterTableMultipass(spark: SparkSession, dir: String,
                                            passes: Int, staging: String): DataFrame =
     Artifact.table(spark, "ccf", dir, Docs) { t =>
-      val pairs = d2MultipassPairs(spark, dir, passes, staging)
-        .select("doc_a", "doc_b").persist()
-      Warehouse.writeBucketed(
-        connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-        t, "doc_id")
-      pairs.unpersist()
+      DupStages.clusters(d2MultipassPairs(spark, dir, passes, staging), t)
     }
 
   /** C6-FULL: d6's cluster report over the MULTIPASS full pair set —
     * byte-equal output to [[d6DupClusters]] (spec-pinned at sf0.01 via
-    * pair-set equality; the clustering and report tail are shared), at
-    * bounded per-pass disk instead of one corpus-sized verify job. */
+    * pair-set equality), at bounded per-pass disk instead of one
+    * corpus-sized verify job. */
   private[graft] def d6DupClustersFull(spark: SparkSession, dir: String,
-                                       passes: Int, staging: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    clusterTableMultipass(spark, dir, passes, staging)
-      .withColumn("cluster_size", count(lit(1)).over(w))
-      .orderBy("doc_id")
-  }
+                                       passes: Int, staging: String): DataFrame =
+    DupStages.clusterReport(clusterTableMultipass(spark, dir, passes, staging))
 
   /** C8-FULL: d8's canonical corpus with the near-dup drop set from the
     * FULL multipass clustering — the registered d8 exactly, at bounded
@@ -283,53 +181,29 @@ object Dedup {
     * the 60-bit form is what the DuckDB oracle replays. */
   val D3Hamming = 3
 
-  /** The 60-bit SimHash signature table artifact — one row per doc,
-    * another stored signature-build output.
-    * Per-token hash once, then ALL 60 bit-sums as map-side partial
-    * aggregates in ONE groupBy — summing +-1 per occurrence equals the
-    * count-weighted per-distinct-word sum, so no (doc, word) pre-count
-    * and, crucially, no 60x bit-explode shuffle (that shape moves 60x
-    * the token count through the exchange at 100 TB). */
-  private def simhashSig(spark: SparkSession, dir: String): DataFrame =
-    Artifact.table(spark, "shsig", dir, Docs) { t =>
-      val tok = Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .withColumn("h", DetHash.h60(col("w")))
-      val bitAggs = (0 until 60).map { b =>
-        sum(expr(s"2 * ((h >> $b) & 1) - 1")).as(s"s$b")
-      }
-      val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-        .select(col("doc_id"),
-          (0 until 60).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-            .reduce(_ + _).as("sig"))
-      Warehouse.writeBucketed(sig, t, "doc_id")
+  /** The SimHash signature table artifact of `halves` ([[DupStages.simhash]])
+    * under `kind` — one row per doc, another stored signature-build output. */
+  private def simhashSig(spark: SparkSession, dir: String, kind: String,
+                         halves: Seq[DupStages.SimhashHalf]): DataFrame =
+    Artifact.table(spark, kind, dir, Docs) { t =>
+      Warehouse.writeBucketed(
+        DupStages.simhash(Tables.documents(spark, dir), halves), t, "doc_id")
     }
+
+  /** d3's chunk value: chunk c of the 60-bit signature, `chunkCount` equal
+    * chunks (Spark and DuckDB parse the same text). */
+  private def chunkValue(chunkCount: Int): String =
+    s"(sig >> (${60 / chunkCount} * c)) & ${(1L << (60 / chunkCount)) - 1}"
+
+  /** d3w's chunk value: 4 x 30-bit chunks, two from each 60-bit half. */
+  private val WideChunkValue = {
+    val mask = (1L << 30) - 1
+    s"CASE WHEN c < 2 THEN (sig0 >> (30 * c)) & $mask" +
+      s" ELSE (sig1 >> (30 * (c - 2))) & $mask END"
+  }
 
   def d3Simhash(spark: SparkSession, dir: String): DataFrame =
     d3SimhashChunked(spark, dir, chunkCount = 4)
-
-  /** The 120-bit signature table (doc_id, sig0, sig1): two INDEPENDENT
-    * md5-derived 60-bit halves (h60(w) and the seeded h60("1:" + w)), all
-    * 120 bit-sums as map-side partial aggregates in the SAME single
-    * groupBy shape as [[simhashSig]] — the wide build costs one more
-    * column pass, never a second shuffle. */
-  private def simhashSigWide(spark: SparkSession, dir: String): DataFrame =
-    Artifact.table(spark, "shsigw", dir, Docs) { t =>
-      val tok = Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .withColumn("h0", DetHash.h60(col("w")))
-        .withColumn("h1", DetHash.h60Seeded(lit(1), col("w")))
-      val bitAggs =
-        (0 until 60).map(b => sum(expr(s"2 * ((h0 >> $b) & 1) - 1")).as(s"a$b")) ++
-          (0 until 60).map(b => sum(expr(s"2 * ((h1 >> $b) & 1) - 1")).as(s"b$b"))
-      val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-        .select(col("doc_id"),
-          (0 until 60).map(b => when(col(s"a$b") > 0, lit(1L << b)).otherwise(0L))
-            .reduce(_ + _).as("sig0"),
-          (0 until 60).map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(0L))
-            .reduce(_ + _).as("sig1"))
-      Warehouse.writeBucketed(sig, t, "doc_id")
-    }
 
   /** C3b (d3w, r14): the WIDE SimHash the C3 scaladoc promised for the
     * regime where n^2/2^15 bucket pressure bites (~100 TB corpora) — a
@@ -343,26 +217,10 @@ object Dedup {
     * pressure — spec pins d3w pairs ⊆ d3 pairs, exact dups at hamming 0);
     * a deployment matching d3's cosine bar instead would raise the
     * threshold and the chunk count together (7 x ~17-bit chunks). */
-  def d3wSimhashWide(spark: SparkSession, dir: String): DataFrame = {
-    val sig = simhashSigWide(spark, dir)
-    val mask = (1L << 30) - 1
-    val chunks = sig.select(col("doc_id"), col("sig0"), col("sig1"),
-        explode(sequence(lit(0), lit(3))).as("c"))
-      .withColumn("cv", expr(
-        s"CASE WHEN c < 2 THEN (sig0 >> (30 * c)) & $mask" +
-          s" ELSE (sig1 >> (30 * (c - 2))) & $mask END"))
-    val cand = chunks.as("x").join(chunks.as("y"),
-        col("x.c") === col("y.c") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.sig0").as("sa0"), col("x.sig1").as("sa1"),
-        col("y.sig0").as("sb0"), col("y.sig1").as("sb1"))
-      .distinct()
-    cand.withColumn("hamming", expr("bit_count(sa0 ^ sb0) + bit_count(sa1 ^ sb1)"))
-      .filter(col("hamming") <= D3Hamming)
-      .select("doc_a", "doc_b", "hamming")
+  def d3wSimhashWide(spark: SparkSession, dir: String): DataFrame =
+    DupStages.hammingPairs(simhashSig(spark, dir, "shsigw", DupStages.Simhash120),
+        DupStages.Simhash120, 4, WideChunkValue, lit(true))
       .orderBy("doc_a", "doc_b")
-  }
 
   private[graft] def d3SimhashChunked(spark: SparkSession, dir: String,
                                       chunkCount: Int): DataFrame =
@@ -382,22 +240,8 @@ object Dedup {
     require(60 % chunkCount == 0 && chunkCount > D3Hamming,
       s"chunkCount must divide 60 and exceed the hamming bound $D3Hamming " +
         s"(pigeonhole completeness); got $chunkCount")
-    val width = 60 / chunkCount
-    val mask = (1L << width) - 1
-    val sig = simhashSig(spark, dir)
-    val chunks = sig.select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(chunkCount - 1))).as("c"))
-      .withColumn("cv", expr(s"(sig >> ($width * c)) & $mask"))
-      .filter(cvPred)
-    val cand = chunks.as("x").join(chunks.as("y"),
-        col("x.c") === col("y.c") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.sig").as("sa"), col("y.sig").as("sb"))
-      .distinct()
-    cand.withColumn("hamming", expr("bit_count(sa ^ sb)"))
-      .filter(col("hamming") <= D3Hamming)
-      .select("doc_a", "doc_b", "hamming")
+    DupStages.hammingPairs(simhashSig(spark, dir, "shsig", DupStages.Simhash60),
+      DupStages.Simhash60, chunkCount, chunkValue(chunkCount), cvPred)
   }
 
   /** C3-FULL (r17): d3 in `passes` bounded cv-residue passes — the shape
@@ -423,21 +267,14 @@ object Dedup {
     // explode+window chain otherwise executes 4x per query, per run)
     val ex = Artifact.table(spark, "sh4", dir, Docs) { t =>
       Warehouse.writeBucketed(
-        shingleHashRows(
+        DupStages.shingles(
           Tables.documents(spark, dir)
             .withColumn("len_bucket", (col("n_chars") / 200).cast("long")),
           4, Seq("lang", "len_bucket")), t, "doc_id")
     }
     val nsh = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = ex.as("x").join(ex.as("y"),
-        col("x.hs") === col("y.hs") && col("x.lang") === col("y.lang") &&
-          col("x.len_bucket") === col("y.len_bucket") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .withColumn("jaccard", Exact.ratio6(col("i"), col("na") + col("nb") - col("i")))
+    DupStages.sized(DupStages.selfJoin(ex, ex, Seq("lang", "len_bucket")), nsh, "doc_a", "doc_b")
+      .withColumn("jaccard", DupStages.jaccard(Exact.ratio6))
       .filter(col("jaccard") >= 0.3)
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
@@ -612,28 +449,14 @@ object Dedup {
     * truncates lineage (localCheckpoint here; a reliable checkpoint dir on
     * a real cluster) so analysis cost stays constant per round. A
     * non-converged exit is an ERROR, not a silent wrong answer. */
-  def d6DupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    clusterTable(spark, dir)
-      .withColumn("cluster_size", count(lit(1)).over(w))
-      .orderBy("doc_id")
-  }
+  def d6DupClusters(spark: SparkSession, dir: String): DataFrame =
+    DupStages.clusterReport(clusterTable(spark, dir))
 
-  /** The (doc_id, cluster_id) near-dup cluster assignment, an artifact
-    * written as a bucketed table — the d2 candidate
-    * chain plus the iterative CC loop is the most expensive index build in
-    * the dedup family, and both d6 (cluster report) and d8 (canonical
-    * corpus) consume it; clustering is also inherently a whole-corpus
-    * artifact, so at warehouse scale it IS a written table, not a
-    * per-query recompute. Same within-session immutable-input assumption
-    * as [[shingleIndex3]]. */
+  /** The (doc_id, cluster_id) near-dup cluster assignment of the d2 pairs
+    * ([[DupStages.clusters]]), consumed by d6 and d8. */
   private[graft] def clusterTable(spark: SparkSession, dir: String): DataFrame =
     Artifact.table(spark, "cc", dir, Docs) { t =>
-      val pairs = d2MinhashLsh(spark, dir).select("doc_a", "doc_b").persist()
-      Warehouse.writeBucketed(
-        connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-        t, "doc_id")
-      pairs.unpersist()
+      DupStages.clusters(d2MinhashLsh(spark, dir), t)
     }
 
   /** C6s/C8s shared artifact (r15, verdict r14 #3): the SAMPLED-chain
@@ -652,20 +475,12 @@ object Dedup {
     * sampled stream divides it by the sample rate. */
   private[graft] def clusterTableSampled(spark: SparkSession, dir: String): DataFrame =
     Artifact.table(spark, "ccs", dir, Docs) { t =>
-      val pairs = d2sMinhashLshSampled(spark, dir).select("doc_a", "doc_b").persist()
-      Warehouse.writeBucketed(
-        connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-        t, "doc_id")
-      pairs.unpersist()
+      DupStages.clusters(d2sMinhashLshSampled(spark, dir), t)
     }
 
   /** C6s: d6's cluster report over the sampled-chain assignment. */
-  def d6sDupClustersSampled(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    clusterTableSampled(spark, dir)
-      .withColumn("cluster_size", count(lit(1)).over(w))
-      .orderBy("doc_id")
-  }
+  def d6sDupClustersSampled(spark: SparkSession, dir: String): DataFrame =
+    DupStages.clusterReport(clusterTableSampled(spark, dir))
 
   /** Connected components over an undirected pair list (doc_a, doc_b) —
     * returns (doc_id, lbl) where lbl is the smallest reachable id.
@@ -747,76 +562,52 @@ object Dedup {
     * pair-count groupBy) is unchanged and never all-pairs. */
   val D7DfCap = 100
 
-  /** The df-capped (stop-shingle-free) inverted index, an artifact
-    * BUCKETED BY SHINGLE HASH — the join key of
-    * every consumer: d7's exhaustive truth join and d10's decontamination
-    * probe both self/semi-join it on hs, so the bucketed layout makes
-    * those joins exchange-free. One groupBy (df) + one semi join at build
-    * time, amortized across consumers. */
+  /** The df-capped (stop-shingle-free) inverted index ([[DupStages.rare]]),
+    * an artifact BUCKETED BY SHINGLE HASH — the join key of every
+    * consumer: d7's exhaustive truth join and d10's decontamination probe
+    * both self/semi-join it on hs, so the bucketed layout makes those
+    * joins exchange-free. One groupBy (df) + one semi join at build time,
+    * amortized across consumers. */
   private def rareShingleIndex(spark: SparkSession, dir: String): DataFrame =
     Artifact.table(spark, "rare3", dir, Docs) { t =>
-      val ex = shingleIndex3(spark, dir)
-      Warehouse.writeBucketed(
-        ex.join(
-          ex.groupBy("hs").agg(count(lit(1)).as("df"))
-            .filter(col("df") <= D7DfCap).select("hs"),
-          Seq("hs"), "left_semi"), t, "hs")
+      Warehouse.writeBucketed(DupStages.rare(shingleIndex3(spark, dir)), t, "hs")
     }
 
-  /** The exhaustive near-dup ground-truth pair set (Jaccard >= 0.5 over
-    * the rare-shingle inverted index), an artifact — in practice a recall-eval asset is a STORED artifact
-    * versioned with the corpus, recomputed on refresh, probed by every
-    * eval run. The inverted-index pair join (~sum(df^2) rows through one
-    * exchange, df-capped) is the dominant build cost; the stored result
-    * is just id pairs. */
-  private def truthPairs(spark: SparkSession, dir: String): DataFrame =
-    Artifact.table(spark, "truth3", dir, Docs) { t =>
-      val sig = minhashSig(spark, dir)
-      val nsh = sig.select(col("doc_id"), col("n"))
-      val rare = rareShingleIndex(spark, dir)
-      val inter = rare.as("x").join(rare.as("y"),
-          col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("i"))
-      Warehouse.writeBucketed(
-        inter
-          .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-          .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-          .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
-          .select("doc_a", "doc_b"), t, "doc_a")
-    }
+  /** d7s's query-sample modulus. */
+  private[graft] val D7sMod = 101
 
-  /** The LSH candidate-pair set, an artifact — the d7/d7s recall grades probe it (r17 optimization round): like
-    * [[truthPairs]], the candidate index a recall eval scores is a STORED
-    * asset versioned with the corpus (it derives deterministically from
-    * the signature table), and before this each recall run re-ran the
-    * band self-join + DISTINCT and then localCheckpointed the result to
-    * feed its two aggregate consumers. The d2 queries keep deriving
-    * candidates inline — candidate GENERATION is the operator d2 grades;
-    * candidate RECALL is what d7 grades, and it probes the stored set. */
+  /** The near-dup ground-truth pairs ([[DupStages.truth]]), bucketed by
+    * doc_a: the full set (`truth3`) or, for `sampleMod` m, its
+    * doc_a % m == 0 slice (`truth3s`, keyed by m unless m is
+    * [[D7sMod]]). */
+  private[graft] def truthPairs(spark: SparkSession, dir: String,
+                                sampleMod: Option[Int] = None): DataFrame = {
+    val params = sampleMod.filter(_ != D7sMod).fold("")(m => s"_m$m")
+    Artifact.table(spark, if (sampleMod.isEmpty) "truth3" else "truth3s", dir, Docs, params) { t =>
+      Warehouse.writeBucketed(
+        DupStages.truth(rareShingleIndex(spark, dir), minhashSig(spark, dir), sampleMod),
+        t, "doc_a")
+    }
+  }
+
+  /** The LSH candidate-pair set, an artifact — the d7/d7s recall grades
+    * probe it (r17 optimization round): like [[truthPairs]], the candidate
+    * index a recall eval scores is a STORED asset versioned with the
+    * corpus (it derives deterministically from the signature table). The
+    * d2 queries keep deriving candidates inline — candidate GENERATION is
+    * the operator d2 grades; candidate RECALL is what d7 grades, and it
+    * probes the stored set. */
   private def candPairsTable(spark: SparkSession, dir: String): DataFrame =
     Artifact.table(spark, "cand3", dir, Docs) { t =>
       Warehouse.writeBucketed(
-        lshCandidates(minhashSig(spark, dir)), t, "doc_a")
+        DupStages.candidates(minhashSig(spark, dir)), t, "doc_a")
     }
 
-  def d7LshRecall(spark: SparkSession, dir: String): DataFrame = {
-    val cand = candPairsTable(spark, dir)
-    val truth = truthPairs(spark, dir)
-    // both sides are stored assets bucketed by doc_a (r17) — the former
-    // per-run band self-join + eager localCheckpoint are build-time now
-    val caught = truth.join(cand, Seq("doc_a", "doc_b"))
-    truth.agg(count(lit(1)).as("n_true_pairs"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_lsh_candidates")))
-      .crossJoin(caught.agg(count(lit(1)).as("n_caught")))
-      // empty truth set: emit null recall (DuckDB's // would raise on /0,
-      // Spark's IntegralDivide yields null — pin both engines to null)
-      .withColumn("recall", when(col("n_true_pairs") === 0, lit(null).cast("double"))
-        .otherwise(Exact.ratio6(col("n_caught"), col("n_true_pairs"))))
-  }
+  def d7LshRecall(spark: SparkSession, dir: String): DataFrame =
+    lshRecall(spark, dir, sampleMod = None)
 
-  /** C7b (d7s): d7's recall grade over a deterministic 1-in-101 QUERY
-    * SAMPLE — the scaled-corpus verification path (VERDICT r10 #3's
+  /** C7b (d7s): d7's recall grade over a deterministic 1-in-[[D7sMod]]
+    * QUERY SAMPLE — the scaled-corpus verification path (VERDICT r10 #3's
     * "sampled-hash equivalent"). d7's exhaustive truth join costs
     * sum(df^2) over the rare-shingle index; on a replication-scaled
     * corpus every surviving rare shingle sits AT the df cap (sf10: each
@@ -825,54 +616,20 @@ object Dedup {
     * absorbs that distributed — d7 itself stays the committed full grade
     * — but the single-node DuckDB oracle died on temp disk at sf10 even
     * with the shared CTEs materialized. Restricting the truth join's
-    * LEFT (smaller-doc_id) side to doc_id % 101 == 0 divides the pair
-    * stream by the sample rate while leaving the GRADED OBJECT — the
-    * full LSH candidate index — untouched, so the recall estimate is
-    * exact over the sampled queries and the oracle is a hash compare at
-    * every scale. Same output schema as d7. */
-  /** The SAMPLED truth-pair asset ([[truthPairs]]' 1-in-101 twin),
-    * an artifact — same production rule: a
-    * recall-eval ground truth is a stored artifact recomputed on corpus
-    * refresh, probed by every eval run (r17). The sample filter stays
-    * INSIDE the build (x side of the hs-bucketed self-join) so the build
-    * never needs the full pair stream — the property that lets d7s grade
-    * the full 5M-doc index at sf100d where the unsampled build is the
-    * documented disk wall. Content == truthPairs WHERE doc_a % 101 = 0
-    * (doc_a is the smaller id, exactly the sampled x side). */
-  private def truthPairsSampled(spark: SparkSession, dir: String): DataFrame =
-    Artifact.table(spark, "truth3s", dir, Docs) { t =>
-      val sig = minhashSig(spark, dir)
-      val nsh = sig.select(col("doc_id"), col("n"))
-      val rare = rareShingleIndex(spark, dir)
-      // sample filter on the bucketed index's x side only: the
-      // hs-bucketed self-join stays exchange-free, the pair stream
-      // shrinks 101x
-      val inter = rare.filter(col("doc_id") % 101 === 0).as("x")
-        .join(rare.as("y"),
-          col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("i"))
-      Warehouse.writeBucketed(
-        inter
-          .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-          .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-          .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
-          .select("doc_a", "doc_b"), t, "doc_a")
-    }
+    * LEFT (smaller-doc_id) side to the sample divides the pair stream by
+    * the sample rate while leaving the GRADED OBJECT — the full LSH
+    * candidate index — untouched, so the recall estimate is exact over
+    * the sampled queries and the oracle is a hash compare at every scale.
+    * Same output schema as d7. */
+  def d7sLshRecallSampled(spark: SparkSession, dir: String): DataFrame =
+    lshRecall(spark, dir, Some(D7sMod))
 
-  def d7sLshRecallSampled(spark: SparkSession, dir: String): DataFrame = {
-    // both sides stored assets (r17, see d7LshRecall): the sampled truth
-    // build and the candidate index are once-per-corpus cold cost; the
-    // recall grade itself is three joins/aggregates over id pairs
-    val cand = candPairsTable(spark, dir)
-    val truth = truthPairsSampled(spark, dir)
-    val caught = truth.join(cand, Seq("doc_a", "doc_b"))
-    truth.agg(count(lit(1)).as("n_true_pairs"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_lsh_candidates")))
-      .crossJoin(caught.agg(count(lit(1)).as("n_caught")))
-      .withColumn("recall", when(col("n_true_pairs") === 0, lit(null).cast("double"))
-        .otherwise(Exact.ratio6(col("n_caught"), col("n_true_pairs"))))
-  }
+  /** [[DupStages.recall]] of the stored candidate index against the stored
+    * truth pairs of `sampleMod`: both builds are once-per-corpus cold
+    * cost, the grade itself is three joins/aggregates over id pairs. */
+  private def lshRecall(spark: SparkSession, dir: String,
+                        sampleMod: Option[Int]): DataFrame =
+    DupStages.recall(candPairsTable(spark, dir), truthPairs(spark, dir, sampleMod))
 
   /** C8: the deduplicated corpus itself — what a training pipeline ships.
     * Survivors = exact-canonical docs (min doc_id per content hash, a
@@ -926,21 +683,14 @@ object Dedup {
     val isNew = col("doc_id") % 10 === 0
     val ex = shingleIndex3(spark, dir)
     val sig = minhashSig(spark, dir)
-    val bands = lshBands(sig)
+    val bands = DupStages.bands(sig)
     val mixed = bands.filter(isNew).as("x")
       .join(bands.filter(!isNew).as("y"),
         col("x.b") === col("y.b") && col("x.bh") === col("y.bh"))
       .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("ex_id"))
       .distinct()
-    val nsh = sig.select(col("doc_id"), col("n"))
-    val inter = mixed
-      .join(ex.select(col("doc_id").as("new_id"), col("hs")), "new_id")
-      .join(ex.select(col("doc_id").as("ex_id"), col("hs")), Seq("ex_id", "hs"))
-      .groupBy("new_id", "ex_id").agg(count(lit(1)).as("i"))
-    val ver = inter
-      .join(nsh.select(col("doc_id").as("new_id"), col("n").as("na")), "new_id")
-      .join(nsh.select(col("doc_id").as("ex_id"), col("n").as("nb")), "ex_id")
-      .withColumn("j_e6", Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")))
+    val ver = DupStages.sized(DupStages.probe(mixed, ex, "new_id", "ex_id"), sig, "new_id", "ex_id")
+      .withColumn("j_e6", DupStages.jaccard(Exact.ratio6e))
       .filter(col("j_e6") >= 500000L)
     val best = ver.groupBy("new_id").agg(
       min_by(struct(col("ex_id"), col("j_e6")), struct((-col("j_e6")).as("nj"), col("ex_id"))).as("b"))
@@ -1069,28 +819,12 @@ object Dedup {
 
   def d12DupSpans(spark: SparkSession, dir: String,
                   minSpanTokens: Int = D12MinSpanTokens): DataFrame = {
-    // positional 3-gram shingles (doc_id, pos, hs) — shingleHashRows keeps
-    // only the distinct hash set; spans need every position, no distinct.
-    // Built ROW-LOCALLY via posexplode(arrays_zip of 3 shifted slices) —
-    // the shingleHashRows r17 rewrite with the position kept: the old
-    // posexplode+lead shape paid an Exchange(doc_id)+Sort over the full
-    // TOKEN STRING stream and two lead-window passes before hashing. The
-    // zip emits the same trigram at the same pos (slice o covers
-    // positions o..o+size-3; posexplode is 0-based exactly like the old
-    // token pos), so rows are identical; the island window below now
-    // carries the parse's ONLY exchange, and it exchanges 8-byte hashes
-    // instead of words.
+    // positional 3-gram shingles (doc_id, pos, hs): spans need every
+    // position, no distinct; the island window below carries the parse's
+    // ONLY exchange, and it exchanges 8-byte hashes instead of words
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
-    val zipped3 = arrays_zip((0 until 3).map(o =>
-      slice(col("ws"), lit(o + 1), greatest(size(col("ws")) - 2, lit(0))).as(s"w$o")): _*)
-    val shp = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), posexplode(zipped3).as(Seq("pos", "sh")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        // h60nn: hs equi-joins against dupShingleTable — see h60nn scaladoc
-        DetHash.h60nn(concat_ws(" ",
-          col("sh.w0"), col("sh.w1"), col("sh.w2"))).as("hs"))
+    val shp = DupStages.shinglePositions(Tables.documents(spark, dir))
     // df >= 2 read from the stored key set (r17, dupShingleTable) — the
     // inner join against the distinct dup-shingle keys keeps exactly the
     // rows the old per-run df aggregation + filter kept
@@ -1217,110 +951,43 @@ object Dedup {
 
   // ---------------------------------------------------------------- oracle
 
-  private val Sh3Cte =
-    """WITH sh AS (
-      |  SELECT doc_id, list_distinct(list_transform(range(1, len(ws)-1),
-      |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
-      |)""".stripMargin
+  import DupStages.Sql
 
-  /** Sh3Cte extended with the 60-bit-hashed shingle lists (shl) and their
-    * exploded (doc_id, h) rows (shx) — mirrors shingleIndex3. shl/shx are
-    * multiply-referenced downstream (d7's rare CTE alone reads shx three
-    * times); DuckDB inlines CTEs by default, so without MATERIALIZED each
-    * reference re-runs the full shingle explode — at sf10 (500k docs) that
-    * re-derivation pushed d7's oracle past 38 GB of spill and killed the
-    * box's disk. MATERIALIZED pins one evaluation; results are identical
-    * (validated over all 12 affected oracles at sf0.01 and d7 at three
-    * scales) and the r11 sf10 run converts d7 from disk-death to a verdict. */
-  /** The shl body (hashed shingle LISTS from sh) as a standalone fragment —
-    * shared by [[ShxCte]] and the d6-full staged oracle's t_shl CTAS so the
-    * hash construction cannot drift between the one-query and the staged
-    * forms. */
-  private lazy val ShlBodySql: String =
-    """SELECT doc_id, list_distinct(list_transform(sh,
-      |    s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS hh
-      |  FROM sh""".stripMargin
+  /** The d2 verdict over shl aliases x/y in the oracle's fixed-point e6
+    * form (Jaccard >= 0.5) — one fragment for the d2/d6 oracles and the
+    * d6-full staged oracle's per-residue pass. */
+  private[graft] lazy val JaccVerifyPredSql: String = s"${Sql.jaccard("x", "y")} >= 500000"
 
-  private val ShxCte: String = Sh3Cte +
-    s""", shl AS MATERIALIZED (
-      |  $ShlBodySql
-      |), shx AS MATERIALIZED (
-      |  SELECT doc_id, unnest(hh) AS h FROM shl
-      |)""".stripMargin
+  /** d2's oracle: verified candidates with their jaccard, the candidates
+    * restricted to the residue `slice` when given — the same filter the
+    * Spark side applies. */
+  private def d2Sql(slice: Option[(Int, String)]): String =
+    Sql.candidates + "\n" +
+      Sql.verified(s"doc_a, doc_b,\n  ${Sql.jaccard("x", "y")} / 1000000.0 AS jaccard",
+        JaccVerifyPredSql, slice = slice) +
+      "\nORDER BY doc_a, doc_b"
 
-  /** Shared DuckDB CTE chain: 60-bit-hashed shingle lists -> minhash
-    * signatures -> LSH band collisions -> distinct candidate pairs
-    * (mirrors shingleHashRows + minhashSig + lshCandidates; used by the
-    * d2 and d7 oracles). */
-  /** The 16 minhash signature aggregates / the 4 band-hash CASE arms as
-    * standalone SQL fragments — shared by [[MinhashCandCte]] (the one-query
-    * oracles) and the d6-full staged oracle's t_cand CTAS. */
-  private lazy val MinhashSigColsSql: String =
-    MinhashCoef.zipWithIndex.map { case ((a, b), p) =>
-      s"min(($a * h31 + $b) % $MersenneM) AS sig$p"
-    }.mkString(",\n        ")
-  private lazy val MinhashBandCasesSql: String =
-    (0 until 4).map { b =>
-      val cat = (0 until 4).map(o => s"CAST(sig${4 * b + o} AS VARCHAR)").mkString(" || ',' || ")
-      s"WHEN $b THEN md5($cat)"
-    }.mkString(" ")
-
-  private lazy val MinhashCandCte: String = {
-    val sigCols = MinhashSigColsSql
-    val bandCases = MinhashBandCasesSql
-    ShxCte +
-      s""", h31s AS (
-         |  SELECT doc_id, h % $MersenneM AS h31 FROM shx
-         |), sig AS MATERIALIZED (
-         |  SELECT doc_id,
-         |        $sigCols
-         |  FROM h31s GROUP BY doc_id
-         |), bands AS MATERIALIZED (
-         |  SELECT doc_id, b, CASE b $bandCases END AS bh
-         |  FROM sig, range(0, 4) t(b)
-         |), cand AS MATERIALIZED (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands a JOIN bands b ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id
-         |)""".stripMargin
-  }
+  /** The document frequency of every shingle hash in `shx`. */
+  private lazy val DocFreqSql = "SELECT h, count(*) AS df FROM shx GROUP BY h"
 
   /** The d10 rare-shingle contamination chain (rare/shared) as a CTE body
-    * appendable after [[ShxCte]] — shared by the d10 oracle and the
-    * composed curation audit (P8). */
+    * appendable after [[DupStages.Sql.index]] — shared by the d10 oracle
+    * and the composed curation audit (P8). */
   private[graft] lazy val D10SharedCteBody: String =
-    s""", rare AS (
-       |  SELECT doc_id, h FROM shx
-       |  WHERE h IN (SELECT h FROM shx GROUP BY h HAVING count(*) <= $D7DfCap)
-       |), shared AS (
+    s""", ${Sql.rare}, shared AS (
        |  SELECT t.doc_id AS train_doc_id, e.doc_id AS eval_doc_id, count(*) AS n_shared
        |  FROM rare t JOIN rare e ON t.h = e.h
        |    AND t.doc_id % $D10EvalMod <> 0 AND e.doc_id % $D10EvalMod = 0
        |  GROUP BY 1, 2 HAVING count(*) >= $D10MinShared
        |)""".stripMargin
 
-  /** The d13 substring-scrub chain (positions -> duplicated windows ->
-    * islands -> remove spans -> kept tokens -> per-doc reassembly `agg`)
-    * as a CTE body appendable after [[ShxCte]] — shared by the d13 oracle
-    * and the composed curation audit (P8). */
-  private[graft] lazy val D13ScrubCteBody: String =
-    d13ScrubCteBody("documents", "SELECT h, count(*) AS df FROM shx GROUP BY h")
-
-  /** [[D13ScrubCteBody]]'s builder: `docsRel` is the documents relation the
-    * scan CTEs read (the staged doc-residue passes substitute a filtered
-    * `docsr`), `dfhBody` the document-frequency source (the staged form
-    * reads the precomputed df>=2 table with a literal df, so the body's
-    * `WHERE df >= 2` text — and thus the whole chain — stays identical).
-    * ONE builder serves the registered oracle, P8's audit, and the staged
-    * d13 passes, so the scrub formula cannot drift (r17). */
-  private[graft] def d13ScrubCteBody(docsRel: String, dfhBody: String): String =
+  /** d12's duplicated-window islands (positions -> duplicated windows ->
+    * islands `isl2`) over the documents relation `docsRel`, with
+    * document frequencies from `dfhBody` — shared by the d12 oracle and
+    * [[d13ScrubCteBody]]. */
+  private def d12IslandsCteBody(docsRel: String, dfhBody: String): String =
     s"""
-       |, shpos AS (
-       |  SELECT doc_id, i - 1 AS pos,
-       |    CAST('0x' || substr(md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]), 1, 15) AS BIGINT) AS h
-       |  FROM (SELECT doc_id, unnest(range(1, len(ws)-1)) AS i, ws
-       |        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM $docsRel))
-       |), dfh AS (
+       |, ${Sql.shinglePositions(docsRel)}, dfh AS (
        |  $dfhBody
        |), dup AS (
        |  SELECT doc_id, pos FROM shpos JOIN dfh USING (h) WHERE df >= 2
@@ -1334,57 +1001,54 @@ object Dedup {
        |  SELECT doc_id, pos,
        |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
        |  FROM isl
-       |), spans AS (
-       |  SELECT doc_id, min(pos) AS span_start, max(pos) + 2 AS span_end
-       |  FROM isl2 GROUP BY doc_id, island
-       |  HAVING max(pos) + 2 - min(pos) + 1 >= $D12MinSpanTokens
-       |), toks AS (
-       |  SELECT doc_id, i - 1 AS pos, ws[i] AS w
-       |  FROM (SELECT doc_id, unnest(range(1, len(ws)+1)) AS i, ws
-       |        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM $docsRel))
-       |), kept AS (
-       |  SELECT t.doc_id, t.pos, t.w FROM toks t
-       |  WHERE NOT EXISTS (SELECT 1 FROM spans s
-       |    WHERE s.doc_id = t.doc_id AND t.pos BETWEEN s.span_start AND s.span_end)
-       |), agg AS (
-       |  SELECT doc_id, count(*) AS kept_n,
-       |    string_agg(w, ' ' ORDER BY pos) AS scrubbed
-       |  FROM kept GROUP BY doc_id
        |)""".stripMargin
 
-  /** The d3 oracle's signature chain (wc -> wh -> bits -> sig) over a
-    * parameterized documents relation — ONE builder for the registered
-    * one-query oracle and the staged sig passes (doc-residue classes), so
-    * the simhash construction cannot drift between forms (r17). */
+  /** The d13 substring-scrub chain (d12's islands -> remove spans -> kept
+    * tokens -> per-doc reassembly `agg`) as a CTE body appendable after
+    * [[DupStages.Sql.index]] — shared by the d13 oracle and the composed
+    * curation audit (P8). */
+  private[graft] lazy val D13ScrubCteBody: String = d13ScrubCteBody("documents", DocFreqSql)
+
+  /** [[D13ScrubCteBody]]'s builder: `docsRel` is the documents relation the
+    * scan CTEs read (the staged doc-residue passes substitute a filtered
+    * `docsr`), `dfhBody` the document-frequency source (the staged form
+    * reads the precomputed df>=2 table with a literal df, so the body's
+    * `WHERE df >= 2` text — and thus the whole chain — stays identical).
+    * ONE builder serves the registered oracle, P8's audit, and the staged
+    * d13 passes, so the scrub formula cannot drift (r17). */
+  private[graft] def d13ScrubCteBody(docsRel: String, dfhBody: String): String =
+    d12IslandsCteBody(docsRel, dfhBody) +
+      s""", spans AS (
+         |  SELECT doc_id, min(pos) AS span_start, max(pos) + 2 AS span_end
+         |  FROM isl2 GROUP BY doc_id, island
+         |  HAVING max(pos) + 2 - min(pos) + 1 >= $D12MinSpanTokens
+         |), toks AS (
+         |  SELECT doc_id, i - 1 AS pos, ws[i] AS w
+         |  FROM (SELECT doc_id, unnest(range(1, len(ws)+1)) AS i, ws
+         |        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM $docsRel))
+         |), kept AS (
+         |  SELECT t.doc_id, t.pos, t.w FROM toks t
+         |  WHERE NOT EXISTS (SELECT 1 FROM spans s
+         |    WHERE s.doc_id = t.doc_id AND t.pos BETWEEN s.span_start AND s.span_end)
+         |), agg AS (
+         |  SELECT doc_id, count(*) AS kept_n,
+         |    string_agg(w, ' ' ORDER BY pos) AS scrubbed
+         |  FROM kept GROUP BY doc_id
+         |)""".stripMargin
+
+  /** The d3 oracle's signature chain over a parameterized documents
+    * relation — ONE builder for the registered one-query oracle and the
+    * staged sig passes (doc-residue classes). */
   private[graft] def d3SigCtes(docsFrom: String): String =
-    s"""WITH wc AS (
-       |  SELECT doc_id, w, count(*) AS cnt FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM $docsFrom) GROUP BY 1,2
-       |), wh AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) AS h, cnt FROM wc
-       |), bits AS (
-       |  SELECT doc_id, b, sum(cnt * (2 * ((h >> b) & 1) - 1)) AS s
-       |  FROM wh, range(0, 60) t(b) GROUP BY 1, 2
-       |), sig AS (
-       |  SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS sig
-       |  FROM bits GROUP BY 1
-       |)""".stripMargin
+    Sql.simhash(docsFrom, DupStages.Simhash60)
 
   /** The d3 oracle's chunk/candidate/hamming tail over a `sig` CTE —
     * `chunkWhere` restricts chunk rows (the staged cand passes filter to a
     * cv-residue class, which partitions the equality join's matches
     * exactly); `ordered` distinguishes the registered one-query form from
-    * a staged INSERT body. Shared so the blocking scheme cannot drift. */
+    * a staged INSERT body. */
   private[graft] def d3ChunkTail(chunkWhere: String, ordered: Boolean): String =
-    s"""
-       |, chunks AS (
-       |  SELECT doc_id, sig, c, (sig >> (15 * c)) & 32767 AS cv FROM sig, range(0, 4) t(c)$chunkWhere
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sa, b.sig AS sb
-       |  FROM chunks a JOIN chunks b ON a.c = b.c AND a.cv = b.cv AND a.doc_id < b.doc_id
-       |)
-       |SELECT doc_a, doc_b, bit_count(xor(sa, sb)) AS hamming FROM cand
-       |WHERE bit_count(xor(sa, sb)) <= $D3Hamming${if (ordered) " ORDER BY doc_a, doc_b" else ""}""".stripMargin
+    Sql.hammingPairs(DupStages.Simhash60, chunkValue(4), chunkWhere, ordered)
 
   /** d11's duplicated-shingle test over the dfh join — ONE fragment shared
     * by the registered oracle and the staged per-residue passes (r17). */
@@ -1406,139 +1070,36 @@ object Dedup {
         |  min(doc_id) AS canonical_doc_id, count(*) > 1 AS is_dup_group
         |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin,
 
-    "d2_minhash_lsh" -> (MinhashCandCte +
-        s"""
-           |SELECT doc_a, doc_b,
-           |  ((2000000*(len(list_intersect(x.hh, y.hh))) + (len(list_distinct(x.hh || y.hh)))) // (2*(len(list_distinct(x.hh || y.hh))))) / 1000000.0 AS jaccard
-           |FROM cand JOIN shl x ON x.doc_id = doc_a JOIN shl y ON y.doc_id = doc_b
-           |WHERE ((2000000*(len(list_intersect(x.hh, y.hh))) + (len(list_distinct(x.hh || y.hh)))) // (2*(len(list_distinct(x.hh || y.hh))))) >= 500000
-           |ORDER BY doc_a, doc_b""".stripMargin),
+    "d2_minhash_lsh" -> d2Sql(slice = None),
 
-    // d2s (r14): identical verification formula, candidate set restricted
-    // to the deterministic doc_a sample — the SAME filter the Spark side
-    // applies, so the sampled verdict hash-compares at every scale
-    "d2s_minhash_lsh_sampled" -> (MinhashCandCte +
-        s"""
-           |SELECT doc_a, doc_b,
-           |  ((2000000*(len(list_intersect(x.hh, y.hh))) + (len(list_distinct(x.hh || y.hh)))) // (2*(len(list_distinct(x.hh || y.hh))))) / 1000000.0 AS jaccard
-           |FROM cand JOIN shl x ON x.doc_id = doc_a JOIN shl y ON y.doc_id = doc_b
-           |WHERE doc_a % $D2sMod = 0
-           |  AND ((2000000*(len(list_intersect(x.hh, y.hh))) + (len(list_distinct(x.hh || y.hh)))) // (2*(len(list_distinct(x.hh || y.hh))))) >= 500000
-           |ORDER BY doc_a, doc_b""".stripMargin),
+    // d2s (r14): candidate set restricted to the deterministic doc_a
+    // sample, so the sampled verdict hash-compares at every scale
+    "d2s_minhash_lsh_sampled" -> d2Sql(slice = Some((D2sMod, "0"))),
 
-    "d7_lsh_recall" -> (MinhashCandCte +
-        s""", nsh AS (
-           |  SELECT doc_id, len(hh) AS n FROM shl
-           |), rare AS (
-           |  SELECT doc_id, h FROM shx
-           |  WHERE h IN (SELECT h FROM shx GROUP BY h HAVING count(*) <= $D7DfCap)
-           |), inter AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-           |  FROM rare a JOIN rare b ON a.h = b.h AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2
-           |), truth AS (
-           |  SELECT doc_a, doc_b FROM inter
-           |  JOIN nsh x ON x.doc_id = doc_a
-           |  JOIN nsh y ON y.doc_id = doc_b
-           |  WHERE ${Exact.ratio6eSql("i", "x.n + y.n - i")} >= 500000
-           |), caught AS (
-           |  SELECT t.doc_a, t.doc_b FROM truth t
-           |  JOIN cand c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
-           |)
-           |SELECT
-           |  (SELECT count(*) FROM truth) AS n_true_pairs,
-           |  (SELECT count(*) FROM cand) AS n_lsh_candidates,
-           |  (SELECT count(*) FROM caught) AS n_caught,
-           |  CASE WHEN (SELECT count(*) FROM truth) = 0 THEN NULL
-           |    ELSE ${Exact.ratio6Sql("(SELECT count(*) FROM caught)", "(SELECT count(*) FROM truth)")} END AS recall""".stripMargin),
+    "d7_lsh_recall" -> Sql.recall(sampleMod = None),
 
-    // d7s: identical chain with the truth join's left side restricted to
-    // the 1-in-101 doc sample (see d7sLshRecallSampled scaladoc) — the
-    // pair stream shrinks by the sample rate, so this oracle stays
-    // single-node-feasible at sf10+ where d7's full truth dies on spill.
-    "d7s_lsh_recall_sampled" -> (MinhashCandCte +
-        s""", nsh AS (
-           |  SELECT doc_id, len(hh) AS n FROM shl
-           |), rare AS (
-           |  SELECT doc_id, h FROM shx
-           |  WHERE h IN (SELECT h FROM shx GROUP BY h HAVING count(*) <= $D7DfCap)
-           |), inter AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-           |  FROM rare a JOIN rare b ON a.h = b.h AND a.doc_id < b.doc_id
-           |  WHERE a.doc_id % 101 = 0
-           |  GROUP BY 1, 2
-           |), truth AS (
-           |  SELECT doc_a, doc_b FROM inter
-           |  JOIN nsh x ON x.doc_id = doc_a
-           |  JOIN nsh y ON y.doc_id = doc_b
-           |  WHERE ${Exact.ratio6eSql("i", "x.n + y.n - i")} >= 500000
-           |), caught AS (
-           |  SELECT t.doc_a, t.doc_b FROM truth t
-           |  JOIN cand c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
-           |)
-           |SELECT
-           |  (SELECT count(*) FROM truth) AS n_true_pairs,
-           |  (SELECT count(*) FROM cand) AS n_lsh_candidates,
-           |  (SELECT count(*) FROM caught) AS n_caught,
-           |  CASE WHEN (SELECT count(*) FROM truth) = 0 THEN NULL
-           |    ELSE ${Exact.ratio6Sql("(SELECT count(*) FROM caught)", "(SELECT count(*) FROM truth)")} END AS recall""".stripMargin),
+    // d7s: the truth join's left side restricted to the doc sample, so
+    // this oracle stays single-node-feasible at sf10+
+    "d7s_lsh_recall_sampled" -> Sql.recall(Some(D7sMod)),
 
     "d3_simhash" -> (d3SigCtes("documents") + d3ChunkTail("", ordered = true)),
 
-    // d3w (r14): the 120-bit wide form — second half seeded '1:' || w
-    // (DetHash.h60Seeded's exact concat), 4 x 30-bit chunks, hamming
-    // summed over both halves
-    "d3w_simhash_wide" ->
-      """WITH wc AS (
-        |  SELECT doc_id, w, count(*) AS cnt FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents) GROUP BY 1,2
-        |), wh AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) AS h0,
-        |    CAST('0x' || substr(md5('1:' || w), 1, 15) AS BIGINT) AS h1,
-        |    cnt FROM wc
-        |), bits AS (
-        |  SELECT doc_id, b,
-        |    sum(cnt * (2 * ((h0 >> b) & 1) - 1)) AS s0,
-        |    sum(cnt * (2 * ((h1 >> b) & 1) - 1)) AS s1
-        |  FROM wh, range(0, 60) t(b) GROUP BY 1, 2
-        |), sig AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN s0 > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS sig0,
-        |    CAST(sum(CASE WHEN s1 > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS sig1
-        |  FROM bits GROUP BY 1
-        |), chunks AS (
-        |  SELECT doc_id, sig0, sig1, c,
-        |    CASE WHEN c < 2 THEN (sig0 >> (30 * c)) & 1073741823
-        |         ELSE (sig1 >> (30 * (c - 2))) & 1073741823 END AS cv
-        |  FROM sig, range(0, 4) t(c)
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    a.sig0 AS sa0, a.sig1 AS sa1, b.sig0 AS sb0, b.sig1 AS sb1
-        |  FROM chunks a JOIN chunks b ON a.c = b.c AND a.cv = b.cv AND a.doc_id < b.doc_id
-        |)
-        |SELECT doc_a, doc_b,
-        |  bit_count(xor(sa0, sb0)) + bit_count(xor(sa1, sb1)) AS hamming
-        |FROM cand
-        |WHERE bit_count(xor(sa0, sb0)) + bit_count(xor(sa1, sb1)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    // d3w (r14): the 120-bit wide form, 4 x 30-bit chunks, hamming summed
+    // over both halves
+    "d3w_simhash_wide" -> (Sql.simhash("documents", DupStages.Simhash120) +
+      Sql.hammingPairs(DupStages.Simhash120, WideChunkValue, "", ordered = true)),
 
-    "d4_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id, lang, n_chars // 200 AS len_bucket,
-        |    list_distinct(list_transform(range(1, len(ws)-2),
-        |      i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])) AS sh
-        |  FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS ws FROM documents)
-        |), shl AS (
-        |  SELECT doc_id, lang, len_bucket, list_distinct(list_transform(sh,
-        |    s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS hh
-        |  FROM sh
-        |)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  ((2000000*(len(list_intersect(a.hh, b.hh))) + (len(list_distinct(a.hh || b.hh)))) // (2*(len(list_distinct(a.hh || b.hh))))) / 1000000.0 AS jaccard
-        |FROM shl a JOIN shl b ON a.lang = b.lang AND a.len_bucket = b.len_bucket AND a.doc_id < b.doc_id
-        |WHERE ((2000000*(len(list_intersect(a.hh, b.hh))) + (len(list_distinct(a.hh || b.hh)))) // (2*(len(list_distinct(a.hh || b.hh))))) >= 300000
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "d4_ngram_jaccard" -> (
+      Sql.shingles(4, keys = "doc_id, lang, n_chars // 200 AS len_bucket",
+        src = "doc_id, lang, n_chars") +
+        s""", shl AS (
+           |  ${Sql.hashed("doc_id, lang, len_bucket")}
+           |)
+           |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           |  ${Sql.jaccard("a", "b")} / 1000000.0 AS jaccard
+           |FROM shl a JOIN shl b ON a.lang = b.lang AND a.len_bucket = b.len_bucket AND a.doc_id < b.doc_id
+           |WHERE ${Sql.jaccard("a", "b")} >= 300000
+           |ORDER BY doc_a, doc_b""".stripMargin),
 
     "d5_embedding_neardup" -> {
       val sim = Stages.Sql.cosine("a.v", "a.nrm", "b.v", "b.nrm")
@@ -1552,14 +1113,14 @@ object Dedup {
          |ORDER BY vec_a, vec_b""".stripMargin
     },
 
-    "d9_incremental_dedup" -> (MinhashCandCte +
-        """, mixed AS (
+    "d9_incremental_dedup" -> (Sql.candidates +
+        s""", mixed AS (
           |  SELECT CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS new_id,
           |         CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS ex_id
           |  FROM cand WHERE (doc_a % 10 = 0) <> (doc_b % 10 = 0)
           |), ver AS (
           |  SELECT new_id, ex_id,
-          |    ((2000000*(len(list_intersect(x.hh, y.hh))) + (len(list_distinct(x.hh || y.hh)))) // (2*(len(list_distinct(x.hh || y.hh))))) AS j_e6
+          |    ${Sql.jaccard("x", "y")} AS j_e6
           |  FROM mixed JOIN shl x ON x.doc_id = new_id JOIN shl y ON y.doc_id = ex_id
           |), best AS (
           |  SELECT new_id, ex_id AS near_match_id, j_e6 FROM (
@@ -1582,20 +1143,12 @@ object Dedup {
           |LEFT JOIN best ON nd.doc_id = best.new_id
           |ORDER BY nd.doc_id""".stripMargin),
 
-    "d6_dup_clusters" -> (D6ClusterCte +
-        """
-          |SELECT doc_id, cluster_id,
-          |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-          |FROM cluster ORDER BY doc_id""".stripMargin),
+    "d6_dup_clusters" -> (D6ClusterCte + "\n" + Sql.clusterReport("cluster")),
 
-    // d6s (r15): identical cluster report, edges restricted to the d2s
-    // candidate sample — the sampled-chain verdict at scales where the
-    // full pair stream is disk-bound
-    "d6s_dup_clusters_sampled" -> (D6sClusterCte +
-        """
-          |SELECT doc_id, cluster_id,
-          |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-          |FROM cluster ORDER BY doc_id""".stripMargin),
+    // d6s (r15): edges restricted to the d2s candidate sample — the
+    // sampled-chain verdict at scales where the full pair stream is
+    // disk-bound
+    "d6s_dup_clusters_sampled" -> (D6sClusterCte + "\n" + Sql.clusterReport("cluster")),
 
     "d8_canonical_corpus" -> (D6ClusterCte + D8CanonicalSqlTail),
 
@@ -1603,40 +1156,19 @@ object Dedup {
     // near-dup drop set comes from the sampled clustering
     "d8s_canonical_corpus_sampled" -> (D6sClusterCte + D8CanonicalSqlTail),
 
-    "d11_dup_text_fraction" -> (ShxCte +
+    "d11_dup_text_fraction" -> (Sql.index +
       s"""
          |, dfh AS (
-         |  SELECT h, count(*) AS df FROM shx GROUP BY h
+         |  $DocFreqSql
          |)
          |SELECT s.doc_id, count(*) AS n_shingles,
          |  CAST(sum($D11DupCaseSql) AS BIGINT) AS n_dup_shingles,
-         |  ${graft.functions.Exact.ratio6Sql(
-             s"sum($D11DupCaseSql)", "count(*)")} AS dup_frac
+         |  ${Exact.ratio6Sql(s"sum($D11DupCaseSql)", "count(*)")} AS dup_frac
          |FROM shx s JOIN dfh ON dfh.h = s.h
          |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin),
 
-    "d12_dup_spans" -> (ShxCte +
+    "d12_dup_spans" -> (Sql.index + d12IslandsCteBody("documents", DocFreqSql) +
       s"""
-         |, shpos AS (
-         |  SELECT doc_id, i - 1 AS pos,
-         |    CAST('0x' || substr(md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]), 1, 15) AS BIGINT) AS h
-         |  FROM (SELECT doc_id, unnest(range(1, len(ws)-1)) AS i, ws
-         |        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents))
-         |), dfh AS (
-         |  SELECT h, count(*) AS df FROM shx GROUP BY h
-         |), dup AS (
-         |  SELECT doc_id, pos FROM shpos JOIN dfh USING (h) WHERE df >= 2
-         |), isl AS (
-         |  SELECT doc_id, pos,
-         |    CASE WHEN lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-         |         OR pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 3
-         |    THEN 1 ELSE 0 END AS brk
-         |  FROM dup
-         |), isl2 AS (
-         |  SELECT doc_id, pos,
-         |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-         |  FROM isl
-         |)
          |SELECT doc_id, min(pos) AS span_start, max(pos) + 2 AS span_end,
          |  max(pos) + 2 - min(pos) + 1 AS n_tokens,
          |  CASE WHEN max(pos) + 2 - min(pos) + 1 >= $D12MinSpanTokens
@@ -1646,10 +1178,10 @@ object Dedup {
 
     // d13: d12's remove-verdict spans excised from the token stream; one
     // row per input document (scrubbed-to-empty docs stay, text = '').
-    "d13_scrubbed_corpus" -> (ShxCte + D13ScrubCteBody +
+    "d13_scrubbed_corpus" -> (Sql.index + D13ScrubCteBody +
       d13SelectTail("documents", ordered = true)),
 
-    "d10_decontamination" -> (ShxCte + D10SharedCteBody +
+    "d10_decontamination" -> (Sql.index + D10SharedCteBody +
         s""", nt AS (
            |  SELECT doc_id, len(hh) AS n_train_grams FROM shl
            |)
@@ -1673,32 +1205,20 @@ object Dedup {
       |WHERE is_can AND doc_id NOT IN (SELECT doc_id FROM drops)
       |ORDER BY doc_id""".stripMargin
 
-  /** DuckDB CTE chain for d6/d8: the hashed-shingle candidate chain under a
-    * RECURSIVE prefix, plus verified pairs and the transitive-closure
-    * cluster table (the oracle's exact CC — min reachable id per node). */
-  private[graft] lazy val D6ClusterCte: String = d6ClusterCte("")
+  /** DuckDB CTE chain for d6/d8: the candidate chain under a RECURSIVE
+    * prefix, plus verified pairs and the transitive-closure cluster table
+    * (the oracle's exact CC — min reachable id per node). */
+  private[graft] lazy val D6ClusterCte: String = d6ClusterCte(sampleMod = None)
 
   /** The sampled-chain twin: verified pairs restricted to the d2s
     * candidate sample before clustering — the same filter the Spark side
     * applies in [[clusterTableSampled]]. */
-  private[graft] lazy val D6sClusterCte: String =
-    d6ClusterCte(s"doc_a % $D2sMod = 0 AND ")
+  private[graft] lazy val D6sClusterCte: String = d6ClusterCte(Some(D2sMod))
 
-  /** The exact-Jaccard >= 0.5 verification predicate over shl aliases
-    * x/y, in the oracle's fixed-point e6 form — ONE fragment shared by
-    * [[d6ClusterCte]] and the d6-full staged oracle's per-residue pass so
-    * the verify formula cannot drift (the d2 oracle spells the same
-    * expression with its jaccard projection inline; MultipassDedupSpec
-    * pins the containment textually). */
-  private[graft] lazy val JaccVerifyPredSql: String =
-    "((2000000*(len(list_intersect(x.hh, y.hh))) + (len(list_distinct(x.hh || y.hh)))) // (2*(len(list_distinct(x.hh || y.hh))))) >= 500000"
-
-  private def d6ClusterCte(sampleAnd: String): String =
-    MinhashCandCte.replace("WITH sh", "WITH RECURSIVE sh") +
+  private def d6ClusterCte(sampleMod: Option[Int]): String =
+    Sql.candidates.replace("WITH sh", "WITH RECURSIVE sh") +
       s""", verified AS (
-        |  SELECT doc_a, doc_b
-        |  FROM cand JOIN shl x ON x.doc_id = doc_a JOIN shl y ON y.doc_id = doc_b
-        |  WHERE $sampleAnd$JaccVerifyPredSql
+        |  ${Sql.verified("doc_a, doc_b", JaccVerifyPredSql, slice = sampleMod.map((_, "0")))}
         |), nodes AS (
         |  SELECT DISTINCT doc_id FROM (
         |    SELECT doc_a AS doc_id FROM verified UNION ALL SELECT doc_b FROM verified)
@@ -1713,17 +1233,9 @@ object Dedup {
         |  SELECT n AS doc_id, min(m) AS cluster_id FROM reach GROUP BY n
         |)""".stripMargin
 
-  /** The d6-FULL STAGED oracle (r17, verdict r16 #8) as one JSON document:
-    * the same shingle-list -> candidate -> verify -> cluster chain as the
-    * registered d6 oracle, but emitted as ordered CREATE/INSERT statements
-    * so a 5M-doc DuckDB run can materialize the index tables once, verify
-    * the candidate stream in `passes` bounded residue passes (resume-safe
-    * via t_done), and cluster by python-driven min-label iteration instead
-    * of the one-shot recursive CTE, whose reach x edges join is quadratic
-    * in cluster size per iteration. Built from the SAME fragments as the
-    * registered oracles ([[ShlBodySql]], [[MinhashSigColsSql]],
-    * [[MinhashBandCasesSql]], [[JaccVerifyPredSql]]) so the formulas
-    * cannot drift; consumed by tools/d6_full_check.py. */
+  /** The staged oracle's cluster assignment as (doc_id, cluster_id). */
+  private lazy val StagedClusters = "SELECT doc_id, lbl AS cluster_id FROM t_lbl"
+
   /** WITH-prefix that gives the registered oracle TAILS their expected
     * CTE names (`cluster`, `shx`) from the STAGED tables (t_lbl, t_shl) —
     * the full-chain deliverables' staged oracles are then literally
@@ -1731,11 +1243,11 @@ object Dedup {
     * cannot drift between the one-query and staged forms. An unreferenced
     * CTE is pruned by DuckDB, so chains that don't read shx pay nothing. */
   private[graft] lazy val StagedClusterCte: String =
-    """WITH shx AS (
-      |  SELECT doc_id, unnest(hh) AS h FROM t_shl
-      |), cluster AS (
-      |  SELECT doc_id, lbl AS cluster_id FROM t_lbl
-      |)""".stripMargin
+    s"""WITH shx AS (
+       |  ${Sql.postings("t_shl")}
+       |), cluster AS (
+       |  $StagedClusters
+       |)""".stripMargin
 
   /** The Dedup-owned full-chain staged oracles (Pipeline contributes its
     * own via Pipeline.stagedChainOracles; DedupFull merges both). */
@@ -1755,13 +1267,13 @@ object Dedup {
                                         requires: Seq[String] = Nil)
 
   /** The staged oracle's t_shl CTAS — the registered shl construction
-    * ([[ShlBodySql]]) materialized once per database; shared by the d6-full
-    * setup and the d11/d13 flip extras so every staged consumer reads the
-    * SAME persisted shingle lists. */
+    * materialized once per database; shared by the d6-full setup and the
+    * d11/d13 flip extras so every staged consumer reads the SAME persisted
+    * shingle lists. */
   private[graft] lazy val TShlSetupSql: String =
-    "CREATE TABLE IF NOT EXISTS t_shl AS " + Sh3Cte +
+    "CREATE TABLE IF NOT EXISTS t_shl AS " + Sql.shingles(3) +
       s""", shl AS (
-         |  $ShlBodySql
+         |  ${Sql.hashed()}
          |)
          |SELECT doc_id, hh FROM shl""".stripMargin
 
@@ -1802,9 +1314,7 @@ object Dedup {
         "CREATE TABLE IF NOT EXISTS t_d3_done (r INTEGER)"),
       passSql = "INSERT INTO t_d3 SELECT * FROM (" +
         "WITH sig AS (SELECT doc_id, sig FROM t_d3sig)" +
-        d3ChunkTail(
-          s" WHERE ((sig >> (15 * c)) & 32767) % $passes = {R}",
-          ordered = false) + ")",
+        d3ChunkTail(s" WHERE (${chunkValue(4)}) % $passes = {R}", ordered = false) + ")",
       doneTable = "t_d3_done",
       finalSelect =
         "SELECT DISTINCT doc_a, doc_b, hamming FROM t_d3 ORDER BY doc_a, doc_b",
@@ -1818,7 +1328,7 @@ object Dedup {
         "CREATE TABLE IF NOT EXISTS t_d11_done (r INTEGER)"),
       passSql = "INSERT INTO t_d11p SELECT * FROM (" +
         s"""WITH shx AS (
-           |  SELECT doc_id, unnest(hh) AS h FROM t_shl
+           |  ${Sql.postings("t_shl")}
            |), shxr AS (
            |  SELECT doc_id, h FROM shx WHERE h % $passes = {R}
            |), dfh AS (
@@ -1832,7 +1342,7 @@ object Dedup {
       finalSelect =
         s"""SELECT doc_id, CAST(sum(n_sh) AS BIGINT) AS n_shingles,
            |  CAST(sum(n_dup) AS BIGINT) AS n_dup_shingles,
-           |  ${graft.functions.Exact.ratio6Sql("sum(n_dup)", "sum(n_sh)")} AS dup_frac
+           |  ${Exact.ratio6Sql("sum(n_dup)", "sum(n_sh)")} AS dup_frac
            |FROM t_d11p GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     StagedExtra(
       name = "d13_scrubbed_corpus_full",
@@ -1840,7 +1350,7 @@ object Dedup {
       setup = Seq(
         TShlSetupSql,
         "CREATE TABLE IF NOT EXISTS t_dfh2 AS " +
-          "SELECT h, count(*) AS df FROM (SELECT doc_id, unnest(hh) AS h FROM t_shl) " +
+          s"SELECT h, count(*) AS df FROM (${Sql.postings("t_shl")}) " +
           "GROUP BY h HAVING count(*) >= 2",
         "CREATE TABLE IF NOT EXISTS t_d13 (doc_id BIGINT, n_tokens_kept BIGINT, " +
           "n_tokens_removed BIGINT, clean_text VARCHAR)",
@@ -1855,33 +1365,27 @@ object Dedup {
       finalSelect = "SELECT doc_id, n_tokens_kept, n_tokens_removed, " +
         "clean_text FROM t_d13 ORDER BY doc_id"))
 
+  /** The d6-FULL STAGED oracle (r17, verdict r16 #8) as one JSON document:
+    * the same shingle-list -> candidate -> verify -> cluster chain as the
+    * registered d6 oracle, but emitted as ordered CREATE/INSERT statements
+    * so a 5M-doc DuckDB run can materialize the index tables once, verify
+    * the candidate stream in `passes` bounded residue passes (resume-safe
+    * via t_done), and cluster by python-driven min-label iteration instead
+    * of the one-shot recursive CTE, whose reach x edges join is quadratic
+    * in cluster size per iteration. Built from the SAME stages as the
+    * registered oracles ([[DupStages.Sql]], [[JaccVerifyPredSql]]) so the
+    * formulas cannot drift; consumed by tools/d6_full_check.py. */
   private[graft] def d6FullOracleJson(passes: Int,
                                       chain: Map[String, String] = Map.empty,
                                       extras: Seq[StagedExtra] = Nil): String = {
     val setup = Seq(
       TShlSetupSql,
-      s"""CREATE TABLE IF NOT EXISTS t_cand AS
-         |WITH shx AS (
-         |  SELECT doc_id, unnest(hh) AS h FROM t_shl
-         |), h31s AS (
-         |  SELECT doc_id, h % $MersenneM AS h31 FROM shx
-         |), sig AS (
-         |  SELECT doc_id,
-         |        $MinhashSigColsSql
-         |  FROM h31s GROUP BY doc_id
-         |), bands AS (
-         |  SELECT doc_id, b, CASE b $MinhashBandCasesSql END AS bh
-         |  FROM sig, range(0, 4) t(b)
-         |)
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |FROM bands a JOIN bands b ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id""".stripMargin,
+      Sql.candidateTable,
       "CREATE TABLE IF NOT EXISTS t_pairs (doc_a BIGINT, doc_b BIGINT)",
       "CREATE TABLE IF NOT EXISTS t_done (r INTEGER)")
-    val passSql =
-      s"""INSERT INTO t_pairs
-         |SELECT doc_a, doc_b
-         |FROM t_cand JOIN t_shl x ON x.doc_id = doc_a JOIN t_shl y ON y.doc_id = doc_b
-         |WHERE doc_a % $passes = {R} AND $JaccVerifyPredSql""".stripMargin
+    val passSql = "INSERT INTO t_pairs\n" +
+      Sql.verified("doc_a, doc_b", JaccVerifyPredSql, cand = "t_cand", shl = "t_shl",
+        slice = Some((passes, "{R}")))
     val clusterInit =
       """CREATE TABLE t_lbl AS
         |SELECT doc_id, min(m) AS lbl FROM (
@@ -1905,11 +1409,7 @@ object Dedup {
         |) GROUP BY doc_id""".stripMargin
     val clusterChanged =
       "SELECT count(*) FROM t_lbl_next n JOIN t_lbl o USING (doc_id) WHERE n.lbl <> o.lbl"
-    val finalSelect =
-      """SELECT doc_id, cluster_id,
-        |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-        |FROM (SELECT doc_id, lbl AS cluster_id FROM t_lbl)
-        |ORDER BY doc_id""".stripMargin
+    val finalSelect = Sql.clusterReport(s"($StagedClusters)")
     import graft.Harness.{jsonString => q}
     val chainJson = chain.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")

@@ -10,11 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * cosine guard, dot fold, centroid-assignment and top-k windows from the
   * stages' SQL twins (`Stages.Sql`); every entry point gets its session
   * from `graft.Harness`; plans are read only by Bench's structural
-  * fingerprint, never as text; and every filesystem commit (a rename) is
-  * `graft.sources.Warehouse`'s. This scan fails, listing the offending
-  * lines, when a rule's token appears in its scope outside the rule's
-  * allowed file — the copies that left artifact families keyed by path
-  * only and let the ANN files and their oracles drift apart. */
+  * fingerprint, never as text; every filesystem commit (a rename) is
+  * `graft.sources.Warehouse`'s; and the dedup chain's Jaccard verify,
+  * rare-shingle cap, cluster table and cluster-size report, in Spark and
+  * in their DuckDB twins, are `graft.dedup.DupStages`'. This scan fails,
+  * listing the offending lines, when a rule's token appears in its scope
+  * outside the rule's allowed file — the copies that left artifact
+  * families keyed by path only and let the ANN files, the dedup flavours
+  * and their oracles drift apart. */
 class ArtifactGuardSpec extends AnyFunSuite {
 
   private val Registry = "graft/sources/Artifact.scala"
@@ -22,6 +25,7 @@ class ArtifactGuardSpec extends AnyFunSuite {
   private val Harness = "graft/Harness.scala"
   private val Bench = "graft/Bench.scala"
   private val Warehouse = "graft/sources/Warehouse.scala"
+  private val DupStages = "graft/dedup/DupStages.scala"
   private val Everywhere = Seq("graft/")
   private val Search = Seq("graft/ann/", "graft/rag/Search.scala")
   private val Oracles = Seq("graft/ann/", "graft/rag/")
@@ -44,7 +48,12 @@ class ArtifactGuardSpec extends AnyFunSuite {
     ("ORDER BY similarity DESC, vec_id)", "an oracle top-k window", Stages, Oracles),
     ("SparkSession.builder()", "a session builder", Harness, Everywhere),
     ("executedPlan.toString", "a plan-text reader", Bench, Everywhere),
-    (".rename(", "a filesystem commit", Warehouse, Everywhere))
+    (".rename(", "a filesystem commit", Warehouse, Everywhere),
+    ("""col("na") + col("nb") - col("i")""", "a Jaccard verify", DupStages, Everywhere),
+    ("len(list_intersect(", "a DuckDB Jaccard verify", DupStages, Everywhere),
+    ("HAVING count(*) <= $D7DfCap", "a rare-shingle cap", DupStages, Everywhere),
+    ("""col("lbl").as("cluster_id")""", "a cluster-table body", DupStages, Everywhere),
+    (""""cluster_size", count(lit(1)).over(""", "a cluster-size report", DupStages, Everywhere))
 
   private def sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -89,6 +98,11 @@ class ArtifactGuardSpec extends AnyFunSuite {
 
   test("filesystem commits go through the warehouse only") {
     val found = offenders(Warehouse)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("the dedup chain's steps are written once, in the dedup stages") {
+    val found = offenders(DupStages)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

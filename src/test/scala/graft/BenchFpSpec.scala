@@ -10,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * string or file functions, so the pins are exact, no Spark session
   * needed; the plan rendering itself is pinned by PlanFingerprintSpec.
   */
-class BenchFpSpec extends AnyFunSuite {
+class BenchFpSpec extends AnyFunSuite with TempDirs {
 
   test("readPrevPlans slices the plans map and ignores plan_changes") {
-    val dir = java.nio.file.Files.createTempDirectory("benchfp")
+    val dir = tempDir("benchfp")
     val f = dir.resolve("bench.json")
     java.nio.file.Files.write(f,
       ("""{"metric":"total","value":1.0,"queries":{"q1":0.1},""" +
@@ -44,7 +44,7 @@ class BenchFpSpec extends AnyFunSuite {
   }
 
   test("fp gate: FP_ALLOW file supplies the pattern line, comments skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("fpallow")
+    val dir = tempDir("fpallow")
     val f = dir.resolve("FP_ALLOW")
     java.nio.file.Files.write(f,
       "# comment\n\n# more\nm*,e*,q8_rollup\nignored_second_line\n".getBytes("UTF-8"))
@@ -53,7 +53,7 @@ class BenchFpSpec extends AnyFunSuite {
   }
 
   test("readPrevSf reads the baseline's scale; guards cross-sf compares") {
-    val dir = java.nio.file.Files.createTempDirectory("benchsf")
+    val dir = tempDir("benchsf")
     val f = dir.resolve("bench.json")
     java.nio.file.Files.write(f,
       """{"metric":"total","plans":{"q1_agg":"0123456789ab"},"sf":"sf0.1","n":3}"""
@@ -74,7 +74,7 @@ class BenchFpSpec extends AnyFunSuite {
   }
 
   test("sf1Summary folds the committed sf1 detail into per-family scale factors") {
-    val dir = java.nio.file.Files.createTempDirectory("benchsf1")
+    val dir = tempDir("benchsf1")
     val f = dir.resolve("BENCH_SF1.json")
     // q-family scales 10x (data-bound), m-family 1x (job floor); m9 failed
     // at sf1 (negative marker) and must be excluded from the intersection
@@ -108,7 +108,7 @@ class BenchFpSpec extends AnyFunSuite {
   }
 
   test("readPrevField takes the LAST match; dialEq compares numerically") {
-    val dir = java.nio.file.Files.createTempDirectory("benchdial")
+    val dir = tempDir("benchdial")
     val f = dir.resolve("bench.json")
     // a free-text note embedding the key pattern must not shadow the
     // real tail dial (ADVICE r15)
@@ -128,7 +128,7 @@ class BenchFpSpec extends AnyFunSuite {
 
   test("readPrevPlans degrades to empty on absent or malformed files") {
     assert(Bench.readPrevPlans("/nonexistent/bench.json").isEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("benchfp2")
+    val dir = tempDir("benchfp2")
     val f = dir.resolve("garbage.json")
     java.nio.file.Files.write(f, "not json at all".getBytes("UTF-8"))
     assert(Bench.readPrevPlans(f.toString).isEmpty)
@@ -137,7 +137,7 @@ class BenchFpSpec extends AnyFunSuite {
   test("fpdiff dumps land beside the output; a run replaces only its measured queries' dumps") {
     import java.nio.file.{Files, Paths}
     def read(p: java.nio.file.Path) = new String(Files.readAllBytes(p), "UTF-8")
-    val out = Files.createTempDirectory("benchfpdiff")
+    val out = tempDir("benchfpdiff")
     val dir = out.resolve("fpdiff")
     Files.createDirectories(dir)
     Seq("a", "b").foreach(q => Files.write(dir.resolve(s"$q.txt"), s"old $q".getBytes("UTF-8")))

@@ -25,7 +25,7 @@ class ClusteredRecallSpec extends SparkSpec {
   ).getOrElse(false)
 
   private lazy val Dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_clustered").toString + "/sf0.1"
+    val d = tempDir("graft_clustered").toString + "/sf0.1"
     val rc = scala.sys.process.Process(
       Seq("python3", "tools/clustered_embeddings.py", "2000", d)).!
     require(rc == 0, s"tools/clustered_embeddings.py exited $rc")

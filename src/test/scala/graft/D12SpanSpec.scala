@@ -64,7 +64,7 @@ class D12SpanSpec extends SparkSpec {
     // [2,7] span — pre-fix they graded as two independent spans, letting
     // a >= threshold contiguous run dodge removal. doc 1 holds the same
     // shingles at gap 6: genuinely separate spans stay separate.
-    val dir = java.nio.file.Files.createTempDirectory("graft_d12fix").toString
+    val dir = tempDir("graft_d12fix").toString
     Seq((0L, "a0 a1 t2 t3 t4 t5 t6 t7 b8 b9", "en", "src0", 30L),
         (1L, "t2 t3 t4 q0 q1 q2 t5 t6 t7", "en", "src0", 27L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -100,14 +100,14 @@ class DedupSigSpec extends SparkSpec {
 
   cases.foreach { c =>
     test(s"in-place ${c.what}") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_sig").toString
+      val dir = tempDir("graft_sig").toString
       c.write(dir, 1)
       val v1 = c.queries.map { case (_, q) => rowsOf(q(dir)) }
       assert(v1.forall(_.nonEmpty))
 
       // regenerate the SAME path; the oracle is a never-cached fresh dir
       c.write(dir, 2)
-      val fresh = java.nio.file.Files.createTempDirectory("graft_sig_f").toString
+      val fresh = tempDir("graft_sig_f").toString
       c.write(fresh, 2)
 
       val inPlace = c.queries.map { case (name, q) =>

@@ -95,7 +95,7 @@ class GlobalRankSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("setCheckpointDir"))
 
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rank_ckpt").toString
+    val ckpt = tempDir("graft_rank_ckpt").toString
     spark.sparkContext.setCheckpointDir(ckpt)
     try {
       val (fast, nf) = GlobalRank.withGlobalRankN(

@@ -45,7 +45,7 @@ class IvfDialSpec extends SparkSpec {
   }
 
   test("the list table rebuilds when the corpus regenerates in-session") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfregen").toString
+    val dir = tempDir("graft_ivfregen").toString
     val full = spark.read.parquet(s"$Sf/embeddings.parquet")
     full.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val before = Ann.a2KnnIvf(spark, dir).collect()

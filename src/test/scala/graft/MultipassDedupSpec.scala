@@ -14,7 +14,7 @@ class MultipassDedupSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.01"
 
   private def freshStaging(): String =
-    java.nio.file.Files.createTempDirectory("graft_d2mp").toString
+    tempDir("graft_d2mp").toString
 
   test("residue passes partition the candidates: multipass pairs == d2 exactly") {
     val staging = freshStaging()

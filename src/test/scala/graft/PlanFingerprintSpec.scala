@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class PlanFingerprintSpec extends SparkSpec {
 
   private lazy val dirs = Seq("a", "b").map { d =>
-    val dir = java.nio.file.Files.createTempDirectory(s"planfp_$d").toString
+    val dir = tempDir(s"planfp_$d").toString
     val df = spark.range(40).select(col("id").as("k"), (col("id") % 7).as("v"),
       (col("id") % 3).cast("int").as("p"), array(col("id"), col("id") + 1).as("arr"))
     Seq("t", "u").foreach(t => df.write.parquet(s"$dir/$t.parquet"))

@@ -53,7 +53,7 @@ class PqSigSpec extends SparkSpec {
     Artifact.signature(spark, dir, Seq("embeddings.parquet"))
 
   test("in-place dim regeneration serves fresh PQ artifacts, not cached-width tables") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqsig").toString
+    val dir = tempDir("graft_pqsig").toString
     writeCorpus(dir, dim = 32, n = 600)
     val sig32 = sig(dir)
     assert(Pq.subDimOf(spark, dir) === 32 / Pq.M)
@@ -70,7 +70,7 @@ class PqSigSpec extends SparkSpec {
     assert(Pq.subDimOf(spark, dir) === 64 / Pq.M)
 
     // oracle: the identical dim-64 corpus in a NEVER-CACHED fresh dir
-    val fresh = java.nio.file.Files.createTempDirectory("graft_pqsig_fresh").toString
+    val fresh = tempDir("graft_pqsig_fresh").toString
     writeCorpus(fresh, dim = 64, n = 600)
 
     // a5: pqcodes codesTable freshness — a stale dim-32 code table joined
@@ -96,11 +96,11 @@ class PqSigSpec extends SparkSpec {
   }
 
   test("k-means-trained codebook cache (pqkcb/pqkcodes) is signature-keyed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqsig_km").toString
+    val dir = tempDir("graft_pqsig_km").toString
     writeCorpus(dir, dim = 32, n = 400)
     rowsOf(Pq.a9PqKmeansTopK(spark, dir)): Unit
     writeCorpus(dir, dim = 64, n = 400)
-    val fresh = java.nio.file.Files.createTempDirectory("graft_pqsig_kmf").toString
+    val fresh = tempDir("graft_pqsig_kmf").toString
     writeCorpus(fresh, dim = 64, n = 400)
     // deterministic seeded training on identical bytes: in-place == fresh
     assert(rowsOf(Pq.a9PqKmeansTopK(spark, dir)) ===
@@ -119,14 +119,14 @@ class PqSigSpec extends SparkSpec {
     }
 
   test("a missing source throws, naming its path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_missing").toString
+    val dir = tempDir("graft_sig_missing").toString
     val e = intercept[java.io.FileNotFoundException](
       specTable("specmissing", dir)(fail("built an artifact of absent data")))
     assert(e.getMessage.contains(s"$dir/src.parquet"))
   }
 
   test("a superseded generation stays readable; older ones are dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_gen").toString
+    val dir = tempDir("graft_sig_gen").toString
     def generations = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_specgen_")).toSeq
     writeSource(dir, 1)
@@ -141,7 +141,7 @@ class PqSigSpec extends SparkSpec {
   }
 
   test("concurrent callers of one key cause one build") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_flight").toString
+    val dir = tempDir("graft_sig_flight").toString
     writeSource(dir, 5)
     val builds = new java.util.concurrent.atomic.AtomicInteger
     val start = new java.util.concurrent.CountDownLatch(1)
@@ -161,7 +161,7 @@ class PqSigSpec extends SparkSpec {
 
   test("the registry keys, refuses and rebuilds through a non-local FileSystem") {
     spark.sparkContext.hadoopConfiguration.set("fs.graftfake.impl", classOf[GraftFakeFs].getName)
-    val local = java.nio.file.Files.createTempDirectory("graft_sig_fakefs").toString
+    val local = tempDir("graft_sig_fakefs").toString
     val dir = s"graftfake://$local"
     val missing = intercept[java.io.FileNotFoundException](
       Artifact.signature(spark, dir, Seq("src.parquet")))

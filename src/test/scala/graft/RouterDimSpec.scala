@@ -31,8 +31,7 @@ class RouterDimSpec extends SparkSpec {
     * k centers ~ unit sphere, vector i = center(i % k) + sigma·noise. */
   private def makeCorpus(dim: Int, n: Int, k: Int = 64,
                          sigma: Float = 0.35f): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_dim${dim}_corpus").toString
+    val dir = tempDir(s"graft_dim${dim}_corpus").toString
     val rnd = new java.util.Random(20260816L + dim)
     def unit(): Array[Float] = {
       val v = Array.fill(dim)(rnd.nextGaussian().toFloat)

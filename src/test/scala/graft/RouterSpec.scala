@@ -343,15 +343,14 @@ class RouterSpec extends SparkSpec {
       StructField("embedding", ArrayType(FloatType, containsNull = false)),
       StructField("label", IntegerType, nullable = false)))
     def write(rs: Seq[Row], tag: String): String = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_rs_$tag").toString
+      val dir = tempDir(s"graft_rs_$tag").toString
       spark.createDataFrame(spark.sparkContext.parallelize(rs, 4), schema)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       dir
     }
     val fullDir = write(rows, "full")
     val batchDir = write(rows.take(n - appended), "batch")
-    val indexDir = java.nio.file.Files
-      .createTempDirectory("graft_rs_stream").toString + "/ivf"
+    val indexDir = tempDir("graft_rs_stream").toString + "/ivf"
     // `batches` splits the appended tail into that many ingest dirs so a
     // composed test can exercise the compaction fold, not just the union
     val per = math.max(1, appended / batches)
@@ -429,13 +428,11 @@ class RouterSpec extends SparkSpec {
     // Fixture: the batch lacks id 20, which then arrives as an append
     // (no collision, equal dims — only the centroid guard can fire).
     val (_, batchDir2, _) = splitCorpus(n = 1000, appended = 1)
-    val holeDir = java.nio.file.Files
-      .createTempDirectory("graft_rs_hole").toString
+    val holeDir = tempDir("graft_rs_hole").toString
     spark.read.parquet(s"$batchDir2/embeddings.parquet")
       .filter(col("vec_id") =!= 20L)
       .write.mode("overwrite").parquet(s"$holeDir/embeddings.parquet")
-    val indexDir2 = java.nio.file.Files
-      .createTempDirectory("graft_rs_stream_low").toString + "/ivf"
+    val indexDir2 = tempDir("graft_rs_stream_low").toString + "/ivf"
     val low = graft.rag.Search.corpus(spark, batchDir2)
       .filter(col("vec_id") === 20L).select("vec_id", "label", "v")
     graft.streaming.Streams.appendIvfBatch(low, indexDir2,

@@ -14,9 +14,11 @@ import graft.functions.DetHash
   * full leak) — previously spec-pinned only at smod=13 (and smod=1 for
   * d2s). Here every law is asserted for smod ∈ {1, 2, 13, 101}, with
   * smod=1 additionally required to DEGENERATE to the full chain exactly.
-  * r6s's query-thinning rule gets the same treatment: the thinned twin
-  * must be the exact query-id restriction of the full assembly at every
-  * thinning factor. */
+  * The d7s ground truth rests on the same SAMPLING law (its truth pairs
+  * are the full truth set's doc_a-mod slice), asserted over the same
+  * moduli. r6s's query-thinning rule gets the same treatment: the thinned
+  * twin must be the exact query-id restriction of the full assembly at
+  * every thinning factor. */
 class SampledTwinPropertySpec extends SparkSpec {
 
   test("pair-sampling, refinement, and conservatism laws hold for every " +
@@ -69,6 +71,26 @@ class SampledTwinPropertySpec extends SparkSpec {
         assert(scc === fullCc, "smod=1 clustering diverged")
       }
     }
+  }
+
+  test("sampled-truth law: the sampled truth pairs are the full truth " +
+       "set's doc_a-mod slice for every smod in {1, 2, 13, 101}; d7s grades " +
+       "d7's candidate index") {
+    def pairs(smod: Option[Int]): Seq[(Long, Long)] =
+      Dedup.truthPairs(spark, Sf, smod).select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val full = pairs(None)
+    assert(full.nonEmpty, "fixture must have ground-truth near-dup pairs")
+    for (smod <- Seq(1, 2, 13, 101)) {
+      val sampled = pairs(Some(smod))
+      assert(sampled === full.filter(_._1 % smod == 0),
+        s"smod=$smod: sampled truth is not the doc_a % $smod slice")
+      if (smod == 1) assert(sampled === full, "smod=1 truth diverged")
+    }
+    val d7 = Dedup.d7LshRecall(spark, Sf).collect().head
+    val d7s = Dedup.d7sLshRecallSampled(spark, Sf).collect().head
+    assert(d7s.getAs[Long]("n_lsh_candidates") === d7.getAs[Long]("n_lsh_candidates"))
+    assert(d7s.getAs[Long]("n_true_pairs") === full.count(_._1 % Dedup.D7sMod == 0))
   }
 
   test("r6s query-thinning law: the twin is the exact query-id " +

@@ -39,7 +39,7 @@ class SourcesSpec extends SparkSpec {
     val asg = graft.rag.Search.corpus(spark, Sf)
       .withColumn("list_id", (col("vec_id") % 4).cast("int"))
       .select("vec_id", "list_id")
-    val dir = Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     Warehouse.writePartitioned(asg, dir, "list_id")
     val pruned = Formats.readParquet(spark, dir).filter(col("list_id") === 2)
     val scan = pruned.queryExecution.executedPlan.toString
@@ -131,7 +131,7 @@ class SourcesSpec extends SparkSpec {
   test("events partitioned by day prune a date-range scan to matching days") {
     val ev = Tables.events(spark, Sf)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-    val dir = Files.createTempDirectory("graft_evday").toString
+    val dir = tempDir("graft_evday").toString
     Warehouse.writePartitioned(ev, dir, "day")
     val oneDay = Formats.readParquet(spark, dir).filter(col("day") === "2024-01-03")
     val plan = oneDay.queryExecution.executedPlan.toString
@@ -148,14 +148,14 @@ class SourcesSpec extends SparkSpec {
 
   test("documents survive a JSON and CSV round-trip") {
     val docs = Tables.documents(spark, Sf)
-    val jdir = Files.createTempDirectory("graft_json").toString + "/docs"
+    val jdir = tempDir("graft_json").toString + "/docs"
     Formats.writeJson(docs, jdir)
     val back = Formats.readJson(spark, jdir, docs.schema)
     assert(back.count() == docs.count())
     assert(back.agg(sum(length(col("text")))).collect()(0).getLong(0) ==
       docs.agg(sum(length(col("text")))).collect()(0).getLong(0))
 
-    val cdir = Files.createTempDirectory("graft_csv").toString + "/docs"
+    val cdir = tempDir("graft_csv").toString + "/docs"
     Formats.writeCsv(docs, cdir)
     val backCsv = Formats.readCsv(spark, cdir, docs.schema)
     assert(backCsv.count() == docs.count())
@@ -164,7 +164,7 @@ class SourcesSpec extends SparkSpec {
   test("I6: compaction collapses fragmented partitions to one file each") {
     val ev = Tables.events(spark, Sf)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-    val dir = Files.createTempDirectory("graft_compact").toString + "/events"
+    val dir = tempDir("graft_compact").toString + "/events"
     // simulate micro-batch litter: 16 files per day directory
     ev.repartition(16).write.partitionBy("day").parquet(dir)
     val before = spark.read.parquet(dir)
@@ -203,10 +203,10 @@ class SourcesSpec extends SparkSpec {
       ranges.sum / ranges.length
     }
     // baseline: single-column sort clusters `a` but leaves `b` unclustered
-    val sortedDir = java.nio.file.Files.createTempDirectory("graft_sorted").toString + "/t"
+    val sortedDir = tempDir("graft_sorted").toString + "/t"
     li.repartitionByRange(8, col("a")).sortWithinPartitions("a")
       .write.parquet(sortedDir)
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/t"
+    val zDir = tempDir("graft_zorder").toString + "/t"
     Warehouse.writeZOrdered(li, zDir, "a", "b")
     // rows survive
     assert(spark.read.parquet(zDir).count() == li.count())
@@ -228,13 +228,13 @@ class SourcesSpec extends SparkSpec {
     // ((c-lo)*65535 > Long.Max) and ANSI mode failed the whole write
     val wide = Seq((0L, 5L), (1L << 60, 7L), ((1L << 60) - 3, 2L), (17L, 9L))
       .toDF("a", "b")
-    val wDir = java.nio.file.Files.createTempDirectory("graft_zwide").toString + "/t"
+    val wDir = tempDir("graft_zwide").toString + "/t"
     Warehouse.writeZOrdered(wide, wDir, "a", "b", files = 2)
     assert(spark.read.parquet(wDir).collect().map(_.getLong(0)).sorted.toSeq ==
       wide.collect().map(_.getLong(0)).sorted.toSeq)
     // empty input: min/max aggregate to NULL — must degrade to a plain
     // (schema-only) write, not crash
-    val eDir = java.nio.file.Files.createTempDirectory("graft_zempty").toString + "/t"
+    val eDir = tempDir("graft_zempty").toString + "/t"
     Warehouse.writeZOrdered(wide.filter(col("a") < 0), eDir, "a", "b")
     assert(spark.read.parquet(eDir).count() == 0)
     // high-magnitude NARROW-range column: double-space binning would
@@ -243,7 +243,7 @@ class SourcesSpec extends SparkSpec {
     // keep the files contiguous runs of `a`
     val base = 1L << 62
     val narrow = (0 until 8).map(i => (base + i, 0L)).toDF("a", "b")
-    val nDir = java.nio.file.Files.createTempDirectory("graft_znarrow").toString + "/t"
+    val nDir = tempDir("graft_znarrow").toString + "/t"
     Warehouse.writeZOrdered(narrow, nDir, "a", "b", files = 2)
     val ranges = new java.io.File(nDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map { f =>
@@ -274,7 +274,7 @@ class SourcesSpec extends SparkSpec {
       col("l_orderkey").cast("long").as("a"),
       col("l_partkey").cast("long").as("b"),
       col("l_suppkey").cast("long").as("c"))
-    val z3 = Files.createTempDirectory("graft_z3").toString + "/t"
+    val z3 = tempDir("graft_z3").toString + "/t"
     Warehouse.writeZOrderedN(li, z3, Seq("a", "b", "c"))
     assert(spark.read.parquet(z3).count() == li.count())
     val boxes3 = statBoxes(z3, Seq("a", "b", "c"))
@@ -297,7 +297,7 @@ class SourcesSpec extends SparkSpec {
     // list. A filtered probe (a10's shape: list predicate from the coarse
     // quantizer AND a metadata label predicate) must be able to skip
     // files on EITHER predicate from footer stats alone.
-    val codesDir = Files.createTempDirectory("graft_zcodes").toString + "/t"
+    val codesDir = tempDir("graft_zcodes").toString + "/t"
     graft.ann.Pq.writeZOrderedCodes(spark, Sf, codesDir)
     val codes = spark.read.parquet(codesDir)
     val probe = codes.select(col("list_id").cast("long"), col("label").cast("long")).head
@@ -370,7 +370,7 @@ class SourcesSpec extends SparkSpec {
     // crash after the record is committed, before the old state is deleted
     merge(8, 3)
     val old = live
-    val saved = new Path(Files.createTempDirectory("graft_commit_spec").toString)
+    val saved = new Path(tempDir("graft_commit_spec").toString)
     val oldRecord = new Path(loc, s"${Warehouse.RecordPrefix}${old.version}")
     Seq(old.dirs.head, oldRecord).foreach(p =>
       FileUtil.copy(fs, p, fs, new Path(saved, p.getName), false, conf))
@@ -412,7 +412,7 @@ class SourcesSpec extends SparkSpec {
 
   test("documents survive an ORC round-trip with pushdown intact") {
     val docs = Tables.documents(spark, Sf)
-    val odir = Files.createTempDirectory("graft_orc").toString + "/docs"
+    val odir = tempDir("graft_orc").toString + "/docs"
     Formats.writeOrc(docs, odir)
     val back = Formats.readOrc(spark, odir)
     assert(back.count() == docs.count())

@@ -14,7 +14,7 @@ class StreamFileSpec extends SparkSpec {
   test("windowed counts over a parquet file stream match the batch rollup") {
     val events = Tables.events(spark, Sf)
       .select("ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_stream").toString + "/events"
+    val dir = tempDir("graft_stream").toString + "/events"
     // two "arriving" batches
     events.filter(col("event_id").isNotNull) // no-op filter keeps schema
     val half = events.count() / 2
@@ -44,9 +44,9 @@ class StreamFileSpec extends SparkSpec {
 
   test("streaming ingest writes a durable checkpointed parquet sink") {
     val events = Tables.events(spark, Sf).select("event_id", "ts", "event_type", "value")
-    val srcDir = Files.createTempDirectory("graft_sink_src").toString + "/events"
-    val sinkDir = Files.createTempDirectory("graft_sink_out").toString + "/bronze"
-    val ckptDir = Files.createTempDirectory("graft_sink_ck").toString + "/ckpt"
+    val srcDir = tempDir("graft_sink_src").toString + "/events"
+    val sinkDir = tempDir("graft_sink_out").toString + "/bronze"
+    val ckptDir = tempDir("graft_sink_ck").toString + "/ckpt"
     events.write.mode("overwrite").parquet(srcDir)
 
     // the raw->bronze ingest shape: stateless derive + filter, append sink

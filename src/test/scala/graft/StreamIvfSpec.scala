@@ -14,7 +14,7 @@ import graft.streaming.Streams.IvfVec
 class StreamIvfSpec extends SparkSpec {
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString + "/ivf"
+    tempDir(s"graft_$tag").toString + "/ivf"
 
   test("H12: streamed appends == batch rebuild; replay idempotent; probe pruned") {
     import spark.implicits._
@@ -37,7 +37,7 @@ class StreamIvfSpec extends SparkSpec {
       .select(col("vec_id"), col("label"), col("v")).as[IvfVec].collect()
     assert(newRows.length > 10, "fixture must have a real ingest batch")
     val feed = MemoryStream[IvfVec]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_h12_ckpt").toString
+    val ckpt = tempDir("graft_h12_ckpt").toString
     val q = Streams.streamingIvfAppend(
       feed.toDF(), indexDir, centSource, ckpt)
     newRows.grouped(math.max(1, newRows.length / 3)).foreach { g =>
@@ -148,7 +148,7 @@ class StreamIvfSpec extends SparkSpec {
       .select(col("vec_id"), col("label"), col("v")).as[IvfVec].collect()
     assert(newRows.length > 10)
     val feed = MemoryStream[IvfVec]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_h14_ckpt").toString
+    val ckpt = tempDir("graft_h14_ckpt").toString
     val q = Streams.streamingIvfPqAppend(feed.toDF(), indexDir, corpusSource, ckpt)
     newRows.grouped(math.max(1, newRows.length / 3)).foreach { g =>
       feed.addData(g.toIndexedSeq)
@@ -214,7 +214,7 @@ class StreamIvfSpec extends SparkSpec {
       StructField("embedding", ArrayType(FloatType, containsNull = false)),
       StructField("label", IntegerType, nullable = false)))
     def write(rs: Seq[Row], tag: String): String = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_rtr_$tag").toString
+      val dir = tempDir(s"graft_rtr_$tag").toString
       spark.createDataFrame(spark.sparkContext.parallelize(rs, 4), schema)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       dir
@@ -228,7 +228,7 @@ class StreamIvfSpec extends SparkSpec {
       .filter(col("vec_id") >= cut)
       .select(col("vec_id"), col("label"), col("v")).as[IvfVec].collect()
     val feed = MemoryStream[IvfVec]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rtr_ckpt").toString
+    val ckpt = tempDir("graft_rtr_ckpt").toString
     val q = Streams.streamingIvfAppend(feed.toDF(), indexDir, centSource, ckpt)
     newRows.grouped(math.max(1, newRows.length / 3)).foreach { g =>
       feed.addData(g.toIndexedSeq)

@@ -30,7 +30,7 @@ class StreamMvSpec extends SparkSpec {
     // alone forgets the table but the next merge would resurrect its state
     graft.sources.Warehouse.dropStale(spark, mvTable)
     val stream = MemoryStream[LiDelta]
-    val ckptDir = s"/tmp/graft_h11_ckpt_${System.nanoTime()}"
+    val ckptDir = tempDir("graft_h11_ckpt").toString
     val q = Streams.maintainQ1Mv(stream.toDF(), mvTable, ckptDir)
     try {
       // three uneven micro-batches (incl. the whole tail in one) — merge

@@ -61,7 +61,7 @@ class TablesSchemaSpec extends SparkSpec {
   test("a drifted schema fails with the named error") {
     // synthesize drift: write an events file with ts as string
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift").toString
     spark.read.parquet(s"$Sf/events.parquet")
       .withColumn("ts", col("ts").cast("string"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -76,7 +76,7 @@ class TablesSchemaSpec extends SparkSpec {
     // tested against — date changes interval arithmetic and output types
     // silently across ~20 plans
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift2").toString
+    val dir = tempDir("graft_drift2").toString
     spark.read.parquet(s"$Sf/orders.parquet")
       .withColumn("o_orderdate", col("o_orderdate").cast("date"))
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")

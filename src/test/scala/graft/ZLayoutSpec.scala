@@ -31,14 +31,14 @@ class ZLayoutSpec extends SparkSpec {
     val nlists = 1024
     val rows = (0 until 32768).map(i => (i.toLong, (i % nlists).toLong, (i % 7).toLong))
     val df = rows.toDF("vec_id", "list_id", "label")
-    val zDir = java.nio.file.Files.createTempDirectory("graft_znl").toString + "/z"
+    val zDir = tempDir("graft_znl").toString + "/z"
     // 64 files: the z-file budget scales with DATA volume, not with
     // nlists — that decoupling is the whole point. Interleaving halves
     // per-dimension precision per doubling of files, so 64 files give
     // each file a ~1/8-of-domain list_id box (3 list bits) — vs 1024
     // dirs for the partitioned layout at the same nlists.
     graft.sources.Warehouse.writeZOrderedN(df, zDir, Seq("list_id", "label"), files = 64)
-    val pDir = java.nio.file.Files.createTempDirectory("graft_pnl").toString + "/p"
+    val pDir = tempDir("graft_pnl").toString + "/p"
     df.write.partitionBy("list_id").parquet(pDir)
     def parquetFiles(d: String): Int = {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
@@ -105,7 +105,7 @@ class ZLayoutSpec extends SparkSpec {
     // are keyed on a data SIGNATURE, not just the path — the driver
     // rewrites /root/testdata under the same path between rounds, and a
     // live session must rebuild, not serve stale codes/prunings.
-    val dir = java.nio.file.Files.createTempDirectory("graft_regen").toString
+    val dir = tempDir("graft_regen").toString
     val full = spark.read.parquet(s"$Sf/embeddings.parquet")
     full.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val before = graft.ann.Pq.a13zIvfPqTopK(spark, dir).collect()
