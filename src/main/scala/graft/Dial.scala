@@ -149,9 +149,7 @@ object Dial {
     out.emit(s"""{"harness":"clustered_dial","sf":"${sfName(sfDir, 2)}","truth_rows":$nTruth,"brute_sec":${fmt(bruteSec)},"scanned_fraction":0.375}""")
     // what the chooser and the router pick on this corpus, beside what
     // every family they choose between delivers
-    val nCorpus = Search.corpus(spark, sfDir).count()
-    val occ = Ann.occupancyEstimate(spark, sfDir, Ann.nlistsFor(nCorpus))
-    val spl = Ann.splinterEstimate(spark, sfDir, Ann.nlistsFor(nCorpus))
+    val Ann.AnnStats(nCorpus, occ, spl, _) = Ann.annStats(spark, sfDir)
     val point = Ann.annOperatingPoint(nCorpus, occ, 0.9, splinter = spl)
     out.emit(s"""{"harness":"clustered_dial","auto_point":{"n":$nCorpus,"occupancy":$occ,"splinter":$spl,"recall_floor":0.9,"nlists":${point.nlists},"nprobe":${point.nprobe},"rerank_depth":${point.rerankDepth}}}""")
     Seq(Router.ComputeBound, Router.IoBound).foreach { reg =>
@@ -196,11 +194,8 @@ object Dial {
     val sfDir = args.headOption.getOrElse("./testdata_clustered/sf1")
     val out = new Harness.Lines(args.lift(1))
     val e = Search.corpus(spark, sfDir)
-    val n = e.count()
+    val Ann.AnnStats(n, occ, spl, _) = Ann.annStats(spark, sfDir)
     val qmod = n.toInt // single query: only vec_id = 0 satisfies % n == 0
-    val nl = Ann.nlistsFor(n)
-    val occ = Ann.occupancyEstimate(spark, sfDir, nl)
-    val spl = Ann.splinterEstimate(spark, sfDir, nl)
     val p = Ann.annOperatingPoint(n, occ, 0.9, splinter = spl)
     out.emit(s"""{"harness":"io_bytes","sf":"${sfName(sfDir, 2)}","n":$n,"auto_point":{"nlists":${p.nlists},"nprobe":${p.nprobe},"rerank_depth":${p.rerankDepth},"occupancy":$occ,"splinter":$spl}}""")
     // query_extract is the floor every family pays to load the query

@@ -191,9 +191,9 @@ object Ann {
   private[ann] def listProbes(e: DataFrame, nprobe: Int = 3,
                               nlists: Int = 8, qmod: Int = 101,
                               centSource: Option[DataFrame] = None): DataFrame = {
-    // centSource (r16, default e): the streamed-append composition probes
-    // a combined (batch ∪ streamed) query set against the VERSIONED batch
-    // centroid artifact — the a20/H12 rule on the query side
+    // centSource (r16, default e): a serve with streamed appends probes
+    // the combined (batch ∪ appends) query set against the VERSIONED
+    // batch centroid artifact — the a20/H12 rule on the query side
     e.filter(col("vec_id") % qmod === 0)
       .crossJoin(broadcast(Stages.centroidRow(centSource.getOrElse(e), nlists)))
       .select(col("vec_id").as("query_id"),
@@ -219,23 +219,42 @@ object Ann {
     ivfTopK(spark, dir, sameLabel = false, nlists = nlists, nprobe = nprobe,
       qmod = qmod, staticPruned = true)
 
-  private def ivfTopK(spark: SparkSession, dir: String, sameLabel: Boolean,
-                      nlists: Int = 8, nprobe: Int = 3,
-                      qmod: Int = 101,
-                      staticPruned: Boolean = false): DataFrame = {
-    val asg = ivfListTable(spark, dir, nlists)
-    listTopK(
-      if (staticPruned) asg.filter(col("list_id").isin(
-        probedListIdsCached(spark, dir, nprobe, nlists, qmod): _*))
-      else asg,
-      listProbes(Search.corpus(spark, dir), nprobe, nlists, qmod), 10, sameLabel)
-  }
+  /** IVF-flat top-10 at (nlists, nprobe). Without `appends` the probes
+    * read the build-once list table (`staticPruned`: only the probed
+    * partitions, by a static `IN`). With the streamed `appends`
+    * ([[withAppends]]) list assignment and probes are computed on the fly
+    * over (batch ∪ appends) against the VERSIONED batch centroids (the
+    * a20/H12 rule), so the result row-matches an equivalent batch
+    * rebuild's at the same dials — one O(corpus · nlists) narrow
+    * assignment pass in place of the artifact read, and no static pruning;
+    * a long-lived deployment compacts the appends
+    * ([[graft.streaming.Streams.compactIvfIndex]]) and returns to the
+    * partition-pruned artifact read. */
+  private[ann] def ivfTopK(spark: SparkSession, dir: String, sameLabel: Boolean,
+                           nlists: Int = 8, nprobe: Int = 3,
+                           qmod: Int = 101,
+                           staticPruned: Boolean = false,
+                           appends: Option[DataFrame] = None): DataFrame =
+    appends match {
+      case None =>
+        val asg = ivfListTable(spark, dir, nlists)
+        listTopK(
+          if (staticPruned) asg.filter(col("list_id").isin(
+            probedListIdsCached(spark, dir, nprobe, nlists, qmod): _*))
+          else asg,
+          listProbes(Search.corpus(spark, dir), nprobe, nlists, qmod), 10, sameLabel)
+      case Some(_) =>
+        val batch = Search.corpus(spark, dir)
+        val all = withAppends(batch, appends)
+        listTopK(listAssignment(all, Some(batch), nlists),
+          listProbes(all, nprobe, nlists, qmod, Some(batch)), 10, sameLabel)
+    }
 
   /** Exact cosine top-`k` of each query's probed lists: list rows `asg`
     * (vec_id, list_id, label, v, nrm) joined to `probes` (query_id,
     * list_id, qlabel, qv, qnrm) — restricted to the query's label when
-    * `sameLabel`. The IVF-flat list scan of a2/a10, a4, a19 and the
-    * streamed serve. */
+    * `sameLabel`. The IVF-flat list scan of a2/a10, a4 and a19, batch
+    * or streamed. */
   private[ann] def listTopK(asg: DataFrame, probes: DataFrame, k: Int,
                             sameLabel: Boolean = false): DataFrame = {
     val joinCond = asg("list_id") === probes("list_id") &&
@@ -246,22 +265,6 @@ object Ann {
     Stages.rankTopK(asg.join(broadcast(probes), joinCond),
       Stages.cosine(col("qv"), col("qnrm"), col("v"), col("nrm")), k)
   }
-
-  /** [[ivfTopK]] over an EXPLICIT corpus (vec_id, label, v, nrm) with the
-    * versioned centroid source — the streamed-append serving path
-    * ([[Router.aRouteTopkStreamed]]): assignment and probes are computed
-    * on the fly against `centSource`'s centroids (the a20/H12 rule), so
-    * the result row-matches an equivalent batch rebuild's ivfTopK at the
-    * same dials. Trades the build-once warehouse artifact for one
-    * O(corpus · nlists) narrow assignment pass (no shuffle of the corpus
-    * side); a long-lived deployment compacts the streamed appends
-    * ([[graft.streaming.Streams.compactIvfIndex]]) and returns to the
-    * partition-pruned artifact read. */
-  private[graft] def ivfTopKOver(corpus: DataFrame, centSource: DataFrame,
-                                 nlists: Int, nprobe: Int,
-                                 qmod: Int = 101): DataFrame =
-    listTopK(listAssignment(corpus, Some(centSource), nlists),
-      listProbes(corpus, nprobe, nlists, qmod, Some(centSource)), 10)
 
   // ------------------------------------------------------------ auto mode
 
@@ -304,8 +307,8 @@ object Ann {
     * mean: the rerank shortlist must cover the WORST query's cluster
     * crowd, and deterministic (vec_id < nlists) centroids shatter a true
     * cluster across ~nlists/clusters lists, so max-list-size UNDER-states
-    * true cluster occupancy — [[annOperatingPoint]] folds in a 2x safety
-    * factor for exactly that bias. An artifact value (r17): occupancy
+    * true cluster occupancy — [[dialLaws]] folds in a 2x safety factor
+    * for exactly that bias. An artifact value (r17): occupancy
     * and splinter are properties of the BUILD artifact (FAISS stores
     * per-list sizes with the inverted lists), and recomputing them fired
     * most of a21_route's 26 Spark jobs per warm run. */
@@ -326,7 +329,7 @@ object Ann {
     * had held at the two smaller decades (1 and ~2-3 lists per crowd).
     * The statistic is the worst centroid's near-duplicate count (rounded
     * cosine >= tau, self included) = the number of lists one cluster crowd
-    * can splinter across; [[annOperatingPoint]] probes that many. Cost:
+    * can splinter across; [[dialLaws]] probes that many. Cost:
     * one O(src x nlists) pass over the broadcast-sized centroid set only
     * (never the corpus); past 4096 centroids the source side is
     * stride-sampled — splinter is ~uniform per cluster (every cluster big
@@ -357,6 +360,90 @@ object Ann {
       .agg(max(col("nn"))).collect()(0).getLong(0).toInt
   }
 
+  /** The live statistics every ANN decision reads: corpus count `n`,
+    * max-list occupancy at the sqrt-law nlists, centroid splinter, and the
+    * embedding dimension the router's byte model prices. */
+  case class AnnStats(n: Long, occupancy: Long, splinter: Int, dim: Int)
+
+  /** The `batch` corpus frame with the streamed `appends` (rows as
+    * [[graft.streaming.Streams.readIvfIndex]] returns them) unioned in —
+    * `batch` itself when there are none, so every batch plan is
+    * unchanged. */
+  private[ann] def withAppends(batch: DataFrame,
+                               appends: Option[DataFrame]): DataFrame =
+    appends.fold(batch)(a => batch.unionByName(a.select("vec_id", "label", "v", "nrm")))
+
+  /** [[AnnStats]] of the corpus at `dir`, plus the streamed `appends`.
+    *
+    * Without appends every number is a build artifact value: (n, dim) is
+    * the corpus metadata a production index stores with the build,
+    * occupancy and splinter are [[occupancyEstimate]]/[[splinterEstimate]]
+    * at the sqrt-law nlists.
+    *
+    * With appends the statistics are those of (batch ∪ appends): count and
+    * dimension from the combined vector set; occupancy from the combined
+    * assignment at the combined-count sqrt-law nlists AGAINST THE
+    * VERSIONED BATCH CENTROIDS (the a20/H12 rule — a batch rebuild of the
+    * same data assigns identically, so every decision priced on them
+    * equals the rebuild's, RouterSpec/StreamIvfSpec); splinter from those
+    * same centroids. The rebuild law's three preconditions are enforced
+    * by refusal:
+    *  1. equal dims — an append at another embedding dimension would
+    *     mis-price every route (the RouterDimSpec rule);
+    *  2. no vec_id collisions between batch and appends (or within the
+    *     appends) — a plain unionByName would double-count n, inflate
+    *     occupancy, and let the serve emit duplicate hit rows;
+    *  3. every appended vec_id >= the combined-count sqrt-law nlists — an
+    *     appended id below it would BE a centroid in an equivalent batch
+    *     rebuild (centroids are `vec_id < nlists` of the full corpus) but
+    *     is not in the versioned batch centroid set, so the decision would
+    *     silently diverge from the rebuild's. */
+  def annStats(spark: SparkSession, dir: String,
+               appends: Option[DataFrame] = None): AnnStats = appends match {
+    case None =>
+      val (n, dim) = Artifact.value(spark, "corpusmeta", dir, Emb) {
+        // one narrow pass yields both the count and the embedding DIMENSION
+        // (max(size) == any row's size — fixed-width corpus; max keeps the
+        // aggregate deterministic and matches the oracle's max(len(v)))
+        val head = Search.corpus(spark, dir)
+          .agg(count(lit(1)), max(size(col("v")))).head()
+        val n0 = head.getLong(0)
+        // empty corpus: max(size) is NULL — fail with the family's
+        // diagnostic instead of an NPE
+        require(n0 > 0, s"router stats: empty corpus at $dir")
+        (n0, head.getInt(1))
+      }
+      val nlists = nlistsFor(n)
+      AnnStats(n, occupancyEstimate(spark, dir, nlists),
+        splinterEstimate(spark, dir, nlists), dim)
+    case Some(a) =>
+      val batch = Search.corpus(spark, dir)
+      val combined = withAppends(batch, appends)
+      val head = combined.agg(count(lit(1)), max(size(col("v"))),
+        min(size(col("v"))), countDistinct(col("vec_id"))).head()
+      val n = head.getLong(0)
+      require(n > 0, s"router stats: empty corpus at $dir + appends")
+      val dim = head.getInt(1)
+      require(head.getInt(2) == dim,
+        s"router stats: mixed embedding dims in $dir + appends " +
+          s"(${head.getInt(2)} vs $dim) — route refuses rather than mis-price")
+      require(head.getLong(3) == n,
+        s"router stats: duplicate vec_ids across $dir + appends " +
+          s"(${n - head.getLong(3)} collisions) — a unionByName serve would " +
+          "double-count; dedup the appends (or compact and rebuild) first")
+      val nlists = nlistsFor(n)
+      val aHead = a.agg(count(lit(1)), min(col("vec_id"))).head()
+      require(aHead.getLong(0) == 0L || aHead.getLong(1) >= nlists,
+        s"router stats: appended vec_id ${aHead.getLong(1)} < nlists=$nlists " +
+          "— it would be a centroid in an equivalent batch rebuild but is " +
+          "not in the versioned batch centroid set; route refuses rather " +
+          "than silently diverge from the rebuild law")
+      val occ = listAssignment(combined, Some(batch), nlists)
+        .groupBy("list_id").agg(count(lit(1)).as("sz"))
+        .agg(max(col("sz"))).head().getLong(0)
+      AnnStats(n, occ, splinterOf(batch, nlists), dim)
+  }
+
   /** The rerank-depth LAW, as MEASURED (PLANS §clustered-corpus, sf1 occ
     * ~313 and sf10 occ ~3125 on the 64-Gaussian corpus): mean recall@10 of
     * a7's ADC-shortlist + exact-rerank as a function of R/occupancy.
@@ -381,10 +468,19 @@ object Ann {
     }.getOrElse(c.last._1)
   }
 
-  /** The a-family's d5-style operating-point chooser (r12, the direct
-    * sequel to d5OperatingPoint): (nlists, nprobe, rerankDepth) from live
-    * corpus statistics, encoding the two laws PLANS §clustered-corpus
-    * measured instead of literals tuned at another scale.
+  /** Each family's dials under the two laws, and why a law refuses (None
+    * when its family is feasible): the IVF probe width `nprobe` for
+    * ivf_flat and the ADC shortlist depth `rerankDepth` for the PQ
+    * rerank, both at the sqrt-law `nlists`. */
+  case class DialLaws(nlists: Int, nprobe: Int, rerankDepth: Long,
+                      ivfRefusal: Option[String], pqRefusal: Option[String]) {
+    def ivfFeasible: Boolean = ivfRefusal.isEmpty
+    def pqFeasible: Boolean = pqRefusal.isEmpty
+  }
+
+  /** The a-family's two measured laws (PLANS §clustered-corpus), computed
+    * once for the chooser ([[annOperatingPoint]], the auto entries) and
+    * the family router ([[Router.route]]).
     *
     *  - nlists: [[nlistsFor]] — sqrt growth toward cluster alignment.
     *  - nprobe: regime-split, honestly. `clusteredRegime=true` (the data
@@ -398,64 +494,78 @@ object Ann {
     *    data (`clusteredRegime=false`) no index beats the scanned
     *    fraction (§ivf-dial: recall ≈ nprobe/nlists), so the floor fixes
     *    nprobe = ceil(floor·nlists); past `maxScanFraction` that is a
-    *    scan wearing an index hat and the chooser THROWS — route to a1
-    *    brute force, which is exact at the same cost.
+    *    scan wearing an index hat and ivf_flat is REFUSED — a1 brute
+    *    force is exact at the same cost.
     *  - rerankDepth: [[rerankRatioFor]] · occupancy · 2 (the safety
     *    factor for max-list-size understating true cluster occupancy
     *    under splintered deterministic centroids), floored at the
     *    oracle-pinned 50. A depth past `maxRerank` or the corpus count
     *    means the 8-byte codes cannot shortlist this corpus at this
-    *    floor — THROW, route to a2 (raw-vector IVF) or a1.
-    */
-  def annOperatingPoint(corpusCount: Long, occupancyEstimate: Long,
-                        recallFloor: Double, clusteredRegime: Boolean = true,
-                        maxScanFraction: Double = 0.25,
-                        maxRerank: Int = 65536,
-                        splinter: Int = 1): AnnPoint = {
+    *    floor — the PQ rerank is REFUSED (a2 raw-vector IVF or a1). */
+  def dialLaws(corpusCount: Long, occupancyEstimate: Long, splinter: Int,
+               recallFloor: Double, clusteredRegime: Boolean = true,
+               maxScanFraction: Double = 0.25,
+               maxRerank: Int = 65536): DialLaws = {
     require(corpusCount > 0, s"corpusCount $corpusCount")
     require(occupancyEstimate > 0, s"occupancyEstimate $occupancyEstimate")
     require(recallFloor > 0.0 && recallFloor < 1.0, s"recallFloor $recallFloor")
     require(splinter >= 1, s"splinter $splinter")
     val nlists = nlistsFor(corpusCount)
+    // probe every list the query's cluster crowd can splinter across
+    // ([[splinterEstimate]]); splinter 1 keeps the measured constant 3
     val nprobe =
-      if (clusteredRegime) {
-        // probe every list the query's cluster crowd can splinter across
-        // ([[splinterEstimate]]); splinter 1 keeps the measured constant 3
-        val need = math.max(3, splinter)
-        if (need > maxScanFraction * nlists) throw new IllegalArgumentException(
-          f"ANN dial infeasible: clustered data splinters one crowd across " +
-            f"$splinter%d of $nlists%d lists — covering it (nprobe=$need%d) " +
-            f"exceeds maxScanFraction=$maxScanFraction%.2f, so the corpus is " +
-            "effectively one giant crowd at this nlists; use " +
-            "a1_knn_bruteforce or rebuild with a learned coarse quantizer " +
-            "(a4) whose centroids do not duplicate")
-        need
-      } else {
-        val need = math.max(3, math.ceil(recallFloor * nlists).toInt)
-        if (need > maxScanFraction * nlists) throw new IllegalArgumentException(
-          f"ANN dial infeasible: recall>=$recallFloor%.2f on structure-less " +
-            f"data needs nprobe=$need%d of $nlists%d lists (recall ~ scanned " +
-            f"fraction, PLANS §ivf-dial) — past maxScanFraction=" +
-            f"$maxScanFraction%.2f that is a scan wearing an index hat; use " +
-            "a1_knn_bruteforce (exact at the same cost) or accept a lower floor")
-        need
-      }
+      if (clusteredRegime) math.max(3, splinter)
+      else math.max(3, math.ceil(recallFloor * nlists).toInt)
+    val ivfRefusal = Option.when(nprobe > maxScanFraction * nlists)(
+      if (clusteredRegime)
+        f"ANN dial infeasible: clustered data splinters one crowd across " +
+          f"$splinter%d of $nlists%d lists — covering it (nprobe=$nprobe%d) " +
+          f"exceeds maxScanFraction=$maxScanFraction%.2f, so the corpus is " +
+          "effectively one giant crowd at this nlists; use " +
+          "a1_knn_bruteforce or rebuild with a learned coarse quantizer " +
+          "(a4) whose centroids do not duplicate"
+      else
+        f"ANN dial infeasible: recall>=$recallFloor%.2f on structure-less " +
+          f"data needs nprobe=$nprobe%d of $nlists%d lists (recall ~ scanned " +
+          f"fraction, PLANS §ivf-dial) — past maxScanFraction=" +
+          f"$maxScanFraction%.2f that is a scan wearing an index hat; use " +
+          "a1_knn_bruteforce (exact at the same cost) or accept a lower floor")
     val depth = math.max(50L, math.ceil(
       rerankRatioFor(recallFloor) * occupancyEstimate * 2.0).toLong)
-    if (depth > maxRerank || depth >= corpusCount) throw new IllegalArgumentException(
+    val pqRefusal = Option.when(depth > maxRerank || depth >= corpusCount)(
       f"ANN dial infeasible: recall>=$recallFloor%.2f at occupancy " +
         f"~$occupancyEstimate%d needs rerankDepth=$depth%d (> maxRerank=" +
         f"$maxRerank%d or >= corpus $corpusCount%d) — the 8-byte PQ codes " +
         "cannot shortlist this corpus at this floor; use a2_knn_ivf (raw " +
         "vectors, partition-pruned) or a1_knn_bruteforce")
-    AnnPoint(nlists, nprobe, depth.toInt)
+    DialLaws(nlists, nprobe, depth, ivfRefusal, pqRefusal)
+  }
+
+  /** Throws a law's refusal, if it has one. */
+  private[ann] def refuse(refusal: Option[String]): Unit =
+    refusal.foreach(m => throw new IllegalArgumentException(m))
+
+  /** The a-family's d5-style operating-point chooser (r12, the direct
+    * sequel to d5OperatingPoint): (nlists, nprobe, rerankDepth) from live
+    * corpus statistics by [[dialLaws]], THROWING the first refusal (the
+    * IVF law's, then the depth law's) instead of returning a point
+    * either family would miss its floor at. */
+  def annOperatingPoint(corpusCount: Long, occupancyEstimate: Long,
+                        recallFloor: Double, clusteredRegime: Boolean = true,
+                        maxScanFraction: Double = 0.25,
+                        maxRerank: Int = 65536,
+                        splinter: Int = 1): AnnPoint = {
+    val l = dialLaws(corpusCount, occupancyEstimate, splinter, recallFloor,
+      clusteredRegime, maxScanFraction, maxRerank)
+    refuse(l.ivfRefusal.orElse(l.pqRefusal))
+    AnnPoint(l.nlists, l.nprobe, l.rerankDepth.toInt)
   }
 
   /** D2 AUTO MODE (r12 — the chooser IS the path, mirroring
     * d5EmbeddingNeardupAuto): nlists/nprobe come from [[annOperatingPoint]]
-    * on the live corpus count, so a pipeline caller gets the sqrt-law
-    * quantizer and the chooser's infeasibility throw instead of the
-    * oracle-pinned 8x3 literal whose failure the repo itself measured
+    * on the live statistics ([[annStats]]), so a pipeline caller gets the
+    * sqrt-law quantizer and the chooser's infeasibility throw instead of
+    * the oracle-pinned 8x3 literal whose failure the repo itself measured
     * (37.5% scanned at 13.8 s where the aligned index takes 1.6 s, PLANS
     * §clustered-corpus). The registered `a2_knn_ivf` query keeps the
     * pinned literal — this entry point is additive (AnnAutoSpec). The
@@ -464,11 +574,10 @@ object Ann {
   def a2KnnIvfAuto(spark: SparkSession, dir: String,
                    recallFloor: Double = 0.9,
                    clusteredRegime: Boolean = true): DataFrame = {
-    val n = Search.corpus(spark, dir).count()
-    fixedQGuard(n / 101 + 1, "a2KnnIvfAuto")
-    val occ = occupancyEstimate(spark, dir, nlistsFor(n))
-    val spl = splinterEstimate(spark, dir, nlistsFor(n))
-    val p = annOperatingPoint(n, occ, recallFloor, clusteredRegime, splinter = spl)
+    val st = annStats(spark, dir)
+    fixedQGuard(st.n / 101 + 1, "a2KnnIvfAuto")
+    val p = annOperatingPoint(st.n, st.occupancy, recallFloor, clusteredRegime,
+      splinter = st.splinter)
     ivfTopK(spark, dir, sameLabel = false, nlists = p.nlists, nprobe = p.nprobe)
   }
 

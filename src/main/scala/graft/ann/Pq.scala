@@ -76,13 +76,20 @@ object Pq {
 
   /** D5: PQ top-10 for the query set (vec_id % 101 == 0, as the IVF path).
     * Similarity = approx_dot / (qnrm * recon_nrm), rounded; rank with id
-    * tie-break. */
+    * tie-break. With the streamed `appends` ([[Ann.withAppends]]) the
+    * codes are the build-once code table ∪ the appends encoded inline
+    * against the VERSIONED batch codebook, and queries come from the
+    * combined ids — the codes an equivalent batch rebuild would hold. */
   def a5PqTopK(spark: SparkSession, dir: String, k: Int = 10,
-               qmod: Int = 101): DataFrame = {
+               qmod: Int = 101,
+               appends: Option[DataFrame] = None): DataFrame = {
+    appends.foreach(streamedIdGuard(_, 0, "a5PqTopK"))
     val e = Search.corpus(spark, dir) // vec_id, label, v, nrm
     val d = subDimOf(spark, dir)      // == D at the pinned dim-64 corpora
     val cb = codebook(e, d)
-    adcTopK(e, cb, k, codesTable(spark, dir, e, cb, "pqcodes", d), qmod, d)
+    val codes = codesTable(spark, dir, e, cb, "pqcodes", d)
+    adcTopK(Ann.withAppends(e, appends), cb, k,
+      appends.fold(codes)(a => codes.unionByName(encode(a, cb, d))), qmod, d)
   }
 
   /** Per-query ADC lookup tables (query_id, qnrm, l0..l7) against ANY
@@ -126,25 +133,27 @@ object Pq {
   // a clustered corpus at sf1 (~310/cluster) needs R in the hundreds.
   // The nprobe analogy is exact: both dials trade a bounded candidate
   // scan for recall, and both grow with occupancy, not corpus size.
+  // `appends` (r17, D28): the streamed serve over (batch ∪ appends) — the
+  // shortlist scans a5's combined codes, the rerank the combined vectors;
+  // rows match a7 on an equivalent rebuilt corpus at the same depth.
   def a7PqRerank(spark: SparkSession, dir: String,
-                 rerankDepth: Int = 50, qmod: Int = 101): DataFrame =
+                 rerankDepth: Int = 50, qmod: Int = 101,
+                 appends: Option[DataFrame] = None): DataFrame =
     exactRerank(spark, dir,
-      a5PqTopK(spark, dir, k = rerankDepth, qmod = qmod)
-        .select(col("query_id"), col("vec_id")), qmod)
+      a5PqTopK(spark, dir, k = rerankDepth, qmod = qmod, appends = appends)
+        .select(col("query_id"), col("vec_id")), qmod, appends = appends)
 
   /** Exact cosine re-rank of ANY (query_id, vec_id) shortlist against the
     * raw vectors — the "refine" stage shared by a7 (flat-ADC shortlist)
-    * and a22 (probe-pruned IVFPQ shortlist). Identical DataFrame ops to
-    * the pre-r13 inline a7 body, so the a7 plan fingerprint is unchanged. */
+    * and a22 (probe-pruned IVFPQ shortlist), batch or with streamed
+    * `appends` (queries and candidates then both draw from batch ∪
+    * appends). Identical DataFrame ops to the pre-r13 inline a7 body, so
+    * the a7 plan fingerprint is unchanged. */
   private def exactRerank(spark: SparkSession, dir: String,
                           shortlist: DataFrame, qmod: Int,
                           vecSource: Option[DataFrame] = None,
-                          corpusOver: Option[DataFrame] = None): DataFrame = {
-    // corpusOver (r17): an explicit (vec_id, label, v, nrm) corpus for the
-    // streamed serves — queries and candidates both draw from
-    // (batch ∪ appends) instead of the batch dir; defaults keep every
-    // registered plan byte-identical
-    val e = corpusOver.getOrElse(Search.corpus(spark, dir))
+                          appends: Option[DataFrame] = None): DataFrame = {
+    val e = Ann.withAppends(Search.corpus(spark, dir), appends)
     val probes = e.filter(col("vec_id") % qmod === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     // broadcast the (queries x R)-row shortlist into the corpus scan —
@@ -186,17 +195,24 @@ object Pq {
     * retrieval store (see [[Router]] storage note). Results are
     * byte-identical either way — the shortlist join selects the same
     * rows — so the oracle is unchanged; only the scan source moved. */
+  //
+  // With the streamed `appends` (r17, D28) the serve runs over (batch ∪
+  // appends): a13's codes gain the appends encoded against the VERSIONED
+  // batch codebook and centroids, and the probed-list pruning is off (the
+  // memoized probe set is the batch's). Rows match a22 on an equivalent
+  // rebuilt corpus at the same dials (RouterSpec).
   def a22IvfPqRerank(spark: SparkSession, dir: String, qmod: Int = 101,
                      nlists: Int = 8, nprobe: Int = 3,
                      rerankDepth: Int = 50,
-                     prunedRerank: Boolean = true): DataFrame = {
+                     prunedRerank: Boolean = true,
+                     appends: Option[DataFrame] = None): DataFrame = {
     // the probed-list id set is ONE driver-side collect (r14, ADVICE r13):
     // both pruned scans — the code table inside a13 and the refine's
     // vector retrieval — share it, instead of each re-running the
     // query-scan + window job that computes it
     // memoized per (corpus, signature, dials) as of r18 — the collect was
     // the last per-serve driver job in this chain (Ann.probedListIdsCached)
-    val probed = if (prunedRerank)
+    val probed = if (prunedRerank && appends.isEmpty)
       Some(Ann.probedListIdsCached(spark, dir, nprobe, nlists, qmod))
     else None // pre-r13 shape: refine re-scans the flat corpus file
     val vecSource = probed.map(ids =>
@@ -204,13 +220,13 @@ object Pq {
     exactRerank(spark, dir,
       a13IvfPqTopK(spark, dir, k = rerankDepth, qmod = qmod,
         nlists = nlists, nprobe = nprobe,
-        prunedListIds = probed)
+        prunedListIds = probed, appends = appends)
         .select(col("query_id"), col("vec_id")), qmod,
-      vecSource = vecSource)
+      vecSource = vecSource, appends = appends)
   }
 
-  /** The rebuild-law id floor the PQ streamed serves add on top of
-    * [[Router.statsWithStream]]'s guards (equal dims, no collisions,
+  /** The rebuild-law id floor the PQ serves with streamed appends add on
+    * top of [[Ann.annStats]]'s guards (equal dims, no collisions,
     * appended ids >= nlists): the deterministic codebook draws from
     * vec_id < K, so an appended id below max(nlists, K) would make an
     * equivalent batch rebuild draw DIFFERENT centroids or codebook than
@@ -227,86 +243,26 @@ object Pq {
         "the corpus and rebuild instead")
   }
 
-  /** D28 (r17, verdict r16 #6): [[a22IvfPqRerank]] over (batch ∪ streamed
-    * appends) — the PQ-family streamed serve the router previously
-    * REFUSED. The appends are re-encoded against the VERSIONED batch
-    * artifacts (codebook = batch ids < K, coarse centroids = batch ids <
-    * nlists — [[encodeBatchAgainst]], H14's per-batch body), so the
-    * combined code set is byte-identical to what a full batch rebuild of
-    * the same data would encode, and the served rows row-match
-    * `a22IvfPqRerank` on a rebuilt corpus at the same dials
-    * (StreamIvfSpec). O(appends) re-encode per maintenance cycle, never a
-    * corpus re-encode; queries are the standard qmod batch drawn from the
-    * combined ids, so appended vectors are both searchable and queries. */
-  private[graft] def ivfPqRerankStreamed(spark: SparkSession, dir: String,
-      streamedRaw: DataFrame, nlists: Int = 8, nprobe: Int = 3,
-      rerankDepth: Int = 50, qmod: Int = 101): DataFrame = {
-    streamedIdGuard(streamedRaw, nlists, "ivfPqRerankStreamed")
-    val e = Search.corpus(spark, dir)
-    val d = subDimOf(spark, dir)
-    val cb = codebook(e, d)
-    val combined = e.select("vec_id", "label", "v", "nrm")
-      .unionByName(streamedRaw.select("vec_id", "label", "v", "nrm"))
-    // batch codes from the build-once artifact; append codes re-encoded
-    // against the same versioned codebook/centroids. The artifact's
-    // list_id reads back as a DISCOVERED partition column (int), the
-    // fresh encode's as the centroid id (long) — align on the artifact's
-    // type so the union is exact.
-    val batchCodes = ivfPqTable(spark, dir, e, cb, nlists, d)
-    val listType = batchCodes.schema("list_id").dataType
-    val codes = batchCodes.unionByName(
-      encodeBatchAgainst(e, streamedRaw, nlists)
-        .withColumn("list_id", col("list_id").cast(listType)))
-    // a13's probe join, with probes/LUTs drawn from the combined query
-    // set against the versioned centroids/codebook
-    val shortlist = probedAdcTopK(codes,
-      Ann.listProbes(combined, nprobe = nprobe, nlists = nlists, qmod = qmod,
-        centSource = Some(e)),
-      queryLut(combined, cb, qmod, d), rerankDepth)
-    exactRerank(spark, dir, shortlist.select(col("query_id"), col("vec_id")), qmod,
-      corpusOver = Some(combined))
-  }
-
-  /** D28's flat-ADC sibling: [[a7PqRerank]] over (batch ∪ streamed) —
-    * batch codes from the build-once code table, append codes encoded
-    * inline against the versioned codebook; row-matches a7 on a rebuilt
-    * corpus at the same depth (StreamIvfSpec, same rebuild-law
-    * preconditions as [[ivfPqRerankStreamed]]). */
-  private[graft] def pqRerankStreamed(spark: SparkSession, dir: String,
-      streamedRaw: DataFrame, rerankDepth: Int = 50,
-      qmod: Int = 101): DataFrame = {
-    streamedIdGuard(streamedRaw, 0, "pqRerankStreamed")
-    val e = Search.corpus(spark, dir)
-    val d = subDimOf(spark, dir)
-    val cb = codebook(e, d)
-    val combined = e.select("vec_id", "label", "v", "nrm")
-      .unionByName(streamedRaw.select("vec_id", "label", "v", "nrm"))
-    val codes = codesTable(spark, dir, e, cb, "pqcodes", d)
-      .unionByName(encode(streamedRaw, cb, d))
-    exactRerank(spark, dir,
-      adcTopK(combined, cb, rerankDepth, codes, qmod, d)
-        .select(col("query_id"), col("vec_id")),
-      qmod, corpusOver = Some(combined))
-  }
-
   /** D7 AUTO MODE (r12, the d5EmbeddingNeardupAuto pattern for the PQ
-    * stack): rerankDepth comes from [[Ann.annOperatingPoint]] on live
-    * corpus statistics — corpus count plus the max-list occupancy of the
-    * build-once IVF artifact at the sqrt-law nlists (the cheapest
-    * clusteredness statistic the corpus already owns) — so a pipeline
-    * caller inherits the measured R ~ occupancy law and the chooser's
-    * infeasibility throw, never the oracle-pinned R=50 literal whose
-    * collapse the repo itself measured (recall 0.052 at 3,125/cluster,
-    * PLANS §clustered-corpus). The registered `a7_pq_rerank` query keeps
-    * the pinned literal — this entry point is additive (AnnAutoSpec).
-    * The corpus count doubles as the fixed-Q guard's witness. */
+    * stack): rerankDepth comes from the depth law ([[Ann.dialLaws]]) on
+    * live corpus statistics ([[Ann.annStats]]) — corpus count plus the
+    * max-list occupancy of the build-once IVF artifact at the sqrt-law
+    * nlists (the cheapest clusteredness statistic the corpus already
+    * owns) — so a pipeline caller inherits the measured R ~ occupancy law
+    * and its infeasibility throw, never the oracle-pinned R=50 literal
+    * whose collapse the repo itself measured (recall 0.052 at
+    * 3,125/cluster, PLANS §clustered-corpus). a7 probes no lists, so only
+    * the depth law can refuse it. The registered `a7_pq_rerank` query
+    * keeps the pinned literal — this entry point is additive
+    * (AnnAutoSpec). The corpus count doubles as the fixed-Q guard's
+    * witness. */
   def a7PqRerankAuto(spark: SparkSession, dir: String,
                      recallFloor: Double = 0.9): DataFrame = {
-    val n = Search.corpus(spark, dir).count()
-    Ann.fixedQGuard(n / 101 + 1, "a7PqRerankAuto")
-    val occ = Ann.occupancyEstimate(spark, dir, Ann.nlistsFor(n))
-    val p = Ann.annOperatingPoint(n, occ, recallFloor)
-    a7PqRerank(spark, dir, rerankDepth = p.rerankDepth)
+    val st = Ann.annStats(spark, dir)
+    Ann.fixedQGuard(st.n / 101 + 1, "a7PqRerankAuto")
+    val laws = Ann.dialLaws(st.n, st.occupancy, st.splinter, recallFloor)
+    Ann.refuse(laws.pqRefusal)
+    a7PqRerank(spark, dir, rerankDepth = laws.rerankDepth.toInt)
   }
 
   /** recall@10 of an approximate result set vs exact brute force over the
@@ -588,9 +544,19 @@ object Pq {
   // partition filter as the vector side (identical rows: the join
   // already restricts to probed lists); default None keeps the
   // registered a13 plan oracle-pinned.
+  // `appends` (r17, D28): the codes gain the streamed appends encoded
+  // against the VERSIONED batch codebook and centroids
+  // ([[encodeBatchAgainst]], H14's per-batch body), and probes and LUTs
+  // come from the combined query set against the batch centroids — the
+  // codes and probes an equivalent batch rebuild would hold.
   def a13IvfPqTopK(spark: SparkSession, dir: String, k: Int = 10,
                    qmod: Int = 101, nlists: Int = 8, nprobe: Int = 3,
-                   prunedListIds: Option[Seq[Long]] = None): DataFrame = {
+                   prunedListIds: Option[Seq[Long]] = None,
+                   appends: Option[DataFrame] = None): DataFrame = {
+    appends.foreach(streamedIdGuard(_, nlists, "a13IvfPqTopK"))
+    require(prunedListIds.isEmpty || appends.isEmpty,
+      "a13IvfPqTopK: prunedListIds are the batch's probed lists, so a " +
+        "serve with appends cannot prune by them")
     val e = Search.corpus(spark, dir)
     val d = subDimOf(spark, dir) // == D at the pinned dim-64 corpora
     val cb = codebook(e, d)
@@ -599,13 +565,20 @@ object Pq {
       case Some(ids) => codes0.filter(col("list_id").isin(ids: _*))
       case None => codes0
     }
-    probedAdcTopK(codes,
-      Ann.listProbes(e, nprobe = nprobe, nlists = nlists, qmod = qmod),
-      queryLut(e, cb, qmod, d), k)
+    val all = Ann.withAppends(e, appends)
+    // the artifact's list_id reads back as a DISCOVERED partition column
+    // (int), a fresh encode's as the centroid id (long) — align on the
+    // artifact's type so the union is exact
+    probedAdcTopK(
+      appends.fold(codes)(a => codes.unionByName(encodeBatchAgainst(e, a, nlists)
+        .withColumn("list_id", col("list_id").cast(codes0.schema("list_id").dataType)))),
+      Ann.listProbes(all, nprobe = nprobe, nlists = nlists, qmod = qmod,
+        centSource = Some(e)),
+      queryLut(all, cb, qmod, d), k)
   }
 
   /** ADC top-`k` within each query's probed lists — the IVFPQ serve of
-    * a13, a13z and the streamed a22: `probes` (query_id, list_id) ⋈ `lut`
+    * a13 (and so a22) and a13z: `probes` (query_id, list_id) ⋈ `lut`
     * ⋈ `codes` (vec_id, code<m>, cn<m>, list_id). */
   private def probedAdcTopK(codes: DataFrame, probes: DataFrame,
                             lut: DataFrame, k: Int): DataFrame = {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.rag.Search
-import graft.sources.Artifact
 
 /** ANN FAMILY ROUTER (r13) — the sequel to the r12 operating-point
   * chooser, closing its own "honest economics note" (PLANS
@@ -131,7 +130,7 @@ object Router {
     * operation into the [[oracle]] SQL so the decision itself is
     * hash-graded cross-engine.
     *
-    * Feasibility reuses the chooser's refusal laws ([[Ann.annOperatingPoint]]):
+    * Dials and feasibility are the chooser's laws ([[Ann.dialLaws]]):
     * ivf_flat needs its splinter-covering nprobe within the scan budget;
     * pq_rerank needs the recall-law depth under maxRerank and the corpus.
     * brute is always feasible (exact). Winner = minimal cost among
@@ -148,21 +147,10 @@ object Router {
     require(alpha > 0.0, s"alpha $alpha")
     val VecBytes = vecBytesOf(dim)
     val CodeBytes = codeBytesOf(pqM)
-    require(n > 0, s"n $n")
-    require(occupancy > 0, s"occupancy $occupancy")
-    require(recallFloor > 0.0 && recallFloor < 1.0, s"recallFloor $recallFloor")
-    require(splinter >= 1, s"splinter $splinter")
-    val nlists = Ann.nlistsFor(n)
-    // ivf_flat: nprobe by the splinter law (clustered) or the
-    // scanned-fraction law (structure-less), within the scan budget
-    val nprobeNeed =
-      if (clusteredRegime) math.max(3, splinter)
-      else math.max(3, math.ceil(recallFloor * nlists).toInt)
-    val ivfFeasible = nprobeNeed <= maxScanFraction * nlists
-    // pq_rerank: depth by the inverted recall curve, 2x occupancy safety
-    val depth = math.max(50L, math.ceil(
-      Ann.rerankRatioFor(recallFloor) * occupancy * 2.0).toLong)
-    val pqFeasible = depth <= maxRerank && depth < n
+    val laws = Ann.dialLaws(n, occupancy, splinter, recallFloor,
+      clusteredRegime, maxScanFraction, maxRerank)
+    val Ann.DialLaws(nlists, nprobeNeed, depth, _, _) = laws
+    val (ivfFeasible, pqFeasible) = (laws.ivfFeasible, laws.pqFeasible)
     // ivf_pq_r (a22, the composed FAISS `IVFx,PQy`+refine shape) needs
     // BOTH prunings feasible: the splinter-covering probe set AND a
     // recall-law rerank depth
@@ -211,120 +199,21 @@ object Router {
       if (pqFeasible) costPq else -1.0)
   }
 
-  /** Live statistics for [[route]]: corpus count, max-list occupancy of
-    * the build-once IVF artifact at the sqrt-law nlists, and the centroid
-    * splinter — the same three numbers the auto entry points already
-    * gather (all O(corpus) narrow passes or broadcast-sized scans). */
-  private def stats(spark: SparkSession, dir: String): (Long, Long, Int, Int) = {
-    // (n, dim): corpus metadata a production index stores with the build
-    val (n, dim) = Artifact.value(spark, "corpusmeta", dir, Ann.Emb) {
-      // one narrow pass yields both the count and the embedding DIMENSION
-      // (max(size) == any row's size — fixed-width corpus; max keeps the
-      // aggregate deterministic and matches the oracle's max(len(v)))
-      val head = Search.corpus(spark, dir)
-        .agg(count(lit(1)), max(size(col("v")))).head()
-      val n0 = head.getLong(0)
-      // empty corpus: max(size) is NULL — fail with the family's
-      // diagnostic instead of an NPE (the pre-r14 count()-only path got
-      // this free from nlistsFor's require)
-      require(n0 > 0, s"router stats: empty corpus at $dir")
-      (n0, head.getInt(1))
-    }
-    val nlists = Ann.nlistsFor(n)
-    (n, Ann.occupancyEstimate(spark, dir, nlists),
-      Ann.splinterEstimate(spark, dir, nlists), dim)
-  }
-
   /** D21 (a21_route): the routing decision ITSELF as a graded query — one
     * row per regime, every input statistic and per-family cost exposed, so
     * the cross-engine hash gate covers the decision function, not just the
     * dispatched result. Driver-side assembly is O(1): the three inputs are
-    * tiny distributed aggregates ([[stats]]). */
+    * tiny distributed aggregates ([[Ann.annStats]]). With the streamed
+    * `appends` (r16) the decision is priced over (batch ∪ appends), so it
+    * equals an equivalent batch rebuild's. */
   def a21Route(spark: SparkSession, dir: String,
-               recallFloor: Double = 0.9): DataFrame =
-    routeFrame(spark, stats(spark, dir), recallFloor)
-
-  /** [[stats]] over (batch ∪ streamed): count and dimension from the
-    * combined vector set; occupancy from the combined assignment at the
-    * combined-count sqrt-law nlists AGAINST THE VERSIONED BATCH CENTROIDS
-    * (the a20/H12 rule — a batch rebuild of the same data assigns
-    * identically, so the routed decision equals the rebuild's,
-    * RouterSpec/StreamIvfSpec); splinter from those same centroids.
-    *
-    * The rebuild law's THREE preconditions are all enforced here by
-    * refusal (ADVICE r16 — the first was checked, the other two held only
-    * by test construction):
-    *  1. equal dims — a streamed batch at another embedding dimension
-    *     would mis-price every route (the RouterDimSpec rule);
-    *  2. no vec_id collisions between batch and appends (or within the
-    *     appends) — a plain unionByName would double-count n, inflate
-    *     occupancy, and let the dispatched serve emit duplicate hit rows;
-    *  3. every appended vec_id >= the combined-count sqrt-law nlists — an
-    *     appended id below it would BE a centroid in an equivalent batch
-    *     rebuild (centroids are `vec_id < nlists` of the full corpus) but
-    *     is not in the versioned batch centroid set, so the routed
-    *     decision would silently diverge from the rebuild's.
-    * Returns the stats plus the combined and streamed corpus frames so
-    * callers dispatch over the SAME frames the stats priced (and don't
-    * rebuild the manifest-read union per serve — ADVICE r16). */
-  private[graft] def statsWithStream(spark: SparkSession, dir: String,
-      indexDir: String): StreamStats = {
-    val batch = Search.corpus(spark, dir)
-    val streamed = graft.streaming.Streams.readIvfIndex(spark, indexDir)
-      .select("vec_id", "label", "v", "nrm")
-    val combined = batch.select("vec_id", "label", "v", "nrm")
-      .unionByName(streamed)
-    val head = combined.agg(count(lit(1)), max(size(col("v"))),
-      min(size(col("v"))), countDistinct(col("vec_id"))).head()
-    val n = head.getLong(0)
-    require(n > 0, s"router stats: empty corpus at $dir + $indexDir")
-    val dim = head.getInt(1)
-    require(head.getInt(2) == dim,
-      s"router stats: mixed embedding dims in $dir + $indexDir " +
-        s"(${head.getInt(2)} vs $dim) — route refuses rather than mis-price")
-    require(head.getLong(3) == n,
-      s"router stats: duplicate vec_ids across $dir + $indexDir " +
-        s"(${n - head.getLong(3)} collisions) — a unionByName serve would " +
-        "double-count; dedup the appends (or compact and rebuild) first")
-    val nlists = Ann.nlistsFor(n)
-    val sHead = streamed.agg(count(lit(1)), min(col("vec_id"))).head()
-    require(sHead.getLong(0) == 0L || sHead.getLong(1) >= nlists,
-      s"router stats: appended vec_id ${sHead.getLong(1)} < nlists=$nlists " +
-        "— it would be a centroid in an equivalent batch rebuild but is " +
-        "not in the versioned batch centroid set; route refuses rather " +
-        "than silently diverge from the rebuild law")
-    val occ = Ann.listAssignment(combined, Some(batch), nlists)
-      .groupBy("list_id").agg(count(lit(1)).as("sz"))
-      .agg(max(col("sz"))).head().getLong(0)
-    StreamStats(n, occ, Ann.splinterOf(batch, nlists), dim, combined, streamed)
-  }
-
-  /** [[statsWithStream]]'s result: the three routing statistics, the live
-    * dimension, and the two frames the stats were priced over. */
-  private[graft] case class StreamStats(n: Long, occupancy: Long,
-      splinter: Int, dim: Int, combined: DataFrame, streamed: DataFrame)
-
-  /** D21, streamed (r16, verdict r15 #4): the routing decision over
-    * (batch ∪ streamed) — H12/H14 keep the INDEX artifacts current under
-    * appends, and this keeps the DISPATCH current: the router's live
-    * statistics now read the manifest-committed streamed index instead of
-    * silently pricing yesterday's batch corpus. Same decision frame as
-    * [[a21Route]]. */
-  def a21RouteStreamed(spark: SparkSession, dir: String, indexDir: String,
-                       recallFloor: Double = 0.9): DataFrame = {
-    val st = statsWithStream(spark, dir, indexDir)
-    routeFrame(spark, (st.n, st.occupancy, st.splinter, st.dim), recallFloor)
-  }
-
-  private def routeFrame(spark: SparkSession,
-                         st: (Long, Long, Int, Int),
-                         recallFloor: Double): DataFrame = {
-    val (n, occ, spl, dim) = st
-    val rows = Seq(ComputeBound, IoBound).map { reg =>
-      route(n, occ, spl, recallFloor, reg, dim = dim)
-    }
+               recallFloor: Double = 0.9,
+               appends: Option[DataFrame] = None): DataFrame = {
+    val st = Ann.annStats(spark, dir, appends)
     import spark.implicits._
-    rows.toDF()
+    Seq(ComputeBound, IoBound).map { reg =>
+      route(st.n, st.occupancy, st.splinter, recallFloor, reg, dim = st.dim)
+    }.toDF()
       .select(col("regime"), col("family"), col("nlists"), col("nprobe"),
         col("rerankDepth").as("rerank_depth"), col("n"),
         col("occupancy"), col("splinter"),
@@ -343,114 +232,44 @@ object Router {
     * In the compute regime the reachable set is {brute, ivf_flat} by the
     * alpha > 1 proof in the object scaladoc — the oracle's gated UNION
     * covers exactly that set, and a pq_rerank dispatch under compute would
-    * hash-FAIL rather than silently pass. */
+    * hash-FAIL rather than silently pass.
+    *
+    * With the streamed `appends` (r16–r17, D28) the route is priced and
+    * the chosen family served over (batch ∪ appends) — queries are the
+    * standard batch drawn from the combined ids, so an appended vector is
+    * both searchable and a query, and every family serves: IVF against the
+    * versioned batch centroids, PQ with the appends encoded against the
+    * versioned codebook. Served rows row-match an equivalent batch
+    * rebuild's at the same dials (RouterSpec). Compacting the streamed
+    * ingest directories is a separate call
+    * ([[graft.streaming.Streams.compactIvfIndex]]). */
   def aRouteTopk(spark: SparkSession, dir: String,
                  recallFloor: Double = 0.9,
                  regime: Regime = IoBound,
                  clusteredRegime: Boolean = true,
-                 retrieval: Retrieval = RowStore): DataFrame = {
-    val (n, occ, spl, dim) = stats(spark, dir)
-    Ann.fixedQGuard(n / 101 + 1, "aRouteTopk")
-    val d = route(n, occ, spl, recallFloor, regime, clusteredRegime,
-      retrieval = retrieval, dim = dim)
+                 retrieval: Retrieval = RowStore,
+                 appends: Option[DataFrame] = None): DataFrame = {
+    val st = Ann.annStats(spark, dir, appends)
+    Ann.fixedQGuard(st.n / 101 + 1, "aRouteTopk")
+    val d = route(st.n, st.occupancy, st.splinter, recallFloor, regime,
+      clusteredRegime, retrieval = retrieval, dim = st.dim)
     d.family match {
       case "brute" =>
-        Search.knn(spark, dir, col("vec_id") % 101 === 0, k = 10,
+        Search.knnOver(Ann.withAppends(Search.corpus(spark, dir), appends),
+          col("vec_id") % 101 === 0, k = 10,
           threshold = -1.0, clampZero = false, sameLabel = false)
       case "ivf_flat" =>
         // the io regime prices reads, so its dispatch uses the measured
         // serving read (static IN-pruned probed partitions,
         // IOBYTES_r13.json); the compute regime keeps the oracle-pinned
         // a2 plan the registered query grades
-        if (regime == IoBound)
-          Ann.a2KnnIvfPruned(spark, dir, nlists = d.nlists, nprobe = d.nprobe)
-        else Ann.a2KnnIvf(spark, dir, nlists = d.nlists, nprobe = d.nprobe)
+        Ann.ivfTopK(spark, dir, sameLabel = false, nlists = d.nlists,
+          nprobe = d.nprobe, staticPruned = regime == IoBound, appends = appends)
       case "ivf_pq_r" =>
         Pq.a22IvfPqRerank(spark, dir, nlists = d.nlists, nprobe = d.nprobe,
-          rerankDepth = d.rerankDepth)
+          rerankDepth = d.rerankDepth, appends = appends)
       case "pq_rerank" =>
-        Pq.a7PqRerank(spark, dir, rerankDepth = d.rerankDepth)
-    }
-  }
-
-  /** [[aRouteTopk]], streamed (r16): route over (batch ∪ streamed) stats,
-    * then SERVE over the combined vector set — queries are the standard
-    * qmod=101 batch drawn from the combined ids, so an appended vector is
-    * both searchable and a query. brute and ivf_flat dispatch on the fly
-    * against the versioned batch centroids ([[Search.knnOver]] /
-    * [[Ann.ivfTopKOver]] — row-identical to an equivalent batch rebuild's
-    * plan at the same dials, spec-pinned); the PQ families REFUSE by name:
-    * their codebook/code artifacts are versioned with the batch corpus, so
-    * the correct move after enough appends to route there is a compaction
-    * + batch re-encode ([[graft.streaming.Streams.compactIvfIndex]] +
-    * [[Pq]] build), not a silent serve against codes the appended rows
-    * aren't in. */
-  def aRouteTopkStreamed(spark: SparkSession, dir: String, indexDir: String,
-                         recallFloor: Double = 0.9,
-                         regime: Regime = IoBound,
-                         clusteredRegime: Boolean = true,
-                         retrieval: Retrieval = RowStore): DataFrame = {
-    // ONE manifest read + union, priced and served (ADVICE r16: the
-    // dispatch previously rebuilt the combined corpus statsWithStream had
-    // just assembled)
-    val st = statsWithStream(spark, dir, indexDir)
-    val combined = st.combined
-    Ann.fixedQGuard(st.n / 101 + 1, "aRouteTopkStreamed")
-    val d = route(st.n, st.occupancy, st.splinter, recallFloor, regime,
-      clusteredRegime, retrieval = retrieval, dim = st.dim)
-    d.family match {
-      case "brute" =>
-        Search.knnOver(combined, col("vec_id") % 101 === 0, k = 10,
-          threshold = -1.0, clampZero = false, sameLabel = false)
-      case "ivf_flat" =>
-        Ann.ivfTopKOver(combined, Search.corpus(spark, dir),
-          nlists = d.nlists, nprobe = d.nprobe)
-      case other =>
-        throw new UnsupportedOperationException(
-          s"aRouteTopkStreamed: route chose '$other', whose codebook/code " +
-            "artifacts are versioned with the batch corpus — serve via " +
-            "aRouteTopkMaintained (compacts and re-encodes the appends " +
-            "against the versioned codebook), or compact and rebuild the " +
-            "batch index and serve via aRouteTopk")
-    }
-  }
-
-  /** D28 (r17, verdict r16 #6): [[aRouteTopkStreamed]] with the PQ-family
-    * maintenance loop composed in — compact the streamed ingest
-    * directories ([[graft.streaming.Streams.compactIvfIndex]], the H13
-    * fold), re-encode the appends against the VERSIONED batch codebook
-    * and centroids ([[Pq.encodeBatchAgainst]], H14's per-batch body), and
-    * dispatch whatever family the route picks — including the PQ families
-    * [[aRouteTopkStreamed]] refuses. Serving rows row-match an equivalent
-    * batch rebuild's at the same dials (the H12/a20 rule one level up,
-    * StreamIvfSpec): the rebuild-law preconditions are enforced by
-    * refusal in [[statsWithStream]] (equal dims, no id collisions,
-    * appended ids >= nlists) and [[Pq]]'s streamed serves (appended ids
-    * >= K, the codebook draw floor). Maintenance cost is O(appends)
-    * re-encode + the fold's O(moved rows) — never a corpus re-encode. */
-  def aRouteTopkMaintained(spark: SparkSession, dir: String, indexDir: String,
-                           recallFloor: Double = 0.9,
-                           regime: Regime = IoBound,
-                           clusteredRegime: Boolean = true,
-                           retrieval: Retrieval = RowStore): DataFrame = {
-    graft.streaming.Streams.compactIvfIndex(spark, indexDir)
-    val st = statsWithStream(spark, dir, indexDir)
-    Ann.fixedQGuard(st.n / 101 + 1, "aRouteTopkMaintained")
-    val d = route(st.n, st.occupancy, st.splinter, recallFloor, regime,
-      clusteredRegime, retrieval = retrieval, dim = st.dim)
-    d.family match {
-      case "brute" =>
-        Search.knnOver(st.combined, col("vec_id") % 101 === 0, k = 10,
-          threshold = -1.0, clampZero = false, sameLabel = false)
-      case "ivf_flat" =>
-        Ann.ivfTopKOver(st.combined, Search.corpus(spark, dir),
-          nlists = d.nlists, nprobe = d.nprobe)
-      case "ivf_pq_r" =>
-        Pq.ivfPqRerankStreamed(spark, dir, st.streamed, nlists = d.nlists,
-          nprobe = d.nprobe, rerankDepth = d.rerankDepth)
-      case "pq_rerank" =>
-        Pq.pqRerankStreamed(spark, dir, st.streamed,
-          rerankDepth = d.rerankDepth)
+        Pq.a7PqRerank(spark, dir, rerankDepth = d.rerankDepth, appends = appends)
     }
   }
 

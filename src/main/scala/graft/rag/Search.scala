@@ -55,9 +55,9 @@ object Search {
     knnOver(corpus(spark, dir), queryPred, k, threshold, clampZero, sameLabel)
 
   /** [[knn]] over an EXPLICIT corpus frame (vec_id, label, v, nrm) — the
-    * streamed-append composition ([[graft.ann.Router.aRouteTopkStreamed]])
-    * serves over (batch ∪ streamed) without a warehouse rebuild. Same
-    * plan, same broadcast contract. */
+    * router's brute dispatch ([[graft.ann.Router.aRouteTopk]]) serves over
+    * (batch ∪ streamed appends) this way without a warehouse rebuild.
+    * Same plan, same broadcast contract. */
   private[graft] def knnOver(e: DataFrame, queryPred: Column, k: Int,
                              threshold: Double, clampZero: Boolean,
                              sameLabel: Boolean): DataFrame = {

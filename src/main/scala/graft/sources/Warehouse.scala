@@ -278,10 +278,6 @@ object Warehouse {
     spark.read.parquet((0 until passes).map(r => s"$staging/pass_$r"): _*)
   }
 
-  /** Write partitioned by a low-cardinality column (e.g. IVF list_id). */
-  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
-
   /** I6: small-file compaction of a partitioned parquet dataset — the
     * warehouse maintenance op every streaming/incremental ingest needs:
     * micro-batch appends leave each partition directory littered with
@@ -400,10 +396,4 @@ object Warehouse {
       .drop("_zkey")
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
-
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-                    files: Int = 8, bits: Int = 16): Unit =
-    writeZOrderedN(df, path, Seq(colA, colB), files, bits)
-
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

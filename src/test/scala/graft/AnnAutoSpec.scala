@@ -1,6 +1,8 @@
 package graft
 
-import graft.ann.{Ann, Pq}
+import org.apache.spark.sql.functions.col
+
+import graft.ann.{Ann, Pq, Router}
 
 /** The a-family's auto operating points (r12, verdict #1 — the d5 chooser
   * pattern applied to the ANN dials whose static defaults the repo's own
@@ -90,6 +92,28 @@ class AnnAutoSpec extends SparkSpec {
     assert(auto.nonEmpty, "fixture must produce rerank results")
     assert(auto === explicitly,
       s"a7 auto at R=${p.rerankDepth} diverged from the explicit depth")
+  }
+
+  test("a7 auto on a corpus of at most 121 vectors refuses only on the depth law") {
+    // n <= 121 gives 8-11 lists, where the IVF law's smallest nprobe (3)
+    // already exceeds a quarter of them: ivf_flat is infeasible. a7 probes
+    // no lists, so it must serve at the depth the router prices for it.
+    val dir = tempDir("graft_a7small").toString
+    spark.read.parquet(s"$Sf/embeddings.parquet").filter(col("vec_id") < 120L)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val n = graft.rag.Search.corpus(spark, dir).count()
+    val nl = Ann.nlistsFor(n)
+    val d = Router.route(n, Ann.occupancyEstimate(spark, dir, nl),
+      Ann.splinterEstimate(spark, dir, nl), 0.9, Router.ComputeBound)
+    assert(n <= 121L && d.nprobe === -1 && d.rerankDepth > 0,
+      s"fixture must have the IVF law infeasible and the depth law feasible: $d")
+    val auto = Pq.a7PqRerankAuto(spark, dir, recallFloor = 0.9)
+      .collect().map(_.toSeq).toSeq
+    val explicitly = Pq.a7PqRerank(spark, dir, rerankDepth = d.rerankDepth)
+      .collect().map(_.toSeq).toSeq
+    assert(auto.nonEmpty, "fixture must produce rerank results")
+    assert(auto === explicitly,
+      s"a7 auto diverged from a7 at the priced depth R=${d.rerankDepth}")
   }
 
   test("registered a2/a7 still run the pinned literals untouched by auto") {

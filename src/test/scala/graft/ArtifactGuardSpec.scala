@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * stages' SQL twins (`Stages.Sql`); every entry point gets its session
   * from `graft.Harness`; plans are read only by Bench's structural
   * fingerprint, never as text; every filesystem commit (a rename) is
-  * `graft.sources.Warehouse`'s; and the dedup chain's Jaccard verify,
+  * `graft.sources.Warehouse`'s; the ANN statistics and dial laws are
+  * gathered and computed in `graft.ann.Ann` only; and the dedup chain's Jaccard verify,
   * rare-shingle cap, cluster table and cluster-size report, in Spark and
   * in their DuckDB twins, are `graft.dedup.DupStages`'. This scan fails,
   * listing the offending lines, when a rule's token appears in its scope
@@ -26,6 +27,7 @@ class ArtifactGuardSpec extends AnyFunSuite {
   private val Bench = "graft/Bench.scala"
   private val Warehouse = "graft/sources/Warehouse.scala"
   private val DupStages = "graft/dedup/DupStages.scala"
+  private val Ann = "graft/ann/Ann.scala"
   private val Everywhere = Seq("graft/")
   private val Search = Seq("graft/ann/", "graft/rag/Search.scala")
   private val Oracles = Seq("graft/ann/", "graft/rag/")
@@ -53,7 +55,9 @@ class ArtifactGuardSpec extends AnyFunSuite {
     ("len(list_intersect(", "a DuckDB Jaccard verify", DupStages, Everywhere),
     ("HAVING count(*) <= $D7DfCap", "a rare-shingle cap", DupStages, Everywhere),
     ("""col("lbl").as("cluster_id")""", "a cluster-table body", DupStages, Everywhere),
-    (""""cluster_size", count(lit(1)).over(""", "a cluster-size report", DupStages, Everywhere))
+    (""""cluster_size", count(lit(1)).over(""", "a cluster-size report", DupStages, Everywhere),
+    ("occupancyEstimate(", "an ANN statistics gather", Ann, Everywhere),
+    ("rerankRatioFor(", "an ANN dial law", Ann, Everywhere))
 
   private def sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -103,6 +107,11 @@ class ArtifactGuardSpec extends AnyFunSuite {
 
   test("the dedup chain's steps are written once, in the dedup stages") {
     val found = offenders(DupStages)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("the ANN statistics and dial laws are computed once, in Ann") {
+    val found = offenders(Ann)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -102,6 +102,41 @@ class RouterSpec extends SparkSpec {
     intercept[IllegalArgumentException](Router.route(10L, 1L, 1, 1.5, IoBound))
   }
 
+  test("route prices the chooser's laws: feasibility and dials agree over a grid") {
+    // the router and the chooser read one set of laws (Ann.dialLaws): the
+    // route's ivf_flat feasibility is the chooser's IVF feasibility, its
+    // pq feasibility is the depth law's, and where feasible its dials are
+    // the chooser's
+    val grid = for {
+      n <- Seq(100L, 121L, 1000L, 200000L, 10000000L)
+      occ <- Seq(10L, 60L, 300L, 3125L, 100000L)
+      spl <- Seq(1, 3, 7, 2000)
+      floor <- Seq(0.5, 0.9, 0.99)
+      clustered <- Seq(true, false)
+      regime <- Seq(ComputeBound, IoBound)
+      if occ < n
+    } yield (n, occ, spl, floor, clustered,
+      Router.route(n, occ, spl, floor, regime, clusteredRegime = clustered))
+    val seen = grid.map { case (n, occ, spl, floor, clustered, d) =>
+      val (ivfOk, pqOk) = (d.nprobe != -1, d.rerankDepth != -1)
+      val laws = Ann.dialLaws(n, occ, spl, floor, clustered)
+      assert(laws.pqFeasible === pqOk, s"depth law vs route: $laws $d")
+      if (pqOk) assert(laws.rerankDepth === d.rerankDepth.toLong)
+      val chooser = scala.util.Try(
+        Ann.annOperatingPoint(n, occ, floor, clustered, splinter = spl))
+      def refusedOn(law: String) = chooser.failed.toOption
+        .exists(_.getMessage.contains(law))
+      if (!ivfOk) assert(refusedOn("nprobe=") && !refusedOn("rerankDepth="),
+        s"the chooser must refuse on the IVF law: $d $chooser")
+      else if (!pqOk) assert(refusedOn("rerankDepth="),
+        s"the chooser must refuse on the depth law: $d $chooser")
+      else assert(chooser.toOption === Some(Ann.AnnPoint(d.nlists, d.nprobe,
+        d.rerankDepth)), s"dials: $d vs $chooser")
+      (ivfOk, pqOk)
+    }.toSet
+    assert(seen.size === 4, s"grid must reach all four feasibility cases: $seen")
+  }
+
   test("a21_route grades both regimes with consistent dials") {
     val rows = Router.a21Route(spark, Sf).collect()
     assert(rows.length === 2)
@@ -367,20 +402,24 @@ class RouterSpec extends SparkSpec {
     (fullDir, batchDir, indexDir)
   }
 
+  /** The streamed index's committed rows, as the serves take them. */
+  private def appendsAt(indexDir: String) =
+    Some(graft.streaming.Streams.readIvfIndex(spark, indexDir))
+
   test("streamed route == equivalent batch-rebuild route; dispatch " +
        "row-matches; a mixed-dim append refuses (r16, verdict r15 #4)") {
     val (fullDir, batchDir, indexDir) = splitCorpus(n = 1200, appended = 100)
     // the DECISION over (batch ∪ streamed) equals the rebuild's, both
     // regimes, every exposed statistic and cost
-    val streamed = Router.a21RouteStreamed(spark, batchDir, indexDir)
+    val streamed = Router.a21Route(spark, batchDir, appends = appendsAt(indexDir))
       .collect().map(_.toSeq).toSeq
     val rebuild = Router.a21Route(spark, fullDir).collect().map(_.toSeq).toSeq
     assert(streamed === rebuild,
       s"streamed route diverged from batch rebuild:\n$streamed\nvs\n$rebuild")
     // the DISPATCH over (batch ∪ streamed) row-matches the rebuild's —
     // appended vectors are both searchable and queries
-    val sTop = Router.aRouteTopkStreamed(spark, batchDir, indexDir,
-      regime = ComputeBound).collect().map(_.toSeq).sortBy(_.toString)
+    val sTop = Router.aRouteTopk(spark, batchDir, regime = ComputeBound,
+      appends = appendsAt(indexDir)).collect().map(_.toSeq).sortBy(_.toString)
     val rTop = Router.aRouteTopk(spark, fullDir, regime = ComputeBound)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(sTop.length === rTop.length && sTop === rTop,
@@ -403,7 +442,7 @@ class RouterSpec extends SparkSpec {
       graft.functions.Vec.norm2Native(col("v")))
     graft.streaming.Streams.appendIvfBatch(wrongDim, indexDir, wrongCent, "bad")
     val e = intercept[IllegalArgumentException] {
-      Router.a21RouteStreamed(spark, batchDir, indexDir).collect()
+      Router.a21Route(spark, batchDir, appends = appendsAt(indexDir)).collect()
     }
     assert(e.getMessage.contains("mixed embedding dims"), e.getMessage)
   }
@@ -419,7 +458,7 @@ class RouterSpec extends SparkSpec {
     graft.streaming.Streams.appendIvfBatch(dup, indexDir,
       graft.rag.Search.corpus(spark, batchDir), "dup")
     val e1 = intercept[IllegalArgumentException] {
-      Router.a21RouteStreamed(spark, batchDir, indexDir).collect()
+      Router.a21Route(spark, batchDir, appends = appendsAt(indexDir)).collect()
     }
     assert(e1.getMessage.contains("duplicate vec_ids"), e1.getMessage)
     // sub-nlists append: an id below the combined sqrt-law nlists would BE
@@ -438,7 +477,7 @@ class RouterSpec extends SparkSpec {
     graft.streaming.Streams.appendIvfBatch(low, indexDir2,
       graft.rag.Search.corpus(spark, holeDir), "low")
     val e2 = intercept[IllegalArgumentException] {
-      Router.a21RouteStreamed(spark, holeDir, indexDir2).collect()
+      Router.a21Route(spark, holeDir, appends = appendsAt(indexDir2)).collect()
     }
     assert(e2.getMessage.contains("< nlists"), e2.getMessage)
   }
@@ -451,15 +490,15 @@ class RouterSpec extends SparkSpec {
     // composed IVFPQ+rerank: appends re-encoded against the VERSIONED
     // batch codebook/centroids == the rebuild's own codes (appended ids
     // 1100+ clear both draw floors: nlists=35, K=16)
-    val sPqR = graft.ann.Pq.ivfPqRerankStreamed(spark, batchDir, streamed,
-      nlists = 8, nprobe = 3, rerankDepth = 50).collect().map(_.toSeq)
+    val sPqR = graft.ann.Pq.a22IvfPqRerank(spark, batchDir, nlists = 8,
+      nprobe = 3, rerankDepth = 50, appends = Some(streamed)).collect().map(_.toSeq)
     val rPqR = graft.ann.Pq.a22IvfPqRerank(spark, fullDir,
       nlists = 8, nprobe = 3, rerankDepth = 50).collect().map(_.toSeq)
     assert(sPqR.length === rPqR.length && sPqR === rPqR,
       "streamed ivf_pq_r serve diverged from the batch rebuild")
     // flat-ADC+rerank sibling
-    val sPq = graft.ann.Pq.pqRerankStreamed(spark, batchDir, streamed,
-      rerankDepth = 50).collect().map(_.toSeq)
+    val sPq = graft.ann.Pq.a7PqRerank(spark, batchDir, rerankDepth = 50,
+      appends = Some(streamed)).collect().map(_.toSeq)
     val rPq = graft.ann.Pq.a7PqRerank(spark, fullDir, rerankDepth = 50)
       .collect().map(_.toSeq)
     assert(sPq.length === rPq.length && sPq === rPq,
@@ -474,26 +513,27 @@ class RouterSpec extends SparkSpec {
     // rebuild's codebook)
     val lowId = streamed.withColumn("vec_id", lit(5L))
     val e = intercept[IllegalArgumentException](
-      graft.ann.Pq.pqRerankStreamed(spark, batchDir, lowId))
+      graft.ann.Pq.a7PqRerank(spark, batchDir, appends = Some(lowId)))
     assert(e.getMessage.contains("K=16"), e.getMessage)
   }
 
   test("maintained dispatch compacts, re-encodes, and serves a PQ-family " +
        "route == batch rebuild (D28)") {
     // tight 4-crowd corpus: occupancy ~n/4 with splinter-wide probes makes
-    // the io/RowStore regime price a code-scanning family under brute —
-    // the route aRouteTopkStreamed refuses and this entry must serve.
-    // Three ingest dirs so the composed maintenance actually folds.
+    // the io/RowStore regime price a code-scanning family under brute, so
+    // the streamed serve must encode the appends. Three ingest dirs so the
+    // compaction before the serve actually folds.
     val (fullDir, batchDir, indexDir) =
       splitCorpus(n = 2000, appended = 200, batches = 3, centers = 4,
         sigma = 0.1f)
-    val io = Router.a21RouteStreamed(spark, batchDir, indexDir)
+    val io = Router.a21Route(spark, batchDir, appends = appendsAt(indexDir))
       .filter(col("regime") === "io").head()
     val want = Router.route(io.getAs[Long]("n"), io.getAs[Long]("occupancy"),
       io.getAs[Int]("splinter"), 0.9, IoBound)
     assert(want.family === "ivf_pq_r" || want.family === "pq_rerank",
       s"fixture must route a PQ family or the test is vacuous: $want")
-    val served = Router.aRouteTopkMaintained(spark, batchDir, indexDir)
+    graft.streaming.Streams.compactIvfIndex(spark, indexDir)
+    val served = Router.aRouteTopk(spark, batchDir, appends = appendsAt(indexDir))
       .collect().map(_.toSeq)
     val direct = (want.family match {
       case "ivf_pq_r" => graft.ann.Pq.a22IvfPqRerank(spark, fullDir,

@@ -13,7 +13,7 @@ class SourcesSpec extends SparkSpec {
     val mem = MemoryOps.memoryTable(spark, Sf)
       .select("memory_key", "memory_type", "access_count")
     spark.sql("DROP TABLE IF EXISTS mem_bucketed")
-    val loc = new java.io.File("/tmp/graft_warehouse/mem_bucketed")
+    val loc = new java.io.File(Warehouse.tableLocation(spark, "mem_bucketed").toUri.getPath)
     if (loc.exists()) {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -26,7 +26,7 @@ class SourcesSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val t = Warehouse.readTable(spark, "mem_bucketed")
+      val t = spark.table("mem_bucketed")
       val joined = t.as("a").join(t.as("b"), "memory_key")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
@@ -40,7 +40,7 @@ class SourcesSpec extends SparkSpec {
       .withColumn("list_id", (col("vec_id") % 4).cast("int"))
       .select("vec_id", "list_id")
     val dir = tempDir("graft_ivf").toString
-    Warehouse.writePartitioned(asg, dir, "list_id")
+    asg.write.mode("overwrite").partitionBy("list_id").parquet(dir)
     val pruned = Formats.readParquet(spark, dir).filter(col("list_id") === 2)
     val scan = pruned.queryExecution.executedPlan.toString
     assert(scan.contains("list_id") && pruned.count() > 0)
@@ -132,7 +132,7 @@ class SourcesSpec extends SparkSpec {
     val ev = Tables.events(spark, Sf)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     val dir = tempDir("graft_evday").toString
-    Warehouse.writePartitioned(ev, dir, "day")
+    ev.write.mode("overwrite").partitionBy("day").parquet(dir)
     val oneDay = Formats.readParquet(spark, dir).filter(col("day") === "2024-01-03")
     val plan = oneDay.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("day"),
@@ -207,7 +207,7 @@ class SourcesSpec extends SparkSpec {
     li.repartitionByRange(8, col("a")).sortWithinPartitions("a")
       .write.parquet(sortedDir)
     val zDir = tempDir("graft_zorder").toString + "/t"
-    Warehouse.writeZOrdered(li, zDir, "a", "b")
+    Warehouse.writeZOrderedN(li, zDir, Seq("a", "b"))
     // rows survive
     assert(spark.read.parquet(zDir).count() == li.count())
     // z-order narrows the SECOND dimension's per-file range dramatically
@@ -229,13 +229,13 @@ class SourcesSpec extends SparkSpec {
     val wide = Seq((0L, 5L), (1L << 60, 7L), ((1L << 60) - 3, 2L), (17L, 9L))
       .toDF("a", "b")
     val wDir = tempDir("graft_zwide").toString + "/t"
-    Warehouse.writeZOrdered(wide, wDir, "a", "b", files = 2)
+    Warehouse.writeZOrderedN(wide, wDir, Seq("a", "b"), files = 2)
     assert(spark.read.parquet(wDir).collect().map(_.getLong(0)).sorted.toSeq ==
       wide.collect().map(_.getLong(0)).sorted.toSeq)
     // empty input: min/max aggregate to NULL — must degrade to a plain
     // (schema-only) write, not crash
     val eDir = tempDir("graft_zempty").toString + "/t"
-    Warehouse.writeZOrdered(wide.filter(col("a") < 0), eDir, "a", "b")
+    Warehouse.writeZOrderedN(wide.filter(col("a") < 0), eDir, Seq("a", "b"))
     assert(spark.read.parquet(eDir).count() == 0)
     // high-magnitude NARROW-range column: double-space binning would
     // quantize every value to the same bin (ulp(2^62)=1024 > the range)
@@ -244,7 +244,7 @@ class SourcesSpec extends SparkSpec {
     val base = 1L << 62
     val narrow = (0 until 8).map(i => (base + i, 0L)).toDF("a", "b")
     val nDir = tempDir("graft_znarrow").toString + "/t"
-    Warehouse.writeZOrdered(narrow, nDir, "a", "b", files = 2)
+    Warehouse.writeZOrderedN(narrow, nDir, Seq("a", "b"), files = 2)
     val ranges = new java.io.File(nDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map { f =>
         val r = spark.read.parquet(f.getPath)

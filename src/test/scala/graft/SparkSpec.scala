@@ -36,6 +36,15 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
 }
 
 object SparkSpec {
+  /** The session's warehouse: a fresh directory per test JVM, deleted when
+    * the JVM exits. The in-memory catalog forgets its tables at exit
+    * anyway, so nothing a later run could reuse is lost. */
+  private lazy val warehouse: Path = {
+    val dir = Files.createTempDirectory("graft_warehouse")
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir.toFile): Unit)
+    dir
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -43,7 +52,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

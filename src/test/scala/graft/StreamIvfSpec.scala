@@ -240,7 +240,8 @@ class StreamIvfSpec extends SparkSpec {
     val rebuild = graft.ann.Router.a21Route(spark, fullDir)
       .collect().map(_.toSeq).toSeq
     def streamedRoute(): Seq[Seq[Any]] =
-      graft.ann.Router.a21RouteStreamed(spark, batchDir, indexDir)
+      graft.ann.Router.a21Route(spark, batchDir,
+        appends = Some(Streams.readIvfIndex(spark, indexDir)))
         .collect().map(_.toSeq).toSeq
     assert(streamedRoute() === rebuild,
       "streamed route diverged from the equivalent batch rebuild")
